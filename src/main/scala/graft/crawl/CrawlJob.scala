@@ -1,7 +1,12 @@
 package graft.crawl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.checkpoint.SnapshotStore
 import graft.dedup.UrlSeen
@@ -24,6 +29,35 @@ object CrawlJob {
 
   /** xxhash64 over the canonical URL — the dedup key (north_rule). */
   private def canonicalCol = graft.expr.Native.canonicalize _
+
+  /** Schemas of the committed snapshot tables. Every read of a committed
+    * table pins its schema, so a resumed round starts no parquet
+    * schema-inference job. Only the resume-time frontier read infers: its
+    * columns follow the caller's frontier.
+    */
+  private[graft] val RatesSchema =
+    StructType.fromDDL("card_code STRING, trans_code STRING, date DATE, provider_id INT, rate DOUBLE")
+  private[graft] val SeenSchema = StructType.fromDDL("urlHash BIGINT, url STRING, round INT")
+  private[graft] val MetricsSchema = StructType.fromDDL(
+    "round INT, host STRING, scheduled BIGINT, dedupDropped BIGINT, offsiteDropped BIGINT, " +
+      "robotsDropped BIGINT, fetchMissed BIGINT, errorDropped BIGINT, extractedOk BIGINT")
+  private[graft] val LineageSchema = StructType.fromDDL("round INT, table STRING, file STRING, rows BIGINT")
+  private[graft] val HostStateSchema = Encoders.product[HostState].schema
+
+  /** (file, rows) of every parquet file in the directory `dir`, read from
+    * the footers: metadata reads in this JVM, no Spark job.
+    */
+  private def parquetRowCounts(spark: SparkSession, dir: String): Seq[(String, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(conf).listStatus(path).toIndexedSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        (st.getPath.toString, try r.getRecordCount finally r.close())
+      }
+  }
 
   /** Host column — see [[graft.urls.UrlCols.hostCol]] (shared with the
     * robots rule table so frontier hosts and rule hosts derive identically).
@@ -89,13 +123,24 @@ object CrawlJob {
       maxRetries: Int = 2,
       allowedDomains: Seq[String] = Nil,
       bloomParts: Int = 32,
-      bloomCapacityPerPart: Long = 1L << 18,
       compactEvery: Int = 64,
       insertBatchRows: Option[Int] = None,
       providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry): (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
     val store = new SnapshotStore(checkpointDir)
     val bloomDir = s"$checkpointDir/blooms"
+    // every job below carries a "crawl r<N>: <step>" description; the
+    // caller's own description comes back when the run returns
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    // A job submitted from a pool thread. The description is thread-local,
+    // so it is set inside the future, and cleared after it so the pool
+    // thread carries no stale label into its next task.
+    def submit[T](description: String)(body: => T): Future[T] =
+      Future {
+        sc.setJobDescription(description)
+        try body finally sc.setJobDescription(null)
+      }
 
     // ---- load or init state ------------------------------------------------
     // frontier + hostStates are full snapshots (they shrink / stay tiny);
@@ -105,9 +150,13 @@ object CrawlJob {
     // seen-set rewrite per round would dominate everything.
     val resume = store.readCurrent()
     var round = resume.map(_._1).getOrElse(0)
+    sc.setJobDescription(s"crawl r$round: load")
+    def read(schema: StructType, paths: Seq[String]): DataFrame =
+      if (paths.isEmpty) spark.createDataFrame(sc.emptyRDD[org.apache.spark.sql.Row], schema)
+      else spark.read.schema(schema).parquet(paths: _*)
     var (frontier, hostStates) = resume match {
       case Some((_, man)) =>
-        (spark.read.parquet(man("frontier")), spark.read.parquet(man("hostStates")).as[HostState])
+        (spark.read.parquet(man("frontier")), read(HostStateSchema, Seq(man("hostStates"))).as[HostState])
       case None =>
         (UrlSeen.dedupWithinBatch(frontier0), spark.emptyDataset[HostState])
     }
@@ -117,18 +166,9 @@ object CrawlJob {
     var ratesPaths: Seq[String] = resumePaths("rates")
     var metricsPaths: Seq[String] = resumePaths("metrics")
     var lineagePaths: Seq[String] = resumePaths("lineage")
-    def emptyDf(ddl: String): DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    val RatesDdl = "card_code STRING, trans_code STRING, date DATE, provider_id INT, rate DOUBLE"
-    val SeenDdl = "urlHash BIGINT, url STRING, round INT"
-    val MetricsDdl = "round INT, host STRING, scheduled BIGINT, dedupDropped BIGINT, offsiteDropped BIGINT, robotsDropped BIGINT, fetchMissed BIGINT, errorDropped BIGINT, extractedOk BIGINT"
-    def seenDf: DataFrame =
-      if (seenPaths.isEmpty) emptyDf(SeenDdl) else spark.read.parquet(seenPaths: _*)
-    def ratesDf: DataFrame =
-      if (ratesPaths.isEmpty) emptyDf(RatesDdl) else spark.read.parquet(ratesPaths: _*)
-    def metricsDf: DataFrame =
-      if (metricsPaths.isEmpty) emptyDf(MetricsDdl) else spark.read.parquet(metricsPaths: _*)
+    def seenDf: DataFrame = read(SeenSchema, seenPaths)
+    def ratesDf: DataFrame = read(RatesSchema, ratesPaths)
+    def metricsDf: DataFrame = read(MetricsSchema, metricsPaths)
 
     // reconcile the partitioned-Bloom sidecar state with the committed
     // snapshot: the filters are merged BEFORE each manifest commit, so
@@ -145,8 +185,7 @@ object CrawlJob {
         val distinctKeys = seenDf.select("urlHash").distinct()
         val seenCount = distinctKeys.count()
         UrlSeen.buildPartitionedBlooms(
-          distinctKeys, bloomDir, bloomParts,
-          math.max(bloomCapacityPerPart, 2L * seenCount / bloomParts))
+          distinctKeys, bloomDir, bloomParts, UrlSeen.capacityFor(seenCount, bloomParts))
       }
       UrlSeen.writeBloomRound(bloomDir, round)
     }
@@ -162,13 +201,22 @@ object CrawlJob {
     val robotsEmpty = robots.isEmpty
     // a fresh run's frontier is a COMPUTED plan (the within-batch dedup
     // window): cache it so the loop-guard count and round 1's consumption
-    // evaluate it once. Resume frontiers are parquet-backed — nothing to
-    // save. Released at the end of round 1 with the other round caches.
-    if (resume.isEmpty) frontier = frontier.cache()
-    var frontierCount = frontier.count()
+    // evaluate it once; it is released at the end of round 1 with the other
+    // round caches. A resumed frontier is parquet-backed and is counted from
+    // its footers, like the per-round count below: no Spark job.
+    var frontierCount = resume match {
+      case Some((_, man)) => parquetRowCounts(spark, man("frontier")).map(_._2).sum
+      case None =>
+        frontier = frontier.cache()
+        frontier.count()
+    }
     while (frontierCount > 0 && round < maxRounds) {
       round += 1
       val frontierPrev = frontier
+      // a frontier never grows after the within-batch dedup (retry rows
+      // replace their own scheduled rows), so this round's frontier bounds
+      // the distinct keys any filter created from here on will hold
+      val bloomCapacity = UrlSeen.capacityFor(frontierCount, bloomParts)
 
       val tRound = System.nanoTime()
       // 1. dedup against the seen set — INCREMENTAL partitioned-Bloom prune
@@ -254,6 +302,7 @@ object CrawlJob {
           graft.provider.Providers.route(col("provider"), providers)(_.extractRate(col("text")))
             .as("rate")): _*)
         .cache()
+      sc.setJobDescription(s"crawl r$round: extract")
       extracted.count() // one streaming pass fills the (slim) cache
 
       val parsed = extracted
@@ -296,10 +345,11 @@ object CrawlJob {
       //    (north_rule). All aggregations run over slim cached frames.
       val hostStates1 = Scheduler.updateHostStates(sched, hostStates, cfg, round, roundSec)
       // ALL per-host stage counts in ONE aggregation: tag each (cached,
-      // slim) stage frame with its name, union, pivot on the fixed stage
-      // list — one shuffle of (host, stage) rows instead of 8 groupBys +
-      // 7 full_outer joins (whose per-job fixed costs dominated small
-      // rounds and whose 8 exchanges were pure waste at scale).
+      // slim) stage frame with its name, union, and count each stage with a
+      // conditional count in one groupBy(host) — one shuffle of (host,
+      // stage) rows instead of 8 groupBys + 7 full_outer joins, and one
+      // fewer than a pivot, which aggregates by (host, stage) first. A
+      // stage with no rows for a host counts 0, never null.
       // Two scan collapses (r07):
       //  - a pass-through gate (first round's dedup, no allowed_domains,
       //    empty robots) returns its INPUT FRAME unchanged; consecutive
@@ -332,33 +382,26 @@ object CrawlJob {
         when(!col("hit"), lit("fetchMissed"))
           .when(col("is_err"), lit("errorDropped"))
           .otherwise(lit("extractedOk")).as("__stage"))
+      val stageCounts = stages.map(s => count(when(col("__stage") === s, 1)).as(s))
       val metricsDelta = gateTagged
         .unionAll(tag(sched, "scheduled"))
         .unionAll(extractedTagged)
-        .groupBy("host").pivot("__stage", stages).count()
+        .groupBy("host").agg(stageCounts.head, stageCounts.tail: _*)
         .select(
-          lit(round).as("round"), col("host"),
-          coalesce(col("scheduled"), lit(0L)).as("scheduled"),
-          (coalesce(col("entered"), lit(0L)) - coalesce(col("postDedup"), lit(0L))).as("dedupDropped"),
-          (coalesce(col("postDedup"), lit(0L)) - coalesce(col("postOffsite"), lit(0L))).as("offsiteDropped"),
-          (coalesce(col("postOffsite"), lit(0L)) - coalesce(col("postRobots"), lit(0L))).as("robotsDropped"),
-          coalesce(col("fetchMissed"), lit(0L)).as("fetchMissed"),
-          coalesce(col("errorDropped"), lit(0L)).as("errorDropped"),
-          coalesce(col("extractedOk"), lit(0L)).as("extractedOk"))
+          lit(round).as("round"), col("host"), col("scheduled"),
+          (col("entered") - col("postDedup")).as("dedupDropped"),
+          (col("postDedup") - col("postOffsite")).as("offsiteDropped"),
+          (col("postOffsite") - col("postRobots")).as("robotsDropped"),
+          col("fetchMissed"), col("errorDropped"), col("extractedOk"))
 
       // 9. atomic snapshot commit — write data files, then swap manifest.
       //    Append-only tables write only this round's delta; the manifest
       //    names the full delta chain (Iceberg manifest-list analogue).
-      //    The five writes are independent — submit them concurrently so
-      //    the round pays one write latency, not five (Spark's scheduler
-      //    interleaves the jobs across the executor pool).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      def persist(name: String, df: DataFrame): Future[String] = Future {
-        // job description is thread-local — label each concurrent write so
-        // the UI/job listeners can attribute the write phase (guide §1.5)
-        spark.sparkContext.setJobDescription(s"crawl r$round: write $name")
+      //    The five data writes and the Bloom merge are independent —
+      //    submit all six concurrently so the round pays one write latency,
+      //    not six (Spark's scheduler interleaves the jobs across the
+      //    executor pool).
+      def persist(name: String, df: DataFrame): Future[String] = submit(s"crawl r$round: write $name") {
         val p = store.dataPath(name, round)
         // reference-parity insert batching (§2#23, pipelines.py's 100-row
         // executemany chunks): when enabled, each committed RATES file
@@ -385,12 +428,11 @@ object CrawlJob {
       // rebuild source (old seen ∪ this delta) is touched only if a
       // partition saturates and must be rebuilt at doubled capacity.
       val firstTryKeys = sched.filter(col("retries") === 0).select(col("urlHash"))
-      val bloomMerge = Future {
-        spark.sparkContext.setJobDescription(s"crawl r$round: bloom merge")
+      val bloomMerge = submit(s"crawl r$round: bloom merge") {
         UrlSeen.mergeDeltaIntoPartitionedBlooms(
           firstTryKeys,
           seenDf.select("urlHash").unionByName(firstTryKeys),
-          bloomDir, bloomParts, bloomCapacityPerPart)
+          bloomDir, bloomParts, bloomCapacity)
         UrlSeen.writeBloomRound(bloomDir, round)
         "blooms"
       }
@@ -421,31 +463,19 @@ object CrawlJob {
       // duty: it IS the lineage delta, and its frontier rows sum to the
       // next round's frontier count — saving a full frontier re-scan per
       // round just to decide loop termination.
-      val lineageSchema = org.apache.spark.sql.types.StructType.fromDDL(
-        "round INT, table STRING, file STRING, rows BIGINT")
       val lineageRows: Array[org.apache.spark.sql.Row] = Seq(
         ("frontier", frontierPath), ("seen", seenPath), ("rates", ratesPath))
         .flatMap { case (name, p) =>
-          val dir = new org.apache.hadoop.fs.Path(p)
-          val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-          fs.listStatus(dir).toIndexedSeq
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .map { st =>
-              val n = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-                  st, spark.sessionState.newHadoopConf())) match {
-                case r => try r.getRecordCount finally r.close()
-              }
-              (st.getPath.toString, n)
-            }
+          parquetRowCounts(spark, p)
             .filter(_._2 > 0) // 0-row part files never appeared under input_file_name either
             .map { case (f, n) =>
               org.apache.spark.sql.Row(round, name, f, n)
             }
         }.toArray
       val lineagePath = store.dataPath("lineage", round)
+      sc.setJobDescription(s"crawl r$round: lineage")
       spark.createDataFrame(
-        java.util.Arrays.asList(lineageRows: _*), lineageSchema)
+        java.util.Arrays.asList(lineageRows: _*), LineageSchema)
         .write.mode("overwrite").parquet(lineagePath)
       lineagePaths = lineagePaths :+ lineagePath
 
@@ -457,19 +487,26 @@ object CrawlJob {
       // (prior snapshots remain readable), and a crash before the commit
       // just leaves the previous manifest pointing at the uncompacted chain.
       // Per-round provenance is preserved because every append-only row
-      // carries its `round` as data.
+      // carries its `round` as data. The four chains are independent and
+      // are rewritten concurrently, like the data writes above.
       if (compactEvery > 0 && round % compactEvery == 0) {
-        def compact(name: String, paths: Seq[String]): Seq[String] =
-          if (paths.size <= 1) paths
-          else {
+        def compact(name: String, schema: StructType, paths: Seq[String]): Future[Seq[String]] =
+          if (paths.size <= 1) Future.successful(paths)
+          else submit(s"crawl r$round: compact $name") {
             val p = store.dataPath(s"$name-compacted", round)
-            spark.read.parquet(paths: _*).write.mode("overwrite").parquet(p)
+            read(schema, paths).write.mode("overwrite").parquet(p)
             Seq(p)
           }
-        seenPaths = compact("seen", seenPaths)
-        ratesPaths = compact("rates", ratesPaths)
-        metricsPaths = compact("metrics", metricsPaths)
-        lineagePaths = compact("lineage", lineagePaths)
+        val compacted = Future.sequence(Seq(
+          compact("seen", SeenSchema, seenPaths),
+          compact("rates", RatesSchema, ratesPaths),
+          compact("metrics", MetricsSchema, metricsPaths),
+          compact("lineage", LineageSchema, lineagePaths)))
+        val Seq(s, r, m, l) = Await.result(compacted, Duration.Inf)
+        seenPaths = s
+        ratesPaths = r
+        metricsPaths = m
+        lineagePaths = l
       }
 
       // carry foreign tables (e.g. a persisted IVF model,
@@ -487,9 +524,10 @@ object CrawlJob {
         "lineage" -> lineagePaths.mkString(";")))
 
       // reload from the committed snapshot: truncates lineage so plans don't
-      // grow unboundedly across rounds (the iterative-algorithm idiom)
-      frontier = spark.read.parquet(frontierPath)
-      hostStates = spark.read.parquet(hostStatesPath).as[HostState]
+      // grow unboundedly across rounds (the iterative-algorithm idiom). The
+      // frontier is read with the schema it was just written with.
+      frontier = spark.read.schema(frontier1.schema).parquet(frontierPath)
+      hostStates = read(HostStateSchema, Seq(hostStatesPath)).as[HostState]
       sched.unpersist()
       extracted.unpersist()
       allowedF.unpersist()
@@ -501,6 +539,7 @@ object CrawlJob {
       if (sys.env.contains("SPARK_GRAFT_VERBOSE"))
         println(f"[crawl] round $round done in ${(System.nanoTime() - tRound) / 1e9}%.1f s; frontier left: $frontierCount")
     }
+    sc.setJobDescription(callerDescription)
     (ratesDf, seenDf, metricsDf)
   }
 }

@@ -51,7 +51,7 @@ object UrlSeen {
   /** Bloom-pruned dedup: broadcast Bloom over the seen hashes drops the
     * vast majority of already-seen candidates *before* the shuffle; the
     * survivors (new URLs + Bloom false positives) go through the exact
-    * anti-join. Returns (newRows, bloomPrunedCount approximation source).
+    * anti-join. Returns the candidates not in `seen`, as one frame.
     */
   def filterNewBloom(
       spark: SparkSession,
@@ -104,6 +104,18 @@ object UrlSeen {
     writeFilters(
       seen.select(col("urlHash"), pmod(col("urlHash"), lit(parts.toLong)).as("pm")),
       dir, _ => expectedItemsPerPart, fpp, loadExisting = false): Unit
+
+  /** Smallest per-partition filter capacity: below it the 2× headroom of
+    * [[capacityFor]] is too thin against the spread of keys over partitions.
+    */
+  private val MinCapacityPerPart: Long = 1024L
+
+  /** Per-partition capacity for a filter set that will hold at most `keys`
+    * distinct keys over `parts` partitions: twice the mean share, floored.
+    * Saturation still triggers the doubling rebuild below.
+    */
+  def capacityFor(keys: Long, parts: Int): Long =
+    math.max(MinCapacityPerPart, 2L * keys / parts)
 
   /** One round's INCREMENTAL maintenance: merge only `delta`'s keys into the
     * per-partition filters (O(delta) work — never a full-seen rescan), in a
@@ -180,7 +192,9 @@ object UrlSeen {
     val d = java.nio.file.Paths.get(dir)
     java.nio.file.Files.createDirectories(d) // idempotent; tasks may race
     val tmp = java.nio.file.Files.createTempFile(d, name, ".tmp")
-    val out = java.nio.file.Files.newOutputStream(tmp)
+    // buffered: BloomFilter.writeTo issues one 8-byte write per long of the
+    // bit array; close() flushes before the move below
+    val out = new java.io.BufferedOutputStream(java.nio.file.Files.newOutputStream(tmp))
     try body(out) finally out.close()
     java.nio.file.Files.move(tmp, d.resolve(name),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,

@@ -133,14 +133,21 @@ object Scheduler {
       maxDelaySec: Double = 60.0): Dataset[HostState] = {
     val spark = scheduled.sparkSession
     import spark.implicits._
-    val fetchedNow = scheduled.groupBy("host").agg(count(lit(1)).as("__f"))
+    // prior states ∪ this round's fetches, then ONE aggregation per host:
+    // a single exchange, partially aggregated map-side. A host has at most
+    // one prior row, so max() recovers its fields; count() of the fetch
+    // marker is 0 for a host that fetched nothing.
+    val merged = hostStates.toDF()
+      .unionByName(scheduled.select(col("host"), lit(1).as("__fetch")), allowMissingColumns = true)
+      .groupBy("host")
+      .agg(max("delaySec").as("delaySec"), max("clockSec").as("clockSec"),
+        max("fetched").as("fetched"), count("__fetch").as("__f"))
     // synthetic latency in [0.05, 0.55)s, deterministic per (host, round) —
     // the sandbox has no live HTTP, so the throttle clock is simulated
     val latency = lit(0.05) +
       pmod(xxhash64(concat(col("host"), lit("#" + round))), lit(500L)).cast("double") / 1000.0
     val targetDelay = latency / cfg.targetConcurrency
-    hostStates.toDF()
-      .join(fetchedNow, Seq("host"), "full_outer")
+    merged
       .select(
         col("host"),
         // the AIMD average moves ONLY on observed fetches (Scrapy adjusts
@@ -148,13 +155,13 @@ object Scheduler {
         // must keep its delay, or ~10 idle rounds would silently halve it
         // back to nothing and un-throttle a slow host without one new
         // latency sample
-        when(coalesce(col("__f"), lit(0L)) > 0L,
+        when(col("__f") > 0L,
           least(
             (coalesce(col("delaySec"), lit(cfg.startDelaySec)) + targetDelay) / 2.0,
             lit(maxDelaySec)))
           .otherwise(coalesce(col("delaySec"), lit(cfg.startDelaySec))).as("delaySec"),
         (coalesce(col("clockSec"), lit(0.0)) + roundSec).as("clockSec"),
-        (coalesce(col("fetched"), lit(0L)) + coalesce(col("__f"), lit(0L))).as("fetched"))
+        (coalesce(col("fetched"), lit(0L)) + col("__f")).as("fetched"))
       .as[HostState]
   }
 }

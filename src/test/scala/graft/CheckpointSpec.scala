@@ -96,6 +96,44 @@ class CheckpointSpec extends SparkSpec {
     assert(a.nonEmpty)
   }
 
+  test("kill-and-resume: snapshot tables come back with their pinned schemas") {
+    val (frontier, pages, robots) = smallCrawlInputs()
+    val dir = Files.createTempDirectory("crawlSchemas").toString
+    CrawlJob.run(spark, frontier, pages, robots, dir, cfg, roundSec = 1.25, maxRounds = 2)
+    val (rates, seen, metrics) = CrawlJob.run(spark, frontier, pages, robots, dir, cfg, roundSec = 1.25)
+    assert(rates.schema === CrawlJob.RatesSchema)
+    assert(seen.schema === CrawlJob.SeenSchema)
+    assert(metrics.schema === CrawlJob.MetricsSchema)
+    // each pin names the columns and types the writers put on disk, so a
+    // pinned read returns what an inferring read would
+    val man = new SnapshotStore(dir).readCurrent().get._2
+    def onDisk(table: String) = spark.read.parquet(man(table).split(";").toIndexedSeq: _*)
+      .schema.map(f => f.name -> f.dataType)
+    def pinned(schema: org.apache.spark.sql.types.StructType) = schema.map(f => f.name -> f.dataType)
+    assert(onDisk("rates") === pinned(CrawlJob.RatesSchema))
+    assert(onDisk("seen") === pinned(CrawlJob.SeenSchema))
+    assert(onDisk("metrics") === pinned(CrawlJob.MetricsSchema))
+    assert(onDisk("lineage") === pinned(CrawlJob.LineageSchema))
+    assert(onDisk("hostStates") === pinned(CrawlJob.HostStateSchema))
+    assert(CrawlJob.HostStateSchema === org.apache.spark.sql.Encoders.product[graft.model.HostState].schema)
+  }
+
+  test("a fresh crawl sizes its Bloom filters from the frontier") {
+    // 2400 URLs on 4 hosts, one unthrottled round, 2 filter partitions:
+    // every filter holds at most 2400 keys, so its capacity is 2 × 2400 / 2
+    val frontier = graft.synth.BenchWorkload.frontier(spark, 2400L, nHosts = 4, hotPermille = 0)
+    val pages = graft.synth.BenchWorkload.pages(frontier)
+    val (_, _, robots) = smallCrawlInputs()
+    val dir = Files.createTempDirectory("crawlBloomCap").toString
+    CrawlJob.run(spark, frontier, pages, robots, dir,
+      PolitenessConfig(maxGlobal = Int.MaxValue, maxPerHost = Int.MaxValue),
+      roundSec = 1e9, bloomParts = 2)
+    val sidecars = (0L until 2L).map(pm => graft.dedup.UrlSeen.readSidecarStatic(s"$dir/blooms", pm))
+    assert(graft.dedup.UrlSeen.capacityFor(2400L, 2) === 2400L)
+    assert(sidecars.map(_._1) === Seq(2400L, 2400L))
+    assert(sidecars.map(_._2).sum === 2400L)
+  }
+
   test("foreign snapshot tables (a persisted IVF model) survive later crawl commits") {
     // production order: crawl rounds → Ann.saveCentroids into the SAME
     // store → more crawl rounds. Every committer carries the prior

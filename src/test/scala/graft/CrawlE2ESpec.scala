@@ -186,6 +186,13 @@ class CrawlE2ESpec extends SparkSpec {
     val byHost = metrics.groupBy("host").agg(sum("offsiteDropped").as("d"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byHost("evil.example.com") === 2L)
+    // the off-domain host has rows in no stage after the offsite gate: each
+    // of those stage counts is 0, never null
+    assert(metrics.filter(metrics.columns.map(c => col(c).isNull).reduce(_ || _)).count() === 0)
+    val evil = metrics.filter(col("host") === "evil.example.com")
+      .select("scheduled", "robotsDropped", "fetchMissed", "errorDropped", "extractedOk")
+      .as[(Long, Long, Long, Long, Long)].collect()
+    assert(evil.toSeq === Seq((0L, 0L, 0L, 0L, 0L)))
   }
 
   test("all gates together: dedup + offsite + robots + retries compose; metrics reconcile") {

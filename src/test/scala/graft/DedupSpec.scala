@@ -137,6 +137,33 @@ class DedupSpec extends SparkSpec {
     assert(exact.size === 30)
   }
 
+  test("merged filter files: full serialized size, read back, hold every merged key") {
+    // a filter file cut short (an unflushed buffered stream) fails the size
+    // check; a wrong or stale filter fails the membership check
+    val dir = java.nio.file.Files.createTempDirectory("bloomio").toString
+    val parts = 4
+    val cap = 5000L
+    val rnd = new scala.util.Random(7)
+    val keys = Seq.fill(3000)(rnd.nextLong()).distinct
+    UrlSeen.mergeDeltaIntoPartitionedBlooms(
+      keys.toDF("urlHash"), keys.toDF("urlHash"), dir, parts, capacityPerPart = cap)
+    val expectedSize = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      org.apache.spark.util.sketch.BloomFilter.create(cap, 0.01).writeTo(bytes)
+      bytes.size().toLong
+    }
+    for (pm <- 0 until parts) {
+      val bin = java.nio.file.Paths.get(dir, f"bloom-$pm%05d.bin")
+      assert(java.nio.file.Files.size(bin) === expectedSize, s"partition $pm")
+      val in = java.nio.file.Files.newInputStream(bin)
+      val bf = try org.apache.spark.util.sketch.BloomFilter.readFrom(in) finally in.close()
+      val own = keys.filter(k => Math.floorMod(k, parts.toLong) == pm)
+      assert(own.forall(bf.mightContainLong), s"partition $pm lost a merged key")
+      assert(UrlSeen.readSidecarStatic(dir, pm.toLong) === ((cap, own.size.toLong)))
+    }
+    assert(!new java.io.File(dir).list().exists(_.endsWith(".tmp")))
+  }
+
   test("bloom ROUND marker round-trips") {
     val dir = java.nio.file.Files.createTempDirectory("mbloom").toString
     assert(UrlSeen.readBloomRound(dir) === None)

@@ -136,6 +136,35 @@ class SchedulerSpec extends SparkSpec {
     assert(s1("busy.com").delaySec < 2.0)
   }
 
+  test("host state update ≡ plain-Scala AIMD: prior-only, scheduled-only and both") {
+    val round = 4
+    val roundSec = 10.0
+    val prior = Seq(
+      HostState("prior.com", delaySec = 5.0, clockSec = 20.0, fetched = 7L),
+      HostState("both.com", delaySec = 1.5, clockSec = 10.0, fetched = 3L))
+    val sched = frontier(
+      ("both.com", "u1", 0, 1L), ("both.com", "u2", 0, 2L), ("new.com", "v1", 0, 3L))
+    val got = Scheduler.updateHostStates(sched, prior.toDS(), cfg, round, roundSec)
+      .collect().map(s => s.host -> s).toMap
+
+    // the synthetic latency, as xxhash64(host + "#round") with Spark's seed
+    def latency(host: String): Double = 0.05 + Math.floorMod(
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
+        org.apache.spark.unsafe.types.UTF8String.fromString(s"$host#$round"), 42L), 500L) / 1000.0
+    def reference(host: String, fetchedNow: Long): HostState = {
+      val p = prior.find(_.host == host)
+      val d0 = p.map(_.delaySec).getOrElse(cfg.startDelaySec)
+      HostState(host,
+        if (fetchedNow > 0) math.min((d0 + latency(host) / cfg.targetConcurrency) / 2.0, 60.0) else d0,
+        p.map(_.clockSec).getOrElse(0.0) + roundSec,
+        p.map(_.fetched).getOrElse(0L) + fetchedNow)
+    }
+    assert(got === Map(
+      "prior.com" -> reference("prior.com", 0L),
+      "both.com" -> reference("both.com", 2L),
+      "new.com" -> reference("new.com", 1L)))
+  }
+
   test("robots parser: multi-UA groups, inline comments") {
     val body =
       """User-agent: *   # all crawlers
