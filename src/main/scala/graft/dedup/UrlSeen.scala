@@ -252,8 +252,12 @@ object UrlSeen {
     *    sized or smaller): the seen table is SCANNED once and never
     *    shuffled — a left-semi join against a broadcast of the probe set
     *    yields the (small) confirmed-seen keys, which are then broadcast-
-    *    anti-joined back. Per-round cost: one columnar seen scan + two
-    *    broadcasts of probe-set size. The default shuffle anti-join would
+    *    anti-joined against ALL candidates in one pass. A filter verdict
+    *    depends only on `urlHash`, so no candidate outside the probe set
+    *    can match a confirmed-seen key, and this equals the union of the
+    *    two branches without a second candidate scan. Per-round cost: one
+    *    columnar seen scan + two broadcasts of probe-set size. The default
+    *    shuffle anti-join would
     *    instead EXCHANGE the whole seen set every round — the quadratic
     *    term this path exists to avoid.
     *  - `smallProbe = false` (probe set too big to broadcast): classic
@@ -269,22 +273,21 @@ object UrlSeen {
     val mightContain = udf((pm: Long, h: Long) => probe(pm, h))
     val maybeSeen = candidates.filter(
       mightContain(pmod(col("urlHash"), lit(parts.toLong)), col("urlHash")))
-    val definitelyNew = candidates.filter(
-      !mightContain(pmod(col("urlHash"), lit(parts.toLong)), col("urlHash")))
-    val newFromMaybe =
-      if (!smallProbe) filterNewExact(maybeSeen, seen)
-      else {
-        val confirmedSeen = seen
-          .join(
-            broadcast(maybeSeen.select(col("urlHash").as("__ph"), col("canonUrl").as("__pu"))),
-            col("urlHash") === col("__ph") && col("url") === col("__pu"), "left_semi")
-          .select(col("urlHash").as("__sh"), col("url").as("__su"))
-        maybeSeen.join(
-          broadcast(confirmedSeen),
-          maybeSeen("urlHash") === col("__sh") && maybeSeen("canonUrl") === col("__su"),
-          "left_anti")
-      }
-    definitelyNew.unionAll(newFromMaybe)
+    if (!smallProbe) {
+      val definitelyNew = candidates.filter(
+        !mightContain(pmod(col("urlHash"), lit(parts.toLong)), col("urlHash")))
+      definitelyNew.unionAll(filterNewExact(maybeSeen, seen))
+    } else {
+      val confirmedSeen = seen
+        .join(
+          broadcast(maybeSeen.select(col("urlHash").as("__ph"), col("canonUrl").as("__pu"))),
+          col("urlHash") === col("__ph") && col("url") === col("__pu"), "left_semi")
+        .select(col("urlHash").as("__sh"), col("url").as("__su"))
+      candidates.join(
+        broadcast(confirmedSeen),
+        candidates("urlHash") === col("__sh") && candidates("canonUrl") === col("__su"),
+        "left_anti")
+    }
   }
 }
 
