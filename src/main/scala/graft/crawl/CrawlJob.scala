@@ -4,7 +4,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -24,6 +24,10 @@ import graft.politeness.{Robots, Scheduler}
   * downloader → parse → pipeline). Every round commits one snapshot via
   * [[SnapshotStore]]; `run` resumes mid-crawl from the last committed round
   * and a resumed run is bit-equivalent to an uninterrupted one.
+  *
+  * [[crawlRound]] is the only crawl round, and it has two drivers over the
+  * state [[loadState]] reads: `run` loops it until the frontier drains, and
+  * [[graft.streaming.Streams.processSeedBatch]] runs one per micro-batch.
   */
 object CrawlJob {
 
@@ -90,7 +94,14 @@ object CrawlJob {
       .select("url", "canonUrl", "urlHash", "host", "card_c", "trans_c", "date", "provider", "priority", "seq", "retries", "headers")
   }
 
-  /** Run (or resume) a crawl.
+  /** Defaults [[run]] and the stream driver share: Bloom filter partitions,
+    * and rounds between delta-chain compactions.
+    */
+  private[graft] val DefaultBloomParts = 32
+  private[graft] val DefaultCompactEvery = 64
+
+  /** Run (or resume) a crawl: load the committed state, then run rounds
+    * until the frontier is empty or `maxRounds` rounds are committed.
     *
     * @param frontier0  initial frontier (ignored when resuming)
     * @param pages      the page table (BASELINE.json input_hint shape)
@@ -122,17 +133,156 @@ object CrawlJob {
       maxRounds: Int = 1000,
       maxRetries: Int = 2,
       allowedDomains: Seq[String] = Nil,
-      bloomParts: Int = 32,
-      compactEvery: Int = 64,
+      bloomParts: Int = DefaultBloomParts,
+      compactEvery: Int = DefaultCompactEvery,
       insertBatchRows: Option[Int] = None,
-      providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry): (DataFrame, DataFrame, DataFrame) = {
+      providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry): (DataFrame, DataFrame, DataFrame) =
+    restoringJobDescription(spark) {
+      val loaded = loadState(spark, checkpointDir, bloomParts)(_.getOrElse(UrlSeen.dedupWithinBatch(frontier0)))
+      val rules = activeRules(Some(robots))
+      var state = loaded
+      try {
+        while (state.frontierCount > 0 && state.round < maxRounds)
+          state = crawlRound(spark, checkpointDir, state, pages, rules, cfg, roundSec, maxRetries,
+            allowedDomains, bloomParts, compactEvery, insertBatchRows, providers)
+      } finally loaded.frontier.unpersist() // cached by loadState when computed; a no-op otherwise
+      (read(spark, RatesSchema, state.ratesPaths), read(spark, SeenSchema, state.seenPaths),
+        read(spark, MetricsSchema, state.metricsPaths))
+    }
+
+  /** Run `body`, then give the thread back the job description it had:
+    * every job a crawl submits carries a "crawl r<N>: <step>" description,
+    * and the caller's own comes back on return and on a throw alike.
+    */
+  private[graft] def restoringJobDescription[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    try body finally sc.setJobDescription(callerDescription)
+  }
+
+  /** The robots gate's rules, or None when there are none: no rules at all
+    * (common in tests/bench) skips the gate's join subtree every round. Each
+    * driver decides this once, never per round.
+    */
+  private[graft] def activeRules(robots: Option[DataFrame]): Option[DataFrame] = robots.filter(!_.isEmpty)
+
+  /** A crawl's committed state, as one round consumes and produces it.
+    * frontier + hostStates are full snapshots (they shrink / stay tiny);
+    * seen / rates / metrics / lineage are APPEND-ONLY and stored as
+    * per-round delta files — the manifest carries the ';'-joined delta path
+    * list, so each round writes O(round delta), not O(total state). At
+    * 10^10 URLs a full seen-set rewrite per round would dominate everything.
+    *
+    * @param round         the last committed round (0 before the first)
+    * @param frontierCount rows of `frontier`; it bounds the distinct keys
+    *                      the next round adds to the seen set
+    */
+  private[graft] final case class CrawlState(
+      round: Int,
+      frontier: DataFrame,
+      frontierCount: Long,
+      hostStates: Dataset[HostState],
+      seenPaths: Seq[String],
+      ratesPaths: Seq[String],
+      metricsPaths: Seq[String],
+      lineagePaths: Seq[String])
+
+  private def read(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame =
+    if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(paths: _*)
+
+  /** Load the committed state in `checkpointDir` (round 0 and empty tables
+    * when nothing is committed) and reconcile its Bloom sidecar. The
+    * loader's jobs are labelled "crawl r<N>: load", and so are any the
+    * caller submits before its first round.
+    *
+    * `frontierOf` gets the committed frontier (None before the first
+    * commit) and returns the frontier the next round consumes. The committed
+    * frame itself is parquet-backed and counted from its footers: no Spark
+    * job. Any other frame is a COMPUTED plan (a within-batch dedup window, a
+    * union with new seeds); it is cached and counted here, so the loop guard
+    * and the round's consumers evaluate it once, and the round that consumes
+    * it releases it.
+    */
+  private[graft] def loadState(spark: SparkSession, checkpointDir: String, bloomParts: Int)(
+      frontierOf: Option[DataFrame] => DataFrame): CrawlState = {
+    import spark.implicits._
+    val resume = new SnapshotStore(checkpointDir).readCurrent()
+    val round = resume.map(_._1).getOrElse(0)
+    val manifest = resume.map(_._2).getOrElse(Map.empty[String, String])
+    spark.sparkContext.setJobDescription(s"crawl r$round: load")
+    def chain(key: String): Seq[String] =
+      manifest.get(key).map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
+    val seenPaths = chain("seen")
+
+    // reconcile the partitioned-Bloom sidecar state with the committed
+    // snapshot: the filters are merged BEFORE each manifest commit, so
+    // marker ≥ committed round ⇒ filters ⊇ seen (extra keys are harmless —
+    // the exact anti-join confirms). A marker BEHIND the committed round
+    // (legacy checkpoint layout, manual surgery, a foreign commit) breaks
+    // that superset invariant, so rebuild once from the committed seen set.
+    val bloomDir = s"$checkpointDir/blooms"
+    if (round > 0 && UrlSeen.readBloomRound(bloomDir).forall(_ < round)) {
+      if (seenPaths.nonEmpty) {
+        // rebuild from DISTINCT keys: retry rows re-append the same urlHash
+        // each round, so raw row counts would inflate the saturation sidecars
+        // and trigger premature doubled-capacity rebuilds (the merge path
+        // already dedups via distinct() — keep both paths consistent)
+        val distinctKeys = read(spark, SeenSchema, seenPaths).select("urlHash").distinct()
+        val seenCount = distinctKeys.count()
+        UrlSeen.buildPartitionedBlooms(
+          distinctKeys, bloomDir, bloomParts, UrlSeen.capacityFor(seenCount, bloomParts))
+      }
+      UrlSeen.writeBloomRound(bloomDir, round)
+    }
+
+    val committed = manifest.get("frontier").map(spark.read.parquet(_))
+    val frontier = frontierOf(committed)
+    val frontierCount =
+      if (committed.exists(_ eq frontier)) parquetRowCounts(spark, manifest("frontier")).map(_._2).sum
+      else {
+        frontier.cache()
+        try frontier.count() catch { case e: Throwable => frontier.unpersist(); throw e }
+      }
+    val hostStates = manifest.get("hostStates")
+      .map(p => read(spark, HostStateSchema, Seq(p)).as[HostState])
+      .getOrElse(spark.emptyDataset[HostState])
+    CrawlState(round, frontier, frontierCount, hostStates,
+      seenPaths, chain("rates"), chain("metrics"), chain("lineage"))
+  }
+
+  /** One crawl round over `state`, committed as round `state.round + 1`:
+    *
+    *   dedup → offsite → robots → politeness schedule → fetch-join →
+    *   extract → rates upsert → host states + metrics → concurrent commit
+    *   → lineage → compaction → reload
+    *
+    * `extraTables` are merged into the same atomic manifest commit (the
+    * stream records its batch ids there). Returns the committed state, read
+    * back from the snapshot. The round's caches, and the consumed frontier's,
+    * are released on return and on a throw alike.
+    *
+    * @param robots the rules, None for no robots gate (see [[activeRules]])
+    */
+  private[graft] def crawlRound(
+      spark: SparkSession,
+      checkpointDir: String,
+      state: CrawlState,
+      pages: DataFrame,
+      robots: Option[DataFrame],
+      cfg: PolitenessConfig,
+      roundSec: Double,
+      maxRetries: Int,
+      allowedDomains: Seq[String] = Nil,
+      bloomParts: Int = DefaultBloomParts,
+      compactEvery: Int = DefaultCompactEvery,
+      insertBatchRows: Option[Int] = None,
+      providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry,
+      extraTables: Map[String, String] = Map.empty): CrawlState = {
     import spark.implicits._
     val store = new SnapshotStore(checkpointDir)
     val bloomDir = s"$checkpointDir/blooms"
-    // every job below carries a "crawl r<N>: <step>" description; the
-    // caller's own description comes back when the run returns
     val sc = spark.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
     // A job submitted from a pool thread. The description is thread-local,
     // so it is set inside the future, and cleared after it so the pool
     // thread carries no stale label into its next task.
@@ -141,84 +291,26 @@ object CrawlJob {
         sc.setJobDescription(description)
         try body finally sc.setJobDescription(null)
       }
+    // every frame this round caches, released in the `finally` below; the
+    // consumed frontier is among them (a no-op unless loadState cached it)
+    val cached = scala.collection.mutable.ArrayBuffer(state.frontier)
+    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
 
-    // ---- load or init state ------------------------------------------------
-    // frontier + hostStates are full snapshots (they shrink / stay tiny);
-    // seen / rates / metrics are APPEND-ONLY and stored as per-round delta
-    // files — the manifest carries the ';'-joined delta path list, so each
-    // round writes O(round delta), not O(total state). At 10^10 URLs a full
-    // seen-set rewrite per round would dominate everything.
-    val resume = store.readCurrent()
-    var round = resume.map(_._1).getOrElse(0)
-    sc.setJobDescription(s"crawl r$round: load")
-    def read(schema: StructType, paths: Seq[String]): DataFrame =
-      if (paths.isEmpty) spark.createDataFrame(sc.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(paths: _*)
-    var (frontier, hostStates) = resume match {
-      case Some((_, man)) =>
-        (spark.read.parquet(man("frontier")), read(HostStateSchema, Seq(man("hostStates"))).as[HostState])
-      case None =>
-        (UrlSeen.dedupWithinBatch(frontier0), spark.emptyDataset[HostState])
-    }
-    def resumePaths(key: String): Seq[String] =
-      resume.flatMap(_._2.get(key)).map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    var seenPaths: Seq[String] = resumePaths("seen")
-    var ratesPaths: Seq[String] = resumePaths("rates")
-    var metricsPaths: Seq[String] = resumePaths("metrics")
-    var lineagePaths: Seq[String] = resumePaths("lineage")
-    def seenDf: DataFrame = read(SeenSchema, seenPaths)
-    def ratesDf: DataFrame = read(RatesSchema, ratesPaths)
-    def metricsDf: DataFrame = read(MetricsSchema, metricsPaths)
-
-    // reconcile the partitioned-Bloom sidecar state with the committed
-    // snapshot: the filters are merged BEFORE each manifest commit, so
-    // marker ≥ committed round ⇒ filters ⊇ seen (extra keys are harmless —
-    // the exact anti-join confirms). A marker BEHIND the committed round
-    // (legacy checkpoint layout, manual surgery) breaks that superset
-    // invariant, so rebuild once from the committed seen set.
-    if (round > 0 && UrlSeen.readBloomRound(bloomDir).forall(_ < round)) {
-      if (seenPaths.nonEmpty) {
-        // rebuild from DISTINCT keys: retry rows re-append the same urlHash
-        // each round, so raw row counts would inflate the saturation sidecars
-        // and trigger premature doubled-capacity rebuilds (the merge path
-        // already dedups via distinct() — keep both paths consistent)
-        val distinctKeys = seenDf.select("urlHash").distinct()
-        val seenCount = distinctKeys.count()
-        UrlSeen.buildPartitionedBlooms(
-          distinctKeys, bloomDir, bloomParts, UrlSeen.capacityFor(seenCount, bloomParts))
-      }
-      UrlSeen.writeBloomRound(bloomDir, round)
-    }
-
+    val round = state.round + 1
+    val frontier = state.frontier
+    def seenDf: DataFrame = read(spark, SeenSchema, state.seenPaths)
     // 1-based registry id (client.py:86-88 seeding order); all provider-
     // specific behavior below routes through the registry, so a new provider
-    // never touches this loop (the reference's one extension point)
+    // never touches this round (the reference's one extension point)
     val providerId = graft.provider.Providers.idCol(col("provider"), providers)
+    // a batch crawl's frontier never grows after the within-batch dedup
+    // (retry rows replace their own scheduled rows), so this round's
+    // frontier bounds the distinct keys any filter created from here on will
+    // hold; a stream's frontier grows with each batch's seeds, and a filter
+    // it outgrows is rebuilt at doubled capacity on saturation
+    val bloomCapacity = UrlSeen.capacityFor(state.frontierCount, bloomParts)
 
-    // ---- rounds ------------------------------------------------------------
-    // no robots rules at all (common in tests/bench) ⇒ skip the gate's
-    // broadcast-join subtree every round; checked once, not per round
-    val robotsEmpty = robots.isEmpty
-    // a fresh run's frontier is a COMPUTED plan (the within-batch dedup
-    // window): cache it so the loop-guard count and round 1's consumption
-    // evaluate it once; it is released at the end of round 1 with the other
-    // round caches. A resumed frontier is parquet-backed and is counted from
-    // its footers, like the per-round count below: no Spark job.
-    var frontierCount = resume match {
-      case Some((_, man)) => parquetRowCounts(spark, man("frontier")).map(_._2).sum
-      case None =>
-        frontier = frontier.cache()
-        frontier.count()
-    }
-    while (frontierCount > 0 && round < maxRounds) {
-      round += 1
-      val frontierPrev = frontier
-      // a frontier never grows after the within-batch dedup (retry rows
-      // replace their own scheduled rows), so this round's frontier bounds
-      // the distinct keys any filter created from here on will hold
-      val bloomCapacity = UrlSeen.capacityFor(frontierCount, bloomParts)
-
-      val tRound = System.nanoTime()
+    try {
       // 1. dedup against the seen set — INCREMENTAL partitioned-Bloom prune
       //    + exact anti-join confirm. The per-partition filters were merged
       //    with each prior round's seen DELTA (O(delta)/round, never a full
@@ -227,12 +319,12 @@ object CrawlJob {
       //    (first round) ⇒ skip the whole dedup subtree.
       //    Retry rows (retries > 0) BYPASS the dupefilter — Scrapy re-enqueues
       //    retries with dont_filter semantics, and they are in `seen` already.
-      // nothing seen yet ⇒ `fresh` IS the frontier frame, which the
-      // fresh-run path above already cached — re-caching the same plan is a
-      // no-op that logs a CacheManager warning; only the computed dedup
-      // output is a new frame needing its own cache
+      // nothing seen yet ⇒ `fresh` IS the frontier frame, which loadState
+      // caches when it is computed — re-caching the same plan is a no-op
+      // that logs a CacheManager warning; only the computed dedup output is
+      // a new frame needing its own cache
       val fresh =
-        if (seenPaths.isEmpty) frontier
+        if (state.seenPaths.isEmpty) frontier
         else {
           val firstTry = frontier.filter(col("retries") === 0)
           val retries = frontier.filter(col("retries") > 0)
@@ -241,10 +333,9 @@ object CrawlJob {
           // the broadcast-safety bound (~2M rows ≈ low hundreds of MB of
           // (hash, url)) the seen table is scanned once and never shuffled
           // (see filterNewPartitionedBloom)
-          UrlSeen.filterNewPartitionedBloom(firstTry, seenDf, bloomDir, bloomParts,
-            smallProbe = frontierCount <= 2000000L)
-            .unionByName(retries)
-            .cache()
+          cache(UrlSeen.filterNewPartitionedBloom(firstTry, seenDf, bloomDir, bloomParts,
+            smallProbe = state.frontierCount <= 2000000L)
+            .unionByName(retries))
         }
       // 2. offsite filter (allowed_domains) then robots gate; cached — the
       //    surviving frontier feeds both the scheduler and the next-round
@@ -253,13 +344,12 @@ object CrawlJob {
       //    scheduler/downloader at all.
       // cache only NEW frames: a skipped gate passes the previous frame
       // through, and re-caching it is a no-op that logs a CacheManager
-      // warning every round (unpersist below is idempotent either way)
+      // warning every round
       val onsiteF =
-        if (allowedDomains.isEmpty) fresh else Robots.onSite(fresh, allowedDomains).cache()
-      val allowedF = if (robotsEmpty) onsiteF else Robots.allowed(onsiteF, robots).cache()
+        if (allowedDomains.isEmpty) fresh else cache(Robots.onSite(fresh, allowedDomains))
+      val allowedF = robots.fold(onsiteF)(rules => cache(Robots.allowed(onsiteF, rules)))
       // 3. per-host politeness schedule
-      val sched = Scheduler.scheduleRound(allowedF, hostStates.toDF(), cfg, roundSec)
-        .cache()
+      val sched = cache(Scheduler.scheduleRound(allowedF, state.hostStates.toDF(), cfg, roundSec))
       // sched (and every cached frame upstream of it) is materialized by
       // the single `extracted.count()` action below, BEFORE the concurrent
       // write phase — cache blocks fill as the extraction pass scans them,
@@ -292,7 +382,7 @@ object CrawlJob {
         Seq("url", "canonUrl", "urlHash", "host", "card_c", "trans_c", "date",
           "provider", "priority", "seq", "retries") ++
           (if (frontier.columns.contains("headers")) Seq("headers") else Nil)
-      val extracted = fetched.select(
+      val extracted = cache(fetched.select(
         carryCols.map(col) ++ Seq(
           providerId.as("provider_id"),
           col("text").isNotNull.as("hit"),
@@ -300,11 +390,13 @@ object CrawlJob {
             graft.provider.Providers.route(col("provider"), providers)(_.isError(col("text"))),
             lit(false))).as("is_err"),
           graft.provider.Providers.route(col("provider"), providers)(_.extractRate(col("text")))
-            .as("rate")): _*)
-        .cache()
+            .as("rate")): _*))
       sc.setJobDescription(s"crawl r$round: extract")
       extracted.count() // one streaming pass fills the (slim) cache
 
+      // 6. append rates honoring the unique constraint (orm.py:33-34):
+      //    set-difference upsert (duplicate keys within the batch AND vs
+      //    prior rounds both excluded), written as this round's delta
       val parsed = extracted
         .filter(col("hit") && !col("is_err"))
         .select(
@@ -313,13 +405,9 @@ object CrawlJob {
           col("date"),
           col("provider_id"),
           col("rate"))
-
-      // 6. append rates honoring the unique constraint (orm.py:33-34):
-      //    set-difference upsert (duplicate keys within the batch AND vs
-      //    prior rounds both excluded), written as this round's delta
-      val parsedUnique = parsed.dropDuplicates("card_code", "trans_code", "date", "provider_id")
-      val newRates = parsedUnique.join(
-        ratesDf.select("card_code", "trans_code", "date", "provider_id"),
+        .dropDuplicates("card_code", "trans_code", "date", "provider_id")
+      val newRates = parsed.join(
+        read(spark, RatesSchema, state.ratesPaths).select("card_code", "trans_code", "date", "provider_id"),
         Seq("card_code", "trans_code", "date", "provider_id"), "left_anti")
 
       // 7. seen delta = scheduled canonical urls; frontier -= scheduled
@@ -343,7 +431,7 @@ object CrawlJob {
 
       // 8. host throttle state + per-round fetch/dedup metrics
       //    (north_rule). All aggregations run over slim cached frames.
-      val hostStates1 = Scheduler.updateHostStates(sched, hostStates, cfg, round, roundSec)
+      val hostStates1 = Scheduler.updateHostStates(sched, state.hostStates, cfg, round, roundSec)
       // ALL per-host stage counts in ONE aggregation: tag each (cached,
       // slim) stage frame with its name, union, and count each stage with a
       // conditional count in one groupBy(host) — one shuffle of (host,
@@ -421,7 +509,7 @@ object CrawlJob {
       // incremental Bloom maintenance rides the same concurrent write phase
       // (it reads only the cached slim schedule) and, like the data writes,
       // completes BEFORE the manifest commit — the superset invariant (see
-      // the reconcile note above). Merge only this round's FIRST-TRY
+      // the reconcile note in loadState). Merge only this round's FIRST-TRY
       // scheduled keys: O(delta), flat per round; retry rows are skipped
       // (their hash entered the filter in the round that first scheduled
       // them, and re-adding would inflate the saturation counters). The
@@ -445,9 +533,6 @@ object CrawlJob {
         bloomMerge))
       val Seq(frontierPath, hostStatesPath, seenPath, ratesPath, metricsPath, _) =
         Await.result(writes, Duration.Inf)
-      seenPaths = seenPaths :+ seenPath
-      ratesPaths = ratesPaths :+ ratesPath
-      metricsPaths = metricsPaths :+ metricsPath
 
       // per-partition lineage (north_rule): file-granular row counts of
       // every data file this round committed, written alongside the data —
@@ -477,7 +562,6 @@ object CrawlJob {
       spark.createDataFrame(
         java.util.Arrays.asList(lineageRows: _*), LineageSchema)
         .write.mode("overwrite").parquet(lineagePath)
-      lineagePaths = lineagePaths :+ lineagePath
 
       // periodic delta-chain compaction (Iceberg rewrite-data-files
       // analogue): every `compactEvery` rounds each append-only chain is
@@ -489,25 +573,22 @@ object CrawlJob {
       // Per-round provenance is preserved because every append-only row
       // carries its `round` as data. The four chains are independent and
       // are rewritten concurrently, like the data writes above.
-      if (compactEvery > 0 && round % compactEvery == 0) {
-        def compact(name: String, schema: StructType, paths: Seq[String]): Future[Seq[String]] =
-          if (paths.size <= 1) Future.successful(paths)
-          else submit(s"crawl r$round: compact $name") {
-            val p = store.dataPath(s"$name-compacted", round)
-            read(schema, paths).write.mode("overwrite").parquet(p)
-            Seq(p)
-          }
-        val compacted = Future.sequence(Seq(
-          compact("seen", SeenSchema, seenPaths),
-          compact("rates", RatesSchema, ratesPaths),
-          compact("metrics", MetricsSchema, metricsPaths),
-          compact("lineage", LineageSchema, lineagePaths)))
-        val Seq(s, r, m, l) = Await.result(compacted, Duration.Inf)
-        seenPaths = s
-        ratesPaths = r
-        metricsPaths = m
-        lineagePaths = l
-      }
+      val chains = Seq(
+        ("seen", SeenSchema, state.seenPaths :+ seenPath),
+        ("rates", RatesSchema, state.ratesPaths :+ ratesPath),
+        ("metrics", MetricsSchema, state.metricsPaths :+ metricsPath),
+        ("lineage", LineageSchema, state.lineagePaths :+ lineagePath))
+      def compact(name: String, schema: StructType, paths: Seq[String]): Future[Seq[String]] =
+        if (paths.size <= 1) Future.successful(paths)
+        else submit(s"crawl r$round: compact $name") {
+          val p = store.dataPath(s"$name-compacted", round)
+          read(spark, schema, paths).write.mode("overwrite").parquet(p)
+          Seq(p)
+        }
+      val Seq(seenPaths, ratesPaths, metricsPaths, lineagePaths) =
+        if (compactEvery > 0 && round % compactEvery == 0)
+          Await.result(Future.sequence(chains.map((compact _).tupled)), Duration.Inf)
+        else chains.map(_._3)
 
       // carry foreign tables (e.g. a persisted IVF model,
       // Ann.saveCentroids) forward from the previous snapshot: committers
@@ -521,25 +602,17 @@ object CrawlJob {
         "seen" -> seenPaths.mkString(";"),
         "rates" -> ratesPaths.mkString(";"),
         "metrics" -> metricsPaths.mkString(";"),
-        "lineage" -> lineagePaths.mkString(";")))
+        "lineage" -> lineagePaths.mkString(";")) ++ extraTables)
 
       // reload from the committed snapshot: truncates lineage so plans don't
       // grow unboundedly across rounds (the iterative-algorithm idiom). The
       // frontier is read with the schema it was just written with.
-      frontier = spark.read.schema(frontier1.schema).parquet(frontierPath)
-      hostStates = read(HostStateSchema, Seq(hostStatesPath)).as[HostState]
-      sched.unpersist()
-      extracted.unpersist()
-      allowedF.unpersist()
-      onsiteF.unpersist()
-      fresh.unpersist()
-      frontierPrev.unpersist() // no-op except for the cached fresh-run frontier
-      frontierCount = lineageRows
-        .filter(_.getString(1) == "frontier").map(_.getLong(3)).sum
-      if (sys.env.contains("SPARK_GRAFT_VERBOSE"))
-        println(f"[crawl] round $round done in ${(System.nanoTime() - tRound) / 1e9}%.1f s; frontier left: $frontierCount")
-    }
-    sc.setJobDescription(callerDescription)
-    (ratesDf, seenDf, metricsDf)
+      CrawlState(
+        round,
+        spark.read.schema(frontier1.schema).parquet(frontierPath),
+        lineageRows.filter(_.getString(1) == "frontier").map(_.getLong(3)).sum,
+        read(spark, HostStateSchema, Seq(hostStatesPath)).as[HostState],
+        seenPaths, ratesPaths, metricsPaths, lineagePaths)
+    } finally cached.foreach(_.unpersist())
   }
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -14,14 +14,12 @@ import org.apache.spark.util.sketch.BloomFilter
   * *confirms* — the final URL-seen set must be exact to match the reference
   * (no false drops, ever: Bloom false positives only cost a join probe).
   *
-  * Scale notes (10^10 URLs): the seen table lives hash-partitioned by
-  * `pmod(urlHash, P)` so the anti-join is a co-partitioned shuffle on a
-  * 64-bit key (no wide rows move); the Bloom is built distributedly via
-  * `DataFrameStatFunctions.bloomFilter` (treeAggregate under the hood) and
-  * broadcast once per round. At 10^10 keys a single driver Bloom at 1% fpp
-  * is ~12 GB — too big — so [[filterNewBloom]] takes `expectedItems`/`fpp`
-  * per *partition-group* and is applied per hash-partition range by the
-  * caller when the seen set outgrows a single filter.
+  * Scale notes (10^10 URLs): a single driver Bloom over 10^10 keys at 1%
+  * fpp is ~12 GB — too big to build or broadcast — so the filters are
+  * partitioned by `pmod(urlHash, P)`, one file per partition, merged with
+  * each round's seen delta and probed by task
+  * ([[filterNewPartitionedBloom]]). That is the one cross-round Bloom path;
+  * [[filterNewExact]] is the exact confirm it falls back to.
   */
 object UrlSeen {
 
@@ -47,28 +45,6 @@ object UrlSeen {
       seen.select(col("urlHash").as("__sh"), col("url").as("__su")),
       candidates("urlHash") === col("__sh") && candidates("canonUrl") === col("__su"),
       "left_anti")
-
-  /** Bloom-pruned dedup: broadcast Bloom over the seen hashes drops the
-    * vast majority of already-seen candidates *before* the shuffle; the
-    * survivors (new URLs + Bloom false positives) go through the exact
-    * anti-join. Returns the candidates not in `seen`, as one frame.
-    */
-  def filterNewBloom(
-      spark: SparkSession,
-      candidates: DataFrame,
-      seen: DataFrame,
-      expectedItems: Long = 1000000L,
-      fpp: Double = 0.01): DataFrame = {
-    if (seen.isEmpty) candidates
-    else {
-      val bloom: BloomFilter = seen.stat.bloomFilter("urlHash", math.max(expectedItems, 1000L), fpp)
-      val bc = spark.sparkContext.broadcast(bloom)
-      val mightContain = udf((h: Long) => bc.value.mightContainLong(h))
-      val (maybeSeen, definitelyNew) =
-        (candidates.filter(mightContain(col("urlHash"))), candidates.filter(!mightContain(col("urlHash"))))
-      definitelyNew.unionAll(filterNewExact(maybeSeen, seen))
-    }
-  }
 
   // ------------------------------------------------- partitioned Bloom
 

@@ -214,9 +214,8 @@ object Streams {
 
   // ------------------------------------------------- streaming crawl slice
 
-  /** End-to-end streaming slice (VERDICT r02 #6; politeness/robots/retry
-    * added round 4): seed CSV shards arriving in a directory →
-    * [[ingestSeeds]] → per-micro-batch crawl round committed to a
+  /** End-to-end streaming slice: seed CSV shards arriving in a directory →
+    * [[ingestSeeds]] → one crawl round per micro-batch, committed to a
     * [[graft.checkpoint.SnapshotStore]] via `foreachBatch`.
     *
     * Exactly-once composition: Structured Streaming's checkpoint makes
@@ -227,22 +226,25 @@ object Streams {
     * uninterrupted one (StreamsSpec proves seen/rates ≡ the batch crawl of
     * the same seeds).
     *
-    * The full batch-loop round runs inside each micro-batch: robots gate,
-    * salted per-host politeness schedule (AIMD host delays carried in the
-    * store across batches), retry on fetch miss. Rows a batch cannot
-    * schedule under its politeness budget — and retry rows — persist to a
-    * `backlog` snapshot table and re-enter on the NEXT micro-batch, the
-    * streaming analogue of the frontier surviving a batch round. Defaults
-    * (no robots rules, unbounded budget) drain every batch fully.
+    * Each micro-batch runs the batch crawl's own round
+    * ([[graft.crawl.CrawlJob.crawlRound]]): partitioned-Bloom dedup, robots
+    * gate, salted per-host politeness schedule (AIMD host delays carried in
+    * the store across batches), retry on fetch miss, per-host metrics,
+    * lineage and delta-chain compaction, so the store has the batch crawl's
+    * layout plus a `batches` table. Rows a batch cannot schedule under its
+    * politeness budget — and retry rows — stay in the `frontier` table and
+    * re-enter on the NEXT micro-batch, ahead of its new seeds. Defaults (no
+    * robots rules, unbounded budget) drain every batch fully. Robots rules
+    * are checked for emptiness once per stream, not per batch.
     *
-    * DRAIN CONTRACT: backlog rows re-enter only when a later micro-batch
+    * DRAIN CONTRACT: frontier rows re-enter only when a later micro-batch
     * fires, and the file source fires one only for NEW seed files — if the
-    * seed directory goes idle while the backlog is non-empty, the deferred
-    * and retry rows sit in the `backlog` table until the next file arrives
+    * seed directory goes idle while the frontier is non-empty, the deferred
+    * and retry rows sit in the `frontier` table until the next file arrives
     * (they are never lost: the snapshot commit is their durability). A
     * deployment that can stop feeding seeds should drain by dropping empty
     * marker files (each drives one batch — the technique StreamsSpec uses),
-    * or simply accept that the next real seed file resumes the backlog
+    * or simply accept that the next real seed file resumes the frontier
     * first, ahead of its own rows.
     */
   def crawlStream(
@@ -262,25 +264,25 @@ object Streams {
     val raw = spark.readStream
       .schema("card_c STRING, trans_c STRING, date STRING")
       .csv(seedDir)
-    // rules emptiness is checked ONCE here, not per micro-batch (the
-    // batch CrawlJob makes the same once-before-the-loop check)
-    val activeRobots = robots.filter(!_.isEmpty)
+    val rules = graft.crawl.CrawlJob.activeRules(robots)
     ingestSeeds(raw).writeStream
       .option("checkpointLocation", streamCheckpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         processSeedBatch(batch.toDF(), batchId, pages, storeDir, provider, providers,
-          activeRobots, cfg, roundSec, maxRetries)
+          rules, cfg, roundSec, maxRetries)
       }
       .start()
   }
 
-  /** One micro-batch = one crawl round: (backlog ∪ expanded seeds) → dedup
-    * (within batch + vs the store's seen set; retries bypass, as in the
-    * batch loop) → robots gate → per-host politeness schedule →
-    * fetch-join → extract → set-difference rates append → ONE atomic
-    * manifest commit carrying the batch id, the new backlog (deferred +
-    * retry rows) and the AIMD host states. Idempotent per batch id (the
-    * exactly-once half the stream checkpoint can't give).
+  /** One micro-batch = one crawl round, committed as the store's next
+    * version with the batch id recorded in the same manifest commit.
+    * Idempotent per batch id (the exactly-once half the stream checkpoint
+    * can't give). The frontier the round consumes is the store's frontier
+    * (deferred and retry rows from prior batches) followed by this batch's
+    * expanded, within-batch-deduplicated seeds. Seen rows carry the commit
+    * version as their `round`.
+    *
+    * @param robots the rules, None for no robots gate
     */
   private[graft] def processSeedBatch(
       batch: DataFrame,
@@ -295,126 +297,33 @@ object Streams {
       roundSec: Double = 1e9,
       maxRetries: Int = 2): Unit = {
     import graft.crawl.CrawlJob
-    import graft.dedup.UrlSeen
-    import graft.politeness.{Robots, Scheduler}
     val spark = batch.sparkSession
-    val store = new graft.checkpoint.SnapshotStore(storeDir)
-    val resume = store.readCurrent()
-    def paths(key: String): Seq[String] = resume.flatMap(_._2.get(key))
-      .map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val doneBatches = resume.flatMap(_._2.get("batches"))
+    val manifest = new graft.checkpoint.SnapshotStore(storeDir).readCurrent().map(_._2)
+      .getOrElse(Map.empty[String, String])
+    val doneBatches = manifest.get("batches")
       .map(_.split(";").filter(_.nonEmpty).map(_.toLong).toSet).getOrElse(Set.empty[Long])
     if (doneBatches.contains(batchId)) return // replayed after crash — already committed
-    var seenPaths = paths("seen")
-    var ratesPaths = paths("rates")
-    def emptyDf(ddl: String): DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    val seenDf =
-      if (seenPaths.isEmpty) emptyDf("urlHash BIGINT, url STRING, round INT")
-      else spark.read.parquet(seenPaths: _*)
-    val ratesDf =
-      if (ratesPaths.isEmpty)
-        emptyDf("card_code STRING, trans_code STRING, date DATE, provider_id INT, rate DOUBLE")
-      else spark.read.parquet(ratesPaths: _*)
 
     // seq is a scheduling-order key; a stream batch has no file order, so
     // key deterministically on the seed itself (set semantics are what the
     // store guarantees — ordering inside one micro-batch is not meaningful)
     val withSeq = batch.withColumn(
       "seq", xxhash64(col("card_c"), col("trans_c"), col("date")))
-    val newFrontier = UrlSeen.dedupWithinBatch(CrawlJob.expandSeeds(withSeq, provider, providers))
-    // deferred/retry rows from prior batches re-enter ahead of new seeds;
-    // a re-arriving seed whose URL is already in the backlog must not
-    // shadow the backlog row (which may carry retry state)
-    val backlog = resume.flatMap(_._2.get("backlog")).filter(_.nonEmpty)
-      .map(spark.read.parquet(_)).getOrElse(newFrontier.limit(0))
-    val incoming = backlog.unionByName(
-      newFrontier.join(backlog.select("canonUrl"), Seq("canonUrl"), "left_anti"))
-    // retries bypass the dupefilter (they ARE in seen), as in the batch loop
-    val firstTry = incoming.filter(col("retries") === 0)
-    val retries = incoming.filter(col("retries") > 0)
-    val fresh = UrlSeen.filterNewExact(firstTry, seenDf).unionByName(retries)
-    // robots gate + politeness schedule — the batch round's gates, inside
-    // the micro-batch. `allowed` is cached because the commit runs TWO
-    // actions rooted at it (the schedule consumes it AND the backlog's
-    // deferred anti-join re-reads it) — uncached, each action would re-run
-    // the whole expand → dedup-window → seen-anti-join → robots chain.
-    // `None` means no rules (callers decide emptiness once, not per batch).
-    val allowed = robots.map(Robots.allowed(fresh, _)).getOrElse(fresh).cache()
-    import spark.implicits._
-    val hostStates = resume.flatMap(_._2.get("hostStates")).filter(_.nonEmpty)
-      .map(p => spark.read.parquet(p).as[graft.model.HostState])
-      .getOrElse(spark.emptyDataset[graft.model.HostState])
-    val sched = Scheduler.scheduleRound(allowed, hostStates.toDF(), cfg, roundSec).cache()
-    try { // count() inside: a throw during materialization must still unpersist
-      sched.count() // one pass computes the chain, filling BOTH caches
-      val fetched = sched.hint("shuffle_hash")
-        .join(pages.select(col("url"), col("text")), Seq("url"), "left")
-      val extracted = fetched.select(
-        col("url"), col("canonUrl"), col("urlHash"), col("host"), col("card_c"),
-        col("trans_c"), col("date"), col("provider"), col("priority"), col("seq"),
-        col("retries"), col("headers"),
-        graft.provider.Providers.idCol(col("provider"), providers).as("provider_id"),
-        col("text").isNotNull.as("hit"),
-        (col("text").isNotNull && coalesce(
-          graft.provider.Providers.route(col("provider"), providers)(_.isError(col("text"))),
-          lit(false))).as("is_err"),
-        graft.provider.Providers.route(col("provider"), providers)(_.extractRate(col("text")))
-          .as("rate"))
-        .cache()
-      extracted.count() // one streaming pass over the page text fills the slim cache
-      try {
-        val parsed = extracted.filter(col("hit") && !col("is_err"))
-          .select(col("card_c").as("card_code"), col("trans_c").as("trans_code"),
-            col("date"), col("provider_id"), col("rate"))
-          .dropDuplicates("card_code", "trans_code", "date", "provider_id")
-        val newRates = parsed.join(
-          ratesDf.select("card_code", "trans_code", "date", "provider_id"),
-          Seq("card_code", "trans_code", "date", "provider_id"), "left_anti")
-        val seenDelta = sched.select(
-          col("urlHash"), col("canonUrl").as("url"), lit(batchId.toInt + 1).as("round"))
-        // next backlog = politeness-deferred rows + fetch-miss retries
-        // (priority-1, retries+1, dropped past maxRetries) — the streaming
-        // analogue of the frontier surviving a batch round
-        val frontierCols = incoming.columns.toIndexedSeq.map(col)
-        val deferred = allowed.join(
-          sched.select("urlHash", "canonUrl"), Seq("urlHash", "canonUrl"), "left_anti")
-          .select(frontierCols: _*)
-        val retryRows = extracted
-          .filter(!col("hit") && col("retries") < maxRetries)
-          .select(incoming.columns.toIndexedSeq.map {
-            case "priority" => (col("priority") - 1).as("priority")
-            case "retries" => (col("retries") + 1).as("retries")
-            case c => col(c)
-          }: _*)
-        val backlog1 = deferred.unionByName(retryRows)
-        val hostStates1 = Scheduler.updateHostStates(
-          sched, hostStates, cfg, batchId.toInt + 1, roundSec)
-
-        val version = resume.map(_._1).getOrElse(0) + 1
-        val seenPath = store.dataPath("seen", version)
-        val ratesPath = store.dataPath("rates", version)
-        val backlogPath = store.dataPath("backlog", version)
-        val hostStatesPath = store.dataPath("hostStates", version)
-        seenDelta.write.mode("overwrite").parquet(seenPath)
-        newRates.write.mode("overwrite").parquet(ratesPath)
-        backlog1.write.mode("overwrite").parquet(backlogPath)
-        hostStates1.toDF().write.mode("overwrite").parquet(hostStatesPath)
-        seenPaths = seenPaths :+ seenPath
-        ratesPaths = ratesPaths :+ ratesPath
-        // foreign tables (e.g. a persisted IVF model) carry forward — see
-        // the CrawlJob commit note
-        store.commit(version, resume.map(_._2).getOrElse(Map.empty) ++ Map(
-          "seen" -> seenPaths.mkString(";"),
-          "rates" -> ratesPaths.mkString(";"),
-          "backlog" -> backlogPath,
-          "hostStates" -> hostStatesPath,
-          "batches" -> (doneBatches + batchId).toSeq.sorted.mkString(";")))
-      } finally extracted.unpersist()
-    } finally {
-      sched.unpersist()
-      allowed.unpersist()
+    val seeds = graft.dedup.UrlSeen.dedupWithinBatch(CrawlJob.expandSeeds(withSeq, provider, providers))
+    CrawlJob.restoringJobDescription(spark) {
+      val state = CrawlJob.loadState(spark, storeDir, CrawlJob.DefaultBloomParts) { committed =>
+        // deferred/retry rows from prior batches re-enter ahead of new
+        // seeds; a re-arriving seed whose URL is already in the frontier
+        // must not shadow that row (which may carry retry state). Stores
+        // written before the stream ran the shared round kept that
+        // frontier under `backlog`.
+        committed.orElse(manifest.get("backlog").map(spark.read.parquet(_)))
+          .map(prior => prior.unionByName(seeds.join(prior.select("canonUrl"), Seq("canonUrl"), "left_anti")))
+          .getOrElse(seeds)
+      }
+      CrawlJob.crawlRound(spark, storeDir, state, pages, robots, cfg, roundSec, maxRetries,
+        providers = providers,
+        extraTables = Map("batches" -> (doneBatches + batchId).toSeq.sorted.mkString(";")))
     }
   }
 

@@ -161,6 +161,28 @@ class CheckpointSpec extends SparkSpec {
     assert(graft.ann.Ann.loadCentroids(store, spark).length === 2)
   }
 
+  test("a round that throws releases its cached plans and the caller's job description") {
+    val (frontier, pages, robots) = smallCrawlInputs()
+    // every page read fails while round 1 extracts
+    val failing = pages.withColumn("text",
+      when(length(col("url")) > 0, raise_error(lit("page read failed"))).otherwise(col("text")))
+    val dir = Files.createTempDirectory("crawlThrows").toString
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller's job")
+    try {
+      val e = intercept[Exception](
+        CrawlJob.run(spark, frontier, failing, robots, dir, cfg, roundSec = 1.25))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("page read failed")), e)
+      assert(new SnapshotStore(dir).currentVersion() === None, "the failed round committed")
+      assert(cacheManager.isEmpty, "the failed run left cached plans behind")
+      assert(sc.getLocalProperty("spark.job.description") === "caller's job")
+    } finally sc.setJobDescription(null)
+  }
+
   test("resume rebuilds missing bloom state (legacy checkpoint) and stays exact") {
     val (frontier, pages, robots) = smallCrawlInputs()
     val dirA = Files.createTempDirectory("crawlBloomA").toString

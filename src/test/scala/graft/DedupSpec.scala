@@ -28,14 +28,24 @@ class DedupSpec extends SparkSpec {
       .select(col("url"), col("seq"), canon(col("url")).as("canonUrl"))
       .withColumn("urlHash", xxhash64(col("canonUrl")))
 
+  /** The crawl round's cross-round dedup: partitioned filters built over
+    * `seen`, then the Bloom prune and exact confirm. Returns the new urls.
+    */
+  private def bloomFiltered(candidates: org.apache.spark.sql.DataFrame,
+      seen: org.apache.spark.sql.DataFrame): Set[String] = {
+    val dir = java.nio.file.Files.createTempDirectory("bloomdedup").toString
+    UrlSeen.buildPartitionedBlooms(seen, dir, parts = 4, UrlSeen.capacityFor(seen.count(), 4))
+    UrlSeen.filterNewPartitionedBloom(candidates, seen, dir, parts = 4)
+      .select("url").as[String].collect().toSet
+  }
+
   test("bloom-pruned dedup returns exactly the exact-anti-join result") {
     val seen = (1 to 2000).map(i => s"http://seen.com/p$i")
       .toDF("url").select(xxhash64(canon(col("url"))).as("urlHash"), canon(col("url")).as("url"))
     val candidates = candidatesOf((1500 to 2500).map(i => s"http://seen.com/p$i") ++
       (1 to 100).map(i => s"http://new.com/q$i"))
     val exact = UrlSeen.filterNewExact(candidates, seen).select("url").as[String].collect().toSet
-    val bloom = UrlSeen.filterNewBloom(spark, candidates, seen, expectedItems = 2000)
-      .select("url").as[String].collect().toSet
+    val bloom = bloomFiltered(candidates, seen)
     assert(bloom === exact)
     assert(exact.size === (2500 - 2000) + 100)
     assert(exact.forall(u => u.contains("new.com") || u.matches(".*p2[0-4][0-9][0-9]|.*p2500")))
@@ -197,8 +207,7 @@ class DedupSpec extends SparkSpec {
       "http://a.com/other"))
     val exact = UrlSeen.filterNewExact(candidates, seen).select("url").as[String].collect().toSet
     assert(exact === Set("http://a.com/other"))
-    val bloom = UrlSeen.filterNewBloom(spark, candidates, seen, expectedItems = 10)
-      .select("url").as[String].collect().toSet
+    val bloom = bloomFiltered(candidates, seen)
     assert(bloom === exact)
   }
 }

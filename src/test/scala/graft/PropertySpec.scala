@@ -70,7 +70,9 @@ class PropertySpec extends SparkSpec {
         (0 until candN).map(i => s"http://n.com/$i")).zipWithIndex
         .toDF("url", "seq")
         .select(col("url"), col("seq"), col("url").as("canonUrl"), xxhash64(col("url")).as("urlHash"))
-      val out = UrlSeen.filterNewBloom(spark, cands, seen, expectedItems = math.max(seenN, 10).toLong)
+      val dir = java.nio.file.Files.createTempDirectory("bloomprop").toString
+      UrlSeen.buildPartitionedBlooms(seen, dir, parts = 4, UrlSeen.capacityFor(seenN.toLong, 4))
+      val out = UrlSeen.filterNewPartitionedBloom(cands, seen, dir, parts = 4)
         .select("url").as[String].collect().toSet
       val expectedNew = (0 until candN).map(i => s"http://n.com/$i").toSet ++
         (seenN until overlap).map(i => s"http://s.com/$i").toSet

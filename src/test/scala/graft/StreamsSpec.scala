@@ -230,25 +230,25 @@ class StreamsSpec extends SparkSpec {
     val robots = Seq(("www.mastercard.co.uk", eurPath, false))
       .toDF("host", "pathPrefix", "allow")
     // budget: 1 URL per host per batch (all seeds share one host) — the
-    // other eligible row must defer to the backlog, not vanish
+    // other eligible row must defer to the frontier, not vanish
     val cfg = PolitenessConfig(maxGlobal = Int.MaxValue, maxPerHost = 1)
     def step(id: Long): Unit = Streams.processSeedBatch(
       if (id == 0) seeds.select("card_c", "trans_c", "date") else seeds.limit(0).select("card_c", "trans_c", "date"),
       id, pages, storeDir, "Mastercard", graft.provider.Providers.registry,
       robots = Some(robots), cfg = cfg, roundSec = 1e9, maxRetries = 1)
     val store = new graft.checkpoint.SnapshotStore(storeDir)
-    def backlogCount = spark.read.parquet(store.readCurrent().get._2("backlog")).count()
+    def frontierCount = spark.read.parquet(store.readCurrent().get._2("frontier")).count()
     def seenUrls = spark.read.parquet(
       store.readCurrent().get._2("seen").split(";").toIndexedSeq: _*).select("url").as[String].collect().toSet
 
     step(0)
     // batch 0: robots drops EUR→USD; of the 3 eligible rows exactly 1 is
     // scheduled (maxPerHost=1, one shared host); the other 2 DEFER to the
-    // backlog (+1 more if the scheduled row was the fetch miss, which
+    // frontier (+1 more if the scheduled row was the fetch miss, which
     // re-enters as a retry — scheduling order within equal priority is a
     // seq-hash artifact, so accept either)
     assert(seenUrls.size === 1)
-    assert(backlogCount === 2 || backlogCount === 3, s"got $backlogCount")
+    assert(frontierCount === 2 || frontierCount === 3, s"got $frontierCount")
     step(1); step(2); step(3)
     // one scheduled row per batch: by the end of batch 3 every branch of
     // the order tree has scheduled all 3 eligible URLs, retried the
@@ -257,7 +257,7 @@ class StreamsSpec extends SparkSpec {
     val seen3 = seenUrls
     assert(seen3.size === 3)
     assert(!seen3.exists(_.contains("crdhldBillCurr=EUR")), "robots-disallowed URL must never be fetched")
-    assert(backlogCount === 0, "exhausted retry must leave the backlog")
+    assert(frontierCount === 0, "exhausted retry must leave the frontier")
     // rates: the two fetchable, robots-allowed seeds
     val rates = spark.read.parquet(
       store.readCurrent().get._2("rates").split(";").toIndexedSeq: _*)
@@ -292,7 +292,7 @@ class StreamsSpec extends SparkSpec {
     val pages = Synth.mcPages(withSeq)
     val cfg = PolitenessConfig(maxGlobal = Int.MaxValue, maxPerHost = 8)
 
-    // stream: all 18 seeds in batch 0, then empty batches drain the backlog
+    // stream: all 18 seeds in batch 0, then empty batches drain the frontier
     def step(id: Long): Unit = Streams.processSeedBatch(
       if (id == 0) seeds else seeds.limit(0),
       id, pages, storeDir, "Mastercard", graft.provider.Providers.registry,
@@ -321,6 +321,110 @@ class StreamsSpec extends SparkSpec {
       .select("canonUrl", "seq").as[(String, Long)].collect().sortBy(_._2)
     val expected = bySeq.zipWithIndex.map { case ((u, _), i) => u -> (i / 8 + 1) }.toMap
     assert(streamSeen === expected)
+  }
+
+  /** Seeds on the Mastercard host, one date per seed, and their pages. */
+  private def mcSeeds(n: Int) = {
+    val seeds = (0 until n).map(i =>
+      ("GBP", "USD", java.sql.Date.valueOf(java.time.LocalDate.of(1995, 9, 1).plusDays(i.toLong))))
+      .toDF("card_c", "trans_c", "date")
+    (seeds, graft.synth.Synth.mcPages(seeds))
+  }
+
+  /** Pages a crawl stores a rate for: every page but the error pages. */
+  private def ratePages(pages: org.apache.spark.sql.DataFrame) =
+    pages.filter(!col("text").contains("errorCode")).count()
+
+  private def tableOf(storeDir: String, key: String) = {
+    val man = new graft.checkpoint.SnapshotStore(storeDir).readCurrent().get._2
+    spark.read.parquet(man(key).split(";").filter(_.nonEmpty).toIndexedSeq: _*)
+  }
+
+  test("streaming slice: a long-lived stream's seen/rates chains are compacted by the shared round") {
+    import graft.crawl.CrawlJob
+    // The stream compacts on the batch crawl's cadence: every
+    // DefaultCompactEvery rounds. A store already at version
+    // DefaultCompactEvery - 3 (one foreign commit) puts four micro-batches
+    // at the rounds around that boundary.
+    val (seeds, pages) = mcSeeds(4)
+    val rows = seeds.collect().toSeq
+    def feed(storeDir: String): Unit = rows.indices.foreach { i =>
+      Streams.processSeedBatch(spark.createDataFrame(java.util.List.of(rows(i)), seeds.schema),
+        i.toLong, pages, storeDir, "Mastercard", graft.provider.Providers.registry)
+    }
+    val offset = CrawlJob.DefaultCompactEvery - 3
+    val longLived = java.nio.file.Files.createTempDirectory("compact-stream").toString
+    new graft.checkpoint.SnapshotStore(longLived).commit(offset, Map("notes" -> "/elsewhere"))
+    feed(longLived)
+    // a fresh store's four rounds never reach the boundary: no compaction
+    val fresh = java.nio.file.Files.createTempDirectory("uncompacted-stream").toString
+    feed(fresh)
+
+    val man = new graft.checkpoint.SnapshotStore(longLived).readCurrent().get._2
+    assert(man("seen").split(";").length <= 2, s"seen chain not compacted: ${man("seen")}")
+    assert(man("rates").split(";").length <= 2, s"rates chain not compacted: ${man("rates")}")
+    assert(man("notes") === "/elsewhere")
+    assert(new graft.checkpoint.SnapshotStore(fresh).readCurrent().get._2("seen").split(";").length === 4)
+    val seenLong = tableOf(longLived, "seen").select("url", "round").as[(String, Int)].collect()
+    val seenFresh = tableOf(fresh, "seen").select("url", "round").as[(String, Int)].collect()
+    assert(seenLong.length === 4)
+    assert(seenLong.map { case (u, r) => (u, r - offset) }.toSet === seenFresh.toSet)
+    def rates(dir: String) = tableOf(dir, "rates").collect().map(_.toString).sorted.toSeq
+    assert(rates(longLived) === rates(fresh))
+    assert(rates(fresh).length === ratePages(pages))
+  }
+
+  test("streaming slice: every micro-batch writes per-host metrics that match its seen rows") {
+    import graft.model.PolitenessConfig
+    val storeDir = java.nio.file.Files.createTempDirectory("metrics-stream").toString
+    val (seeds, pages) = mcSeeds(5)
+    // 2 URLs per host per batch: batch 0 schedules 2 of 5 and defers 3
+    val cfg = PolitenessConfig(maxGlobal = Int.MaxValue, maxPerHost = 2)
+    (0L to 3L).foreach { id =>
+      Streams.processSeedBatch(if (id == 0) seeds else seeds.limit(0), id, pages, storeDir,
+        "Mastercard", graft.provider.Providers.registry, cfg = cfg)
+    }
+    val scheduled = tableOf(storeDir, "metrics").groupBy("round").agg(sum("scheduled"))
+      .as[(Int, Long)].collect().toMap
+    val seenRows = tableOf(storeDir, "seen").groupBy("round").count()
+      .as[(Int, Long)].collect().toMap
+    assert(scheduled.keySet === Set(1, 2, 3), s"metrics rounds: $scheduled")
+    assert(scheduled === seenRows)
+    assert(scheduled.values.sum === 5L)
+    // the lineage of each round is committed beside it
+    assert(tableOf(storeDir, "lineage").select("round").distinct().count() === 3L)
+  }
+
+  test("streaming slice: a store written before the shared round still dedups across batches") {
+    import graft.model.PolitenessConfig
+    val storeDir = java.nio.file.Files.createTempDirectory("legacy-stream").toString
+    val (seeds, pages) = mcSeeds(4)
+    val firstThree = seeds.orderBy("date").limit(3)
+    // 2 URLs per host per batch: batch 0 schedules 2 of 3 and defers 1
+    val cfg = PolitenessConfig(maxGlobal = Int.MaxValue, maxPerHost = 2)
+    def step(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = Streams.processSeedBatch(
+      batch, id, pages, storeDir, "Mastercard", graft.provider.Providers.registry, cfg = cfg)
+    step(firstThree, 0L)
+    // the layout such a store has: no Bloom filters, the deferred rows under
+    // `backlog`, no metrics or lineage
+    val bloomDir = new java.io.File(s"$storeDir/blooms")
+    bloomDir.listFiles().foreach(_.delete())
+    bloomDir.delete()
+    val store = new graft.checkpoint.SnapshotStore(storeDir)
+    val (v, man) = store.readCurrent().get
+    store.commit(v, man -- Seq("frontier", "metrics", "lineage") + ("backlog" -> man("frontier")))
+
+    // batch 1 re-delivers all three seeds plus a new one: the two fetched
+    // ones are cross-batch duplicates, the deferred one is already queued
+    step(seeds, 1L)
+    step(seeds.limit(0), 2L)
+    val seen = tableOf(storeDir, "seen").select("url").as[String].collect().toSeq
+    assert(seen.length === 4, s"seen: $seen")
+    assert(seen.distinct.length === 4, "a cross-batch duplicate was fetched twice")
+    val dropped = tableOf(storeDir, "metrics").filter(col("round") === 2)
+      .agg(sum("dedupDropped")).as[Long].head()
+    assert(dropped === 2L)
+    assert(tableOf(storeDir, "rates").count() === ratePages(pages))
   }
 
   test("corpus ingest: kill-and-resume exactly-once, history dedup, replayed batch no-op") {
