@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Ad-hoc measurement harness for the optimization rounds (guide §1):
-  * runs named queries through the noop sink with a Spark job listener that
-  * prints every job's id, duration and description — the job-level
-  * breakdown the bundled UI-less sandbox cannot show. NOT the driver
-  * contract bench (that is graft.Bench, frozen); numbers quoted from here
-  * are stage-isolation evidence only.
+  * runs named queries through the noop sink, then prints every job's id,
+  * duration and description and the top stages by wall time — the
+  * job-level breakdown the bundled UI-less sandbox cannot show. NOT the
+  * driver contract bench (that is graft.Bench, frozen); numbers quoted
+  * from here are stage-isolation evidence only.
   *
   * Usage: runMain graft.BenchExtra q46,q31 [reps]
   */
@@ -16,45 +16,18 @@ object BenchExtra {
     val pfx = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val reps = if (args.length > 1) args(1).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        starts.put(js.jobId, (System.nanoTime(), desc))
-      }
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        Option(starts.remove(je.jobId)).foreach { case (t0, desc) =>
-          println(f"[job] ${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $desc")
-        }
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = (for { s <- si.submissionTime; c <- si.completionTime } yield (c - s) / 1e3)
-          .getOrElse(-1.0)
-        if (wall > 0.2)
-          println(f"[stage] ${si.stageId}%4d $wall%7.3f s  tasks=${si.numTasks}%4d  ${si.name.take(120)}")
-      }
-    })
+    val spark = Sessions.local()
+    Sessions.warmUp(spark)
+    val log = Sessions.jobLog(spark)
     val selected = SparkEntry.queries.toSeq
       .filter { case (n, _) => pfx.exists(n.startsWith) }.sortBy(_._1)
-    for (r <- 1 to reps; (name, fn) <- selected) {
+    try for (r <- 1 to reps; (name, fn) <- selected) {
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"[extra] $name rep$r: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
-    spark.stop()
+    } finally spark.stop()
+    log.printJobs()
+    log.printTopStages("stage")
   }
 }

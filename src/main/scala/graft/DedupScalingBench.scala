@@ -4,6 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths}
 
+import graft.util.{ScalingReport, Sessions}
+import graft.util.ScalingReport.fmt
+
 /** Scaling-efficiency evidence for the DOC-DEDUP path (VERDICT r03 #3): the
   * crawl pipeline has N-vs-4N cells; this gives the dedup suite its own —
   * `minhashPairs` → `dedupCorpus` closure over a ≥1M-doc synthetic corpus
@@ -25,23 +28,11 @@ object DedupScalingBench {
     val runsFile = Paths.get("BENCH/dedup_scaling_runs.tsv")
     args.headOption match {
       case Some("report") | None =>
-        if (!Files.exists(runsFile)) {
-          System.err.println(s"[dedup-scaling] no $runsFile yet — run `DedupScalingBench <cpus>` first")
-          sys.exit(1)
-        }
-        import scala.jdk.CollectionConverters._
         // best-of per cpu count, same-workload rows only (knob fingerprint)
-        val rows = Files.readAllLines(runsFile).asScala.map(_.split("\t"))
-          .map(a => (a(0).toInt, a(1).toDouble, a(2).toLong, a(3).toDouble, a(4),
-            if (a.length >= 7) a(6) else "unrecorded"))
-          .toSeq.filter(r => r._3 == nDocs && r._5 == knobs)
-        val byCpu = rows.groupBy(_._1).map { case (c, rs) => c -> rs.maxBy(_._4) }
-        if (byCpu.size < 2) {
-          System.err.println(
-            s"[dedup-scaling] need runs at TWO parallelism levels for knobs [$knobs]; " +
-              s"have ${byCpu.keys.toSeq.sorted.mkString(", ")}")
-          sys.exit(1)
-        }
+        val runs = ScalingReport.readRuns("dedup-scaling", runsFile, "DedupScalingBench").map(a =>
+          ScalingReport.Run(a(0).toInt, a(2).toLong, a(4), a(3).toDouble,
+            (a(1).toDouble, if (a.length >= 7) a(6) else "unrecorded")))
+        val best = ScalingReport.bestOrExit("dedup-scaling", runs, nDocs, knobs)
         // rows must all carry THE CURRENT generator fingerprint (computed
         // here with a tiny local session — the same sampled content hash
         // runOnce keys the corpus cache on): a BenchWorkload.docs change
@@ -50,27 +41,19 @@ object DedupScalingBench {
         // present a previous generator's throughput as current. Fail
         // loudly; stale rows are for the operator to prune.
         val currentFp = {
-          val s = SparkSession.builder().master("local[2]")
-            .config("spark.ui.enabled", "false").getOrCreate()
+          val s = Sessions.local(2, "dedup-report")
           try f"${generatorFingerprint(s, nDocs, dupPermille)}%016x"
           finally s.stop()
         }
-        val stale = rows.filter(_._6 != currentFp).map(_._6).distinct
-        if (stale.nonEmpty) {
-          System.err.println(
-            s"[dedup-scaling] rows for knobs [$knobs] carry generator fingerprints " +
+        val stale = best.runs.map(_.row._2).filter(_ != currentFp).distinct
+        if (stale.nonEmpty)
+          ScalingReport.refuse("dedup-scaling",
+            s"rows for knobs [$knobs] carry generator fingerprints " +
               s"${stale.mkString(", ")} but the CURRENT generator is $currentFp — " +
               s"the doc generator changed; prune stale rows from $runsFile and re-measure")
-          sys.exit(1)
-        }
-        val nCpu = byCpu.keys.min
-        val n4Cpu = byCpu.keys.max
-        val (_, wN, _, tN, _, _) = byCpu(nCpu)
-        val (_, w4, _, t4, _, _) = byCpu(n4Cpu)
-        val eff = (t4 / tN) / (n4Cpu.toDouble / nCpu)
-        def fmt(d: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(d))
-        def fmt3(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-        val reps = rows.groupBy(_._1).map { case (c, rs) => s"local[$c]×${rs.size}" }.mkString(", ")
+        val (nCpu, (wN, _), tN) = (best.n.cpus, best.n.row, best.n.throughput)
+        val (n4Cpu, (w4, _), t4) = (best.n4.cpus, best.n4.row, best.n4.throughput)
+        val eff = best.efficiency
         val md =
           s"""# BENCH — doc-dedup throughput + scaling efficiency
              |
@@ -79,26 +62,23 @@ object DedupScalingBench {
              |pairs (64 hashes / 16 bands, slim bucket stream, capped buckets) →
              |large-star/small-star connected components → min-id survivor verdicts.
              |Same deterministic input at both levels; one fresh JVM per run;
-             |best-of per level ($reps) under the committed steal-noise protocol.
+             |best-of per level (${best.reps}) under the committed steal-noise protocol.
              |
              || run | parallelism | docs deduped/sec | wall sec | scaling efficiency |
              ||---|---|---|---|---|
-             || dedup-N | `local[$nCpu]` | ${fmt(tN)} | ${fmt(wN)} | — |
-             || dedup-4N | `local[$n4Cpu]` | ${fmt(t4)} | ${fmt(w4)} | ${fmt3(eff)} (target ≥ 0.8) |
+             || dedup-N | `local[$nCpu]` | ${fmt(tN, 1)} | ${fmt(wN, 1)} | — |
+             || dedup-4N | `local[$n4Cpu]` | ${fmt(t4, 1)} | ${fmt(w4, 1)} | ${fmt(eff, 3)} (target ≥ 0.8) |
              |""".stripMargin
         Files.writeString(Paths.get("BENCH/DEDUP_SCALING_REPORT.md"), md)
         println(
-          s"""{"metric":"dedup_docs_per_sec","localN":{"cpus":$nCpu,"docs_per_sec":${tN.round}},"local4N":{"cpus":$n4Cpu,"docs_per_sec":${t4.round}},"scaling_efficiency":${fmt3(eff)},"docs":$nDocs,"dup_permille":$dupPermille}""")
+          s"""{"metric":"dedup_docs_per_sec","localN":{"cpus":$nCpu,"docs_per_sec":${tN.round}},"local4N":{"cpus":$n4Cpu,"docs_per_sec":${t4.round}},"scaling_efficiency":${fmt(eff, 3)},"docs":$nDocs,"dup_permille":$dupPermille}""")
       case Some(cpusArg) =>
         val cpus = cpusArg.toInt
         val (wall, survivors, genFp) = runOnce(cpus, nDocs, dupPermille)
         val thr = nDocs / wall
         println(f"[dedup-scaling] local[$cpus]: $nDocs docs in $wall%.1f s → $thr%.0f docs/s ($survivors survivors)")
-        Files.writeString(runsFile,
-          String.format(java.util.Locale.ROOT, "%d\t%.2f\t%d\t%.1f\t%s\t%d\t%s%n",
-            Int.box(cpus), Double.box(wall), Long.box(nDocs), Double.box(thr), knobs,
-            Long.box(survivors), genFp),
-          java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+        ScalingReport.appendRun(runsFile, "%d\t%.2f\t%d\t%.1f\t%s\t%d\t%s",
+          cpus, wall, nDocs, thr, knobs, survivors, genFp)
     }
   }
 
@@ -130,34 +110,10 @@ object DedupScalingBench {
 
   def runOnce(cpus: Int, nDocs: Long, dupPermille: Int): (Double, Long, String) = {
     val tmp = sys.env.getOrElse("SPARK_GRAFT_BENCH_TMPDIR", "/tmp")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-dedup-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.local.dir", tmp)
-      .config("spark.sql.warehouse.dir", s"$tmp/warehouse-dedup-$cpus")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional stage profile (SPARK_GRAFT_PROFILE=1): top stages by duration
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Int, Long, Long)]()
-    if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val wall = (for {s <- i.submissionTime; c <- i.completionTime} yield c - s).getOrElse(0L)
-          val m = i.taskMetrics
-          stages.add((i.stageId,
-            i.name.takeWhile(_ != '\n').take(40) +
-              f" gc=${m.jvmGCTime / 1000.0}%.1fs spill=${m.memoryBytesSpilled / 1e6}%.0fMB",
-            i.numTasks, wall, m.executorRunTime))
-        }
-      })
-    }
-    try {
+    val spark = Sessions.local(cpus, "dedup",
+      Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k"))
+    val log = Sessions.jobLog(spark)
+    val result = try {
       // materialize the corpus to parquet OUTSIDE the timed window (at
       // production scale the corpus is a stored table; timing its synthesis
       // would time spark.range, not dedup) — keyed by workload so reps
@@ -184,16 +140,9 @@ object DedupScalingBench {
         .filter(org.apache.spark.sql.functions.col("keep"))
         .count()
       val wall = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-        import scala.jdk.CollectionConverters._
-        val top = stages.asScala.toSeq.sortBy(-_._4).take(15)
-        top.foreach { case (id, name, nt, w, run) =>
-          println(f"[profile $cpus] stage $id%4d $name%-60s tasks=$nt%4d wall=${w / 1000.0}%7.1fs taskTime=${run / 1000.0}%8.1fs")
-        }
-      }
       (wall, survivors, f"$genFp%016x")
-    } finally {
-      spark.stop()
-    }
+    } finally spark.stop()
+    log.printTopStages(s"profile $cpus")
+    result
   }
 }

@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
 
+import graft.util.{ScalingReport, Sessions}
+import graft.util.ScalingReport.fmt
+
 /** Scaling-efficiency evidence for the LINK-GRAPH path: `pageRankInt`
   * (3 checkpointed integer power iterations — the crawl-prioritization
   * centrality) over a multi-million-edge synthetic host graph with
@@ -45,39 +48,19 @@ object GraphScalingBench {
     val runsFile = Paths.get("BENCH/graph_scaling_runs.tsv")
     args.headOption match {
       case Some("report") | None =>
-        if (!Files.exists(runsFile)) {
-          System.err.println(s"[graph-scaling] no $runsFile yet — run `GraphScalingBench <cpus>` first")
-          sys.exit(1)
-        }
-        import scala.jdk.CollectionConverters._
-        val rows = Files.readAllLines(runsFile).asScala.map(_.split("\t"))
-          .map(a => (a(0).toInt, a(1).toDouble, a(2).toLong, a(3).toDouble, a(4)))
-          .toSeq.filter(r => r._3 == nEdges && r._5 == knobs)
-        val byCpu = rows.groupBy(_._1).map { case (c, rs) => c -> rs.maxBy(_._4) }
-        if (byCpu.size < 2) {
-          System.err.println(
-            s"[graph-scaling] need runs at TWO parallelism levels for knobs [$knobs]; " +
-              s"have ${byCpu.keys.toSeq.sorted.mkString(", ")}")
-          sys.exit(1)
-        }
-        val nCpu = byCpu.keys.min
-        val n4Cpu = byCpu.keys.max
-        val (_, wN, _, tN, _) = byCpu(nCpu)
-        val (_, w4, _, t4, _) = byCpu(n4Cpu)
-        val eff = (t4 / tN) / (n4Cpu.toDouble / nCpu)
-        def fmt(d: Double) = String.format(java.util.Locale.ROOT, "%.0f", Double.box(d))
-        def fmt3(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+        val runs = ScalingReport.readRuns("graph-scaling", runsFile, "GraphScalingBench").map(a =>
+          ScalingReport.Run(a(0).toInt, a(2).toLong, a(4), a(3).toDouble, a(1).toDouble))
+        val best = ScalingReport.bestOrExit("graph-scaling", runs, nEdges, knobs)
+        val (nCpu, wN, tN) = (best.n.cpus, best.n.row, best.n.throughput)
+        val (n4Cpu, w4, t4) = (best.n4.cpus, best.n4.row, best.n4.throughput)
         println(
-          s"""{"metric":"pagerank_edges_per_sec","localN":{"cpus":$nCpu,"edges_per_sec":${fmt(tN)},"wall_s":$wN},"local4N":{"cpus":$n4Cpu,"edges_per_sec":${fmt(t4)},"wall_s":$w4},"scaling_efficiency":${fmt3(eff)},"edges":$nEdges,"iters":$iters}""")
+          s"""{"metric":"pagerank_edges_per_sec","localN":{"cpus":$nCpu,"edges_per_sec":${fmt(tN, 0)},"wall_s":$wN},"local4N":{"cpus":$n4Cpu,"edges_per_sec":${fmt(t4, 0)},"wall_s":$w4},"scaling_efficiency":${fmt(best.efficiency, 3)},"edges":$nEdges,"iters":$iters}""")
       case Some(cpusArg) =>
         val cpus = cpusArg.toInt
         val wall = runOnce(cpus, nEdges, iters)
         val thr = nEdges / wall
         println(f"[graph-scaling] local[$cpus]: $nEdges edges × $iters iters in $wall%.1f s → $thr%.0f edges/s")
-        Files.writeString(runsFile,
-          String.format(java.util.Locale.ROOT, "%d\t%.2f\t%d\t%.1f\t%s%n",
-            Int.box(cpus), Double.box(wall), Long.box(nEdges), Double.box(thr), knobs),
-          java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+        ScalingReport.appendRun(runsFile, "%d\t%.2f\t%d\t%.1f\t%s", cpus, wall, nEdges, thr, knobs)
     }
   }
 
@@ -98,17 +81,7 @@ object GraphScalingBench {
 
   def runOnce(cpus: Int, nEdges: Long, iters: Int): Double = {
     val tmp = sys.env.getOrElse("SPARK_GRAFT_BENCH_TMPDIR", "/tmp")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-graph-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", tmp)
-      .config("spark.sql.warehouse.dir", s"$tmp/warehouse-graph-$cpus")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus, "graph")
     try {
       // corpus written once at a FIXED 32-file layout (the DedupScalingBench
       // lesson: both levels must read identical files to be comparable),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Writes `.explain("formatted")` output for selected queries to files —
   * the plan evidence the optimization rounds commit under `plans/rNN/`.
@@ -16,15 +16,7 @@ object PlanDump {
       Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val selected = only match {
       case Some(pfx) => SparkEntry.queries.toSeq.filter { case (n, _) => pfx.exists(n.startsWith) }

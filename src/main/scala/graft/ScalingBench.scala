@@ -1,20 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import java.nio.file.{Files, Paths}
 
 import graft.crawl.CrawlJob
 import graft.model.PolitenessConfig
 import graft.synth.BenchWorkload
+import graft.util.{ScalingReport, Sessions}
+import graft.util.ScalingReport.fmt
 
 /** Scaling-efficiency evidence for the BASELINE.md protocol: run the SAME
-  * crawl job on the SAME deterministic frontier at `local[8]` (N) and
-  * `local[32]` (4N), report frontier URLs scheduled+fetched/sec at each,
-  * and efficiency = (throughput_4N / throughput_N) / 4. Target ≥ 0.8
+  * crawl job on the SAME deterministic frontier at two parallelism levels,
+  * report frontier URLs scheduled+fetched/sec at each, and efficiency =
+  * (throughput_max / throughput_min) / (cpus_max / cpus_min) between the
+  * lowest and highest recorded level ([[ScalingReport]]). Target ≥ 0.8
   * (BASELINE.json north_rule; the sandbox stand-in for N vs 4N executors).
   *
-  * Writes BENCH/BASELINE.md and prints one JSON line.
+  * `report` writes BENCH/SCALING_REPORT.md and prints one JSON line; each
+  * measurement prints its top-15 stages by wall time.
   */
 object ScalingBench {
 
@@ -23,8 +25,8 @@ object ScalingBench {
     *     appended to BENCH/scaling_runs.tsv (one fresh JVM per parallelism
     *     level: sequential SparkSessions in one JVM showed 2-4× run-to-run
     *     noise from JVM pollution)
-    *   runMain graft.ScalingBench report   — combine the last run per cpu
-    *     count into BENCH/BASELINE.md + print the JSON line
+    *   runMain graft.ScalingBench report   — combine the best run per cpu
+    *     count into BENCH/SCALING_REPORT.md + print the JSON line
     */
   def main(args: Array[String]): Unit = {
     val nUrls = sys.env.getOrElse("SPARK_GRAFT_BENCH_URLS", "1000000").toLong
@@ -46,15 +48,6 @@ object ScalingBench {
     val runsFile = Paths.get("BENCH/scaling_runs.tsv")
     args.headOption match {
       case Some("report") | None =>
-        if (!Files.exists(runsFile)) {
-          System.err.println(s"[scaling] no $runsFile yet — run `ScalingBench <cpus>` first")
-          sys.exit(1)
-        }
-        val lines = Files.readAllLines(runsFile)
-        import scala.jdk.CollectionConverters._
-        // best-of-N throughput per cpu count: the sandbox VM has visible
-        // steal-time noise from co-tenants; external slowdown only ever
-        // subtracts, so max-throughput is the capability estimate.
         // Pre-fingerprint 5-column rows are EXCLUDED outright: their knob
         // provenance is mixed and unrecoverable — the committed legacy 8M
         // rows include both rounds=1 runs (only possible under
@@ -64,25 +57,13 @@ object ScalingBench {
         // Round 4 re-measured every level the reports use under
         // fingerprinted rows (8M N/4N pairs + the 16M/32M weak-scaling
         // points).
-        val rows = lines.asScala.map(_.split("\t")).map(a =>
-          (a(0).toInt, a(1).toDouble, a(2).toLong, a(3).toInt, a(4).toDouble,
-            if (a.length >= 6) a(5) else "legacy")).toSeq
-          .filter(r => r._3 == nUrls && r._6 == knobs)
-        val byCpu = rows.groupBy(_._1).map { case (c, rs) => c -> rs.maxBy(_._5) }
-        if (byCpu.size < 2) {
-          // min==max would compare a level against itself and print a
-          // spurious efficiency of exactly 1.000 — refuse instead
-          System.err.println(
-            s"[scaling] need runs at TWO parallelism levels for $nUrls urls with knobs [$knobs]; " +
-              s"have ${byCpu.keys.toSeq.sorted.mkString(", ")}")
-          sys.exit(1)
-        }
-        val nCpu = byCpu.keys.min
-        val n4Cpu = byCpu.keys.max
-        val (_, wN, _, rN, tN, _) = byCpu(nCpu)
-        val (_, w4, _, r4, t4, _) = byCpu(n4Cpu)
-        val eff = (t4 / tN) / (n4Cpu.toDouble / nCpu)
-        val reps = rows.groupBy(_._1).map { case (c, rs) => s"local[$c]×${rs.size}" }.mkString(", ")
+        val runs = ScalingReport.readRuns("scaling", runsFile, "ScalingBench").map(a =>
+          ScalingReport.Run(a(0).toInt, a(2).toLong, if (a.length >= 6) a(5) else "legacy",
+            a(4).toDouble, (a(1).toDouble, a(3).toInt)))
+        val best = ScalingReport.bestOrExit("scaling", runs, nUrls, knobs)
+        val (nCpu, (wN, rN), tN) = (best.n.cpus, best.n.row, best.n.throughput)
+        val (n4Cpu, (w4, r4), t4) = (best.n4.cpus, best.n4.row, best.n4.throughput)
+        val eff = best.efficiency
         val md =
           s"""# BENCH — crawl throughput + scaling efficiency
              |
@@ -94,7 +75,7 @@ object ScalingBench {
              |`spark.sql.shuffle.partitions` = $shufflePartitions at BOTH levels (data-sized,
              |so the two legs run the identical physical plan and differ only
              |in task slots); one fresh JVM per run;
-             |best-of throughput per level ($reps) because the sandbox VM shows
+             |best-of throughput per level (${best.reps}) because the sandbox VM shows
              |2-4× co-tenant steal-time noise between identical runs (measured:
              |a pure-CPU 16-process probe swung 94.4 → 56.5 M loops/s run-to-run).
              |N = local[$nCpu], 4N = local[$n4Cpu]: at full machine width (local[32]) the
@@ -103,34 +84,24 @@ object ScalingBench {
              |
              || run | parallelism | frontier URLs scheduled+fetched/sec | wall sec | rounds | scaling efficiency |
              ||---|---|---|---|---|---|
-             || bench-N | `local[$nCpu]` | ${fmt(tN)} | ${fmt(wN)} | $rN | — |
-             || bench-4N | `local[$n4Cpu]` | ${fmt(t4)} | ${fmt(w4)} | $r4 | ${fmt3(eff)} (target ≥ 0.8) |
+             || bench-N | `local[$nCpu]` | ${fmt(tN, 1)} | ${fmt(wN, 1)} | $rN | — |
+             || bench-4N | `local[$n4Cpu]` | ${fmt(t4, 1)} | ${fmt(w4, 1)} | $r4 | ${fmt(eff, 3)} (target ≥ 0.8) |
              |""".stripMargin
         // SCALING_REPORT.md: the mechanical best-of table; BENCH/BASELINE.md
         // is the curated round report (methodology + calibration) — never
         // clobbered by this tool
         Files.writeString(Paths.get("BENCH/SCALING_REPORT.md"), md)
         println(
-          s"""{"metric":"crawl_urls_per_sec","localN":{"cpus":$nCpu,"urls_per_sec":${tN.round}},"local4N":{"cpus":$n4Cpu,"urls_per_sec":${t4.round}},"scaling_efficiency":${fmt3(eff)},"urls":$nUrls}""")
+          s"""{"metric":"crawl_urls_per_sec","localN":{"cpus":$nCpu,"urls_per_sec":${tN.round}},"local4N":{"cpus":$n4Cpu,"urls_per_sec":${t4.round}},"scaling_efficiency":${fmt(eff, 3)},"urls":$nUrls}""")
       case Some(cpusArg) =>
         val cpus = cpusArg.toInt
         val (wall, scheduled, rounds) = runOnce(cpus, nUrls, nHosts, hotPermille)
         val thr = scheduled / wall
         println(f"[scaling] local[$cpus]: $scheduled urls in $wall%.1f s over $rounds rounds → $thr%.0f urls/s")
-        // Locale.ROOT: the f-interpolator uses the default locale, and a
-        // comma-decimal locale would corrupt the tsv this tool later parses
-        Files.writeString(runsFile,
-          String.format(java.util.Locale.ROOT, "%d\t%.2f\t%d\t%d\t%.1f\t%s%n",
-            Int.box(cpus), Double.box(wall), Long.box(scheduled), Int.box(rounds),
-            Double.box(thr), knobs),
-          java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+        ScalingReport.appendRun(runsFile, "%d\t%.2f\t%d\t%d\t%.1f\t%s",
+          cpus, wall, scheduled, rounds, thr, knobs)
     }
   }
-
-  private def fmt(d: Double): String =
-    String.format(java.util.Locale.ROOT, "%.1f", Double.box(d))
-  private def fmt3(d: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
 
   /** Shuffle partition count for the scaling runs — a DATA-sized constant,
     * NOT the core count. Two reasons, both scale lessons: (1) partition
@@ -148,38 +119,14 @@ object ScalingBench {
     sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTS", "32").toInt
 
   def runOnce(cpus: Int, nUrls: Long, nHosts: Int, hotPermille: Int): (Double, Long, Int) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Sessions.local(cpus, "scaling", Map(
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
       // don't let AQE coalesce the (MB-scale) sandbox shuffles below the
       // core count — at 100TB partitions are fat and coalescing is right,
       // but here it erases the very parallelism the protocol measures
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_BENCH_TMPDIR", "/tmp"))
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_TMPDIR", "/tmp") + "/warehouse-" + cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional stage profile (SPARK_GRAFT_PROFILE=1): top stages by duration
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Int, Long, Long)]()
-    if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val wall = (for {s <- i.submissionTime; c <- i.completionTime} yield c - s).getOrElse(0L)
-          val m = i.taskMetrics
-          stages.add((i.stageId,
-            i.name.takeWhile(_ != '\n').take(40) +
-              f" gc=${m.jvmGCTime / 1000.0}%.1fs spill=${m.memoryBytesSpilled / 1e6}%.0fMB",
-            i.numTasks, wall, m.executorRunTime))
-        }
-      })
-    }
-    try {
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k"))
+    val log = Sessions.jobLog(spark)
+    val result = try {
       val frontier = BenchWorkload.frontier(spark, nUrls, nHosts, hotPermille)
       // materialize the page table: at production scale pages are a stored
       // Iceberg table, and parquet-backed stats keep Catalyst from trying
@@ -234,8 +181,7 @@ object ScalingBench {
         } else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType.fromDDL("host STRING, pathPrefix STRING, allow BOOLEAN"))
-      val ckpt = Files.createTempDirectory(
-        Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_TMPDIR", "/tmp")), s"graft-bench-$cpus").toString
+      val ckpt = Files.createTempDirectory(Paths.get(tmp), s"graft-bench-$cpus").toString
       val t0 = System.nanoTime()
       val (_, seen, _) = CrawlJob.run(
         spark, frontier, pages, robots, ckpt, cfg,
@@ -243,18 +189,9 @@ object ScalingBench {
       val scheduled = seen.count()
       val wall = (System.nanoTime() - t0) / 1e9
       val rounds = new graft.checkpoint.SnapshotStore(ckpt).currentVersion().getOrElse(0)
-      if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-        import scala.jdk.CollectionConverters._
-        val top = stages.asScala.toSeq.sortBy(-_._4).take(15)
-        top.foreach { case (id, name, nt, w, run) =>
-          println(f"[profile $cpus] stage $id%4d $name%-60s tasks=$nt%4d wall=${w / 1000.0}%7.1fs taskTime=${run / 1000.0}%8.1fs")
-        }
-        val totalWall = stages.asScala.map(_._4).sum / 1000.0
-        println(f"[profile $cpus] sum stage wall = $totalWall%.1f s over ${stages.size} stages")
-      }
       (wall, scheduled, rounds)
-    } finally {
-      spark.stop()
-    }
+    } finally spark.stop()
+    log.printTopStages(s"profile $cpus")
+    result
   }
 }

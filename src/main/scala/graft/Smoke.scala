@@ -1,20 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Manual end-to-end smoke: runs the flagship crawl slice exactly as the
   * driver does (rows > 0 on the final rates table) and prints a sample.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val rates = SparkEntry.entry(spark)
     val n = rates.count()
     println(s"[smoke] entry rates rows = $n")

@@ -423,7 +423,7 @@ object SparkEntry {
     "q29_doc_fingerprint" -> ((s, dir) => {
       import graft.functions.TextFns
       // md5 hash mode: the winnowing window-min selection is recomputed
-      // verbatim by the DuckDB oracle (see TextFns.fingerprintUdf scaladoc)
+      // verbatim by the DuckDB oracle (see TextFns.winnow scaladoc)
       t(s, dir, "documents")
         .select(col("doc_id"),
           size(TextFns.fingerprint(col("text"), hashKind = "md5")).as("n_fingerprints"))
@@ -3126,7 +3126,7 @@ object SparkEntry {
     "q29_doc_fingerprint" ->
       // winnowing selection recomputed verbatim: 60-bit md5 k-gram hashes
       // (k=9), min per SLIDING window of 16 (step 1 — the Schleimer et al.
-      // selection, mirrored in TextFns.fingerprintUdf), distinct count; a
+      // selection, mirrored in TextFns.winnow), distinct count; a
       // doc with k-grams but fewer than 16 of them emits its overall min
       """WITH h AS (
            SELECT doc_id,

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.util.{ScalingReport, Sessions}
+
 /** Throughput evidence for the STREAMING corpus-ingest path (VERDICT r05
   * #8): `Streams.corpusIngest` is kill-and-resume/exactly-once SPEC-proven;
   * this measures it — docs/s through the full micro-batch chain (verdict
@@ -65,22 +67,12 @@ object StreamingIngestBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cpus = Sessions.defaultCpus
     val waves = sys.env.getOrElse("SPARK_GRAFT_BENCH_WAVES", "5").toInt
     val docsPerWave = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS_PER_WAVE", "100000").toLong
     val nDocs = waves * docsPerWave
     val tmp = sys.env.getOrElse("SPARK_GRAFT_BENCH_TMPDIR", "/tmp")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-streaming-ingest-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", tmp)
-      .config("spark.sql.warehouse.dir", s"$tmp/warehouse-ingest-$cpus")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus, "ingest")
     try {
       val root = Files.createTempDirectory(Paths.get(tmp), "graft-ingest-bench")
       val staging = root.resolve("staging")
@@ -127,15 +119,12 @@ object StreamingIngestBench {
       all.unpersist()
       val streamThr = nDocs / streamWall
       val batchThr = nDocs / batchWall
-      def f1(d: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(d))
+      def f1(d: Double) = ScalingReport.fmt(d, 1)
       Files.createDirectories(Paths.get("BENCH"))
-      Files.writeString(Paths.get("BENCH/streaming_ingest_runs.tsv"),
-        String.format(java.util.Locale.ROOT, "%d\t%d\t%d\t%.1f\t%.0f\t%.1f\t%.0f\t%s%n",
-          Int.box(cpus), Int.box(waves), Long.box(docsPerWave),
-          Double.box(streamWall), Double.box(streamThr),
-          Double.box(batchWall), Double.box(batchThr),
-          waveWalls.map(f1).mkString(",")),
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+      ScalingReport.appendRun(Paths.get("BENCH/streaming_ingest_runs.tsv"),
+        "%d\t%d\t%d\t%.1f\t%.0f\t%.1f\t%.0f\t%s",
+        cpus, waves, docsPerWave, streamWall, streamThr, batchWall, batchThr,
+        waveWalls.map(f1).mkString(","))
       println(
         s"""{"metric":"streaming_ingest_docs_per_sec","cpus":$cpus,"waves":$waves,""" +
           s""""docs":$nDocs,"stored_survivors":$stored,""" +

@@ -65,29 +65,14 @@ object Ann {
     *
     * Production form: the native kernel ([[graft.expr.Kernels.hyperplaneSig]])
     * with the (bits × dim) hyperplane matrix precomputed once per JVM — the
-    * expression form below re-derived every weight (two xxhash64 mixes, a
-    * pmod, two casts) per (row × bit × dimension) even though weights
-    * depend only on (t, i, d). Bit-identical (same mixers, same
-    * accumulation order, same null/empty collapse; NativeSigSpec pins it).
+    * expression form it replaced re-derived every weight (two xxhash64
+    * mixes, a pmod, two casts) per (row × bit × dimension) even though
+    * weights depend only on (t, i, d). Bit-identical (same mixers, same
+    * accumulation order, same null/empty collapse; NativeSigSpec pins it
+    * against that expression form, kept as its test-scope reference).
     */
   def hyperplaneSignature(vec: Column, t: Int, bits: Int): Column =
     graft.expr.Native.hyperplaneSig(vec, t, bits)
-
-  /** The pre-r07 expression form of [[hyperplaneSignature]] — kept ONLY as
-    * the parity reference for NativeSigSpec / ExprBench; never in a query
-    * path.
-    */
-  private[graft] def hyperplaneSignatureExpr(vec: Column, t: Int, bits: Int): Column = {
-    val dims = sequence(lit(0), size(vec) - 1)
-    (0 until bits).map { i =>
-      val proj = aggregate(
-        zip_with(vec, dims, (x, d) =>
-          x.cast("double") *
-            ((pmod(xxhash64(lit(t * 10007 + i), d), lit(2000001L)) - 1000000L).cast("double") / 1000000.0)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, shiftleft(lit(1L), i)).otherwise(0L)
-    }.reduce(_.bitwiseOR(_))
-  }
 
   private def explodedBuckets(embCol: String, bits: Int, tables: Int): Column =
     explode(array((0 until tables).map { t =>

@@ -48,29 +48,6 @@ object DocDedup {
 
   // ------------------------------------------------------------ minhash
 
-  /** Each shingle hashed ONCE to a 64-bit base hash. The permutation family
-    * then mixes these longs instead of re-hashing the raw strings — hashing
-    * an 8-byte long per permutation is several times cheaper than a 20-40
-    * byte string, and it is the standard MinHash construction (hash the
-    * shingle once, derive the k permutations from the integer).
-    */
-  def shingleHashes(shingleArr: Column): Column =
-    transform(shingleArr, s => xxhash64(s))
-
-  /** MinHash signature over pre-hashed shingles ([[shingleHashes]]):
-    * signature[i] = min over shingle hashes h of xxhash64(h, i).
-    *
-    * `hashArr` must be a MATERIALIZED column (crossed a select/withColumn
-    * boundary), not an inline expression: the argument tree is referenced
-    * from each of the numHashes lambdas, and Catalyst CSE does not
-    * deduplicate expression trees inside lambda bodies — an inlined shingle
-    * build would execute numHashes times per row (measured 64x recompute).
-    */
-  def minhashSignature(hashArr: Column, numHashes: Int = 64): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(hashArr, h => xxhash64(h, lit(i))))
-    }: _*)
-
   /** LSH banding: split the signature into `bands` bands of `rowsPerBand`
     * and hash each band → (band_idx, band_hash) bucket keys.
     */
@@ -81,13 +58,6 @@ object DocDedup {
         xxhash64(to_json(struct(slice(sig, b * rowsPerBand + 1, rowsPerBand).as("s")))).as("bucket"))
     }: _*)
 
-  /** MinHash-LSH near-dup candidate pairs with estimated Jaccard ≥
-    * `threshold`. Returns (id_a, id_b, est_jaccard) with id_a < id_b.
-    *
-    * Pipeline: shingle → signature → explode bands → group by
-    * (band, bucket) → self-pair within bucket (capped) → dedup pairs →
-    * verify on signature agreement (the MinHash Jaccard estimate).
-    */
   /** Dropped-coverage reporting for bucket-size caps — a coverage loss that
     * must never be silent (pairs inside an over-cap bucket are simply not
     * compared). Implemented with `Dataset.observe` + a QueryExecutionListener
@@ -212,6 +182,13 @@ object DocDedup {
         first(when(col("id") === col("id_b"), col(valueCol)), ignoreNulls = true).as(s"${valueCol}_b"))
   }
 
+  /** MinHash-LSH near-dup candidate pairs with estimated Jaccard ≥
+    * `threshold`. Returns (id_a, id_b, est_jaccard) with id_a < id_b.
+    *
+    * Pipeline: shingle → signature → explode bands → group by
+    * (band, bucket) → self-pair within bucket (capped) → dedup pairs →
+    * verify on signature agreement (the MinHash Jaccard estimate).
+    */
   def minhashPairs(
       docs: DataFrame,
       idCol: String = "doc_id",
@@ -226,13 +203,13 @@ object DocDedup {
     // the expensive per-row kernel — spread it across the cluster when the
     // input scan has fewer splits than cores (no-op at real scale).
     // The kernel is the FUSED native expression (Kernels.minhashSig):
-    // bit-identical to minhashSignature(shingleHashes(shingles(text))) —
-    // same UTF8String tokenization, same XXH64 mixers — but one row-local
-    // pass with the permutation loop innermost (one hashLong per shingle
-    // instead of numHashes of them) and zero intermediate array
-    // allocations; the 3-stage expression chain paid numHashes transform
-    // materializations + array_min scans per row (NativeSigSpec pins the
-    // parity; the chain form stays for the spec and ExprBench A/B).
+    // signature[i] = min over shingles s of xxhash64(xxhash64(s), i), in
+    // one row-local pass with the permutation loop innermost (one hashLong
+    // per shingle instead of numHashes of them) and zero intermediate
+    // array allocations; the 3-stage expression chain it replaced paid
+    // numHashes transform materializations + array_min scans per row
+    // (NativeSigSpec pins bit-parity with that chain, kept as its
+    // test-scope reference).
     // The (id, sig) table is MATERIALIZED once (localCheckpoint): it has
     // TWO consumers — the band/bucket explode and the pair attach — and
     // Spark re-executes a lazily-shared plan per consumer, so without the
@@ -294,29 +271,10 @@ object DocDedup {
   }
 
   /** 64-bit SimHash over word tokens: per bit, sum +1/-1 weighted by token
-    * hash bit; sign → bit. The production column is the native
-    * [[graft.expr.SimHash64]] expression (consumes `ArrayData` inside
-    * whole-stage codegen — measured 1.23× over this UDF, which boxes a
-    * `Seq[String]` per row); the UDF form is kept for the A/B bench
-    * (`graft.ExprBench`) and as the reference implementation both are
-    * golden-tested against.
+    * hash bit ([[md5Long64]]); sign → bit. The column is the native
+    * [[graft.expr.SimHash64]] expression; NativeExprSpec checks it against
+    * a test-scope UDF reference over [[md5Long64]].
     */
-  val simhashUdf = udf((toks: Seq[String]) => {
-    val counts = new Array[Int](64)
-    toks.foreach { t =>
-      val h = md5Long64(t)
-      var i = 0
-      while (i < 64) {
-        if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1
-        i += 1
-      }
-    }
-    var out = 0L
-    var i = 0
-    while (i < 64) { if (counts(i) > 0) out |= (1L << i); i += 1 }
-    out
-  })
-
   def simhash(text: Column): Column =
     graft.expr.Native.simhash64(filter(split(lower(trim(text)), "\\s+"), t => t =!= ""))
 

@@ -25,8 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`Urls.canonicalize`, `DocDedup.md5Long64Bytes` bit loops), so
   * byte-parity contracts and golden tests are untouched.
   *
-  * Measured (8M-row fresh-JVM A/B via `graft.ExprBench`, local[16],
-  * best-of 2 reps): canonicalize 1.18×, simhash tokens→signature 1.23×,
+  * Measured (8M-row fresh-JVM A/B, local[16], best-of 2 reps; "Round-5"
+  * in BENCH/BASELINE.md): canonicalize 1.18×, simhash tokens→signature 1.23×,
   * scrapy-fingerprint 1.20×, winnowing fingerprint 1.15× over the UDF
   * forms — the converter layer is pure overhead at 10^10-row scale.
   */
@@ -64,9 +64,10 @@ object Kernels {
   private val WsPattern = UTF8String.fromString("\\s+")
 
   /** Fused MinHash signature straight from document text — ONE row-local
-    * pass replacing the 3-stage expression chain
-    * `minhashSignature(shingleHashes(shingles(text, k)), numHashes)`
-    * (`DocDedup.scala`), bit-identically:
+    * pass replacing the 3-stage expression chain (`DocDedup.shingles`,
+    * then `xxhash64` per shingle, then per permutation i the `array_min`
+    * of `xxhash64(h, i)`; NativeSigSpec keeps it as the reference),
+    * bit-identically:
     *
     *  - tokenize exactly like `filter(split(lower(trim(text)), "\\s+"),
     *    t =!= "")`: the SAME `UTF8String.trim/toLowerCase/split` methods
@@ -138,14 +139,13 @@ object Kernels {
   }
 
   /** Random-hyperplane LSH signature with the hyperplane matrix
-    * PRECOMPUTED — replaces `Ann.hyperplaneSignatureExpr`'s per-row
-    * re-derivation bit-identically. The expression form recomputed
-    * `xxhash64(lit(t·10007+i), d)` (two `hashInt` mixes), a `pmod` and two
-    * casts for EVERY (row × bit × dimension) even though the value depends
-    * only on (t, i, d); here the weight matrix is derived once per (t,
-    * bits, dim) per JVM — from the same `XXH64.hashInt` mixers and the
-    * same floorMod/scale arithmetic — and each row pays a pure dot
-    * product. Accumulation order (ascending dimension, `0.0 + x_d·w_d`)
+    * PRECOMPUTED — bit-identical to the expression form it replaced, which
+    * recomputed `xxhash64(lit(t·10007+i), d)` (two `hashInt` mixes), a
+    * `pmod` and two casts for EVERY (row × bit × dimension) even though the
+    * value depends only on (t, i, d); here the weight matrix is derived
+    * once per (t, bits, dim) per JVM — from the same `XXH64.hashInt`
+    * mixers and the same floorMod/scale arithmetic — and each row pays a
+    * pure dot product. Accumulation order (ascending dimension, `0.0 + x_d·w_d`)
     * and the `proj >= 0` bit rule are unchanged, so signatures are
     * bit-identical.
     *

@@ -74,9 +74,9 @@ object TextFns {
     *
     * Why the variant exists: the token array is referenced from one filter
     * lambda PER profile, and Catalyst CSE does not deduplicate expression
-    * trees referenced from lambda bodies (this repo's documented trap —
-    * see DocDedup.minhashSignature) — an inline `tokens(text)` here
-    * re-splits the text once per profile per row. Callers scoring alongside
+    * trees referenced from lambda bodies (this repo's documented trap, and
+    * why the MinHash signature is one fused native kernel) — an inline
+    * `tokens(text)` here re-splits the text once per profile per row. Callers scoring alongside
     * other token consumers should select the token array through a
     * projection boundary first and pass the column.
     */
@@ -389,21 +389,10 @@ object TextFns {
     *    window-min selection logic under the cross-engine correctness gate.
     *    60 bits (not 64) so the values are non-negative and signed/unsigned
     *    MIN comparisons agree across engines.
-    */
-  val fingerprintUdf = udf(winnow _)
-
-  /** UDF reference form of [[graft.expr.Native.nfcNormalize]] — the
-    * ExprBench A/B counterpart and the native≡UDF parity baseline. Same
-    * java.text.Normalizer kernel, wrapped in the converter layer the
-    * native expression exists to avoid.
-    */
-  val nfcNormalizeUdf = udf((s: String) =>
-    if (s == null) null
-    else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
-
-  /** The pure winnowing kernel — shared by the UDF form above (the golden
-    * reference) and the native Catalyst expression
-    * ([[graft.expr.WinnowFingerprint]], the production column).
+    *
+    * The pure kernel: the native Catalyst expression
+    * ([[graft.expr.WinnowFingerprint]], the production column) calls it,
+    * and NativeExprSpec checks that column against a UDF over it.
     */
   def winnow(text: String, k: Int, window: Int, hashKind: String): Array[Long] = {
     if (text == null || text.length < k) Array.empty[Long]

@@ -10,15 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object UrlCols {
 
-  val canonicalUdf = udf((u: String) => Urls.canonicalize(u))
-
-  val hostOfUdf = udf((u: String) => Urls.hostOf(u))
-
-  val scrapyFingerprintUdf = udf((u: String) => Urls.scrapyFingerprint(u))
-
-  val scrapyFingerprintOfCanonicalUdf =
-    udf((c: String) => Urls.scrapyFingerprintOfCanonical(c))
-
   /** 64-bit dedup key for a (url, canonicalized-url) pair under a
     * [[DedupKey]] mode — the single derivation every frontier builder
     * uses. Both modes consume the CARRIED canonical column: the frontier

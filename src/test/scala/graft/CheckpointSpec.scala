@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.checkpoint.SnapshotStore
 import graft.crawl.CrawlJob
+import graft.dedup.UrlSeen
 import graft.model.PolitenessConfig
 import graft.plan.Frontier
 import graft.synth.Synth
@@ -190,6 +191,19 @@ class CheckpointSpec extends SparkSpec {
 
     val dirB = Files.createTempDirectory("crawlBloomB").toString
     CrawlJob.run(spark, frontier, pages, robots, dirB, cfg, roundSec = 1.25, maxRounds = 2)
+    // the resumed frontier re-offers every URL already scheduled: only
+    // filters rebuilt from the committed seen set keep them out of it
+    val store = new SnapshotStore(dirB)
+    val (version, manifest) = store.readCurrent().get
+    val committed = spark.read.parquet(manifest("frontier"))
+    val scheduled = spark.read.parquet(manifest("seen").split(";").toIndexedSeq: _*)
+    val reoffered = UrlSeen.dedupWithinBatch(frontier)
+      .join(scheduled.select("urlHash"), Seq("urlHash"), "left_semi")
+      .select(committed.columns.toIndexedSeq.map(col): _*)
+    assert(reoffered.count() === 20L)
+    val resumedFrontier = s"$dirB/resumed-frontier"
+    committed.unionByName(reoffered).write.parquet(resumedFrontier)
+    store.commit(version + 1, manifest + ("frontier" -> resumedFrontier))
     // simulate a legacy/damaged checkpoint: wipe the filter directory
     val bloomDir = new java.io.File(s"$dirB/blooms")
     bloomDir.listFiles().foreach(_.delete())

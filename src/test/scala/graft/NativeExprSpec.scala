@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.dedup.DocDedup
 import graft.expr.Native
-import graft.urls.UrlCols
+import graft.functions.TextFns
+import graft.urls.{UrlCols, Urls}
 
 /** Native Catalyst expressions ≡ the UDF reference implementations, on the
   * messy inputs each kernel exists for, plus null-safety and the
@@ -11,6 +13,22 @@ import graft.urls.UrlCols
   */
 class NativeExprSpec extends SparkSpec {
   import spark.implicits._
+
+  // The references: UDFs over the plain-Scala functions the kernels call.
+  private val canonicalUdf = udf((u: String) => Urls.canonicalize(u))
+  private val scrapyFpOfCanonicalUdf = udf((c: String) => Urls.scrapyFingerprintOfCanonical(c))
+  private val winnowUdf = udf(TextFns.winnow _)
+  private val nfcNormalizeUdf = udf((s: String) =>
+    if (s == null) null else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
+  // per bit: +1/-1 by each token's md5 bit, sign → bit
+  private val simhashUdf = udf((toks: Seq[String]) => {
+    val counts = new Array[Int](64)
+    toks.foreach { t =>
+      val h = DocDedup.md5Long64(t)
+      for (i <- 0 until 64) counts(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1)
+    }
+    (0 until 64).foldLeft(0L)((out, i) => if (counts(i) > 0) out | (1L << i) else out)
+  })
 
   private val urls = Seq(
     "HTTP://Host.Example.COM:80/a/b?z=1&a=2#frag",
@@ -23,11 +41,11 @@ class NativeExprSpec extends SparkSpec {
   test("native canonicalize ≡ UDF canonicalize on messy URLs, incl. nulls") {
     val both = urls.select(
       Native.canonicalize(col("url")).as("native"),
-      UrlCols.canonicalUdf(col("url")).as("viaUdf"))
+      canonicalUdf(col("url")).as("viaUdf"))
       .unionByName(Seq.empty[String].toDF("u").select(
         lit(null: String).as("url")).select(
         Native.canonicalize(col("url")).as("native"),
-        UrlCols.canonicalUdf(col("url")).as("viaUdf")))
+        canonicalUdf(col("url")).as("viaUdf")))
     assert(both.filter(!(col("native") <=> col("viaUdf"))).count() === 0L)
     val n = urls.union(Seq((null: String)).toDF("url"))
       .select(Native.canonicalize(col("url"))).as[String].collect()
@@ -37,10 +55,10 @@ class NativeExprSpec extends SparkSpec {
 
   test("native scrapy fingerprint ≡ UDF on canonical urls") {
     val canon = urls.filter(col("url") =!= "").select(
-      UrlCols.canonicalUdf(col("url")).as("c"))
+      canonicalUdf(col("url")).as("c"))
     val both = canon.select(
       Native.scrapyFpOfCanonical(col("c")).as("native"),
-      UrlCols.scrapyFingerprintOfCanonicalUdf(col("c")).as("viaUdf"))
+      scrapyFpOfCanonicalUdf(col("c")).as("viaUdf"))
     assert(both.filter(!(col("native") <=> col("viaUdf"))).count() === 0L)
   }
 
@@ -49,7 +67,7 @@ class NativeExprSpec extends SparkSpec {
       .select(filter(split(lower(trim(col("text"))), "\\s+"), t => t =!= "").as("toks"))
     val both = docs.select(
       Native.simhash64(col("toks")).as("native"),
-      graft.dedup.DocDedup.simhashUdf(col("toks")).as("viaUdf"))
+      simhashUdf(col("toks")).as("viaUdf"))
     assert(both.filter(col("native") =!= col("viaUdf")).count() === 0L)
   }
 
@@ -58,12 +76,12 @@ class NativeExprSpec extends SparkSpec {
     for (kind <- Seq("poly", "md5")) {
       val both = docs.select(
         Native.winnowFingerprint(col("text"), 9, 16, kind).as("native"),
-        graft.functions.TextFns.fingerprintUdf(col("text"), lit(9), lit(16), lit(kind)).as("viaUdf"))
+        winnowUdf(col("text"), lit(9), lit(16), lit(kind)).as("viaUdf"))
       assert(both.filter(!(col("native") <=> col("viaUdf"))).count() === 0L, kind)
     }
     // null text: the Column builder coalesces to the kernel's empty array
     val n = Seq((null: String)).toDF("text")
-      .select(graft.functions.TextFns.fingerprint(col("text"))).as[Seq[Long]].head()
+      .select(TextFns.fingerprint(col("text"))).as[Seq[Long]].head()
     assert(n === Seq.empty[Long])
   }
 
@@ -95,7 +113,7 @@ class NativeExprSpec extends SparkSpec {
     // native ≡ UDF reference on the same inputs
     val both = cases.map(_._1).toDF("t").select(
       Native.nfcNormalize(col("t")).as("n"),
-      graft.functions.TextFns.nfcNormalizeUdf(col("t")).as("u"))
+      nfcNormalizeUdf(col("t")).as("u"))
     assert(both.filter(!(col("n") <=> col("u"))).count() === 0L)
   }
 

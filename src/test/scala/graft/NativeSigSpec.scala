@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.ann.Ann
@@ -14,6 +15,30 @@ import graft.expr.Native
   */
 class NativeSigSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The 3-stage MinHash chain the fused kernel replaced: shingles, one
+    * xxhash64 per shingle, then signature[i] = min over those h of
+    * xxhash64(h, i).
+    */
+  private def minhashChain(text: Column, numHashes: Int): Column = {
+    val hashes = transform(DocDedup.shingles(text), s => xxhash64(s))
+    array((0 until numHashes).map(i => array_min(transform(hashes, h => xxhash64(h, lit(i))))): _*)
+  }
+
+  /** The expression form of the hyperplane signature the native kernel
+    * replaced: every weight re-derived per row from xxhash64(t·10007+i, d).
+    */
+  private def hyperplaneSignatureExpr(vec: Column, t: Int, bits: Int): Column = {
+    val dims = sequence(lit(0), size(vec) - 1)
+    (0 until bits).map { i =>
+      val proj = aggregate(
+        zip_with(vec, dims, (x, d) =>
+          x.cast("double") *
+            ((pmod(xxhash64(lit(t * 10007 + i), d), lit(2000001L)) - 1000000L).cast("double") / 1000000.0)),
+        lit(0.0), (acc, v) => acc + v)
+      when(proj >= 0, shiftleft(lit(1L), i)).otherwise(0L)
+    }.reduce(_.bitwiseOR(_))
+  }
 
   private def edgeDocs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
@@ -34,14 +59,12 @@ class NativeSigSpec extends SparkSpec {
     val both = docs.select(
       col("doc_id"),
       Native.minhashSig(col("text"), 3, 64).as("fused"),
-      DocDedup.minhashSignature(
-        DocDedup.shingleHashes(DocDedup.shingles(col("text"))), 64).as("chain"))
+      minhashChain(col("text"), 64).as("chain"))
     assert(both.filter(!(col("fused") <=> col("chain"))).count() === 0L)
     // non-default numHashes too (nearDupPairs uses the default; guard the knob)
     val k8 = docs.select(
       Native.minhashSig(col("text"), 3, 8).as("fused"),
-      DocDedup.minhashSignature(
-        DocDedup.shingleHashes(DocDedup.shingles(col("text"))), 8).as("chain"))
+      minhashChain(col("text"), 8).as("chain"))
     assert(k8.filter(!(col("fused") <=> col("chain"))).count() === 0L)
   }
 
@@ -55,7 +78,7 @@ class NativeSigSpec extends SparkSpec {
       val both = vecs.select(
         col("vec_id"),
         Native.hyperplaneSig(col("embedding"), t, 12).as("native"),
-        Ann.hyperplaneSignatureExpr(col("embedding"), t, 12).as("expr"))
+        hyperplaneSignatureExpr(col("embedding"), t, 12).as("expr"))
       assert(both.filter(!(col("native") <=> col("expr"))).count() === 0L,
         s"mismatch at table $t")
     }
@@ -76,7 +99,7 @@ class NativeSigSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val both = vecs.select(
       Native.hyperplaneSig(col("embedding"), 2, 12).as("native"),
-      Ann.hyperplaneSignatureExpr(col("embedding"), 2, 12).as("expr"))
+      hyperplaneSignatureExpr(col("embedding"), 2, 12).as("expr"))
     assert(both.filter(!(col("native") <=> col("expr"))).count() === 0L)
   }
 
