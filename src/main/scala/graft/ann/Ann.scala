@@ -25,13 +25,6 @@ object Ann {
     */
   def dot(a: Column, b: Column): Column = graft.expr.Native.dot(a, b)
 
-  /** The pre-r07 expression form of [[dot]] — the NativeSigSpec parity
-    * reference only.
-    */
-  private[graft] def dotExpr(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   /** sqrt of the self-dot — the identical ascending Σx² fold the previous
     * `aggregate(a, 0.0, acc + x²)` form computed, so norms are
     * bit-identical.
@@ -113,17 +106,6 @@ object Ann {
     */
   private def distsExpr(emb: Column, cents: Array[Array[Double]]): Column =
     graft.expr.Native.ivfDists(emb, cents)
-
-  /** The pre-r07 expression forms — the NativeSigSpec parity reference
-    * only.
-    */
-  private[graft] def distSqExpr(emb: Column, c: Array[Double]): Column =
-    aggregate(
-      zip_with(emb, typedLit(c), (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
-      lit(0.0), (acc, v) => acc + v)
-
-  private[graft] def distsExprLegacy(emb: Column, cents: Array[Array[Double]]): Column =
-    array(cents.toIndexedSeq.map(c => distSqExpr(emb, c)): _*)
 
   /** Index of the minimum distance (first wins on ties — deterministic). */
   private def argminList(dists: Column): Column =

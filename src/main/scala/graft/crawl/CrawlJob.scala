@@ -6,7 +6,7 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.checkpoint.SnapshotStore
 import graft.dedup.UrlSeen
@@ -36,8 +36,9 @@ object CrawlJob {
 
   /** Schemas of the committed snapshot tables. Every read of a committed
     * table pins its schema, so a resumed round starts no parquet
-    * schema-inference job. Only the resume-time frontier read infers: its
-    * columns follow the caller's frontier.
+    * schema-inference job. The frontier's columns follow the caller's
+    * frontier; its resume-time read takes the schema Spark stored in the
+    * parquet footer.
     */
   private[graft] val RatesSchema =
     StructType.fromDDL("card_code STRING, trans_code STRING, date DATE, provider_id INT, rate DOUBLE")
@@ -48,10 +49,11 @@ object CrawlJob {
   private[graft] val LineageSchema = StructType.fromDDL("round INT, table STRING, file STRING, rows BIGINT")
   private[graft] val HostStateSchema = Encoders.product[HostState].schema
 
-  /** (file, rows) of every parquet file in the directory `dir`, read from
-    * the footers: metadata reads in this JVM, no Spark job.
+  /** (file, rows, schema) of every parquet file in the directory `dir`,
+    * read from the footers: metadata reads in this JVM, no Spark job. The
+    * schema is the one Spark stores in the footers it writes.
     */
-  private def parquetRowCounts(spark: SparkSession, dir: String): Seq[(String, Long)] = {
+  private def parquetFooters(spark: SparkSession, dir: String): Seq[(String, Long, Option[StructType])] = {
     val conf = spark.sessionState.newHadoopConf()
     val path = new org.apache.hadoop.fs.Path(dir)
     path.getFileSystem(conf).listStatus(path).toIndexedSeq
@@ -59,8 +61,37 @@ object CrawlJob {
       .map { st =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        (st.getPath.toString, try r.getRecordCount finally r.close())
+        try {
+          val schema = Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata"))
+            .map(DataType.fromJson(_).asInstanceOf[StructType])
+          (st.getPath.toString, r.getRecordCount, schema)
+        } finally r.close()
       }
+  }
+
+  /** Writes `rows` as the one parquet file of the directory `dir`, in this
+    * JVM: lineage rows are footer metadata the driver already holds, so a
+    * Spark job to write them would only add a job to every round.
+    */
+  private def writeLineage(spark: SparkSession, dir: String, rows: Seq[(Int, String, String, Long)]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message lineage { required int32 round; required binary table (STRING); " +
+        "required binary file (STRING); required int64 rows; }")
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(conf).delete(path, true)
+    val writer = ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path, "part-00000.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try rows.foreach { case (round, table, file, n) =>
+      writer.write(groups.newGroup().append("round", round).append("table", table)
+        .append("file", file).append("rows", n))
+    } finally writer.close()
   }
 
   /** Host column — see [[graft.urls.UrlCols.hostCol]] (shared with the
@@ -160,11 +191,13 @@ object CrawlJob {
     try body finally sc.setJobDescription(callerDescription)
   }
 
-  /** The robots gate's rules, or None when there are none: no rules at all
-    * (common in tests/bench) skips the gate's join subtree every round. Each
-    * driver decides this once, never per round.
+  /** The robots gate's rules collapsed per host ([[Robots.perHost]]), or
+    * None when there are none: no rules at all (common in tests/bench) skips
+    * the gate's join subtree every round. Each driver collapses its rules
+    * once, never per round.
     */
-  private[graft] def activeRules(robots: Option[DataFrame]): Option[DataFrame] = robots.filter(!_.isEmpty)
+  private[graft] def activeRules(robots: Option[DataFrame]): Option[DataFrame] =
+    robots.map(Robots.perHost).filter(!_.isEmpty)
 
   /** A crawl's committed state, as one round consumes and produces it.
     * frontier + hostStates are full snapshots (they shrink / stay tiny);
@@ -176,12 +209,14 @@ object CrawlJob {
     * @param round         the last committed round (0 before the first)
     * @param frontierCount rows of `frontier`; it bounds the distinct keys
     *                      the next round adds to the seen set
+    * @param hostStateCount rows of `hostStates`
     */
   private[graft] final case class CrawlState(
       round: Int,
       frontier: DataFrame,
       frontierCount: Long,
       hostStates: Dataset[HostState],
+      hostStateCount: Long,
       seenPaths: Seq[String],
       ratesPaths: Seq[String],
       metricsPaths: Seq[String],
@@ -236,10 +271,12 @@ object CrawlJob {
       UrlSeen.writeBloomRound(bloomDir, round)
     }
 
-    val committed = manifest.get("frontier").map(spark.read.parquet(_))
+    val footers = manifest.get("frontier").map(parquetFooters(spark, _)).getOrElse(Nil)
+    val committed = manifest.get("frontier")
+      .map(footers.flatMap(_._3).headOption.fold(spark.read)(spark.read.schema).parquet(_))
     val frontier = frontierOf(committed)
     val frontierCount =
-      if (committed.exists(_ eq frontier)) parquetRowCounts(spark, manifest("frontier")).map(_._2).sum
+      if (committed.exists(_ eq frontier)) footers.map(_._2).sum
       else {
         frontier.cache()
         try frontier.count() catch { case e: Throwable => frontier.unpersist(); throw e }
@@ -247,7 +284,8 @@ object CrawlJob {
     val hostStates = manifest.get("hostStates")
       .map(p => read(spark, HostStateSchema, Seq(p)).as[HostState])
       .getOrElse(spark.emptyDataset[HostState])
-    CrawlState(round, frontier, frontierCount, hostStates,
+    val hostStateCount = manifest.get("hostStates").map(parquetFooters(spark, _).map(_._2).sum).getOrElse(0L)
+    CrawlState(round, frontier, frontierCount, hostStates, hostStateCount,
       seenPaths, chain("rates"), chain("metrics"), chain("lineage"))
   }
 
@@ -262,7 +300,8 @@ object CrawlJob {
     * back from the snapshot. The round's caches, and the consumed frontier's,
     * are released on return and on a throw alike.
     *
-    * @param robots the rules, None for no robots gate (see [[activeRules]])
+    * @param robots the per-host rules, None for no robots gate (see
+    *               [[activeRules]])
     */
   private[graft] def crawlRound(
       spark: SparkSession,
@@ -291,12 +330,24 @@ object CrawlJob {
         sc.setJobDescription(description)
         try body finally sc.setJobDescription(null)
       }
-    // every frame this round caches, released in the `finally` below; the
-    // consumed frontier is among them (a no-op unless loadState cached it)
-    val cached = scala.collection.mutable.ArrayBuffer(state.frontier)
-    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+    // Every frame the round keeps is a KeptFrame, released in the `finally`
+    // below: Spark runs the frame's exchanges when it is defined and its
+    // last stage inside the first job that reads it, which stores the rows
+    // — no extra job fills a cache, and no plan upstream of it reaches the
+    // next job. The consumed frontier is released there too (a no-op
+    // unless loadState cached it).
+    val kept = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    def keep(df: DataFrame): DataFrame = {
+      val (frame, rows) = org.apache.spark.sql.graftbridge.KeptFrame(df)
+      kept += rows
+      frame
+    }
 
     val round = state.round + 1
+    // the round number as a value the generated code reads, not a literal
+    // compiled into it: a literal would give the seen and metrics writes new
+    // code, and new classes to compile, every round
+    val roundCol = udf(() => round).asNondeterministic()()
     val frontier = state.frontier
     def seenDf: DataFrame = read(spark, SeenSchema, state.seenPaths)
     // 1-based registry id (client.py:86-88 seeding order); all provider-
@@ -309,94 +360,98 @@ object CrawlJob {
     // hold; a stream's frontier grows with each batch's seeds, and a filter
     // it outgrows is rebuilt at doubled capacity on saturation
     val bloomCapacity = UrlSeen.capacityFor(state.frontierCount, bloomParts)
+    // the broadcast-safety bound (~2M rows ≈ low hundreds of MB of slim
+    // rows): a round whose frontier is below it broadcasts its probe set
+    // and its fetch keys, so neither the seen table nor the page table is
+    // ever shuffled. Every frame derived from the frontier is at most
+    // frontier-sized.
+    val small = state.frontierCount <= 2000000L
+    def bcastIfSmall(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    // below the same bound, round-sized rows are aggregated in one task,
+    // with no exchange
+    def inOneTaskIf(fits: Boolean)(df: DataFrame): DataFrame = if (fits) df.coalesce(1) else df
 
     try {
-      // 1. dedup against the seen set — INCREMENTAL partitioned-Bloom prune
-      //    + exact anti-join confirm. The per-partition filters were merged
-      //    with each prior round's seen DELTA (O(delta)/round, never a full
-      //    seen rescan; no driver-sized filter), so per-round dedup cost is
-      //    flat as the crawl grows — the 10^10-URL shape. Nothing seen yet
-      //    (first round) ⇒ skip the whole dedup subtree.
-      //    Retry rows (retries > 0) BYPASS the dupefilter — Scrapy re-enqueues
-      //    retries with dont_filter semantics, and they are in `seen` already.
-      // nothing seen yet ⇒ `fresh` IS the frontier frame, which loadState
-      // caches when it is computed — re-caching the same plan is a no-op
-      // that logs a CacheManager warning; only the computed dedup output is
-      // a new frame needing its own cache
-      val fresh =
-        if (state.seenPaths.isEmpty) frontier
+      // 1. one tagged pass over the frontier: every row leaves it with its
+      //    `__stage` — dedupDropped, offsiteDropped, robotsDropped,
+      //    scheduled or deferred. The scheduled rows are the fetch set, the
+      //    deferred ones the next frontier, and the per-host counts of all
+      //    five are the metrics, so nothing downstream scans the frontier
+      //    again.
+      //    Dedup: INCREMENTAL partitioned-Bloom prune + exact anti-join
+      //    confirm. The per-partition filters were merged with each prior
+      //    round's seen DELTA (O(delta)/round, never a full seen rescan; no
+      //    driver-sized filter), so per-round dedup cost is flat as the crawl
+      //    grows — the 10^10-URL shape. Nothing seen yet (first round) ⇒ no
+      //    dedup subtree. Retry rows (retries > 0) BYPASS the dupefilter —
+      //    Scrapy re-enqueues retries with dont_filter semantics, and they
+      //    are in `seen` already.
+      val (fresh, dupes) =
+        if (state.seenPaths.isEmpty) (frontier, None)
         else {
-          val firstTry = frontier.filter(col("retries") === 0)
-          val retries = frontier.filter(col("retries") > 0)
-          // smallProbe: the bloom-pruned probe set is at most frontier-sized
-          // (frontierCount is the conservative upper bound for it), so below
-          // the broadcast-safety bound (~2M rows ≈ low hundreds of MB of
-          // (hash, url)) the seen table is scanned once and never shuffled
-          // (see filterNewPartitionedBloom)
-          cache(UrlSeen.filterNewPartitionedBloom(firstTry, seenDf, bloomDir, bloomParts,
-            smallProbe = state.frontierCount <= 2000000L)
-            .unionByName(retries))
+          val (unseen, seen) = UrlSeen.splitSeenPartitionedBloom(
+            frontier, seenDf, bloomDir, bloomParts, small, probed = col("retries") === 0)
+          (unseen, Some(seen.select(col("host"), lit("dedupDropped").as("__stage"))))
         }
-      // 2. offsite filter (allowed_domains) then robots gate; cached — the
-      //    surviving frontier feeds both the scheduler and the next-round
-      //    frontier anti-join. Offsite runs first, as in Scrapy: the spider
-      //    middleware drops off-domain requests before they reach the
-      //    scheduler/downloader at all.
-      // cache only NEW frames: a skipped gate passes the previous frame
-      // through, and re-caching it is a no-op that logs a CacheManager
-      // warning every round
-      val onsiteF =
-        if (allowedDomains.isEmpty) fresh else cache(Robots.onSite(fresh, allowedDomains))
-      val allowedF = robots.fold(onsiteF)(rules => cache(Robots.allowed(onsiteF, rules)))
-      // 3. per-host politeness schedule
-      val sched = cache(Scheduler.scheduleRound(allowedF, state.hostStates.toDF(), cfg, roundSec))
-      // sched (and every cached frame upstream of it) is materialized by
-      // the single `extracted.count()` action below, BEFORE the concurrent
-      // write phase — cache blocks fill as the extraction pass scans them,
-      // so the concurrent downstream actions (which would each recompute
-      // the whole dedup→robots→schedule chain on a cold cache — AQE
-      // compiles a fresh physical plan per action; only materialized cache
-      // blocks are shared) all hit warm caches. One action per round for
-      // the whole chain, not two (r07: a separate sched.count() here paid
-      // an extra pass over the schedule plan every round).
-
-      // 4. "fetch": equi-join against the page table on url — the offline,
-      //    deterministic stand-in for the downloader (SURVEY.md §2#19).
-      //    Deliberately NOT cached: page bodies are KBs per row; we stream
-      //    them once through extraction and cache only the slim result.
-      //    SHUFFLE_HASH hint with the slim schedule as build side: a
-      //    sort-merge join would SORT the KB-per-row page partitions —
-      //    thread dumps showed that copyMemory-heavy sort dominating the
-      //    round. Hash-probing streams the fat side untouched.
-      val fetched = sched.hint("shuffle_hash")
-        .join(pages.select(col("url"), col("text")), Seq("url"), "left")
-
-      // 5. extract per provider in ONE pass over the page text; MC error
-      //    pages are dropped (not stored), Visa parse misses store a null
-      //    rate (reference parity). The text column is gone after this.
-      //    `headers` is OPTIONAL on frontier rows (expandSeeds emits it;
-      //    direct frontier builders like the bench workload need not) —
-      //    when present it must survive extraction so retry rows re-enter
-      //    the frontier with their request headers intact.
-      val carryCols =
-        Seq("url", "canonUrl", "urlHash", "host", "card_c", "trans_c", "date",
-          "provider", "priority", "seq", "retries") ++
-          (if (frontier.columns.contains("headers")) Seq("headers") else Nil)
-      val extracted = cache(fetched.select(
-        carryCols.map(col) ++ Seq(
-          providerId.as("provider_id"),
-          col("text").isNotNull.as("hit"),
-          (col("text").isNotNull && coalesce(
-            graft.provider.Providers.route(col("provider"), providers)(_.isError(col("text"))),
-            lit(false))).as("is_err"),
-          graft.provider.Providers.route(col("provider"), providers)(_.extractRate(col("text")))
-            .as("rate")): _*))
+      //    Offsite (allowed_domains) ranks before robots, as in Scrapy: the
+      //    spider middleware drops off-domain requests before they reach
+      //    the scheduler/downloader at all. A null verdict drops the row.
+      val onSite = if (allowedDomains.isEmpty) lit(true) else Robots.isOnSite(allowedDomains)
+      val gated = robots.fold(fresh.withColumn(Robots.Verdict, lit(true)))(Robots.withVerdict(fresh, _))
+        .withColumn("__stage",
+          when(!coalesce(onSite, lit(false)), lit("offsiteDropped"))
+            .when(!coalesce(col(Robots.Verdict), lit(false)), lit("robotsDropped")))
+        .drop(Robots.Verdict)
+      //    per-host politeness schedule over the rows every gate passed
+      val scheduled = Scheduler.withSchedule(
+        gated, state.hostStates.toDF(), cfg, roundSec, eligible = col("__stage").isNull)
+        .withColumn("__stage", coalesce(col("__stage"),
+          when(col(Scheduler.Scheduled), lit("scheduled")).otherwise(lit("deferred"))))
+        .drop(Scheduler.Scheduled)
       sc.setJobDescription(s"crawl r$round: extract")
-      extracted.count() // one streaming pass fills the (slim) cache
+      val tagged = keep(dupes.fold(scheduled)(scheduled.unionByName(_, allowMissingColumns = true)))
+      def tagIs(stage: String): Column = col("__stage") === stage
+      val sched = tagged.filter(tagIs("scheduled"))
 
-      // 6. append rates honoring the unique constraint (orm.py:33-34):
+      // 2. "fetch": the scheduled (url, provider) keys meet the page table
+      //    — the offline, deterministic stand-in for the downloader
+      //    (SURVEY.md §2#19). The keys are broadcast to the pages when the
+      //    round is small, so the page table is scanned in place and never
+      //    shuffled; extraction runs on the page side, and only its slim
+      //    result travels back. Page bodies are KBs per row and are never
+      //    cached. MC error pages are dropped (not stored), Visa parse
+      //    misses store a null rate (reference parity). Each frontier row
+      //    holds its own canonical URL (both drivers dedup it), so each
+      //    scheduled row meets exactly its own pages.
+      val route = graft.provider.Providers.route(col("__fprov"), providers) _
+      val fetchedPages = pages.select(col("url"), col("text"))
+        .join(bcastIfSmall(sched.select(col("url").as("__furl"), col("provider").as("__fprov"))),
+          col("url") === col("__furl"))
+        .select(col("__furl"), col("__fprov"),
+          col("text").isNotNull.as("__hit"),
+          (col("text").isNotNull && coalesce(route(_.isError(col("text"))), lit(false))).as("__err"),
+          route(_.extractRate(col("text"))).as("__rate"))
+      //    The kept frame holds the deferred rows too, so the next frontier
+      //    is one scan of it: a deferred row's url is never a scheduled
+      //    one, so it meets no page.
+      val extracted = keep(tagged.filter(tagIs("scheduled") || tagIs("deferred"))
+        .join(bcastIfSmall(fetchedPages),
+          col("url") === col("__furl") && col("provider") <=> col("__fprov"), "left")
+        .select(frontier.columns.toIndexedSeq.map(col) ++ Seq(
+          col("__stage"),
+          providerId.as("provider_id"),
+          coalesce(col("__hit"), lit(false)).as("hit"),
+          coalesce(col("__err"), lit(false)).as("is_err"),
+          col("__rate").as("rate")): _*))
+
+      // 3. append rates honoring the unique constraint (orm.py:33-34):
       //    set-difference upsert (duplicate keys within the batch AND vs
-      //    prior rounds both excluded), written as this round's delta
+      //    prior rounds both excluded), written as this round's delta. The
+      //    history probe is bounded by the round: the rates history is
+      //    scanned, never shuffled, and only the keys this round produced
+      //    leave the scan. A small round dedups its rates in one task, with
+      //    no exchange.
+      val rateKeys = Seq("card_code", "trans_code", "date", "provider_id")
       val parsed = extracted
         .filter(col("hit") && !col("is_err"))
         .select(
@@ -405,84 +460,57 @@ object CrawlJob {
           col("date"),
           col("provider_id"),
           col("rate"))
-        .dropDuplicates("card_code", "trans_code", "date", "provider_id")
-      val newRates = parsed.join(
-        read(spark, RatesSchema, state.ratesPaths).select("card_code", "trans_code", "date", "provider_id"),
-        Seq("card_code", "trans_code", "date", "provider_id"), "left_anti")
+      val known = read(spark, RatesSchema, state.ratesPaths).select(rateKeys.map(col): _*)
+        .join(bcastIfSmall(parsed.select(rateKeys.map(col): _*)), rateKeys, "left_semi")
+      val newRates = inOneTaskIf(small)(parsed).dropDuplicates(rateKeys)
+        .join(bcastIfSmall(known), rateKeys, "left_anti")
 
-      // 7. seen delta = scheduled canonical urls; frontier -= scheduled
-      //    (dedup-dropped and robots-dropped rows leave the frontier too —
-      //    frontier1 derives from allowedF). Fetch misses re-enter at
-      //    priority-1 with retries+1, capped at maxRetries (Scrapy's retry
-      //    middleware defaults, SURVEY.md §2#30).
-      // the round number travels as DATA in the seen rows (not as a path
-      // position), so per-round provenance survives delta compaction
-      val seenDelta = sched.select(col("urlHash"), col("canonUrl").as("url"), lit(round).as("round"))
-      val retryRows = extracted
-        .filter(!col("hit") && col("retries") < maxRetries)
-        .select(carryCols.map {
-          case "priority" => (col("priority") - 1).as("priority")
-          case "retries" => (col("retries") + 1).as("retries")
+      // 4. seen delta = scheduled canonical urls; the next frontier = the
+      //    deferred rows plus the fetch misses, which re-enter at priority-1
+      //    with retries+1, capped at maxRetries (Scrapy's retry middleware
+      //    defaults, SURVEY.md §2#30). The round number travels as DATA in
+      //    the seen rows (not as a path position), so per-round provenance
+      //    survives delta compaction.
+      val seenDelta = sched.select(col("urlHash"), col("canonUrl").as("url"), roundCol.as("round"))
+      val retry = tagIs("scheduled")
+      val frontier1 = extracted
+        .filter(tagIs("deferred") || retry && !col("hit") && col("retries") < maxRetries)
+        .select(frontier.columns.toIndexedSeq.map {
+          case "priority" => when(retry, col("priority") - 1).otherwise(col("priority")).as("priority")
+          case "retries" => when(retry, col("retries") + 1).otherwise(col("retries")).as("retries")
           case c => col(c)
         }: _*)
-      val frontier1 = allowedF
-        .join(sched.select("urlHash", "canonUrl"), Seq("urlHash", "canonUrl"), "left_anti")
-        .unionByName(retryRows)
 
-      // 8. host throttle state + per-round fetch/dedup metrics
-      //    (north_rule). All aggregations run over slim cached frames.
-      val hostStates1 = Scheduler.updateHostStates(sched, state.hostStates, cfg, round, roundSec)
-      // ALL per-host stage counts in ONE aggregation: tag each (cached,
-      // slim) stage frame with its name, union, and count each stage with a
-      // conditional count in one groupBy(host) — one shuffle of (host,
-      // stage) rows instead of 8 groupBys + 7 full_outer joins, and one
-      // fewer than a pivot, which aggregates by (host, stage) first. A
-      // stage with no rows for a host counts 0, never null.
-      // Two scan collapses (r07):
-      //  - a pass-through gate (first round's dedup, no allowed_domains,
-      //    empty robots) returns its INPUT FRAME unchanged; consecutive
-      //    stages sharing one frame (reference identity) emit all their
-      //    labels from ONE scan instead of re-scanning the same cached
-      //    blocks per label;
-      //  - the three fetch outcomes are mutually exclusive and exhaustive
-      //    (!hit / hit∧is_err / hit∧¬is_err), so one labeled scan of
-      //    `extracted` replaces three filtered ones.
-      val stages = Seq("entered", "postDedup", "postOffsite", "postRobots",
-        "scheduled", "fetchMissed", "errorDropped", "extractedOk")
-      def tag(df: DataFrame, stage: String): DataFrame =
-        df.select(col("host"), lit(stage).as("__stage"))
-      val gateTagged = {
-        val chain = Seq("entered" -> frontier, "postDedup" -> fresh,
-          "postOffsite" -> onsiteF, "postRobots" -> allowedF)
-        val groups = scala.collection.mutable.ArrayBuffer
-          .empty[(DataFrame, scala.collection.mutable.ArrayBuffer[String])]
-        chain.foreach { case (nm, df) =>
-          if (groups.nonEmpty && (groups.last._1 eq df)) groups.last._2 += nm
-          else groups += ((df, scala.collection.mutable.ArrayBuffer(nm)))
-        }
-        groups.map { case (df, names) =>
-          if (names.length == 1) tag(df, names.head)
-          else df.select(col("host"),
-            explode(array(names.toSeq.map(lit): _*)).as("__stage"))
-        }.reduce(_ unionAll _)
-      }
-      val extractedTagged = extracted.select(col("host"),
-        when(!col("hit"), lit("fetchMissed"))
-          .when(col("is_err"), lit("errorDropped"))
-          .otherwise(lit("extractedOk")).as("__stage"))
-      val stageCounts = stages.map(s => count(when(col("__stage") === s, 1)).as(s))
-      val metricsDelta = gateTagged
-        .unionAll(tag(sched, "scheduled"))
-        .unionAll(extractedTagged)
-        .groupBy("host").agg(stageCounts.head, stageCounts.tail: _*)
-        .select(
-          lit(round).as("round"), col("host"), col("scheduled"),
-          (col("entered") - col("postDedup")).as("dedupDropped"),
-          (col("postDedup") - col("postOffsite")).as("offsiteDropped"),
-          (col("postOffsite") - col("postRobots")).as("robotsDropped"),
-          col("fetchMissed"), col("errorDropped"), col("extractedOk"))
+      // 5. host throttle state + per-round fetch/dedup metrics
+      //    (north_rule) in ONE per-host aggregation over the prior states
+      //    and the two kept frames, every count conditional: one shuffle of
+      //    (host, stage) rows, or none when the round and the host table
+      //    are both small enough for one task. A stage with no rows for a
+      //    host counts 0, never null. The three fetch outcomes are mutually
+      //    exclusive and exhaustive (!hit / hit∧is_err / hit∧¬is_err).
+      //    Metrics rows are the hosts of this round's frontier; host
+      //    states are the prior hosts plus the hosts that fetched.
+      val outcome = when(!col("hit"), lit("fetchMissed"))
+        .when(col("is_err"), lit("errorDropped")).otherwise(lit("extractedOk"))
+      val gateStages = Seq("dedupDropped", "offsiteDropped", "robotsDropped", "scheduled", "deferred")
+      val outcomes = Seq("fetchMissed", "errorDropped", "extractedOk")
+      sc.setJobDescription(s"crawl r$round: hosts")
+      val perHost = keep(inOneTaskIf(small && state.hostStateCount <= 2000000L)(state.hostStates.toDF()
+        .unionByName(tagged.select(col("host"), col("__stage")), allowMissingColumns = true)
+        .unionByName(extracted.filter(tagIs("scheduled")).select(col("host"), outcome.as("__stage")),
+          allowMissingColumns = true))
+        .groupBy("host")
+        .agg(count("delaySec").as("__prior"),
+          Scheduler.hostStateAggs(count(when(tagIs("scheduled"), 1))) ++
+            (gateStages ++ outcomes).map(s => count(when(tagIs(s), 1)).as(s)): _*))
+      val hostStates1 = Scheduler.nextHostStates(
+        perHost.filter(col("__prior") > 0 || col("__f") > 0), cfg, round, roundSec)
+      val metricsDelta = perHost
+        .filter(gateStages.map(col).reduce(_ + _) > 0)
+        .select(roundCol.as("round") +: col("host") +: col("scheduled") +:
+          (gateStages.take(3) ++ outcomes).map(col): _*)
 
-      // 9. atomic snapshot commit — write data files, then swap manifest.
+      // 6. atomic snapshot commit — write data files, then swap manifest.
       //    Append-only tables write only this round's delta; the manifest
       //    names the full delta chain (Iceberg manifest-list analogue).
       //    The five data writes and the Bloom merge are independent —
@@ -507,7 +535,7 @@ object CrawlJob {
         p
       }
       // incremental Bloom maintenance rides the same concurrent write phase
-      // (it reads only the cached slim schedule) and, like the data writes,
+      // (it reads only the kept tagged frame) and, like the data writes,
       // completes BEFORE the manifest commit — the superset invariant (see
       // the reconcile note in loadState). Merge only this round's FIRST-TRY
       // scheduled keys: O(delta), flat per round; retry rows are skipped
@@ -545,23 +573,18 @@ object CrawlJob {
       // already held. File count per round delta is bounded by the write
       // parallelism, so this is O(files) footer opens, never O(rows).
       // The (file-granular ⇒ tiny by construction) result serves double
-      // duty: it IS the lineage delta, and its frontier rows sum to the
-      // next round's frontier count — saving a full frontier re-scan per
-      // round just to decide loop termination.
-      val lineageRows: Array[org.apache.spark.sql.Row] = Seq(
-        ("frontier", frontierPath), ("seen", seenPath), ("rates", ratesPath))
+      // duty: it IS the lineage delta, written by this JVM with no Spark
+      // job, and its frontier rows sum to the next round's frontier count
+      // — saving a full frontier re-scan per round just to decide loop
+      // termination.
+      val lineageRows = Seq(("frontier", frontierPath), ("seen", seenPath), ("rates", ratesPath))
         .flatMap { case (name, p) =>
-          parquetRowCounts(spark, p)
+          parquetFooters(spark, p)
             .filter(_._2 > 0) // 0-row part files never appeared under input_file_name either
-            .map { case (f, n) =>
-              org.apache.spark.sql.Row(round, name, f, n)
-            }
-        }.toArray
+            .map { case (f, n, _) => (round, name, f, n) }
+        }
       val lineagePath = store.dataPath("lineage", round)
-      sc.setJobDescription(s"crawl r$round: lineage")
-      spark.createDataFrame(
-        java.util.Arrays.asList(lineageRows: _*), LineageSchema)
-        .write.mode("overwrite").parquet(lineagePath)
+      writeLineage(spark, lineagePath, lineageRows)
 
       // periodic delta-chain compaction (Iceberg rewrite-data-files
       // analogue): every `compactEvery` rounds each append-only chain is
@@ -610,9 +633,13 @@ object CrawlJob {
       CrawlState(
         round,
         spark.read.schema(frontier1.schema).parquet(frontierPath),
-        lineageRows.filter(_.getString(1) == "frontier").map(_.getLong(3)).sum,
+        lineageRows.filter(_._2 == "frontier").map(_._4).sum,
         read(spark, HostStateSchema, Seq(hostStatesPath)).as[HostState],
+        parquetFooters(spark, hostStatesPath).map(_._2).sum,
         seenPaths, ratesPaths, metricsPaths, lineagePaths)
-    } finally cached.foreach(_.unpersist())
+    } finally {
+      state.frontier.unpersist()
+      kept.foreach(_.unpersist())
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -67,9 +67,8 @@ object UrlSeen {
     * rebuild that one partition's filter with doubled capacity (fpp would
     * otherwise degrade silently once count ≫ capacity).
     *
-    * Build/merge: `groupByKey(pm).mapGroups` (typed Dataset API) — each task
-    * builds and writes its partition's filter to shared storage (local FS
-    * here; HDFS/object store on a cluster).
+    * Build/merge: one task per `pm` builds and writes its partition's filter
+    * to shared storage (local FS here; HDFS/object store on a cluster).
     */
   def buildPartitionedBlooms(
       seen: DataFrame,
@@ -79,7 +78,7 @@ object UrlSeen {
       fpp: Double = 0.01): Unit =
     writeFilters(
       seen.select(col("urlHash"), pmod(col("urlHash"), lit(parts.toLong)).as("pm")),
-      dir, _ => expectedItemsPerPart, fpp, loadExisting = false): Unit
+      dir, parts, _ => expectedItemsPerPart, fpp, loadExisting = false): Unit
 
   /** Smallest per-partition filter capacity: below it the 2× headroom of
     * [[capacityFor]] is too thin against the spread of keys over partitions.
@@ -112,7 +111,7 @@ object UrlSeen {
       fpp: Double = 0.01): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     val withPm = delta.select(col("urlHash"), pmod(col("urlHash"), lit(parts.toLong)).as("pm"))
-    val results = writeFilters(withPm, dir, _ => capacityPerPart, fpp, loadExisting = true)
+    val results = writeFilters(withPm, dir, parts, _ => capacityPerPart, fpp, loadExisting = true)
     val saturated = results.filter { case (_, cap, n) => n > cap }
     if (saturated.nonEmpty) {
       val capOf: Map[Long, Long] =
@@ -121,48 +120,58 @@ object UrlSeen {
         .select(col("urlHash")).distinct() // retries re-append; count distinct keys
         .select(col("urlHash"), pmod(col("urlHash"), lit(parts.toLong)).as("pm"))
         .filter(col("pm").isin(capOf.keys.toSeq: _*))
-      writeFilters(full, dir, capOf, fpp, loadExisting = false): Unit
+      writeFilters(full, dir, parts, capOf, fpp, loadExisting = false): Unit
     }
   }
 
-  /** Distributed filter write: one task per `pm` group builds (or extends,
-    * when `loadExisting`) that partition's filter and atomically swaps the
+  /** Distributed filter write: one task per `pm` builds (or extends, when
+    * `loadExisting`) that partition's filter and atomically swaps the
     * `.bin` + `.cnt` pair into place. Returns (pm, capacity, count) per
     * touched partition so callers can detect saturation without a separate
     * counting job.
+    *
+    * The keys travel as an RDD of (pm, urlHash) pairs, hash-partitioned by
+    * `pm` into `parts` partitions — one `pm` per partition, since pm <
+    * parts — so each task streams its keys into one filter, and the whole
+    * merge is one job that generates no code.
     */
   private def writeFilters(
       keyed: DataFrame, // (urlHash, pm)
       dir: String,
+      parts: Int,
       capacityOf: Long => Long,
       fpp: Double,
-      loadExisting: Boolean): Array[(Long, Long, Long)] = {
-    import keyed.sparkSession.implicits._
-    keyed.as[(Long, Long)]
-      .groupByKey(_._2)
-      .mapGroups { (pm, rows) =>
-        val prior = if (loadExisting) loadFilter(dir, pm) else None
-        val (bf, cap, n0) = prior match {
-          case Some(f) =>
-            val (c, n) = readSidecarStatic(dir, pm)
-            (f, c, n)
-          case None =>
-            val c = math.max(capacityOf(pm), 2L)
-            (BloomFilter.create(c, fpp), c, 0L)
+      loadExisting: Boolean): Array[(Long, Long, Long)] =
+    keyed.queryExecution.toRdd
+      .map(r => (r.getLong(1), r.getLong(0)))
+      .partitionBy(new org.apache.spark.HashPartitioner(parts))
+      .mapPartitions { rows =>
+        val keys = rows.buffered
+        if (!keys.hasNext) Iterator.empty
+        else {
+          val pm = keys.head._1
+          val prior = if (loadExisting) loadFilter(dir, pm) else None
+          val (bf, cap, n0) = prior match {
+            case Some(f) =>
+              val (c, n) = readSidecarStatic(dir, pm)
+              (f, c, n)
+            case None =>
+              val c = math.max(capacityOf(pm), 2L)
+              (BloomFilter.create(c, fpp), c, 0L)
+          }
+          var n = n0
+          keys.foreach { case (_, h) => bf.putLong(h); n += 1 }
+          // .bin first, then .cnt: a reader that sees the new generation token
+          // in .cnt is guaranteed the .bin beside it is at least as new (a
+          // LATER .bin is a superset — safe by the bloom invariant)
+          atomicWrite(dir, f"bloom-$pm%05d.bin") { out => bf.writeTo(out) }
+          atomicWrite(dir, f"bloom-$pm%05d.cnt") { out =>
+            out.write(s"$cap $n ${java.util.concurrent.ThreadLocalRandom.current().nextLong()}"
+              .getBytes("UTF-8")) }
+          Iterator((pm, cap, n))
         }
-        var n = n0
-        rows.foreach { r => bf.putLong(r._1); n += 1 }
-        // .bin first, then .cnt: a reader that sees the new generation token
-        // in .cnt is guaranteed the .bin beside it is at least as new (a
-        // LATER .bin is a superset — safe by the bloom invariant)
-        atomicWrite(dir, f"bloom-$pm%05d.bin") { out => bf.writeTo(out) }
-        atomicWrite(dir, f"bloom-$pm%05d.cnt") { out =>
-          out.write(s"$cap $n ${java.util.concurrent.ThreadLocalRandom.current().nextLong()}"
-            .getBytes("UTF-8")) }
-        (pm, cap, n)
       }
       .collect()
-  }
 
   private def atomicWrite(dir: String, name: String)(body: java.io.OutputStream => Unit): Unit = {
     val d = java.nio.file.Paths.get(dir)
@@ -244,25 +253,41 @@ object UrlSeen {
       seen: DataFrame,
       dir: String,
       parts: Int,
-      smallProbe: Boolean = true): DataFrame = {
+      smallProbe: Boolean = true): DataFrame =
+    splitSeenPartitionedBloom(candidates, seen, dir, parts, smallProbe)._1
+
+  /** [[filterNewPartitionedBloom]]'s two halves over one probe: (the rows
+    * it keeps, the rows it drops as seen). Only rows where `probed` holds
+    * are checked; every other row is kept (the crawl's retry rows). With
+    * `smallProbe` both halves join the same confirmed-seen broadcast, so a
+    * plan that uses both runs the probe and the confirm once.
+    */
+  private[graft] def splitSeenPartitionedBloom(
+      candidates: DataFrame,
+      seen: DataFrame,
+      dir: String,
+      parts: Int,
+      smallProbe: Boolean,
+      probed: Column = lit(true)): (DataFrame, DataFrame) = {
     val probe = new PartitionedBloomProbe(dir)
     val mightContain = udf((pm: Long, h: Long) => probe(pm, h))
-    val maybeSeen = candidates.filter(
-      mightContain(pmod(col("urlHash"), lit(parts.toLong)), col("urlHash")))
+    val maybe = probed && mightContain(pmod(col("urlHash"), lit(parts.toLong)), col("urlHash"))
+    val maybeSeen = candidates.filter(maybe)
     if (!smallProbe) {
-      val definitelyNew = candidates.filter(
-        !mightContain(pmod(col("urlHash"), lit(parts.toLong)), col("urlHash")))
-      definitelyNew.unionAll(filterNewExact(maybeSeen, seen))
+      val isSeen = col("urlHash") === col("__sh") && col("canonUrl") === col("__su")
+      val seenKeys = seen.select(col("urlHash").as("__sh"), col("url").as("__su"))
+      (candidates.filter(!maybe).unionAll(filterNewExact(maybeSeen, seen)),
+        maybeSeen.join(seenKeys, isSeen, "left_semi"))
     } else {
-      val confirmedSeen = seen
+      val confirmedSeen = broadcast(seen
         .join(
           broadcast(maybeSeen.select(col("urlHash").as("__ph"), col("canonUrl").as("__pu"))),
           col("urlHash") === col("__ph") && col("url") === col("__pu"), "left_semi")
-        .select(col("urlHash").as("__sh"), col("url").as("__su"))
-      candidates.join(
-        broadcast(confirmedSeen),
-        candidates("urlHash") === col("__sh") && candidates("canonUrl") === col("__su"),
-        "left_anti")
+        .select(col("urlHash").as("__sh"), col("url").as("__su")))
+      val isSeen =
+        probed && candidates("urlHash") === col("__sh") && candidates("canonUrl") === col("__su")
+      (candidates.join(confirmedSeen, isSeen, "left_anti"),
+        candidates.join(confirmedSeen, isSeen, "left_semi"))
     }
   }
 }

@@ -16,25 +16,11 @@ import java.time.format.DateTimeFormatter
 object DateFns {
 
   val StdFmt = "dd/MM/yyyy"
-  val McFmt = "yyyy-MM-dd"
-  val VisaFmt = "MM/dd/yyyy"
 
   private val stdFmtJ = DateTimeFormatter.ofPattern(StdFmt)
 
   /** `strpdate` (client.py:31-32) as a plain function for driver-side use. */
   def strpdate(s: String): LocalDate = LocalDate.parse(s, stdFmtJ)
-
-  /** Column: parse canonical `dd/MM/yyyy` text to DATE. */
-  def parseStdDate(c: Column): Column = to_date(c, StdFmt)
-
-  /** Column: canonical date text from a DATE (frontier CSV dialect). */
-  def formatStdDate(c: Column): Column = date_format(c, StdFmt)
-
-  /** Column: provider-facing reformat, canonical text → MC `yyyy-MM-dd`. */
-  def stdToMc(c: Column): Column = date_format(to_date(c, StdFmt), McFmt)
-
-  /** Column: provider-facing reformat, canonical text → Visa `MM/dd/yyyy`. */
-  def stdToVisa(c: Column): Column = date_format(to_date(c, StdFmt), VisaFmt)
 
   /** "Current crawl date" under the Mastercard day-boundary definition
     * (client.py:55-65): now in US/Eastern; before 14:00 local, "today" is

@@ -294,9 +294,12 @@ object Frontier {
     }
     val resume = store.readCurrent()
     var version = resume.map(_._1).getOrElse(0)
-    var ratesPaths = resume.flatMap(_._2.get("rates"))
+    // every commit carries the other tables of the store forward (a crawl
+    // or an IVF model may share it) and replaces only its own two keys
+    var tables = resume.map(_._2).getOrElse(Map.empty[String, String])
+    var ratesPaths = tables.get("rates")
       .map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    var done = resume.flatMap(_._2.get("ingestedFiles"))
+    var done = tables.get("ingestedFiles")
       .map(_.split(";").filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
     files.filterNot(f => done(f.getFileName.toString)).foreach { f =>
       version += 1
@@ -304,9 +307,10 @@ object Frontier {
       ratesFromCsv(spark, f.toString, providerId).write.mode("overwrite").parquet(p)
       ratesPaths = ratesPaths :+ p
       done = done + f.getFileName.toString
-      store.commit(version, Map(
+      tables = tables ++ Map(
         "rates" -> ratesPaths.mkString(";"),
-        "ingestedFiles" -> done.toSeq.sorted.mkString(";")))
+        "ingestedFiles" -> done.toSeq.sorted.mkString(";"))
+      store.commit(version, tables)
     }
     if (ratesPaths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -1,17 +1,20 @@
 package graft.politeness
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.RobotsRule
 
 /** Robots.txt gate (SURVEY.md §2 #25; reference `ROBOTSTXT_OBEY = True`,
   * settings.py:22).
   *
-  * Rules live in a small side table `(host, pathPrefix, allow)` joined 1:1
-  * against the frontier (north_rule: "robots.txt rules as a broadcast side
-  * table" — the join IS broadcast whenever the table is actually small,
-  * chosen by AQE rather than forced; see [[allowed]]). RFC 9309 semantics:
+  * Rules live in a small side table `(host, pathPrefix, allow)`, collapsed
+  * once per crawl to one row per host and joined 1:1 against the frontier
+  * (north_rule: "robots.txt rules as a broadcast side table"; see
+  * [[perHost]]). RFC 9309 semantics:
   * longest-matching rule wins, Allow wins length ties (§2.2.2 "least
   * restrictive"), `*` matches any character sequence and a trailing `$`
   * anchors at path end (§2.2.3), groups may list several User-agent lines
@@ -109,7 +112,7 @@ object Robots {
     * a trailing `$` anchors at path end, every other character is literal
     * (RFC 9309 §2.2.3).
     */
-  private[politeness] def patternToRegex(p: String): String = {
+  private[graft] def patternToRegex(p: String): String = {
     val endAnchor = p.endsWith("$")
     val body = if (endAnchor) p.dropRight(1) else p
     val sb = new StringBuilder("^")
@@ -129,61 +132,79 @@ object Robots {
     when(path === "", "/").otherwise(path)
   }
 
-  /** Keep frontier rows whose (host, path) is allowed.
-    *
-    * The rules are first collapsed to ONE row per host, so the join is
-    * 1:1 — the frontier is never multiplied. Two arrays per host: plain
-    * prefix rules matched with `startswith` (the overwhelming majority —
-    * stays fully codegen), and wildcard rules (`*`/`$`) matched by a
-    * pre-compiled-at-rule-time regex; the per-row regex cost is paid ONLY
-    * on rows of hosts that actually publish wildcard rules. The verdict is
-    * a scalar `aggregate`: longest match wins, Allow wins length ties
-    * (RFC 9309 §2.2.2 — a `>`-only comparator would leave equal-length
-    * Allow/Disallow ties to collect_list order, i.e. nondeterministic).
-    *
-    * Deliberately NOT hinted broadcast (same reasoning as the host-state
-    * join in Scheduler): the rules table grows with distinct hosts crawled —
-    * kilobytes for a focused crawl, multi-GB at 10^8 web hosts where a
-    * forced broadcast is an OOM. AQE still picks a broadcast join whenever
-    * the table is actually small, and degrades to a shuffle on host
-    * otherwise.
+  /** Keep frontier rows whose (host, path) is allowed. */
+  def allowed(frontier: DataFrame, rules: DataFrame): DataFrame =
+    withVerdict(frontier, perHost(rules)).filter(col(Verdict)).drop(Verdict)
+
+  /** The flag [[withVerdict]] adds. */
+  val Verdict = "__robotsOk"
+
+  private val PerHostSchema = StructType.fromDDL(
+    "__rhost STRING, __rules ARRAY<STRUCT<p: STRING, a: BOOLEAN>>, " +
+      "__wrules ARRAY<STRUCT<rx: STRING, len: INT, a: BOOLEAN>>")
+
+  /** The rules collapsed to ONE row per host, as a local table: the join
+    * in [[withVerdict]] is then 1:1 — the frontier is never multiplied —
+    * and broadcast. Two arrays per host: plain prefix rules (the
+    * overwhelming majority), and wildcard rules (`*`/`$`) translated to
+    * regexes here, once, so the per-row regex cost is paid ONLY on rows of
+    * hosts that actually publish wildcard rules. The rules are per-host
+    * metadata, collected to the driver once per crawl; in-memory rules
+    * collect without a Spark job. A rule with a null path or verdict is
+    * ignored.
     */
-  def allowed(frontier: DataFrame, rules: DataFrame): DataFrame = {
-    val rxUdf = udf((p: String) => patternToRegex(p))
-    val isWild = col("pathPrefix").contains("*") || col("pathPrefix").contains("$")
-    // collect_list skips the nulls the unmatched when() branches produce
-    val perHost = rules
-      .groupBy(col("host").as("__rhost"))
-      .agg(
-        collect_list(when(!isWild,
-          struct(col("pathPrefix").as("p"), col("allow").as("a")))).as("__rules"),
-        collect_list(when(isWild,
-          struct(rxUdf(col("pathPrefix")).as("rx"),
-            length(col("pathPrefix")).as("len"), col("allow").as("a")))).as("__wrules"))
+  def perHost(rules: DataFrame): DataFrame = {
+    val spark = rules.sparkSession
+    val collapsed = rules.select("host", "pathPrefix", "allow").collect().toSeq
+      .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+      .groupBy(_.getString(0)).toSeq.sortBy(_._1).map { case (host, rs) =>
+        val (wild, plain) = rs.partition { r => val p = r.getString(1); p.contains("*") || p.contains("$") }
+        Row(host,
+          plain.map(r => Row(r.getString(1), r.getBoolean(2))),
+          wild.map(r => Row(patternToRegex(r.getString(1)), r.getString(1).length, r.getBoolean(2))))
+      }
+    spark.createDataFrame(collapsed.asJava, PerHostSchema)
+  }
+
+  /** `frontier` plus the boolean [[Verdict]]: true where (host, path) is
+    * allowed by `perHostRules` ([[perHost]]).
+    */
+  def withVerdict(frontier: DataFrame, perHostRules: DataFrame): DataFrame = {
     // rules match against path + query (RFC 9309 §2.2.2 matches the path
     // and optional query — '/*?sessionid=' style rules exist in the wild);
     // fragment stays excluded
-    val withPath = frontier.withColumn("__path",
-      concat(pathCol(col("url")), regexp_extract(col("url"), "^[^#?]*(\\?[^#]*)", 1)))
-    val joined = withPath.join(perHost, col("host") === col("__rhost"), "left")
-    // (len, a) beats acc on longer match, or equal-length Allow over Disallow
-    def better(acc: Column, len: Column, a: Column): Column =
-      when(len > acc.getField("len") ||
-          (len === acc.getField("len") && a && !acc.getField("a")),
-        struct(len.as("len"), a.as("a"))).otherwise(acc)
-    val plainBest = aggregate(
-      filter(col("__rules"), r => startswith(col("__path"), r.getField("p"))),
-      struct(lit(-1).as("len"), lit(true).as("a")),
-      (acc, r) => better(acc, length(r.getField("p")), r.getField("a")))
-    val verdict = aggregate(
-      col("__wrules"),
-      plainBest,
-      (acc, r) => when(regexp_like(col("__path"), r.getField("rx")),
-        better(acc, r.getField("len"), r.getField("a"))).otherwise(acc)).getField("a")
-    joined
-      .withColumn("__verdict", when(col("__rules").isNull, lit(true)).otherwise(verdict))
-      .filter(col("__verdict"))
-      .drop("__rhost", "__rules", "__wrules", "__path", "__verdict")
+    val path = concat(pathCol(col("url")), regexp_extract(col("url"), "^[^#?]*(\\?[^#]*)", 1))
+    frontier.join(perHostRules, col("host") === col("__rhost"), "left")
+      .withColumn(Verdict, verdictUdf(path, col("__rules"), col("__wrules")))
+      .drop("__rhost", "__rules", "__wrules")
+  }
+
+  /** The verdict over one host's collapsed rules: longest match wins,
+    * Allow wins length ties (RFC 9309 §2.2.2 — a `>`-only comparator would
+    * leave equal-length Allow/Disallow ties to rule order, i.e.
+    * nondeterministic); no matching rule, or no rules, allows. A Scala
+    * function keeps the gate inside Spark's generated code, which the
+    * higher-order array functions would split.
+    */
+  private val verdictUdf = {
+    // compiled wildcard patterns, one map per deserialized copy (per task)
+    val patterns = new java.util.concurrent.ConcurrentHashMap[String, java.util.regex.Pattern]()
+    udf { (path: String, plain: Seq[Row], wild: Seq[Row]) =>
+      var len = -1
+      var allow = true
+      def consider(l: Int, a: Boolean): Unit =
+        if (l > len || (l == len && a && !allow)) { len = l; allow = a }
+      if (path != null) {
+        if (plain != null) plain.foreach { r =>
+          if (path.startsWith(r.getString(0))) consider(r.getString(0).length, r.getBoolean(1))
+        }
+        if (wild != null) wild.foreach { r =>
+          val rx = patterns.computeIfAbsent(r.getString(0), java.util.regex.Pattern.compile(_))
+          if (rx.matcher(path).find()) consider(r.getInt(1), r.getBoolean(2))
+        }
+      }
+      allow
+    }
   }
 
   /** Rules table from robots.txt pages stored in the page table itself —
@@ -212,10 +233,12 @@ object Robots {
   /** Offsite filter (SURVEY.md §2 #28): drop URLs whose host is not the
     * allowed domain or a subdomain of it (Scrapy OffsiteMiddleware).
     */
-  def onSite(frontier: DataFrame, allowedDomains: Seq[String]): DataFrame = {
-    val cond = allowedDomains
+  def onSite(frontier: DataFrame, allowedDomains: Seq[String]): DataFrame =
+    frontier.filter(isOnSite(allowedDomains))
+
+  /** [[onSite]]'s predicate; null for a null host. */
+  def isOnSite(allowedDomains: Seq[String]): Column =
+    allowedDomains
       .map(d => col("host") === d || endswith(col("host"), lit("." + d)))
       .reduce(_ || _)
-    frontier.filter(cond)
-  }
 }

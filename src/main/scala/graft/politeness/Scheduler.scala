@@ -1,6 +1,6 @@
 package graft.politeness
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +26,8 @@ import graft.model.{HostState, PolitenessConfig}
   *
   * Both stages are window functions over explicit `(priority desc, seq)`
   * sort keys — ordering is data, never shuffle order. Per-host token-bucket
-  * state (AutoThrottle delay) is a tiny one-row-per-host Dataset updated
-  * with `groupByKey.mapGroups` and checkpointed between rounds.
+  * state (AutoThrottle delay) is a tiny one-row-per-host table updated by
+  * one per-host aggregation and checkpointed between rounds.
   */
 object Scheduler {
 
@@ -52,7 +52,29 @@ object Scheduler {
       frontier: DataFrame,
       hostStates: DataFrame,
       cfg: PolitenessConfig,
-      roundSec: Double): DataFrame = {
+      roundSec: Double): DataFrame =
+    withSchedule(frontier, hostStates, cfg, roundSec).filter(col(Scheduled)).drop(Scheduled)
+
+  /** The flag [[withSchedule]] adds. */
+  val Scheduled = "__scheduled"
+
+  /** [[scheduleRound]] as a flag: every `frontier` row, with [[Scheduled]]
+    * true on exactly the rows `scheduleRound` returns. Rows where
+    * `eligible` is false are never scheduled and take no budget. One
+    * tagged pass serves the fetch set and the next frontier alike, so no
+    * second scan subtracts the one from the other.
+    *
+    * Every window keeps every row, and none ranks a whole hot host: a
+    * stage's survivors share one group per host (or one group in all for
+    * the global cap), bounded by Salts × budget rows, and every other row
+    * stays in its own (host, salt) group.
+    */
+  def withSchedule(
+      frontier: DataFrame,
+      hostStates: DataFrame,
+      cfg: PolitenessConfig,
+      roundSec: Double,
+      eligible: Column = lit(true)): DataFrame = {
     val budgetUdf = udf((delay: Double) => budgetFor(delay, roundSec, cfg))
     val states = hostStates.select(col("host").as("__shost"), col("delaySec").as("__delay"))
 
@@ -65,56 +87,45 @@ object Scheduler {
     val withBudget = frontier
       .join(states, col("host") === col("__shost"), "left")
       .withColumn("__budget", budgetUdf(coalesce(col("__delay"), lit(cfg.startDelaySec))))
+      .withColumn("__eligible", eligible)
       .drop("__shost", "__delay")
+    // one rank stage: rank inside (__ghost, __gsalt, __eligible) groups;
+    // a candidate stays eligible while its rank is within `bound`. The
+    // stages share one row layout (the salt is recomputed, never kept), so
+    // Spark generates their window and sort code once.
+    def stage(df: DataFrame, ghost: Column, gsalt: Column, bound: Column): DataFrame =
+      df.withColumn("__ghost", ghost).withColumn("__gsalt", gsalt)
+        .withColumn("__rank", row_number().over(
+          Window.partitionBy(col("__ghost"), col("__gsalt"), col("__eligible"))
+            .orderBy(col("priority").desc, col("seq"))))
+        .withColumn("__eligible", col("__eligible") && col("__rank") <= bound)
+        .drop("__rank")
+    // survivors of the previous stage share one group (per host, or one in
+    // all); every other row stays in its own (host, salt) group
+    val salt = pmod(xxhash64(col("url")), lit(Salts.toLong))
+    val shared = when(col("__eligible"), lit(-1L)).otherwise(salt)
+    val ownHost = when(!col("__eligible"), col("host"))
 
     // stage 1: salted pre-prune (lossless superset of the per-host top-budget)
-    val salted = withBudget.withColumn("__salt", pmod(xxhash64(col("url")), lit(Salts.toLong)))
-    val w1 = Window.partitionBy(col("host"), col("__salt"))
-      .orderBy(col("priority").desc, col("seq"))
-    val pruned = salted
-      .withColumn("__rn1", row_number().over(w1))
-      .filter(col("__rn1") <= col("__budget"))
-      .drop("__rn1", "__salt")
-
+    val pruned = stage(withBudget, col("host"), salt, col("__budget"))
     // stage 2: exact per-host budget over the pruned (small) remainder
-    val w2 = Window.partitionBy(col("host")).orderBy(col("priority").desc, col("seq"))
-    val perHost = pruned
-      .withColumn("__rn2", row_number().over(w2))
-      .filter(col("__rn2") <= col("__budget"))
-      .drop("__rn2", "__budget")
+    val perHost = stage(pruned, col("host"), shared, col("__budget"))
 
-    // stage 3: GLOBAL concurrency cap (reference CONCURRENT_REQUESTS=50,
+    // stages 3-4: GLOBAL concurrency cap (reference CONCURRENT_REQUESTS=50,
     // settings.py:25) — at most cfg.maxGlobal fetches per round across all
     // hosts, picked by (priority desc, seq). Same lossless salted two-stage
     // shape as the per-host budget: a per-salt top-maxGlobal pre-prune keeps
     // any one task from ranking the whole round, then the exact global rank
-    // runs over ≤ Salts·maxGlobal rows (a single small window, by design:
+    // runs over ≤ Salts·maxGlobal rows (a single small group, by design:
     // maxGlobal is a politeness constant, not a data-sized value).
-    if (cfg.maxGlobal == Int.MaxValue) perHost
-    else {
-      val gw1 = Window.partitionBy(col("__gsalt")).orderBy(col("priority").desc, col("seq"))
-      val gPruned = perHost
-        .withColumn("__gsalt", pmod(xxhash64(col("url")), lit(Salts.toLong)))
-        .withColumn("__grn1", row_number().over(gw1))
-        .filter(col("__grn1") <= cfg.maxGlobal)
-        .drop("__grn1", "__gsalt")
-      // single-partition by CONSTRUCTION: stage 1 pre-pruned the input to
-      // ≤ Salts·maxGlobal rows (a politeness CONSTANT — e.g. 16·50 = 800 —
-      // never a data-sized value), so the one-task sort is bounded.
-      // Partitioning by a CONSTANT key gives the identical plan (one hash
-      // partition) without tripping WindowExec's "No Partition Defined"
-      // warning — dozens of which per bench run were masking the day a
-      // genuinely unbounded global window sneaks in. The key must be
-      // NON-FOLDABLE (pmod over a real column, not lit(0)): constant
-      // folding strips a literal partition spec right back to the
-      // unpartitioned warning case.
-      val gw2 = Window.partitionBy(pmod(col("seq"), lit(1)))
-        .orderBy(col("priority").desc, col("seq"))
-      gPruned
-        .withColumn("__grn2", row_number().over(gw2))
-        .filter(col("__grn2") <= cfg.maxGlobal)
-        .drop("__grn2")
-    }
+    val capped =
+      if (cfg.maxGlobal == Int.MaxValue) perHost
+      else {
+        val gPruned = stage(perHost, ownHost, salt, lit(cfg.maxGlobal))
+        stage(gPruned, ownHost, shared, lit(cfg.maxGlobal))
+      }
+    capped.withColumnRenamed("__eligible", Scheduled)
+      .drop("__budget", "__ghost", "__gsalt")
   }
 
   /** AutoThrottle delay update (Scrapy's algorithm, settings.py:96-98
@@ -131,17 +142,35 @@ object Scheduler {
       round: Int,
       roundSec: Double,
       maxDelaySec: Double = 60.0): Dataset[HostState] = {
-    val spark = scheduled.sparkSession
-    import spark.implicits._
     // prior states ∪ this round's fetches, then ONE aggregation per host:
-    // a single exchange, partially aggregated map-side. A host has at most
-    // one prior row, so max() recovers its fields; count() of the fetch
-    // marker is 0 for a host that fetched nothing.
+    // a single exchange, partially aggregated map-side
+    val aggs = hostStateAggs(count("__fetch"))
     val merged = hostStates.toDF()
       .unionByName(scheduled.select(col("host"), lit(1).as("__fetch")), allowMissingColumns = true)
       .groupBy("host")
-      .agg(max("delaySec").as("delaySec"), max("clockSec").as("clockSec"),
-        max("fetched").as("fetched"), count("__fetch").as("__f"))
+      .agg(aggs.head, aggs.tail: _*)
+    nextHostStates(merged, cfg, round, roundSec, maxDelaySec)
+  }
+
+  /** The per-host aggregates [[nextHostStates]] reads, over the union of
+    * the prior state rows and this round's rows of the host: a host has at
+    * most one prior row, so max() recovers its fields; `fetches` counts the
+    * host's fetches this round (0 for a host that fetched nothing).
+    */
+  private[graft] def hostStateAggs(fetches: Column): Seq[Column] =
+    Seq(max("delaySec").as("delaySec"), max("clockSec").as("clockSec"),
+      max("fetched").as("fetched"), fetches.as("__f"))
+
+  /** The next host states from [[hostStateAggs]]' columns, one row per
+    * host.
+    */
+  private[graft] def nextHostStates(
+      merged: DataFrame,
+      cfg: PolitenessConfig,
+      round: Int,
+      roundSec: Double,
+      maxDelaySec: Double = 60.0): Dataset[HostState] = {
+    import merged.sparkSession.implicits._
     // synthetic latency in [0.05, 0.55)s, deterministic per (host, round) —
     // the sandbox has no live HTTP, so the throttle clock is simulated
     val latency = lit(0.05) +

@@ -234,8 +234,9 @@ object Streams {
     * layout plus a `batches` table. Rows a batch cannot schedule under its
     * politeness budget — and retry rows — stay in the `frontier` table and
     * re-enter on the NEXT micro-batch, ahead of its new seeds. Defaults (no
-    * robots rules, unbounded budget) drain every batch fully. Robots rules
-    * are checked for emptiness once per stream, not per batch.
+    * robots rules, unbounded budget) drain every batch fully. Each batch
+    * collapses the robots rules on the driver (no Spark job for in-memory
+    * rules).
     *
     * DRAIN CONTRACT: frontier rows re-enter only when a later micro-batch
     * fires, and the file source fires one only for NEW seed files — if the
@@ -264,12 +265,11 @@ object Streams {
     val raw = spark.readStream
       .schema("card_c STRING, trans_c STRING, date STRING")
       .csv(seedDir)
-    val rules = graft.crawl.CrawlJob.activeRules(robots)
     ingestSeeds(raw).writeStream
       .option("checkpointLocation", streamCheckpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         processSeedBatch(batch.toDF(), batchId, pages, storeDir, provider, providers,
-          rules, cfg, roundSec, maxRetries)
+          robots, cfg, roundSec, maxRetries)
       }
       .start()
   }
@@ -321,7 +321,7 @@ object Streams {
           .map(prior => prior.unionByName(seeds.join(prior.select("canonUrl"), Seq("canonUrl"), "left_anti")))
           .getOrElse(seeds)
       }
-      CrawlJob.crawlRound(spark, storeDir, state, pages, robots, cfg, roundSec, maxRetries,
+      CrawlJob.crawlRound(spark, storeDir, state, pages, CrawlJob.activeRules(robots), cfg, roundSec, maxRetries,
         providers = providers,
         extraTables = Map("batches" -> (doneBatches + batchId).toSeq.sorted.mkString(";")))
     }

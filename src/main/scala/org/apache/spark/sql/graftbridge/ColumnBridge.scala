@@ -9,8 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * from custom Catalyst [[Expression]]s without a per-session function
   * registry. Spark 4's public `Column` wraps a ColumnNode; the classic
   * converters live behind `private[sql]`, so this one-object shim is placed
-  * inside the `org.apache.spark.sql` package namespace. Nothing else in
-  * this repo lives outside `graft.*`.
+  * inside the `org.apache.spark.sql` package namespace. This package
+  * ([[KeptFrame]] beside it) is all the repo keeps outside `graft.*`.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

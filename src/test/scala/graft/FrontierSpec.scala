@@ -216,4 +216,34 @@ class FrontierSpec extends SparkSpec {
     assert(store.currentVersion() === Some(3))
     assert(out.filter(org.apache.spark.sql.functions.col("card_code") === "CHF").count() === 1)
   }
+
+  test("per-file ingest into a crawl's store keeps every crawl table, and the crawl resumes") {
+    import graft.crawl.CrawlJob
+    import graft.model.PolitenessConfig
+    val seeds = Frontier.candidates(Frontier.currencyDim(spark, Seq("GBP", "USD", "EUR")), testDate, 3)
+    val frontier = CrawlJob.expandSeeds(seeds, "Mastercard")
+    val pages = graft.synth.Synth.mcPages(seeds)
+    val robots = Seq.empty[(String, String, Boolean)].toDF("host", "pathPrefix", "allow")
+    val cfg = PolitenessConfig(maxPerHost = 8)
+    def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
+    val (ratesAlone, seenAlone, _) = CrawlJob.run(spark, frontier, pages, robots, tmp("alone"), cfg, roundSec = 1.0)
+
+    val ckpt = tmp("shared")
+    CrawlJob.run(spark, frontier, pages, robots, ckpt, cfg, roundSec = 1.0, maxRounds = 1)
+    val store = new graft.checkpoint.SnapshotStore(ckpt)
+    val crawlTables = store.readCurrent().get._2
+    val dir = tmp("csvs")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/a.csv"),
+      "card_code,trans_code,date,rate\nCHF,JPY,01/02/1995,1.5\n")
+    Frontier.ratesFromCsvPerFile(spark, dir, 1, store)
+    val after = store.readCurrent().get._2
+    (crawlTables.keySet - "rates").foreach(k => assert(after.get(k) === crawlTables.get(k), k))
+    assert(after("rates").startsWith(crawlTables("rates") + ";"), "the ingest extends the rates chain")
+
+    // the crawl resumes where it stopped: the same seen set as a crawl
+    // alone, plus the ingested row among the rates
+    val (rates, seen, _) = CrawlJob.run(spark, frontier, pages, robots, ckpt, cfg, roundSec = 1.0)
+    assert(seen.select("url").as[String].collect().sorted === seenAlone.select("url").as[String].collect().sorted)
+    assert(rates.count() === ratesAlone.count() + 1)
+  }
 }

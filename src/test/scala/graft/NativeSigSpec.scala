@@ -103,6 +103,21 @@ class NativeSigSpec extends SparkSpec {
     assert(both.filter(!(col("native") <=> col("expr"))).count() === 0L)
   }
 
+  /** The pre-r07 expression form of `Ann.dot`. */
+  private def dotExpr(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  /** The pre-r07 expression form of the IVF distance array: one squared
+    * distance per centroid.
+    */
+  private def distsExprLegacy(emb: Column, cents: Array[Array[Double]]): Column =
+    array(cents.toIndexedSeq.map { c =>
+      aggregate(
+        zip_with(emb, typedLit(c), (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
+        lit(0.0), (acc, v) => acc + v)
+    }: _*)
+
   test("native dot ≡ aggregate/zip_with expression form (incl. unequal lengths, nulls)") {
     val vecs = (0 until 100).map { i =>
       ((0 until 12).map(d => ((i * 7 + d) % 31 - 15) / 4.0f),
@@ -112,7 +127,7 @@ class NativeSigSpec extends SparkSpec {
       .unionByName(Seq((Seq(1.0f), null.asInstanceOf[Seq[Float]])).toDF("a", "b"))
     val both = vecs.select(
       Ann.dot(col("a"), col("b")).as("native"),
-      Ann.dotExpr(col("a"), col("b")).as("expr"))
+      dotExpr(col("a"), col("b")).as("expr"))
     assert(both.filter(!(col("native") <=> col("expr"))).count() === 0L)
     // l2Norm == sqrt(self-dot) == the old aggregate form
     val norms = vecs.filter(col("a").isNotNull).select(
@@ -129,7 +144,7 @@ class NativeSigSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val both = vecs.select(
       graft.expr.Native.ivfDists(col("embedding"), cents).as("native"),
-      Ann.distsExprLegacy(col("embedding"), cents).as("expr"))
+      distsExprLegacy(col("embedding"), cents).as("expr"))
     assert(both.filter(!(col("native") <=> col("expr"))).count() === 0L)
   }
 
