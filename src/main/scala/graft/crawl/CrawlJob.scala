@@ -70,30 +70,6 @@ object CrawlJob {
       }
   }
 
-  /** Writes `rows` as the one parquet file of the directory `dir`, in this
-    * JVM: lineage rows are footer metadata the driver already holds, so a
-    * Spark job to write them would only add a job to every round.
-    */
-  private def writeLineage(spark: SparkSession, dir: String, rows: Seq[(Int, String, String, Long)]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message lineage { required int32 round; required binary table (STRING); " +
-        "required binary file (STRING); required int64 rows; }")
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir)
-    path.getFileSystem(conf).delete(path, true)
-    val writer = ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path, "part-00000.parquet"), conf))
-      .withType(schema).withConf(conf).build()
-    val groups = new SimpleGroupFactory(schema)
-    try rows.foreach { case (round, table, file, n) =>
-      writer.write(groups.newGroup().append("round", round).append("table", table)
-        .append("file", file).append("rows", n))
-    } finally writer.close()
-  }
-
   /** Host column — see [[graft.urls.UrlCols.hostCol]] (shared with the
     * robots rule table so frontier hosts and rule hosts derive identically).
     */
@@ -124,6 +100,15 @@ object CrawlJob {
       .withColumn("headers", p.headersFor(col("card_c"), col("trans_c"), col("date")))
       .select("url", "canonUrl", "urlHash", "host", "card_c", "trans_c", "date", "provider", "priority", "seq", "retries", "headers")
   }
+
+  /** The most rows a round aggregates in one task instead of through a
+    * shuffle. Measured on 4 vCPUs (local[4], 4 shuffle partitions, the
+    * round's per-host aggregation and its rates dedup over cached rows):
+    * one task was faster up to 250k rows (hosts 202 vs 240 ms, rates 397 vs
+    * 434 ms) and slower from 400k (232 vs 261 ms, 449 vs 637 ms). More
+    * cores only move the crossover down.
+    */
+  private[graft] val OneTaskRows = 250000L
 
   /** Defaults [[run]] and the stream driver share: Bloom filter partitions,
     * and rounds between delta-chain compactions.
@@ -170,13 +155,17 @@ object CrawlJob {
       providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry): (DataFrame, DataFrame, DataFrame) =
     restoringJobDescription(spark) {
       val loaded = loadState(spark, checkpointDir, bloomParts)(_.getOrElse(UrlSeen.dedupWithinBatch(frontier0)))
-      val rules = activeRules(Some(robots))
       var state = loaded
+      var rules = Option.empty[DataFrame]
       try {
+        rules = activeRules(Some(robots))
         while (state.frontierCount > 0 && state.round < maxRounds)
           state = crawlRound(spark, checkpointDir, state, pages, rules, cfg, roundSec, maxRetries,
             allowedDomains, bloomParts, compactEvery, insertBatchRows, providers)
-      } finally loaded.frontier.unpersist() // cached by loadState when computed; a no-op otherwise
+      } finally {
+        loaded.frontier.unpersist() // cached by loadState when computed; a no-op otherwise
+        rules.foreach(_.unpersist())
+      }
       (read(spark, RatesSchema, state.ratesPaths), read(spark, SeenSchema, state.seenPaths),
         read(spark, MetricsSchema, state.metricsPaths))
     }
@@ -192,12 +181,22 @@ object CrawlJob {
   }
 
   /** The robots gate's rules collapsed per host ([[Robots.perHost]]), or
-    * None when there are none: no rules at all (common in tests/bench) skips
-    * the gate's join subtree every round. Each driver collapses its rules
-    * once, never per round.
+    * None when there are none: no rules at all (common in tests/bench)
+    * skips the gate's join subtree every round. Each driver collapses its
+    * rules once, never per round: rules that are not already in driver
+    * memory are collapsed by a distributed aggregation, cached and counted
+    * here, so every round reads the cache and its planner sees the
+    * collapsed table's real size when it picks the join. The caller
+    * releases them with `unpersist()`.
     */
   private[graft] def activeRules(robots: Option[DataFrame]): Option[DataFrame] =
-    robots.map(Robots.perHost).filter(!_.isEmpty)
+    robots.filter(!_.isEmpty).map(Robots.perHost).map { collapsed =>
+      if (!Robots.isLocal(collapsed)) {
+        collapsed.cache()
+        try collapsed.count() catch { case e: Throwable => collapsed.unpersist(); throw e }
+      }
+      collapsed
+    }
 
   /** A crawl's committed state, as one round consumes and produces it.
     * frontier + hostStates are full snapshots (they shrink / stay tiny);
@@ -367,9 +366,9 @@ object CrawlJob {
     // frontier-sized.
     val small = state.frontierCount <= 2000000L
     def bcastIfSmall(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // below the same bound, round-sized rows are aggregated in one task,
-    // with no exchange
-    def inOneTaskIf(fits: Boolean)(df: DataFrame): DataFrame = if (fits) df.coalesce(1) else df
+    // an aggregation over at most OneTaskRows rows runs in one task, with
+    // no exchange
+    def inOneTaskIf(rows: Long)(df: DataFrame): DataFrame = if (rows <= OneTaskRows) df.coalesce(1) else df
 
     try {
       // 1. one tagged pass over the frontier: every row leaves it with its
@@ -391,7 +390,7 @@ object CrawlJob {
         else {
           val (unseen, seen) = UrlSeen.splitSeenPartitionedBloom(
             frontier, seenDf, bloomDir, bloomParts, small, probed = col("retries") === 0)
-          (unseen, Some(seen.select(col("host"), lit("dedupDropped").as("__stage"))))
+          (unseen, Some(seen.withColumn("__stage", lit("dedupDropped"))))
         }
       //    Offsite (allowed_domains) ranks before robots, as in Scrapy: the
       //    spider middleware drops off-domain requests before they reach
@@ -402,14 +401,16 @@ object CrawlJob {
           when(!coalesce(onSite, lit(false)), lit("offsiteDropped"))
             .when(!coalesce(col(Robots.Verdict), lit(false)), lit("robotsDropped")))
         .drop(Robots.Verdict)
-      //    per-host politeness schedule over the rows every gate passed
-      val scheduled = Scheduler.withSchedule(
-        gated, state.hostStates.toDF(), cfg, roundSec, eligible = col("__stage").isNull)
+      //    Per-host politeness schedule over the rows every gate passed;
+      //    the dropped rows ride along as ineligible rows, which only the
+      //    schedule's first stage shuffles.
+      sc.setJobDescription(s"crawl r$round: extract")
+      val tagged = keep(Scheduler.withSchedule(
+        dupes.fold(gated)(gated.unionByName(_, allowMissingColumns = true)),
+        state.hostStates.toDF(), cfg, roundSec, eligible = col("__stage").isNull, keep = keep)
         .withColumn("__stage", coalesce(col("__stage"),
           when(col(Scheduler.Scheduled), lit("scheduled")).otherwise(lit("deferred"))))
-        .drop(Scheduler.Scheduled)
-      sc.setJobDescription(s"crawl r$round: extract")
-      val tagged = keep(dupes.fold(scheduled)(scheduled.unionByName(_, allowMissingColumns = true)))
+        .drop(Scheduler.Scheduled))
       def tagIs(stage: String): Column = col("__stage") === stage
       val sched = tagged.filter(tagIs("scheduled"))
 
@@ -447,10 +448,10 @@ object CrawlJob {
       // 3. append rates honoring the unique constraint (orm.py:33-34):
       //    set-difference upsert (duplicate keys within the batch AND vs
       //    prior rounds both excluded), written as this round's delta. The
-      //    history probe is bounded by the round: the rates history is
-      //    scanned, never shuffled, and only the keys this round produced
-      //    leave the scan. A small round dedups its rates in one task, with
-      //    no exchange.
+      //    history probe is bounded by the round: only the keys this round
+      //    produced leave the history scan, and a small round broadcasts
+      //    them, so the history is never shuffled. Up to OneTaskRows rows
+      //    the round dedups its rates in one task, with no exchange.
       val rateKeys = Seq("card_code", "trans_code", "date", "provider_id")
       val parsed = extracted
         .filter(col("hit") && !col("is_err"))
@@ -462,7 +463,7 @@ object CrawlJob {
           col("rate"))
       val known = read(spark, RatesSchema, state.ratesPaths).select(rateKeys.map(col): _*)
         .join(bcastIfSmall(parsed.select(rateKeys.map(col): _*)), rateKeys, "left_semi")
-      val newRates = inOneTaskIf(small)(parsed).dropDuplicates(rateKeys)
+      val newRates = inOneTaskIf(state.frontierCount)(parsed).dropDuplicates(rateKeys)
         .join(bcastIfSmall(known), rateKeys, "left_anti")
 
       // 4. seen delta = scheduled canonical urls; the next frontier = the
@@ -484,10 +485,11 @@ object CrawlJob {
       // 5. host throttle state + per-round fetch/dedup metrics
       //    (north_rule) in ONE per-host aggregation over the prior states
       //    and the two kept frames, every count conditional: one shuffle of
-      //    (host, stage) rows, or none when the round and the host table
-      //    are both small enough for one task. A stage with no rows for a
-      //    host counts 0, never null. The three fetch outcomes are mutually
-      //    exclusive and exhaustive (!hit / hit∧is_err / hit∧¬is_err).
+      //    (host, stage) rows, or none when its input (at most twice the
+      //    frontier plus the host table) fits OneTaskRows. A stage with no
+      //    rows for a host counts 0, never null. The three fetch outcomes
+      //    are mutually exclusive and exhaustive (!hit / hit∧is_err /
+      //    hit∧¬is_err).
       //    Metrics rows are the hosts of this round's frontier; host
       //    states are the prior hosts plus the hosts that fetched.
       val outcome = when(!col("hit"), lit("fetchMissed"))
@@ -495,7 +497,7 @@ object CrawlJob {
       val gateStages = Seq("dedupDropped", "offsiteDropped", "robotsDropped", "scheduled", "deferred")
       val outcomes = Seq("fetchMissed", "errorDropped", "extractedOk")
       sc.setJobDescription(s"crawl r$round: hosts")
-      val perHost = keep(inOneTaskIf(small && state.hostStateCount <= 2000000L)(state.hostStates.toDF()
+      val perHost = keep(inOneTaskIf(2 * state.frontierCount + state.hostStateCount)(state.hostStates.toDF()
         .unionByName(tagged.select(col("host"), col("__stage")), allowMissingColumns = true)
         .unionByName(extracted.filter(tagIs("scheduled")).select(col("host"), outcome.as("__stage")),
           allowMissingColumns = true))
@@ -573,10 +575,9 @@ object CrawlJob {
       // already held. File count per round delta is bounded by the write
       // parallelism, so this is O(files) footer opens, never O(rows).
       // The (file-granular ⇒ tiny by construction) result serves double
-      // duty: it IS the lineage delta, written by this JVM with no Spark
-      // job, and its frontier rows sum to the next round's frontier count
-      // — saving a full frontier re-scan per round just to decide loop
-      // termination.
+      // duty: it IS the lineage delta, and its frontier rows sum to the
+      // next round's frontier count — saving a full frontier re-scan per
+      // round just to decide loop termination.
       val lineageRows = Seq(("frontier", frontierPath), ("seen", seenPath), ("rates", ratesPath))
         .flatMap { case (name, p) =>
           parquetFooters(spark, p)
@@ -584,7 +585,10 @@ object CrawlJob {
             .map { case (f, n, _) => (round, name, f, n) }
         }
       val lineagePath = store.dataPath("lineage", round)
-      writeLineage(spark, lineagePath, lineageRows)
+      sc.setJobDescription(s"crawl r$round: lineage")
+      spark.createDataFrame(
+        java.util.Arrays.asList(lineageRows.map(org.apache.spark.sql.Row.fromTuple): _*), LineageSchema)
+        .write.mode("overwrite").parquet(lineagePath)
 
       // periodic delta-chain compaction (Iceberg rewrite-data-files
       // analogue): every `compactEvery` rounds each append-only chain is

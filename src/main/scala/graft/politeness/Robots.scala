@@ -12,9 +12,10 @@ import graft.model.RobotsRule
   * settings.py:22).
   *
   * Rules live in a small side table `(host, pathPrefix, allow)`, collapsed
-  * once per crawl to one row per host and joined 1:1 against the frontier
-  * (north_rule: "robots.txt rules as a broadcast side table"; see
-  * [[perHost]]). RFC 9309 semantics:
+  * to one row per host and joined 1:1 against the frontier (north_rule:
+  * "robots.txt rules as a broadcast side table" — the join IS broadcast
+  * whenever the table is actually small, chosen by the planner rather
+  * than forced; see [[perHost]]). RFC 9309 semantics:
   * longest-matching rule wins, Allow wins length ties (§2.2.2 "least
   * restrictive"), `*` matches any character sequence and a trailing `$`
   * anchors at path end (§2.2.3), groups may list several User-agent lines
@@ -143,28 +144,47 @@ object Robots {
     "__rhost STRING, __rules ARRAY<STRUCT<p: STRING, a: BOOLEAN>>, " +
       "__wrules ARRAY<STRUCT<rx: STRING, len: INT, a: BOOLEAN>>")
 
-  /** The rules collapsed to ONE row per host, as a local table: the join
-    * in [[withVerdict]] is then 1:1 — the frontier is never multiplied —
-    * and broadcast. Two arrays per host: plain prefix rules (the
-    * overwhelming majority), and wildcard rules (`*`/`$`) translated to
-    * regexes here, once, so the per-row regex cost is paid ONLY on rows of
-    * hosts that actually publish wildcard rules. The rules are per-host
-    * metadata, collected to the driver once per crawl; in-memory rules
-    * collect without a Spark job. A rule with a null path or verdict is
-    * ignored.
+  /** The rules collapsed to ONE row per host, so the join in
+    * [[withVerdict]] is 1:1 and the frontier is never multiplied. Two
+    * arrays per host: plain prefix rules (the overwhelming majority), and
+    * wildcard rules (`*`/`$`) translated to regexes here, once, so the
+    * per-row regex cost is paid ONLY on rows of hosts that actually publish
+    * wildcard rules. A rule with a null path or verdict is ignored.
+    *
+    * Rules that live in driver memory already (a local table) are
+    * collapsed there, with no Spark job; any other table by a distributed
+    * aggregation, never collected: the rules grow with distinct hosts
+    * crawled — kilobytes for a focused crawl, multi-GB at 10^8 web hosts.
+    * The join is deliberately NOT hinted broadcast (same reasoning as the
+    * host-state join in Scheduler): the planner broadcasts the collapsed
+    * table whenever it is actually small, and shuffles on host otherwise.
     */
   def perHost(rules: DataFrame): DataFrame = {
-    val spark = rules.sparkSession
-    val collapsed = rules.select("host", "pathPrefix", "allow").collect().toSeq
-      .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
-      .groupBy(_.getString(0)).toSeq.sortBy(_._1).map { case (host, rs) =>
-        val (wild, plain) = rs.partition { r => val p = r.getString(1); p.contains("*") || p.contains("$") }
+    val valid = rules.select("host", "pathPrefix", "allow")
+      .filter(col("pathPrefix").isNotNull && col("allow").isNotNull)
+    def isWild(p: String): Boolean = p.contains("*") || p.contains("$")
+    if (isLocal(valid)) {
+      val collapsed = valid.collect().toSeq.groupBy(_.getString(0)).toSeq.map { case (host, rs) =>
+        val (wild, plain) = rs.partition(r => isWild(r.getString(1)))
         Row(host,
           plain.map(r => Row(r.getString(1), r.getBoolean(2))),
           wild.map(r => Row(patternToRegex(r.getString(1)), r.getString(1).length, r.getBoolean(2))))
       }
-    spark.createDataFrame(collapsed.asJava, PerHostSchema)
+      rules.sparkSession.createDataFrame(collapsed.asJava, PerHostSchema)
+    } else {
+      val wild = udf((p: String) => isWild(p)).apply(col("pathPrefix"))
+      val rx = udf((p: String) => patternToRegex(p))
+      // collect_list skips the nulls the unmatched when() branches produce
+      valid.groupBy(col("host").as("__rhost")).agg(
+        collect_list(when(!wild, struct(col("pathPrefix").as("p"), col("allow").as("a")))).as("__rules"),
+        collect_list(when(wild, struct(rx(col("pathPrefix")).as("rx"),
+          length(col("pathPrefix")).as("len"), col("allow").as("a")))).as("__wrules"))
+    }
   }
+
+  /** True when `df` is a table held in driver memory. */
+  private[graft] def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   /** `frontier` plus the boolean [[Verdict]]: true where (host, path) is
     * allowed by `perHostRules` ([[perHost]]).

@@ -64,17 +64,22 @@ object Scheduler {
     * tagged pass serves the fetch set and the next frontier alike, so no
     * second scan subtracts the one from the other.
     *
-    * Every window keeps every row, and none ranks a whole hot host: a
-    * stage's survivors share one group per host (or one group in all for
-    * the global cap), bounded by Salts × budget rows, and every other row
-    * stays in its own (host, salt) group.
+    * Only the first stage shuffles the whole frontier, and no window ranks
+    * a whole hot host: each later stage ranks only the rows the stage
+    * before left eligible (per host at most Salts × budget, or Salts ×
+    * maxGlobal for the global cap) in one group per host (or one in all),
+    * and the other rows bypass it. Both read the first stage's output, so
+    * a caller that reads the result more than once passes a `keep` that
+    * stores it (see [[graft.crawl.CrawlJob.crawlRound]]); the first stage
+    * then runs once.
     */
   def withSchedule(
       frontier: DataFrame,
       hostStates: DataFrame,
       cfg: PolitenessConfig,
       roundSec: Double,
-      eligible: Column = lit(true)): DataFrame = {
+      eligible: Column = lit(true),
+      keep: DataFrame => DataFrame = identity): DataFrame = {
     val budgetUdf = udf((delay: Double) => budgetFor(delay, roundSec, cfg))
     val states = hostStates.select(col("host").as("__shost"), col("delaySec").as("__delay"))
 
@@ -89,27 +94,29 @@ object Scheduler {
       .withColumn("__budget", budgetUdf(coalesce(col("__delay"), lit(cfg.startDelaySec))))
       .withColumn("__eligible", eligible)
       .drop("__shost", "__delay")
-    // one rank stage: rank inside (__ghost, __gsalt, __eligible) groups;
-    // a candidate stays eligible while its rank is within `bound`. The
-    // stages share one row layout (the salt is recomputed, never kept), so
-    // Spark generates their window and sort code once.
+    // one rank stage: rank inside (ghost, gsalt, __eligible) groups; a
+    // candidate stays eligible while its rank is within `bound`
     def stage(df: DataFrame, ghost: Column, gsalt: Column, bound: Column): DataFrame =
-      df.withColumn("__ghost", ghost).withColumn("__gsalt", gsalt)
-        .withColumn("__rank", row_number().over(
-          Window.partitionBy(col("__ghost"), col("__gsalt"), col("__eligible"))
-            .orderBy(col("priority").desc, col("seq"))))
+      df.withColumn("__rank", row_number().over(
+          Window.partitionBy(ghost, gsalt, col("__eligible")).orderBy(col("priority").desc, col("seq"))))
         .withColumn("__eligible", col("__eligible") && col("__rank") <= bound)
         .drop("__rank")
-    // survivors of the previous stage share one group (per host, or one in
-    // all); every other row stays in its own (host, salt) group
+    // a later stage: only the rows still eligible are ranked (and so
+    // shuffled) again; the rest keep their flag and bypass it
+    def narrow(df: DataFrame, ghost: Column, gsalt: Column, bound: Column): DataFrame =
+      stage(df.filter(col("__eligible")), ghost, gsalt, bound).unionByName(df.filter(!col("__eligible")))
+    // over a later stage's rows (all eligible) these keys are constant, so
+    // the survivors share one group per host, or one in all; they are not
+    // literals, which constant folding would strip from the window's
+    // partition spec, leaving it unpartitioned
     val salt = pmod(xxhash64(col("url")), lit(Salts.toLong))
     val shared = when(col("__eligible"), lit(-1L)).otherwise(salt)
     val ownHost = when(!col("__eligible"), col("host"))
 
     // stage 1: salted pre-prune (lossless superset of the per-host top-budget)
-    val pruned = stage(withBudget, col("host"), salt, col("__budget"))
+    val pruned = keep(stage(withBudget, col("host"), salt, col("__budget")))
     // stage 2: exact per-host budget over the pruned (small) remainder
-    val perHost = stage(pruned, col("host"), shared, col("__budget"))
+    val perHost = narrow(pruned, col("host"), shared, col("__budget"))
 
     // stages 3-4: GLOBAL concurrency cap (reference CONCURRENT_REQUESTS=50,
     // settings.py:25) — at most cfg.maxGlobal fetches per round across all
@@ -121,11 +128,10 @@ object Scheduler {
     val capped =
       if (cfg.maxGlobal == Int.MaxValue) perHost
       else {
-        val gPruned = stage(perHost, ownHost, salt, lit(cfg.maxGlobal))
-        stage(gPruned, ownHost, shared, lit(cfg.maxGlobal))
+        val gPruned = narrow(perHost, ownHost, salt, lit(cfg.maxGlobal))
+        narrow(gPruned, ownHost, shared, lit(cfg.maxGlobal))
       }
-    capped.withColumnRenamed("__eligible", Scheduled)
-      .drop("__budget", "__ghost", "__gsalt")
+    capped.withColumnRenamed("__eligible", Scheduled).drop("__budget")
   }
 
   /** AutoThrottle delay update (Scrapy's algorithm, settings.py:96-98

@@ -234,9 +234,8 @@ object Streams {
     * layout plus a `batches` table. Rows a batch cannot schedule under its
     * politeness budget — and retry rows — stay in the `frontier` table and
     * re-enter on the NEXT micro-batch, ahead of its new seeds. Defaults (no
-    * robots rules, unbounded budget) drain every batch fully. Each batch
-    * collapses the robots rules on the driver (no Spark job for in-memory
-    * rules).
+    * robots rules, unbounded budget) drain every batch fully. The robots
+    * rules are collapsed once per stream, not per batch.
     *
     * DRAIN CONTRACT: frontier rows re-enter only when a later micro-batch
     * fires, and the file source fires one only for NEW seed files — if the
@@ -265,13 +264,26 @@ object Streams {
     val raw = spark.readStream
       .schema("card_c STRING, trans_c STRING, date STRING")
       .csv(seedDir)
-    ingestSeeds(raw).writeStream
+    val rules = graft.crawl.CrawlJob.activeRules(robots)
+    val query = ingestSeeds(raw).writeStream
       .option("checkpointLocation", streamCheckpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processSeedBatch(batch.toDF(), batchId, pages, storeDir, provider, providers,
-          robots, cfg, roundSec, maxRetries)
+        seedBatchRound(batch.toDF(), batchId, pages, storeDir, provider, providers,
+          rules, cfg, roundSec, maxRetries)
       }
       .start()
+    // the collapsed rules stay cached while the stream runs
+    rules.foreach { collapsed =>
+      import org.apache.spark.sql.streaming.StreamingQueryListener
+      spark.streams.addListener(new StreamingQueryListener {
+        def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+        def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+          if (e.id == query.id) { collapsed.unpersist(); spark.streams.removeListener(this) }
+      })
+      if (!query.isActive) collapsed.unpersist()
+    }
+    query
   }
 
   /** One micro-batch = one crawl round, committed as the store's next
@@ -282,7 +294,8 @@ object Streams {
     * expanded, within-batch-deduplicated seeds. Seen rows carry the commit
     * version as their `round`.
     *
-    * @param robots the rules, None for no robots gate
+    * @param robots the rules, None for no robots gate; collapsed for this
+    *               batch alone (a stream collapses them once)
     */
   private[graft] def processSeedBatch(
       batch: DataFrame,
@@ -296,6 +309,25 @@ object Streams {
         maxGlobal = Int.MaxValue, maxPerHost = Int.MaxValue),
       roundSec: Double = 1e9,
       maxRetries: Int = 2): Unit = {
+    val rules = graft.crawl.CrawlJob.activeRules(robots)
+    try seedBatchRound(batch, batchId, pages, storeDir, provider, providers, rules, cfg, roundSec, maxRetries)
+    finally rules.foreach(_.unpersist())
+  }
+
+  /** [[processSeedBatch]] over rules already collapsed by
+    * [[graft.crawl.CrawlJob.activeRules]].
+    */
+  private def seedBatchRound(
+      batch: DataFrame,
+      batchId: Long,
+      pages: DataFrame,
+      storeDir: String,
+      provider: String,
+      providers: Seq[graft.provider.Provider],
+      rules: Option[DataFrame],
+      cfg: graft.model.PolitenessConfig,
+      roundSec: Double,
+      maxRetries: Int): Unit = {
     import graft.crawl.CrawlJob
     val spark = batch.sparkSession
     val manifest = new graft.checkpoint.SnapshotStore(storeDir).readCurrent().map(_._2)
@@ -321,7 +353,7 @@ object Streams {
           .map(prior => prior.unionByName(seeds.join(prior.select("canonUrl"), Seq("canonUrl"), "left_anti")))
           .getOrElse(seeds)
       }
-      CrawlJob.crawlRound(spark, storeDir, state, pages, CrawlJob.activeRules(robots), cfg, roundSec, maxRetries,
+      CrawlJob.crawlRound(spark, storeDir, state, pages, rules, cfg, roundSec, maxRetries,
         providers = providers,
         extraTables = Map("batches" -> (doneBatches + batchId).toSeq.sorted.mkString(";")))
     }

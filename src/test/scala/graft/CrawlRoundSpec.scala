@@ -268,6 +268,12 @@ class CrawlRoundSpec extends SparkSpec {
     val got = rowsOf(Robots.allowed(frontier, rules))
     assert(got === rowsOf(arrayAllowed(frontier, rules)))
     assert(got.size > 3 && got.size < urls.size)
+    // rules outside driver memory take the distributed collapse
+    val onDisk = tmp("rules")
+    rules.write.mode("overwrite").parquet(onDisk)
+    val fileRules = spark.read.parquet(onDisk)
+    assert(!Robots.isLocal(fileRules) && Robots.isLocal(rules))
+    assert(rowsOf(Robots.allowed(frontier, fileRules)) === got)
   }
 
   test("the Bloom merge writes the filters a typed per-partition build writes") {
