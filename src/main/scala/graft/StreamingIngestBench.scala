@@ -107,9 +107,7 @@ object StreamingIngestBench {
       }
       val streamWall = (System.nanoTime() - t0) / 1e9
       q.stop()
-      val snap = new graft.checkpoint.SnapshotStore(store).readCurrent()
-      val corpusPaths = snap.get._2("corpus").split(";").filter(_.nonEmpty).toIndexedSeq
-      val stored = spark.read.parquet(corpusPaths: _*).count()
+      val stored = spark.read.parquet(new graft.checkpoint.SnapshotStore(store).log().chain("corpus"): _*).count()
       // ---- batch leg: the closest batch equivalent over the same corpus
       val tb = System.nanoTime()
       graft.pipeline.Corpus.clean(all)

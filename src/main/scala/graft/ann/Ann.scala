@@ -244,17 +244,13 @@ object Ann {
       table: String = "ivf_centroids"): Int = {
     import spark.implicits._
     require(centroids.nonEmpty, "cannot persist an empty IVF model")
-    val v = store.currentVersion().getOrElse(0) + 1
-    val path = store.dataPath(table, v)
+    val log = store.log()
+    val path = store.dataPath(table, log.next)
     centroids.zipWithIndex.toSeq.map { case (c, l) => (l, c.toSeq) }.toDF("l", "cvec")
       .coalesce(1) // model-sized by construction — one file, not 32 shards
       .write.mode("overwrite").parquet(path)
-    // carry the prior snapshot's other tables forward: the model commits
-    // ATOMICALLY beside them, same multi-table snapshot semantics as the
-    // crawl round commit
-    val prior = store.readCurrent().map(_._2).getOrElse(Map.empty)
-    store.commit(v, prior + (table -> path))
-    v
+    // the model commits ATOMICALLY beside the store's other tables
+    log.commit(paths = Map(table -> path)).version
   }
 
   /** Load the persisted IVF model from the store's CURRENT snapshot.

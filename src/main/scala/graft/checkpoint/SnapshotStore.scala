@@ -3,6 +3,8 @@ package graft.checkpoint
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+
 /** Iceberg-style snapshot/manifest checkpointing (SURVEY.md §4 exactly-once
   * row, §7.1).
   *
@@ -21,6 +23,12 @@ import scala.jdk.CollectionConverters._
   * CURRENT and sees only fully-committed state (kill-and-resume ≡
   * uninterrupted run, tested in CheckpointSpec).
   *
+  * A manifest maps each table to one string. [[TableLog]] is the one owner
+  * of what that string holds: a single path, a delta chain or an
+  * idempotency key set, the last two ';'-joined — so the root may not
+  * contain ';'. Every committer (crawl rounds, stream batches, the per-file
+  * rates ingest, the IVF model) reads and commits through [[log]].
+  *
   * Iceberg mapping: manifest ≈ snapshot metadata JSON; CURRENT ≈ the
   * catalog's table-pointer swap; data/<table>/v<N> ≈ a snapshot's manifest
   * list. On a real cluster this directory lives on an object store /
@@ -28,12 +36,34 @@ import scala.jdk.CollectionConverters._
   */
 final class SnapshotStore(rootDir: String) {
 
+  require(!rootDir.contains(TableLog.Sep),
+    s"a snapshot store root may not contain '${TableLog.Sep}', the manifest's chain separator: $rootDir")
+
   private val root = Paths.get(rootDir)
+  private val data = root.resolve("data")
   private val manifests = root.resolve("manifests")
   Files.createDirectories(manifests)
 
   def dataPath(table: String, version: Int): String =
-    root.resolve("data").resolve(table).resolve(s"v$version").toString
+    data.resolve(table).resolve(s"v$version").toString
+
+  /** The version `path` was written for, when it is a [[dataPath]] of
+    * `table` or of its compaction; None for any other path.
+    */
+  private[checkpoint] def versionOf(table: String, path: String): Option[Int] = {
+    val p = Paths.get(path)
+    val owned = Option(p.getParent).exists(d => d == data.resolve(table) || d == data.resolve(s"$table-compacted"))
+    p.getFileName.toString match {
+      case s"v$n" if owned => n.toIntOption
+      case _ => None
+    }
+  }
+
+  /** The current snapshot as a [[TableLog]]: version 0 with no tables when
+    * nothing is committed yet.
+    */
+  def log(): TableLog =
+    readCurrent().fold(new TableLog(this, 0, Map.empty)) { case (v, tables) => new TableLog(this, v, tables) }
 
   /** Atomically commit a snapshot naming each table's data path. */
   def commit(version: Int, tables: Map[String, String]): Unit = {
@@ -116,4 +146,85 @@ final class SnapshotStore(rootDir: String) {
       }
       b.toString
     }
+}
+
+/** One committed snapshot of a [[SnapshotStore]], read and extended as a
+  * table log. A manifest value is one of:
+  *   - a whole table: one path (`frontier`, `hostStates`, a model);
+  *   - a delta chain: an append-only table's paths, oldest first;
+  *   - an idempotency key set: the keys of the work already committed
+  *     (a stream's batch ids, the ingested CSV file names).
+  * Chains and key sets are ';'-joined. This class is the only reader and
+  * writer of that format.
+  *
+  * A committer reads the current log, writes its data under
+  * `store.dataPath(table, next)` and [[commit]]s: the new snapshot is this
+  * one with the committer's entries replaced, so the tables it does not own
+  * (a crawl's chains under a rates ingest, an IVF model under a crawl) are
+  * carried forward.
+  *
+  * Compaction rule: the commit at a version that is a multiple of `every`
+  * rewrites each chain it [[compact]]s as ONE fileset
+  * (`data/<table>-compacted/v<version>`, the Iceberg rewrite-data-files
+  * analogue), so a long-lived store never re-lists thousands of delta
+  * paths. It is amortised O(total/every) per commit; old files stay on disk
+  * (prior snapshots stay readable), and a crash before the commit leaves the
+  * previous manifest pointing at the uncompacted chain.
+  */
+final class TableLog private[checkpoint] (
+    val store: SnapshotStore, val version: Int, val tables: Map[String, String]) {
+  import TableLog.Sep
+
+  /** The version the next [[commit]] takes. */
+  def next: Int = version + 1
+
+  /** The path of a whole table. */
+  def path(table: String): Option[String] = tables.get(table)
+
+  /** A delta chain's paths, oldest first; empty for an absent table. */
+  def chain(table: String): Seq[String] =
+    tables.get(table).fold(Seq.empty[String])(_.split(Sep).toIndexedSeq.filter(_.nonEmpty))
+
+  /** Whether the key set `set` holds `key`: a committer that finds its key
+    * has committed this work already and skips it.
+    */
+  def has(set: String, key: String): Boolean = chain(set).contains(key)
+
+  /** The version that last changed the chain `table`, read from the path
+    * layout the store writes; None when the chain is empty or its last path
+    * is not one of the store's own (a hand-committed path).
+    */
+  def chainVersion(table: String): Option[Int] = chain(table).lastOption.flatMap(store.versionOf(table, _))
+
+  /** The chain `paths` of `table` as the commit at [[next]] stores it: one
+    * compacted path when `every > 0`, [[next]] is a multiple of `every` and
+    * the chain has more than one path; otherwise `paths` unchanged. `read`
+    * gives the rows of a chain to rewrite.
+    */
+  def compact(table: String, paths: Seq[String], every: Int)(read: Seq[String] => DataFrame): Seq[String] =
+    if (every <= 0 || next % every != 0 || paths.size <= 1) paths
+    else {
+      val p = store.dataPath(s"$table-compacted", next)
+      read(paths).write.mode("overwrite").parquet(p)
+      Seq(p)
+    }
+
+  /** Atomically commit [[next]]: every table of this snapshot, with
+    * `paths` (whole tables) and `chains` replaced and each `keys` entry
+    * (set → key) added to its key set. Returns the committed log.
+    */
+  def commit(
+      paths: Map[String, String] = Map.empty,
+      chains: Map[String, Seq[String]] = Map.empty,
+      keys: Map[String, String] = Map.empty): TableLog = {
+    val added = keys.map { case (set, key) => set -> (chain(set) :+ key).distinct }
+    val committed = tables ++ paths ++ (chains ++ added).map { case (t, ps) => t -> ps.mkString(Sep) }
+    store.commit(next, committed)
+    new TableLog(store, next, committed)
+  }
+}
+
+object TableLog {
+  /** The separator of a chain's paths and a key set's keys. */
+  val Sep = ";"
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.checkpoint.SnapshotStore
+import graft.checkpoint.{SnapshotStore, TableLog}
 import graft.dedup.UrlSeen
 import graft.model.{HostState, PolitenessConfig}
 import graft.politeness.{Robots, Scheduler}
@@ -167,7 +167,7 @@ object CrawlJob {
         rules.foreach(_.unpersist())
       }
       (read(spark, RatesSchema, state.ratesPaths), read(spark, SeenSchema, state.seenPaths),
-        read(spark, MetricsSchema, state.metricsPaths))
+        read(spark, MetricsSchema, state.log.chain("metrics")))
     }
 
   /** Run `body`, then give the thread back the job description it had:
@@ -200,26 +200,27 @@ object CrawlJob {
 
   /** A crawl's committed state, as one round consumes and produces it.
     * frontier + hostStates are full snapshots (they shrink / stay tiny);
-    * seen / rates / metrics / lineage are APPEND-ONLY and stored as
-    * per-round delta files — the manifest carries the ';'-joined delta path
-    * list, so each round writes O(round delta), not O(total state). At
-    * 10^10 URLs a full seen-set rewrite per round would dominate everything.
+    * seen / rates / metrics / lineage are APPEND-ONLY delta chains of the
+    * snapshot's [[TableLog]], so each round writes O(round delta), not
+    * O(total state). At 10^10 URLs a full seen-set rewrite per round would
+    * dominate everything.
     *
-    * @param round         the last committed round (0 before the first)
+    * @param log           the committed snapshot; its version is the last
+    *                      committed round (0 before the first)
     * @param frontierCount rows of `frontier`; it bounds the distinct keys
     *                      the next round adds to the seen set
     * @param hostStateCount rows of `hostStates`
     */
   private[graft] final case class CrawlState(
-      round: Int,
+      log: TableLog,
       frontier: DataFrame,
       frontierCount: Long,
       hostStates: Dataset[HostState],
-      hostStateCount: Long,
-      seenPaths: Seq[String],
-      ratesPaths: Seq[String],
-      metricsPaths: Seq[String],
-      lineagePaths: Seq[String])
+      hostStateCount: Long) {
+    def round: Int = log.version
+    def seenPaths: Seq[String] = log.chain("seen")
+    def ratesPaths: Seq[String] = log.chain("rates")
+  }
 
   private def read(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame =
     if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -241,22 +242,22 @@ object CrawlJob {
   private[graft] def loadState(spark: SparkSession, checkpointDir: String, bloomParts: Int)(
       frontierOf: Option[DataFrame] => DataFrame): CrawlState = {
     import spark.implicits._
-    val resume = new SnapshotStore(checkpointDir).readCurrent()
-    val round = resume.map(_._1).getOrElse(0)
-    val manifest = resume.map(_._2).getOrElse(Map.empty[String, String])
+    val log = new SnapshotStore(checkpointDir).log()
+    val round = log.version
     spark.sparkContext.setJobDescription(s"crawl r$round: load")
-    def chain(key: String): Seq[String] =
-      manifest.get(key).map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val seenPaths = chain("seen")
+    val seenPaths = log.chain("seen")
 
     // reconcile the partitioned-Bloom sidecar state with the committed
     // snapshot: the filters are merged BEFORE each manifest commit, so
-    // marker ≥ committed round ⇒ filters ⊇ seen (extra keys are harmless —
-    // the exact anti-join confirms). A marker BEHIND the committed round
-    // (legacy checkpoint layout, manual surgery, a foreign commit) breaks
-    // that superset invariant, so rebuild once from the committed seen set.
+    // marker ≥ the round that last changed seen ⇒ filters ⊇ seen (extra
+    // keys are harmless — the exact anti-join confirms). A marker BEHIND it
+    // (legacy checkpoint layout, manual surgery) breaks that superset
+    // invariant, so rebuild once from the committed seen set. A foreign
+    // commit (a rates ingest, an IVF model) moves the version but not seen;
+    // a seen chain whose version its paths do not tell is compared with the
+    // committed round.
     val bloomDir = s"$checkpointDir/blooms"
-    if (round > 0 && UrlSeen.readBloomRound(bloomDir).forall(_ < round)) {
+    if (round > 0 && UrlSeen.readBloomRound(bloomDir).forall(_ < log.chainVersion("seen").getOrElse(round))) {
       if (seenPaths.nonEmpty) {
         // rebuild from DISTINCT keys: retry rows re-append the same urlHash
         // each round, so raw row counts would inflate the saturation sidecars
@@ -270,8 +271,8 @@ object CrawlJob {
       UrlSeen.writeBloomRound(bloomDir, round)
     }
 
-    val footers = manifest.get("frontier").map(parquetFooters(spark, _)).getOrElse(Nil)
-    val committed = manifest.get("frontier")
+    val footers = log.path("frontier").map(parquetFooters(spark, _)).getOrElse(Nil)
+    val committed = log.path("frontier")
       .map(footers.flatMap(_._3).headOption.fold(spark.read)(spark.read.schema).parquet(_))
     val frontier = frontierOf(committed)
     val frontierCount =
@@ -280,12 +281,11 @@ object CrawlJob {
         frontier.cache()
         try frontier.count() catch { case e: Throwable => frontier.unpersist(); throw e }
       }
-    val hostStates = manifest.get("hostStates")
+    val hostStates = log.path("hostStates")
       .map(p => read(spark, HostStateSchema, Seq(p)).as[HostState])
       .getOrElse(spark.emptyDataset[HostState])
-    val hostStateCount = manifest.get("hostStates").map(parquetFooters(spark, _).map(_._2).sum).getOrElse(0L)
-    CrawlState(round, frontier, frontierCount, hostStates, hostStateCount,
-      seenPaths, chain("rates"), chain("metrics"), chain("lineage"))
+    val hostStateCount = log.path("hostStates").map(parquetFooters(spark, _).map(_._2).sum).getOrElse(0L)
+    CrawlState(log, frontier, frontierCount, hostStates, hostStateCount)
   }
 
   /** One crawl round over `state`, committed as round `state.round + 1`:
@@ -294,8 +294,8 @@ object CrawlJob {
     *   extract → rates upsert → host states + metrics → concurrent commit
     *   → lineage → compaction → reload
     *
-    * `extraTables` are merged into the same atomic manifest commit (the
-    * stream records its batch ids there). Returns the committed state, read
+    * `keys` (key set → key) are added in the same atomic commit (the stream
+    * records its batch id there). Returns the committed state, read
     * back from the snapshot. The round's caches, and the consumed frontier's,
     * are released on return and on a throw alike.
     *
@@ -316,9 +316,9 @@ object CrawlJob {
       compactEvery: Int = DefaultCompactEvery,
       insertBatchRows: Option[Int] = None,
       providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry,
-      extraTables: Map[String, String] = Map.empty): CrawlState = {
+      keys: Map[String, String] = Map.empty): CrawlState = {
     import spark.implicits._
-    val store = new SnapshotStore(checkpointDir)
+    val log = state.log
     val bloomDir = s"$checkpointDir/blooms"
     val sc = spark.sparkContext
     // A job submitted from a pool thread. The description is thread-local,
@@ -520,7 +520,7 @@ object CrawlJob {
       //    not six (Spark's scheduler interleaves the jobs across the
       //    executor pool).
       def persist(name: String, df: DataFrame): Future[String] = submit(s"crawl r$round: write $name") {
-        val p = store.dataPath(name, round)
+        val p = log.store.dataPath(name, round)
         // reference-parity insert batching (§2#23, pipelines.py's 100-row
         // executemany chunks): when enabled, each committed RATES file
         // holds at most `insertBatchRows` rows — the storage-layer twin of
@@ -584,63 +584,39 @@ object CrawlJob {
             .filter(_._2 > 0) // 0-row part files never appeared under input_file_name either
             .map { case (f, n, _) => (round, name, f, n) }
         }
-      val lineagePath = store.dataPath("lineage", round)
+      val lineagePath = log.store.dataPath("lineage", round)
       sc.setJobDescription(s"crawl r$round: lineage")
       spark.createDataFrame(
         java.util.Arrays.asList(lineageRows.map(org.apache.spark.sql.Row.fromTuple): _*), LineageSchema)
         .write.mode("overwrite").parquet(lineagePath)
 
-      // periodic delta-chain compaction (Iceberg rewrite-data-files
-      // analogue): every `compactEvery` rounds each append-only chain is
-      // rewritten as ONE fileset and the manifest shortened — otherwise a
-      // long crawl re-lists/reopens thousands of delta paths per round.
-      // Amortized O(total/compactEvery) per round; old files stay on disk
-      // (prior snapshots remain readable), and a crash before the commit
-      // just leaves the previous manifest pointing at the uncompacted chain.
-      // Per-round provenance is preserved because every append-only row
-      // carries its `round` as data. The four chains are independent and
-      // are rewritten concurrently, like the data writes above.
-      val chains = Seq(
-        ("seen", SeenSchema, state.seenPaths :+ seenPath),
-        ("rates", RatesSchema, state.ratesPaths :+ ratesPath),
-        ("metrics", MetricsSchema, state.metricsPaths :+ metricsPath),
-        ("lineage", LineageSchema, state.lineagePaths :+ lineagePath))
-      def compact(name: String, schema: StructType, paths: Seq[String]): Future[Seq[String]] =
-        if (paths.size <= 1) Future.successful(paths)
-        else submit(s"crawl r$round: compact $name") {
-          val p = store.dataPath(s"$name-compacted", round)
-          read(spark, schema, paths).write.mode("overwrite").parquet(p)
-          Seq(p)
+      // delta-chain compaction by the table log's rule, every
+      // `compactEvery` rounds. Per-round provenance is preserved because
+      // every append-only row carries its `round` as data. The four chains
+      // are independent and are rewritten concurrently, like the data
+      // writes above.
+      val deltas = Seq(
+        ("seen", SeenSchema, seenPath),
+        ("rates", RatesSchema, ratesPath),
+        ("metrics", MetricsSchema, metricsPath),
+        ("lineage", LineageSchema, lineagePath))
+      val chains = Await.result(Future.sequence(deltas.map { case (name, schema, delta) =>
+        submit(s"crawl r$round: compact $name") {
+          name -> log.compact(name, log.chain(name) :+ delta, compactEvery)(read(spark, schema, _))
         }
-      val Seq(seenPaths, ratesPaths, metricsPaths, lineagePaths) =
-        if (compactEvery > 0 && round % compactEvery == 0)
-          Await.result(Future.sequence(chains.map((compact _).tupled)), Duration.Inf)
-        else chains.map(_._3)
-
-      // carry foreign tables (e.g. a persisted IVF model,
-      // Ann.saveCentroids) forward from the previous snapshot: committers
-      // share one store, and a commit that rebuilt the manifest from
-      // scratch would silently DROP every table it doesn't own from the
-      // current snapshot
-      val priorTables = store.readCurrent().map(_._2).getOrElse(Map.empty)
-      store.commit(round, priorTables ++ Map(
-        "frontier" -> frontierPath,
-        "hostStates" -> hostStatesPath,
-        "seen" -> seenPaths.mkString(";"),
-        "rates" -> ratesPaths.mkString(";"),
-        "metrics" -> metricsPaths.mkString(";"),
-        "lineage" -> lineagePaths.mkString(";")) ++ extraTables)
+      }), Duration.Inf)
+      val committed = log.commit(
+        paths = Map("frontier" -> frontierPath, "hostStates" -> hostStatesPath), chains = chains.toMap, keys = keys)
 
       // reload from the committed snapshot: truncates lineage so plans don't
       // grow unboundedly across rounds (the iterative-algorithm idiom). The
       // frontier is read with the schema it was just written with.
       CrawlState(
-        round,
+        committed,
         spark.read.schema(frontier1.schema).parquet(frontierPath),
         lineageRows.filter(_._2 == "frontier").map(_._4).sum,
         read(spark, HostStateSchema, Seq(hostStatesPath)).as[HostState],
-        parquetFooters(spark, hostStatesPath).map(_._2).sum,
-        seenPaths, ratesPaths, metricsPaths, lineagePaths)
+        parquetFooters(spark, hostStatesPath).map(_._2).sum)
     } finally {
       state.frontier.unpersist()
       kept.foreach(_.unpersist())

@@ -292,26 +292,16 @@ object Frontier {
         .filter(_.getFileName.toString.endsWith(".csv"))
         .toSeq.sortBy(_.getFileName.toString)
     }
-    val resume = store.readCurrent()
-    var version = resume.map(_._1).getOrElse(0)
-    // every commit carries the other tables of the store forward (a crawl
-    // or an IVF model may share it) and replaces only its own two keys
-    var tables = resume.map(_._2).getOrElse(Map.empty[String, String])
-    var ratesPaths = tables.get("rates")
-      .map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    var done = tables.get("ingestedFiles")
-      .map(_.split(";").filter(_.nonEmpty).toSet).getOrElse(Set.empty[String])
-    files.filterNot(f => done(f.getFileName.toString)).foreach { f =>
-      version += 1
-      val p = store.dataPath("rates", version)
-      ratesFromCsv(spark, f.toString, providerId).write.mode("overwrite").parquet(p)
-      ratesPaths = ratesPaths :+ p
-      done = done + f.getFileName.toString
-      tables = tables ++ Map(
-        "rates" -> ratesPaths.mkString(";"),
-        "ingestedFiles" -> done.toSeq.sorted.mkString(";"))
-      store.commit(version, tables)
+    val log = files.foldLeft(store.log()) { (log, f) =>
+      val name = f.getFileName.toString
+      if (log.has("ingestedFiles", name)) log
+      else {
+        val p = store.dataPath("rates", log.next)
+        ratesFromCsv(spark, f.toString, providerId).write.mode("overwrite").parquet(p)
+        log.commit(chains = Map("rates" -> (log.chain("rates") :+ p)), keys = Map("ingestedFiles" -> name))
+      }
     }
+    val ratesPaths = log.chain("rates")
     if (ratesPaths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(

@@ -148,56 +148,36 @@ object Streams {
     * killer.) Deltas written before the column existed pay a one-time
     * re-hash per batch until compacted; the per-file dispatch below keeps
     * the fast path for every post-migration delta.
+    *
+    * The corpus chain compacts by the [[graft.checkpoint.TableLog]] rule,
+    * at every commit whose version is a multiple of `compactEvery`, and the
+    * compaction is the LEGACY MIGRATION point: it rewrites each delta
+    * through the same per-file read, so pre-sidecar rows gain `__h` there.
     */
   private[graft] def processDocBatch(
       batch: DataFrame, batchId: Long, storeDir: String,
       compactEvery: Int = 64): Unit = {
     val spark = batch.sparkSession
-    val store = new graft.checkpoint.SnapshotStore(storeDir)
-    val resume = store.readCurrent()
-    val doneBatches = resume.flatMap(_._2.get("batches"))
-      .map(_.split(";").filter(_.nonEmpty).map(_.toLong).toSet).getOrElse(Set.empty[Long])
-    if (doneBatches.contains(batchId)) return // replayed after crash
-    val corpusPaths = resume.flatMap(_._2.get("corpus"))
-      .map(_.split(";").toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)
+    val log = new graft.checkpoint.SnapshotStore(storeDir).log()
+    if (log.has("batches", batchId.toString)) return // replayed after crash
+    val contentId = md5(col("text").cast("binary"))
+    // a delta with its content identity: the stored `__h` when it has one
+    // (a pruned scan), else the legacy delta's text re-hashed
+    def identified(path: String): DataFrame = {
+      val delta = spark.read.parquet(path)
+      if (delta.columns.contains("__h")) delta else delta.withColumn("__h", contentId)
+    }
     // dedup vs HISTORY on the md5 content identity — slim (hash-only) build
     // side; the in-flight window was already deduped by cleanDocs
-    val hashed = batch.withColumn("__h", md5(col("text").cast("binary")))
+    val hashed = batch.withColumn("__h", contentId)
+    val history = log.chain("corpus")
     val fresh =
-      if (corpusPaths.isEmpty) hashed
-      else hashed.join(
-        corpusPaths.map { p =>
-          val delta = spark.read.parquet(p)
-          if (delta.columns.contains("__h")) delta.select("__h") // pruned scan
-          else delta.select(md5(col("text").cast("binary")).as("__h")) // legacy delta
-        }.reduce(_ unionAll _).distinct(),
-        Seq("__h"), "left_anti")
-    val version = resume.map(_._1).getOrElse(0) + 1
-    val path = store.dataPath("corpus", version)
+      if (history.isEmpty) hashed
+      else hashed.join(history.map(identified(_).select("__h")).reduce(_ unionAll _).distinct(), Seq("__h"), "left_anti")
+    val path = log.store.dataPath("corpus", log.next)
     fresh.write.mode("overwrite").parquet(path)
-    var allPaths = corpusPaths :+ path
-    // periodic delta-chain compaction — the CrawlJob pattern (Iceberg
-    // rewrite-data-files analogue): once the manifest carries compactEvery
-    // delta paths, rewrite the chain as ONE fileset — a long-lived stream
-    // would otherwise re-list/reopen thousands of delta files per batch
-    // (and union as many per-file scans into the anti-join plan).
-    // Amortized O(total/compactEvery) per batch; old files stay on disk
-    // (prior snapshots remain readable); a crash before the commit leaves
-    // the previous manifest pointing at the uncompacted chain. Doubles as
-    // the LEGACY MIGRATION point: pre-sidecar deltas gain the __h column
-    // here, after which every history read takes the pruned fast path.
-    if (compactEvery > 0 && allPaths.size >= compactEvery) {
-      val p = store.dataPath("corpus-compacted", version)
-      allPaths.map { q =>
-        val d = spark.read.parquet(q)
-        if (d.columns.contains("__h")) d
-        else d.withColumn("__h", md5(col("text").cast("binary")))
-      }.reduce(_ unionByName _).write.mode("overwrite").parquet(p)
-      allPaths = Seq(p)
-    }
-    store.commit(version, resume.map(_._2).getOrElse(Map.empty) ++ Map(
-      "corpus" -> allPaths.mkString(";"),
-      "batches" -> (doneBatches + batchId).toSeq.sorted.mkString(";")))
+    val corpus = log.compact("corpus", history :+ path, compactEvery)(_.map(identified).reduce(_ unionByName _))
+    log.commit(chains = Map("corpus" -> corpus), keys = Map("batches" -> batchId.toString))
   }
 
   /** Watermarked tumbling-window fetch metrics: events(ts, host, fetched,
@@ -231,7 +211,7 @@ object Streams {
     * gate, salted per-host politeness schedule (AIMD host delays carried in
     * the store across batches), retry on fetch miss, per-host metrics,
     * lineage and delta-chain compaction, so the store has the batch crawl's
-    * layout plus a `batches` table. Rows a batch cannot schedule under its
+    * layout plus a `batches` key set. Rows a batch cannot schedule under its
     * politeness budget — and retry rows — stay in the `frontier` table and
     * re-enter on the NEXT micro-batch, ahead of its new seeds. Defaults (no
     * robots rules, unbounded budget) drain every batch fully. The robots
@@ -330,11 +310,8 @@ object Streams {
       maxRetries: Int): Unit = {
     import graft.crawl.CrawlJob
     val spark = batch.sparkSession
-    val manifest = new graft.checkpoint.SnapshotStore(storeDir).readCurrent().map(_._2)
-      .getOrElse(Map.empty[String, String])
-    val doneBatches = manifest.get("batches")
-      .map(_.split(";").filter(_.nonEmpty).map(_.toLong).toSet).getOrElse(Set.empty[Long])
-    if (doneBatches.contains(batchId)) return // replayed after crash — already committed
+    val log = new graft.checkpoint.SnapshotStore(storeDir).log()
+    if (log.has("batches", batchId.toString)) return // replayed after crash — already committed
 
     // seq is a scheduling-order key; a stream batch has no file order, so
     // key deterministically on the seed itself (set semantics are what the
@@ -349,13 +326,13 @@ object Streams {
         // must not shadow that row (which may carry retry state). Stores
         // written before the stream ran the shared round kept that
         // frontier under `backlog`.
-        committed.orElse(manifest.get("backlog").map(spark.read.parquet(_)))
+        committed.orElse(log.path("backlog").map(spark.read.parquet(_)))
           .map(prior => prior.unionByName(seeds.join(prior.select("canonUrl"), Seq("canonUrl"), "left_anti")))
           .getOrElse(seeds)
       }
       CrawlJob.crawlRound(spark, storeDir, state, pages, rules, cfg, roundSec, maxRetries,
         providers = providers,
-        extraTables = Map("batches" -> (doneBatches + batchId).toSeq.sorted.mkString(";")))
+        keys = Map("batches" -> batchId.toString))
     }
   }
 

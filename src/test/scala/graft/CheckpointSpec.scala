@@ -60,6 +60,53 @@ class CheckpointSpec extends SparkSpec {
     assert(store.readCurrent() === Some((1, Map("rates" -> "/data/new"))))
   }
 
+  test("SnapshotStore rejects a root containing the chain separator") {
+    val e = intercept[IllegalArgumentException](new SnapshotStore("/tmp/a;b"))
+    assert(e.getMessage.contains("';'"))
+  }
+
+  test("TableLog: chains, key sets, the compaction rule and carry-forward over one manifest") {
+    val dir = Files.createTempDirectory("tablelog").toString
+    val store = new SnapshotStore(dir)
+    // a manifest in the format every earlier store wrote: ';'-joined chains
+    // and a `batches` list, hand-committed
+    store.commit(3, Map("seen" -> "/data/s1;/data/s2", "batches" -> "0;1", "model" -> "/m/v1"))
+    val log = store.log()
+    assert(log.version === 3 && log.next === 4)
+    assert(log.chain("seen") === Seq("/data/s1", "/data/s2"))
+    assert(log.chain("absent") === Nil)
+    assert(log.has("batches", "1") && !log.has("batches", "2"))
+    assert(log.chainVersion("seen") === None, "hand-committed paths tell no version")
+
+    // append + key add; the foreign `model` table is carried forward
+    val s3 = store.dataPath("seen", log.next)
+    val v4 = log.commit(chains = Map("seen" -> (log.chain("seen") :+ s3)), keys = Map("batches" -> "2"))
+    assert(store.readCurrent() === Some((4, Map(
+      "seen" -> s"/data/s1;/data/s2;$s3", "batches" -> "0;1;2", "model" -> "/m/v1"))))
+    assert(v4.chainVersion("seen") === Some(4))
+    // adding a key the set holds leaves the set as it was
+    assert(v4.commit(keys = Map("batches" -> "1")).chain("batches") === Seq("0", "1", "2"))
+
+    // compaction: only at a version that is a multiple of `every`, and only
+    // a chain of more than one path
+    def write(v: Int, n: Int): String = {
+      val p = store.dataPath("t", v)
+      Seq(n).toDF("n").write.parquet(p)
+      p
+    }
+    val chain = Seq(write(1, 1), write(2, 2))
+    val read = (ps: Seq[String]) => spark.read.parquet(ps: _*)
+    val at5 = store.log()
+    assert(at5.next === 6)
+    assert(at5.compact("t", chain, 4)(read) === chain, "6 is off the boundary")
+    assert(at5.compact("t", chain, 0)(read) === chain, "every = 0 never compacts")
+    assert(at5.compact("t", chain.take(1), 3)(read) === chain.take(1))
+    val compacted = at5.compact("t", chain, 3)(read)
+    assert(compacted === Seq(store.dataPath("t-compacted", 6)))
+    assert(spark.read.parquet(compacted: _*).as[Int].collect().sorted.toSeq === Seq(1, 2))
+    assert(at5.commit(chains = Map("t" -> compacted)).chainVersion("t") === Some(6))
+  }
+
   private def smallCrawlInputs() = {
     val currs = Frontier.currencyDim(spark, Seq("GBP", "USD", "EUR", "JPY"))
     val seeds = Frontier.candidates(currs, java.time.LocalDate.of(1995, 9, 10), 4)

@@ -242,7 +242,16 @@ class FrontierSpec extends SparkSpec {
 
     // the crawl resumes where it stopped: the same seen set as a crawl
     // alone, plus the ingested row among the rates
+    val jobLog = graft.util.Sessions.jobLog(spark)
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    val lastJob = jobLog.jobs.lastOption.fold(-1)(_.id)
+    val version = store.currentVersion().get
     val (rates, seen, _) = CrawlJob.run(spark, frontier, pages, robots, ckpt, cfg, roundSec = 1.0)
+    // the ingest left `seen` alone, so the Bloom filters still cover it:
+    // the resume rebuilds nothing, and its loader submits no job
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    val loads = jobLog.jobs.filter(j => j.id > lastJob && j.description == s"crawl r$version: load")
+    assert(loads.isEmpty, loads.mkString("\n"))
     assert(seen.select("url").as[String].collect().sorted === seenAlone.select("url").as[String].collect().sorted)
     assert(rates.count() === ratesAlone.count() + 1)
   }
