@@ -78,6 +78,8 @@ object LinkGraph {
     *   - absolute `http(s)://…`        → as-is
     *   - protocol-relative `//host/…`  → base scheme + href
     *   - root-relative `/path`         → scheme://host + href
+    *   - query-only `?q`               → scheme://host + base-path + href
+    *     (RFC 3986 §5.3: the base's full path, only its query replaced)
     *   - relative `path`               → scheme://host + base-dir + href
     *   - non-fetchable schemes (mailto:, javascript:, data:, tel:, ftp:,
     *     file:, about:), fragment-only refs and empty hrefs → NULL
@@ -86,22 +88,25 @@ object LinkGraph {
     * it; `Urls.canonicalize` downstream would drop it anyway). Dot-segment
     * normalization (`..`/`.`) is NOT performed here — the canonicalizer
     * owns URL normalization; resolution owns only base composition.
-    * Base-dir = base path through its last '/', query/fragment excluded;
-    * a base with no path resolves relatives against '/'.
+    * Base-path = the base's path, query/fragment excluded; base-dir = the
+    * base path through its last '/'. A base with no path resolves
+    * relatives and query-only refs against '/'.
     */
   def resolveHref(base: Column, href: Column): Column = {
     val h = trim(href)
     val scheme = regexp_extract(base, "^(https?)://", 1)
     val host = regexp_extract(base, "^https?://([^/?#]+)", 1)
+    val basePath = regexp_extract(base, "^https?://[^/?#]+([^?#]*)", 1)
     // path through the last '/' ('' when the base has no path slash)
-    val baseDir = regexp_extract(
-      regexp_extract(base, "^https?://[^/?#]+([^?#]*)", 1), "^(.*/)", 1)
+    val baseDir = regexp_extract(basePath, "^(.*/)", 1)
     val resolved =
       when(h === "" || h.startsWith("#") || h.rlike(NonFetchable), lit(null))
         .when(h.rlike("(?i)^https?://"), h)
         .when(h.rlike("(?i)^[a-z][a-z0-9+.-]*:"), lit(null)) // other absolute schemes
         .when(h.startsWith("//"), concat(scheme, lit(":"), h))
         .when(h.startsWith("/"), concat(scheme, lit("://"), host, h))
+        .when(h.startsWith("?"), concat(scheme, lit("://"), host,
+          when(basePath === "", lit("/")).otherwise(basePath), h))
         .otherwise(concat(scheme, lit("://"), host,
           when(baseDir === "", lit("/")).otherwise(baseDir), h))
     // strip the fragment from whatever survived

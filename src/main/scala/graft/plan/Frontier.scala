@@ -1,7 +1,7 @@
 package graft.plan
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import java.time.LocalDate
@@ -25,10 +25,13 @@ object Frontier {
     * Ordering is data, not shuffle order — `seq` survives any repartition.
     * `currs` arrives as a DataFrame of (curr STRING, idx LONG) with idx the
     * iteration order; the pair index is computed distributedly so the grid
-    * never touches the driver (10^10-scale safe).
+    * never touches the driver (10^10-scale safe). Its arithmetic needs the
+    * dimension's row count: a [[currencyDim]] (a local relation) carries it
+    * in its plan, so the grid costs no job; any other `currs` pays one
+    * `count()`.
     */
   def candidates(currs: DataFrame, end: LocalDate, numDays: Int): DataFrame = {
-    val n = currs.count() // tiny dim table; one cheap job for the pair-index arithmetic
+    val n = graft.util.PlanSize.localRowCount(currs).getOrElse(currs.count())
     val a = currs.select(col("curr").as("card_c"), col("idx").as("ia"))
     val b = currs.select(col("curr").as("trans_c"), col("idx").as("ib"))
     // product(currs, currs) minus the diagonal, with the *filtered* pair
@@ -107,63 +110,75 @@ object Frontier {
     missing(cands, rates, providers, provider, endDate, numDays, currList)
   }
 
-  /** Exact, scalable global rank 0..n-1 by `orderCol` (no single-partition
-    * window): bucket rows into value-derived ranges of the order column,
-    * count rows per bucket, broadcast the cumulative offsets, then rank =
-    * per-bucket row_number + offset. Every stage is parallel. `orderCol`
-    * must be an atomic, literal-expressible type (numeric, string,
-    * date/timestamp — every rank key in this library).
+  /** Exact global rank 0..n-1 by `orderCol`. `orderCol` must be an atomic,
+    * literal-expressible type (numeric, string, date/timestamp — every rank
+    * key in this library); ties have no defined order among themselves.
+    *
+    * When the input's plan statistics bound it at or below one partition's
+    * worth of data ([[graft.util.PlanSize.fitsOnePartition]]; no job reads
+    * them), one `row_number()` over a single partition ranks it: no quantile
+    * job, no counts job, no offsets broadcast. Anything larger, or of
+    * unknown size, takes the value-bucket path, whose every stage is parallel.
     */
-  def withGlobalRank(df: DataFrame, orderCol: String, rankCol: String, partitions: Int): DataFrame = {
-    val withPid = withValueBuckets(df, orderCol, partitions)
-    val counts = withPid.groupBy("__pid").count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts
-      .scanLeft((0, 0L)) { case ((_, acc), (pid, c)) => (pid, acc + c) }
-      .sliding(2).collect { case Array((_, off), (pid, _)) => pid -> off }.toSeq
-    // P offset rows ride a broadcast join, not an O(P) when-chain (Catalyst
-    // expression depth would become the scale limit)
-    import df.sparkSession.implicits._
-    val offsetsDf = offsets.toDF("__opid", "__off")
-    val w = Window.partitionBy("__pid").orderBy(orderCol)
-    withPid
-      .join(broadcast(offsetsDf), col("__pid") === col("__opid"), "left")
-      .withColumn(rankCol,
-        row_number().over(w).cast("long") - 1 + coalesce(col("__off"), lit(0L)))
-      .drop("__pid", "__opid", "__off")
-  }
+  def withGlobalRank(df: DataFrame, orderCol: String, rankCol: String, partitions: Int): DataFrame =
+    globalRank(df, orderCol, rankCol, partitions, buckets = !graft.util.PlanSize.fitsOnePartition(df))
 
-  /** Exact, scalable global EXCLUSIVE prefix sum of `valueCol` (cast to
-    * long) in `orderCol` order — `outCol` = sum of all earlier rows'
-    * values, 0 for the first row. Same machinery as [[withGlobalRank]]
-    * (value-pure buckets → per-bucket sums → broadcast offsets →
-    * per-bucket window), every stage parallel; same contract: `orderCol`
-    * values must be unique (ties share a bucket and have no defined
+  /** Exact global EXCLUSIVE prefix sum of `valueCol` (cast to long) in
+    * `orderCol` order — `outCol` = sum of all earlier rows' values, 0 for
+    * the first row. Same gate and the same two paths as [[withGlobalRank]];
+    * same contract: `orderCol` values must be unique (ties have no defined
     * order). The training-data consumer is [[graft.pipeline.Corpus]]'s
-    * sequence packing — a single-partition `Window.orderBy` cumsum would
-    * funnel the whole corpus through one task.
+    * sequence packing: on a corpus beyond one partition a single-partition
+    * cumsum would funnel it through one task, so it takes the bucket path.
     */
   def withGlobalPrefixSum(
       df: DataFrame, orderCol: String, valueCol: String, outCol: String,
-      partitions: Int): DataFrame = {
-    val withPid = withValueBuckets(df, orderCol, partitions)
-    val sums = withPid.groupBy("__pid")
-      .agg(coalesce(sum(col(valueCol).cast("long")), lit(0L)).as("__s"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = sums
-      .scanLeft((0, 0L)) { case ((_, acc), (pid, s)) => (pid, acc + s) }
-      .sliding(2).collect { case Array((_, off), (pid, _)) => pid -> off }.toSeq
-    import df.sparkSession.implicits._
-    val offsetsDf = offsets.toDF("__opid", "__off")
-    val w = Window.partitionBy("__pid").orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    withPid
-      .join(broadcast(offsetsDf), col("__pid") === col("__opid"), "left")
-      .withColumn(outCol,
-        sum(col(valueCol).cast("long")).over(w) - col(valueCol).cast("long")
-          + coalesce(col("__off"), lit(0L)))
-      .drop("__pid", "__opid", "__off")
+      partitions: Int): DataFrame =
+    globalPrefixSum(df, orderCol, valueCol, outCol, partitions,
+      buckets = !graft.util.PlanSize.fitsOnePartition(df))
+
+  /** [[withGlobalRank]] on the path `buckets` names, whatever the input's size. */
+  private[graft] def globalRank(
+      df: DataFrame, orderCol: String, rankCol: String, partitions: Int, buckets: Boolean): DataFrame =
+    ordered(df, orderCol, partitions, buckets, count(lit(1)), rankCol)(
+      (d, w) => d.withColumn(rankCol, row_number().over(w).cast("long") - 1))
+
+  /** [[withGlobalPrefixSum]] on the path `buckets` names, whatever the input's size. */
+  private[graft] def globalPrefixSum(
+      df: DataFrame, orderCol: String, valueCol: String, outCol: String, partitions: Int,
+      buckets: Boolean): DataFrame = {
+    val v = col(valueCol).cast("long")
+    ordered(df, orderCol, partitions, buckets, sum(v), outCol)(
+      (d, w) => d.withColumn(outCol, sum(v).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - v))
   }
+
+  /** `within` computes `outCol` over a window ordered by `orderCol`. Without
+    * `buckets` that window is the whole input, in one partition. With them,
+    * it is partitioned by value bucket and every row adds its bucket's
+    * offset, the sum of `perBucket` over all earlier buckets. The
+    * per-bucket totals are one collected aggregation; the P offset rows
+    * ride a broadcast join, not an O(P) when-chain (Catalyst expression
+    * depth would become the scale limit).
+    */
+  private def ordered(
+      df: DataFrame, orderCol: String, partitions: Int, buckets: Boolean, perBucket: Column, outCol: String)(
+      within: (DataFrame, WindowSpec) => DataFrame): DataFrame =
+    if (!buckets) within(df, Window.orderBy(orderCol))
+    else {
+      val withPid = withValueBuckets(df, orderCol, partitions)
+      val totals = withPid.groupBy("__pid").agg(coalesce(perBucket, lit(0L)).cast("long"))
+        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+      val offsets = totals
+        .scanLeft((0, 0L)) { case ((_, acc), (pid, t)) => (pid, acc + t) }
+        .sliding(2).collect { case Array((_, off), (pid, _)) => pid -> off }.toSeq
+      import df.sparkSession.implicits._
+      val offsetsDf = offsets.toDF("__opid", "__off")
+      within(
+        withPid.join(broadcast(offsetsDf), col("__pid") === col("__opid"), "left"),
+        Window.partitionBy("__pid").orderBy(orderCol))
+        .withColumn(outCol, col(outCol) + coalesce(col("__off"), lit(0L)))
+        .drop("__pid", "__opid", "__off")
+    }
 
   private[graft] def withValueBuckets(df: DataFrame, orderCol: String, partitions: Int): DataFrame = {
     // The range-bucket id is a PURE FUNCTION OF THE ORDER VALUE — boundaries
@@ -187,8 +202,10 @@ object Frontier {
     // order-sensitive sketch is fine here — the literals are frozen once.
     // Inherent limit, documented: all rows of ONE value share a bucket
     // (ties have no defined rank order); rank by a finer key if a single
-    // hot value dominates. Cost: one slim quantile pass + one counts pass
-    // before the consumer's own execution.
+    // hot value dominates. Cost, before the consumer's own execution: one
+    // slim quantile pass (string keys: a count pass and a sample collect
+    // instead), then the caller's per-bucket totals pass. Only inputs the
+    // size gate cannot bound at one partition pay it (withGlobalRank).
     val fracs = (1 until partitions).map(_.toDouble / partitions)
     val percentileTypes: PartialFunction[org.apache.spark.sql.types.DataType, Unit] = {
       case _: org.apache.spark.sql.types.NumericType => ()
@@ -232,6 +249,11 @@ object Frontier {
   /** Round-robin shard assignment with exact reference parity
     * (client.py:144-146: output row i goes to shard `i % fileCount`, where
     * i is the position in the *missing result* stream in seed order).
+    * The position is [[withGlobalRank]] by `seq`: a frontier whose plan
+    * bounds it at one partition's worth of data is ranked in one task with
+    * no pre-job; a larger one (the reference's ~150 currencies × 363 days)
+    * pays the value-bucket path's quantile and counts jobs over
+    * `partitions` buckets.
     */
   def withShard(missing: DataFrame, fileCount: Int, partitions: Int = 32): DataFrame =
     withGlobalRank(missing, "seq", "__rank", partitions)

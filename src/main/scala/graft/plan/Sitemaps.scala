@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * tier the north rule targets.
   *
   * Parse shape: one regexp pass splits a sitemap blob into `<url>` entry
-  * blocks (lazy match, so adjacent entries never merge), a posexplode
+  * blocks (lazy match, so adjacent entries never merge; `(?s)`, so a
+  * pretty-printed entry spanning lines is one block), a posexplode
   * turns blocks into rows, and three per-row regexp extracts pull the
   * fields — all codegen'd string expressions, no UDF and no XML library
   * on the hot path (sitemaps are machine-generated and flat; the grammar
@@ -26,7 +27,7 @@ object Sitemaps {
 
   /** `<url>` entry blocks of a sitemap XML string, in document order. */
   def entryBlocksCol(xml: Column): Column =
-    regexp_extract_all(xml, lit("<url>(.*?)</url>"), lit(1))
+    regexp_extract_all(xml, lit("(?s)<url>(.*?)</url>"), lit(1))
 
   private def field(block: Column, tag: String): Column =
     nullif(regexp_extract(block, s"<$tag>([^<]*)</$tag>", 1), lit(""))
@@ -77,7 +78,7 @@ object Sitemaps {
     val keepCols = keep.map(col)
     indexes
       .select(keepCols :+ posexplode(
-        regexp_extract_all(col(xmlCol), lit("<sitemap>(.*?)</sitemap>"), lit(1)))
+        regexp_extract_all(col(xmlCol), lit("(?s)<sitemap>(.*?)</sitemap>"), lit(1)))
         .as(Seq("sitemap_pos", "block")): _*)
       .withColumn("loc", field(col("block"), "loc"))
       // index lastmod is a W3C datetime (timestamp-grained, unlike the

@@ -94,6 +94,31 @@ class FrontierOpsSpec extends SparkSpec {
       "malformed date/number go NULL, never fail the batch")
   }
 
+  test("pretty-printed sitemaps: a <url> or <sitemap> block spanning lines is one entry") {
+    val urlset =
+      """<urlset>
+        |  <url>
+        |    <loc>https://a.com/1</loc>
+        |    <lastmod>2026-02-03</lastmod>
+        |  </url>
+        |  <url><loc>https://a.com/2</loc></url>
+        |</urlset>""".stripMargin
+    val entries = Sitemaps.parseEntries(Seq((7L, urlset)).toDF("site", "xml"))
+      .orderBy("entry_pos").select("entry_pos", "loc", "lastmod").collect()
+    assert(entries.map(_.getString(1)).toSeq === Seq("https://a.com/1", "https://a.com/2"))
+    assert(entries(0).getDate(2).toString === "2026-02-03")
+    val index =
+      """<sitemapindex>
+        |  <sitemap>
+        |    <loc>https://a.com/sm1.xml</loc>
+        |  </sitemap>
+        |  <sitemap><loc>https://a.com/sm2.xml</loc></sitemap>
+        |</sitemapindex>""".stripMargin
+    val sitemaps = Sitemaps.parseIndex(Seq((7L, index)).toDF("site", "xml"))
+      .orderBy("sitemap_pos").select("loc").as[String].collect()
+    assert(sitemaps.toSeq === Seq("https://a.com/sm1.xml", "https://a.com/sm2.xml"))
+  }
+
   test("unseenEntries drops exactly the already-seen locs") {
     val entries = Seq((0, "https://a.com/1"), (1, "https://a.com/2"))
       .toDF("entry_pos", "loc")

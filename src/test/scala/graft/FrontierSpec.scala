@@ -3,6 +3,8 @@ package graft
 import java.sql.Date
 import java.time.LocalDate
 
+import org.apache.spark.sql.functions._
+
 import graft.plan.Frontier
 
 /** Parity port of the reference's golden test
@@ -147,11 +149,11 @@ class FrontierSpec extends SparkSpec {
     val left = (0 until 5000).map(i => (i.toLong, i % 7)).toDF("seq", "k")
     val right = (0 until 7).map(k => (k, s"g$k")).toDF("k", "g")
     val shuffled = left.hint("merge").join(right, "k")
-    val a = Frontier.withGlobalRank(shuffled, "seq", "r", partitions = 8)
+    val a = Frontier.globalRank(shuffled, "seq", "r", partitions = 8, buckets = true)
       .select("seq", "r").as[(Long, Long)].collect()
     assert(a.length === 5000)
     assert(a.forall { case (s, r) => s == r })
-    val b = Frontier.withGlobalRank(shuffled, "seq", "r", partitions = 8)
+    val b = Frontier.globalRank(shuffled, "seq", "r", partitions = 8, buckets = true)
       .select("seq", "r").as[(Long, Long)].collect().toMap
     assert(a.forall { case (s, r) => b(s) == r })
   }
@@ -162,11 +164,62 @@ class FrontierSpec extends SparkSpec {
     // into one bucket; the frequency-weighted quantile boundaries must
     // still produce dense 0..n-1 ranks that respect the value order
     val df = (0 until 50000).map(i => (i % 23).toLong).toDF("v")
-    val ranked = Frontier.withGlobalRank(df, "v", "r", partitions = 8)
+    val ranked = Frontier.globalRank(df, "v", "r", partitions = 8, buckets = true)
       .select("v", "r").as[(Long, Long)].collect()
     assert(ranked.map(_._2).sorted.toSeq === (0L until 50000L))
     val byV = ranked.groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2) }
     (0L until 22L).foreach { v => assert(byV(v).max < byV(v + 1).min) }
+  }
+
+  test("withGlobalRank and withGlobalPrefixSum: the one-partition path equals the bucket path") {
+    // dense (unique, permuted), duplicate-heavy, empty and one-partition
+    // inputs; w is a function of v, so tied rows carry equal values and the
+    // (v, prefix sum) multiset is defined even where the tie order is not
+    val dense = (0 until 2000).map(i => (i * 7919L % 2000L, i % 13)).toDF("v", "x")
+    val inputs = Seq(
+      "dense" -> dense,
+      "duplicate-heavy" -> (0 until 3000).map(i => ((i % 23).toLong, i % 13)).toDF("v", "x"),
+      "empty" -> dense.limit(0),
+      "one partition" -> dense.repartition(1))
+      .map { case (name, df) => name -> df.withColumn("w", $"v" * 31 % 7 + 1) }
+    def pairs(df: org.apache.spark.sql.DataFrame, out: String) =
+      df.select($"v", col(out)).as[(Long, Long)].collect().sorted.toSeq
+    inputs.foreach { case (name, df) =>
+      val n = df.count()
+      val rank = pairs(Frontier.globalRank(df, "v", "r", 8, buckets = false), "r")
+      assert(rank.map(_._2).sorted === (0L until n), name)
+      val sums = pairs(Frontier.globalPrefixSum(df, "v", "w", "s", 8, buckets = false), "s")
+      Seq(1, 8).foreach { parts =>
+        assert(pairs(Frontier.globalRank(df, "v", "r", parts, buckets = true), "r") === rank, s"$name, $parts buckets")
+        assert(pairs(Frontier.globalPrefixSum(df, "v", "w", "s", parts, buckets = true), "s") === sums,
+          s"$name, $parts buckets")
+      }
+    }
+  }
+
+  test("size gate: the date axis counts, so a reference-sized grid takes the bucket path") {
+    import graft.util.PlanSize
+    val jobLog = graft.util.Sessions.jobLog(spark)
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    val lastJob = jobLog.jobs.lastOption.fold(-1)(_.id)
+    // 160 currencies × 363 days: 9.2M rows. Spark's estimate keeps the
+    // explode's input size (one row per pair), which alone would rank this
+    // grid in a single task
+    val grid = Frontier.candidates(Frontier.currencyDim(spark, (0 until 160).map(i => f"C$i%03d")), testDate, 363)
+    assert(grid.queryExecution.optimizedPlan.stats.sizeInBytes <= PlanSize.partitionBytes(grid))
+    assert(!PlanSize.fitsOnePartition(grid))
+    // q13's input: the golden missing frontier, 7 rows
+    val golden = Frontier.missing(
+      Frontier.candidates(Frontier.currencyDim(spark, Seq("GBP", "USD")), testDate, 8),
+      ratesFixture, providers, "Mastercard", testDate, 8, Seq("GBP", "USD"))
+    assert(PlanSize.fitsOnePartition(golden))
+    // a generator whose length only the data knows gives no bound
+    val words = Seq("a b c").toDF("t").select(explode(split($"t", " ")).as("w"))
+    assert(PlanSize.upperBoundBytes(words).isEmpty)
+    // deciding ran nothing: neither plan, nor a count for the pair index
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    val ran = jobLog.jobs.filter(_.id > lastJob)
+    assert(ran.isEmpty, ran.mkString("\n"))
   }
 
   test("withShard leaks no cached RDDs across repeated calls") {

@@ -61,6 +61,15 @@ class LinkGraphSpec extends SparkSpec {
     assert(r.head === "https://bare.com/p.html")
   }
 
+  test("a query-only href keeps the base's full path and replaces its query (RFC 3986 §5.3)") {
+    val r = Seq((baseUrl, "?page=2"), ("https://bare.com", "?page=2"), ("https://a.com/d/", "?q#f"))
+      .toDF("url", "href")
+      .select(LinkGraph.resolveHref(col("url"), col("href")).as("r"))
+      .as[String].collect()
+    assert(r.toSeq === Seq(
+      "https://www.example.com/dir/sub/page.html?page=2", "https://bare.com/?page=2", "https://a.com/d/?q"))
+  }
+
   test("hostEdges drops self-edges by default and counts multiplicity") {
     val links = Seq(
       ("https://a.com/1", "https://b.com/x"),

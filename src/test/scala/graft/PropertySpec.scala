@@ -89,7 +89,7 @@ class PropertySpec extends SparkSpec {
     } yield (vals, parts)
     Iterator.continually(caseGen.sample).flatten.take(10).foreach { case (vals, parts) =>
       val df = vals.zipWithIndex.toDF("v", "i")
-      val got = graft.plan.Frontier.withGlobalRank(df, "v", "r", parts)
+      val got = graft.plan.Frontier.globalRank(df, "v", "r", parts, buckets = true)
         .select("v", "r").as[(Long, Long)].collect()
       // dense 0..n-1, and rank order must agree with the value order:
       // every rank boundary between different values matches sorted position
