@@ -521,10 +521,6 @@ object SparkEntry {
         lit(off + 3).as("doc_id"),
         array_join(reverse(filter(split(lower(trim(col("text"))), "\\s+"), x => x =!= "")), " ")
           .as("text"))
-      // a LocalRelation (1 partition), NOT spark.range(1) (defaultParallelism
-      // near-empty partitions, which would inflate the union's partition
-      // count past Par.spread's threshold and leave the real docs' 2 scan
-      // splits unspread — measured 4.5x on the minhash kernel)
       val nonsense = {
         import s.implicits._
         Seq((off + 4, (0 until 20).map(i => s"zq$i").mkString(" ")))
@@ -932,7 +928,7 @@ object SparkEntry {
                'page',
                concat('?a=', CAST(id % 10 AS STRING), repeat('&q=1', CAST(id % 8 AS INT))))"""))
       val blocklist = Seq("badtld", "tracker.example.com").toDF("suffix")
-      graft.urls.UrlFilter.verdicts(graft.util.Par.spread(urls), blocklist)
+      graft.urls.UrlFilter.verdicts(urls, blocklist)
         .select("id", "url", "host", "depth", "n_params", "verdict")
         .orderBy("id")
     }),
@@ -1020,7 +1016,7 @@ object SparkEntry {
                'page',
                concat('?a=', CAST(id % 10 AS STRING), repeat('&q=1', CAST(id % 8 AS INT))))"""))
       val blocklist = Seq("badtld", "tracker.example.com").toDF("suffix")
-      val ok = graft.urls.UrlFilter.verdicts(graft.util.Par.spread(urls), blocklist)
+      val ok = graft.urls.UrlFilter.verdicts(urls, blocklist)
         .filter(col("verdict") === "ok")
       val alloc = graft.politeness.HostBudget.apportion(
         ok.groupBy("host").agg(count(lit(1)).as("cnt")), budget = 100L)
@@ -1241,7 +1237,7 @@ object SparkEntry {
              'page',
              concat('?a=', CAST(id % 10 AS STRING), repeat('&q=1', CAST(id % 8 AS INT))))"""))
       val blocklist = Seq("badtld", "h7.example.com").toDF("suffix")
-      val backlog = graft.urls.UrlFilter.verdicts(graft.util.Par.spread(urls), blocklist)
+      val backlog = graft.urls.UrlFilter.verdicts(urls, blocklist)
         .filter(col("verdict") === "ok")
         .groupBy("host").agg(count(lit(1)).as("backlog"))
       val links = t(s, dir, "documents").select("doc_id")
@@ -1407,7 +1403,7 @@ object SparkEntry {
       // while the 20k-token budget lasts. The engine's histogram-prefix +
       // per-tie-group cumsum must equal the oracle's plain ordered window
       // cumsum — the single-partition shape the engine refuses.
-      val docs = graft.util.Par.spread(t(s, dir, "documents")).select(
+      val docs = t(s, dir, "documents").select(
         col("doc_id").as("id"),
         graft.functions.TextFns.tokenCount(col("text")).cast("long").as("n_tokens"),
         (expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 4), 16, 10) AS LONG)")

@@ -201,7 +201,8 @@ object DocDedup {
     val rowsPerBand = numHashes / bands
     // the signature map (shingle → hash once → numHashes permutations) is
     // the expensive per-row kernel — spread it across the cluster when the
-    // input scan has fewer splits than cores (no-op at real scale).
+    // input is small enough to scan in fewer splits than cores (no-op at
+    // real scale).
     // The kernel is the FUSED native expression (Kernels.minhashSig):
     // signature[i] = min over shingles s of xxhash64(xxhash64(s), i), in
     // one row-local pass with the permutation loop innermost (one hashLong

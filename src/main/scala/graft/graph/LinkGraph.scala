@@ -52,7 +52,7 @@ object LinkGraph {
   def rawLinks(pages0: DataFrame, htmlCol: String = "html"): DataFrame = {
     // spread first (the kernel-site rule): the href regex scan otherwise
     // runs at raw scan parallelism (1-2 splits on a small page table;
-    // no-op at real scale where the scan has >= core-count splits)
+    // no-op at real scale)
     val pages = graft.util.Par.spread(pages0)
     val keep = pages.columns.filter(c => c != htmlCol).map(col).toIndexedSeq
     // ONE regex pass over the page text (group 0), then per-match group

@@ -127,8 +127,6 @@ object Corpus {
     // spread BEFORE the verdict kernels: tokenize/langId/quality/md5 (and
     // the optional NFC + repetition rungs) otherwise run at raw scan
     // parallelism (1-2 splits on a small parquet); no-op at real scale.
-    // Batch-only — the streaming dual calls rowVerdicts directly and must
-    // not probe .rdd on a streaming frame.
     val slim = rowVerdicts(
       graft.util.Par.spread(
         docs.select(col(idCol).cast("long").as("id"), srcText.as("__text"))),
@@ -229,10 +227,12 @@ object Corpus {
       partitions: Int = 32): DataFrame = {
     require(budget > 0, "budget must be positive")
     require(sepTokens >= 0, "sepTokens must be non-negative")
-    val slim = graft.util.Par.spread(docs).select(
+    // the slot derives from the counted column: two restated token
+    // splits carry distinct lambda variables, so Catalyst would run both
+    val slim = docs.select(
       col(idCol).cast("long").as("id"),
-      size(TextFns.tokens(col(textCol))).cast("long").as("n_tokens"),
-      (size(TextFns.tokens(col(textCol))) + sepTokens).cast("long").as("__slot"))
+      TextFns.tokenCount(col(textCol)).cast("long").as("n_tokens"))
+      .withColumn("__slot", col("n_tokens") + sepTokens)
     graft.plan.Frontier.withGlobalPrefixSum(slim, "id", "__slot", "start_tok", partitions)
       .withColumn("pack_first", expr(s"start_tok DIV $budget"))
       .withColumn("pack_last",

@@ -83,7 +83,9 @@ object UrlFilter {
       maxDepth: Long = 9L,
       maxParams: Long = 6L): DataFrame = {
     val u = col(urlCol)
-    val annotated = urls
+    // spread first: the host parse and trap regexes otherwise run at raw
+    // scan parallelism on a small slice; no-op at real scale
+    val annotated = graft.util.Par.spread(urls)
       .withColumn("host", UrlCols.hostCol(u))
       .withColumn("depth", depthCol(u))
       .withColumn("n_params", nParamsCol(u))

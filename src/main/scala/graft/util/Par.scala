@@ -1,92 +1,23 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LeafNode, LocalLimit, LogicalPlan, Project, Repartition, Sample, SubqueryAlias, Union}
 
 object Par {
 
-  /** Ensure an expensive per-row kernel runs with at least
-    * defaultParallelism partitions: a tiny input (few parquet splits) would
-    * otherwise execute the map at scan parallelism. At real scale the scan
-    * already yields >= defaultParallelism splits and this is a no-op — no
-    * shuffle is ever added for large inputs.
-    *
-    * The partition-count probe (`df.rdd.getNumPartitions`) only runs when
-    * the plan is SCAN-SHAPED (projections/filters over leaves): with AQE on,
-    * `.rdd` on a plan containing an exchange forces getFinalPhysicalPlan,
-    * eagerly executing every upstream shuffle stage for a probe whose
-    * results the consumer then re-plans and re-executes from `df`. A derived
-    * frame that already crossed a shuffle runs at
-    * `spark.sql.shuffle.partitions` parallelism by construction, so it is
-    * returned unchanged — no probe, no hidden double execution.
-    *
-    * Caveat (partition COUNT is the heuristic, not row distribution): a
-    * union leg that contributes many near-empty partitions — e.g.
-    * `spark.range(1)` materializes defaultParallelism partitions for one
-    * row — can push the count past the threshold while the real rows sit in
-    * a few fat scan splits. Single-row literal legs should be
-    * LocalRelations (`Seq(...).toDF`, one partition), which is also the
-    * idiomatic construction.
+  /** Ensure an expensive per-row kernel runs with defaultParallelism
+    * partitions when its input is small. Spark's file split rule
+    * (`FilePartition.maxSplitBytes`) sizes a split at
+    * max(openCostInBytes, bytes / cores), so a scan below
+    * cores × `spark.sql.files.openCostInBytes` gets fewer splits than
+    * cores and would run the kernel on few tasks; above it the scan already
+    * yields about one split per core, and the frame is returned unchanged.
+    * The size is [[PlanSize.upperBoundBytes]]: no job runs, whatever the
+    * plan holds. An unknown bound (a generator of unknown length) also
+    * returns the frame unchanged.
     */
   def spread(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val plan = df.queryExecution.logical
-    if (scanShaped(plan)) {
-      if (df.rdd.getNumPartitions < p) df.repartition(p) else df
-    } else if (fewPartitionShaped(plan, p)) {
-      // limit/sample/coalesce over a scan: probing would execute the very
-      // shuffle the scan-shaped gate avoids (a non-terminal limit plans a
-      // single-partition exchange), yet the result is known to land on few
-      // partitions — e.g. dedupCorpus(docs.limit(n)) would run the whole
-      // signature kernel as ONE task. Repartition unconditionally: the
-      // extra shuffle of slim inputs is noise next to a serialized kernel.
-      df.repartition(p)
-    } else df
-  }
-
-  /** True when the plan is only narrow exchange-free operators over leaves
-    * (projections, filters, unions) — the shapes whose physical probe runs
-    * no job and is therefore free.
-    */
-  private def scanShaped(plan: LogicalPlan): Boolean = plan match {
-    case _: LeafNode => true
-    case p: Project => scanShaped(p.child)
-    case f: Filter => scanShaped(f.child)
-    case s: SubqueryAlias => scanShaped(s.child)
-    case u: Union => u.children.forall(scanShaped)
-    // Sample and a bare LocalLimit are NARROW — they keep the child's
-    // partitioning, so their probe is as free as the scan's (df.limit
-    // plans GlobalLimit(LocalLimit(..)), which is handled below)
-    case s: Sample => scanShaped(s.child)
-    case l: LocalLimit => scanShaped(l.child)
-    case _ => false
-  }
-
-  /** Plans known WITHOUT probing to concentrate rows on few partitions. */
-  private def fewPartitionShaped(plan: LogicalPlan, p: Int): Boolean = plan match {
-    // a non-terminal GlobalLimit requires SinglePartition — its output is
-    // ONE partition regardless of the child's shape, so no child
-    // restriction (and probing it would execute that exchange under AQE)
-    case _: GlobalLimit => true
-    case r: Repartition => // numPartitions is statically known — no probe
-      r.numPartitions < p
-    case pr: Project => fewPartitionShaped(pr.child, p)
-    case f: Filter => fewPartitionShaped(f.child, p)
-    case s: SubqueryAlias => fewPartitionShaped(s.child, p)
-    case s: Sample => fewPartitionShaped(s.child, p)
-    case l: LocalLimit => fewPartitionShaped(l.child, p)
-    // a union whose legs are ALL few-partition-shaped is itself
-    // few-partition-shaped (each leg is limit/sample/coalesce-bounded by
-    // construction, so the unconditional repartition stays cheap). A MIXED
-    // union — scan legs beside a GlobalLimit leg, e.g.
-    // scan.unionByName(other.limit(k)) — is deliberately NOT handled:
-    // probing it would execute the limit leg's single-partition exchange
-    // under AQE, and an unconditional repartition would shuffle the scan
-    // legs, which may be arbitrarily large (the exact cost the scan-shaped
-    // probe path exists to avoid). Callers composing such a union should
-    // spread() the scan legs BEFORE unioning; the limit leg's handful of
-    // rows then rides along for free.
-    case u: Union => u.children.forall(fewPartitionShaped(_, p))
-    case _ => false
+    val openCost = df.queryExecution.sparkSession.sessionState.conf.filesOpenCostInBytes
+    if (PlanSize.upperBoundBytes(df).exists(_ < BigInt(p) * openCost)) df.repartition(p) else df
   }
 }

@@ -217,9 +217,12 @@ class CorpusSpec extends SparkSpec {
       assert(inCluster.count(_._3 == "kept") === 1)
       assert(inCluster.filter(_._1 > 0).forall(_._3 === "near_duplicate"))
       assert(out.find(_._1 === 100L).get._3 === "kept") // singleton untouched
-      // 60-member cluster, warn bound 10 -> 50 rows ranked past it
+      // 60-member cluster, warn bound 10 -> 50 rows ranked past it. The
+      // listener bus is asynchronous: an earlier test's cleanWithNearDup
+      // (no hot cluster, so 0) can still be delivered after the listener is
+      // registered, so wait for the 50 itself, not the first observation
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (metrics.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      while (!metrics.asScala.exists(_ === 50L) && System.nanoTime() < deadline) Thread.sleep(50)
       assert(metrics.asScala.exists(_ === 50L),
         s"expected 50 hot-cluster rows observed, got ${metrics.asScala.toList}")
     } finally spark.listenerManager.unregister(listener)
