@@ -9,11 +9,15 @@ import java.time.LocalDate
 /** Frontier planning: seed expansion + "missing combos" anti-join + shard
   * sink (SURVEY.md §2 #9, #14-16, #20-21; reference src/db/client.py:92-150).
   *
-  * The reference materializes the already-crawled set in driver memory and
-  * probes it from a Python generator (client.py:114-123) — i.e. a broadcast
-  * hash anti-join. Here the whole plan is declarative: crossJoin → filter →
-  * left_anti, so Catalyst picks broadcast vs shuffled anti-join from stats
-  * and AQE can re-plan at runtime; nothing is collected to the driver.
+  * The reference builds `itertools.product` over a currency list held in
+  * memory and looks the provider id up with a one-row query
+  * (client.py:106-123, pipelines.py:17-21). Both dimensions are tiny (ISO
+  * 4217 has about 180 codes; there are 2 providers), so they are resolved on
+  * the driver here too: the currency pairs and the provider ids become
+  * literals of the plan, and no exchange carries a dimension's 1-2 rows.
+  * The date axis, the already-crawled set and the anti-join between them
+  * stay declarative, so Catalyst picks the join from stats and AQE can
+  * re-plan at runtime.
   */
 object Frontier {
 
@@ -24,29 +28,30 @@ object Frontier {
     *
     * Ordering is data, not shuffle order — `seq` survives any repartition.
     * `currs` arrives as a DataFrame of (curr STRING, idx LONG) with idx the
-    * iteration order; the pair index is computed distributedly so the grid
-    * never touches the driver (10^10-scale safe). Its arithmetic needs the
-    * dimension's row count: a [[currencyDim]] (a local relation) carries it
-    * in its plan, so the grid costs no job; any other `currs` pays one
-    * `count()`.
+    * iteration order. Its rows are read on the driver (a [[currencyDim]] is
+    * a local relation, read with no job; any other dim is one `collect()`)
+    * and the n·(n−1) pairs with their index are built there: they are
+    * bounded by the currency universe, not by the data. The date axis is an
+    * `explode` over the pairs, so the grid's rows are made on the executors.
+    * A grid that [[graft.util.PlanSize.fitsOnePartition]] bounds at one
+    * partition's worth of data comes back in one partition, so a consumer's
+    * global sort or window over it needs no exchange.
     */
   def candidates(currs: DataFrame, end: LocalDate, numDays: Int): DataFrame = {
-    val n = graft.util.PlanSize.localRowCount(currs).getOrElse(currs.count())
-    val a = currs.select(col("curr").as("card_c"), col("idx").as("ia"))
-    val b = currs.select(col("curr").as("trans_c"), col("idx").as("ib"))
+    import currs.sparkSession.implicits._
+    val dim = currs.select("curr", "idx").collect().map(r => (r.getString(0), r.getAs[Number](1).longValue))
+    val n = dim.length.toLong
     // product(currs, currs) minus the diagonal, with the *filtered* pair
     // position: pairs removed before (ia, ib) = ia (+1 if ib > ia).
-    val pairs = a.crossJoin(b)
-      .filter(col("card_c") =!= col("trans_c"))
-      .withColumn(
-        "pair_idx",
-        col("ia") * n + col("ib") - col("ia") - when(col("ib") > col("ia"), 1).otherwise(0))
+    val pairs = (for ((x, ia) <- dim; (y, ib) <- dim if x != y)
+      yield (x, y, ia * n + ib - ia - (if (ib > ia) 1 else 0))).sortBy(_._3)
     val dates = explode(sequence(lit(0), lit(numDays - 1))).as("date_idx")
-    pairs
+    val grid = pairs.toSeq.toDF("card_c", "trans_c", "pair_idx")
       .select(col("card_c"), col("trans_c"), col("pair_idx"), dates)
       .withColumn("date", date_sub(lit(java.sql.Date.valueOf(end)), col("date_idx")))
       .withColumn("seq", col("pair_idx") * numDays + col("date_idx"))
       .select("card_c", "trans_c", "date", "seq")
+    if (graft.util.PlanSize.fitsOnePartition(grid)) grid.coalesce(1) else grid
   }
 
   /** Helper: a currency list (driver-side, tiny) → indexed dim DataFrame. */
@@ -58,11 +63,12 @@ object Frontier {
   /** The `missing` planner (client.py:92-123): candidate grid anti-joined
     * against rates already stored for this provider in the window.
     *
-    * All predicates (provider equality, date range, currency membership) are
-    * applied on the build side *before* the join so they push down to the
-    * rates scan (parquet row-group pruning); the provider name→id lookup is
-    * a broadcast join against the 2-row providers dim rather than the
-    * reference's correlated subquery (pipelines.py:17-21).
+    * The provider name is resolved to its id(s) on the driver from the
+    * providers dim (the reference's one-row lookup, pipelines.py:17-21), so
+    * every predicate (provider id, date range, currency membership) is a
+    * filter on the build side that pushes down to the rates scan (parquet
+    * row-group pruning). A name absent from the dim matches no stored rate,
+    * so every candidate is missing.
     */
   def missing(
       candidates: DataFrame,
@@ -73,9 +79,10 @@ object Frontier {
       numDays: Int,
       currs: Seq[String]): DataFrame = {
     val start = end.minusDays(numDays - 1L)
+    val providerIds = providers.filter(col("name") === provider).select("id").collect().map(_.get(0))
     val existing = rates
-      .join(broadcast(providers.filter(col("name") === provider)), rates("provider_id") === providers("id"))
       .filter(
+        col("provider_id").isin(providerIds: _*) &&
         col("date") <= lit(java.sql.Date.valueOf(end)) &&
         col("date") >= lit(java.sql.Date.valueOf(start)) &&
         col("card_code").isin(currs: _*) &&

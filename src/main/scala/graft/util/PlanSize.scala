@@ -2,7 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{ExplodeBase, Generator}
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, LocalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.internal.SQLConf
 
@@ -37,14 +37,6 @@ object PlanSize {
   /** True when `df` provably holds at most one partition's worth of data. */
   def fitsOnePartition(df: DataFrame): Boolean =
     upperBoundBytes(df).exists(_ <= partitionBytes(df))
-
-  /** The exact row count when the optimised plan is a local relation (a
-    * driver-side `Seq(...).toDF`); None otherwise, where only an action knows.
-    */
-  def localRowCount(df: DataFrame): Option[Long] = df.queryExecution.optimizedPlan match {
-    case l: LocalRelation => Some(l.data.length.toLong)
-    case _ => None
-  }
 
   /** Rows a generator emits per input row, when it explodes a constant. */
   private def rowsPerInput(g: Generator): Option[Long] = g match {

@@ -64,6 +64,61 @@ class FrontierSpec extends SparkSpec {
     assert(seqs.toSeq === (0L until 18L))
   }
 
+  test("golden missing plan: the dims resolve on the driver, one broadcast (the stored rates), q10 in at most 2 jobs") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    object Nodes extends AdaptiveSparkPlanHelper
+    val golden = Frontier.missing(
+      Frontier.candidates(Frontier.currencyDim(spark, Seq("GBP", "USD")), testDate, 8),
+      ratesFixture, providers, "Mastercard", testDate, 8, Seq("GBP", "USD"))
+    assert(golden.count() === 7)
+    val plan = golden.queryExecution.executedPlan
+    val crossJoins = Nodes.collect(plan) {
+      case j: BroadcastNestedLoopJoinExec => j
+      case j: CartesianProductExec => j
+    }
+    assert(crossJoins.isEmpty, plan.treeString)
+    assert(Nodes.collect(plan) { case b: BroadcastExchangeExec => b }.size === 1, plan.treeString)
+    // the grid's one partition carries through the anti-join, so q10's
+    // global sort adds no exchange: the rates broadcast and the result
+    // stage, and building the query runs none
+    val jobLog = graft.util.Sessions.jobLog(spark)
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    val lastJob = jobLog.jobs.lastOption.fold(-1)(_.id)
+    assert(SparkEntry.queries("q10_missing_antijoin")(spark, "").collect().length === 7)
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    val ran = jobLog.jobs.filter(_.id > lastJob)
+    assert(ran.size <= 2, ran.mkString("\n"))
+  }
+
+  test("candidates over a non-local dim equal the local dim's grid row for row") {
+    val local = Frontier.currencyDim(spark, Seq("GBP", "USD", "EUR", "CHF"))
+    val dir = java.nio.file.Files.createTempDirectory("currdim").toString + "/dim"
+    // three files whose row order is not the dim's
+    local.repartition(3).write.parquet(dir)
+    val stored = spark.read.parquet(dir)
+    assert(!stored.queryExecution.optimizedPlan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("card_c", "trans_c", "date", "seq").as[(String, String, Date, Long)].collect().toSeq
+    val expected = rows(Frontier.candidates(local, testDate, 5))
+    assert(expected.length === 4 * 3 * 5)
+    assert(expected.map(_._4) === (0L until 60L))
+    assert(rows(Frontier.candidates(stored, testDate, 5)) === expected)
+  }
+
+  test("missing: an absent provider leaves every candidate missing; a duplicated provider row changes nothing") {
+    val cands = Frontier.candidates(Frontier.currencyDim(spark, Seq("GBP", "USD")), testDate, 8)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("card_c", "trans_c", "date", "seq").as[(String, String, Date, Long)].collect().sortBy(_._4).toSeq
+    assert(rows(Frontier.missing(cands, ratesFixture, providers, "Amex", testDate, 8, Seq("GBP", "USD"))) ===
+      rows(cands))
+    val golden = rows(Frontier.missing(cands, ratesFixture, providers, "Mastercard", testDate, 8, Seq("GBP", "USD")))
+    assert(golden.length === 7)
+    assert(rows(Frontier.missing(
+      cands, ratesFixture, providers.unionAll(providers), "Mastercard", testDate, 8, Seq("GBP", "USD"))) === golden)
+  }
+
   test("round-robin shard assignment matches i % file_count over seed order") {
     val currs = Frontier.currencyDim(spark, Seq("GBP", "USD"))
     val cands = Frontier.candidates(currs, testDate, 8)

@@ -47,12 +47,20 @@ class PlanSpec extends SparkSpec {
     val providers = Seq((1, "Mastercard")).toDF("id", "name")
     val currs = Frontier.currencyDim(spark, Seq("GBP", "USD"))
     val cands = Frontier.candidates(currs, java.time.LocalDate.of(1995, 9, 10), 8)
-    val plan = Frontier.missing(cands, rates, providers, "Mastercard",
+    val dir = java.nio.file.Files.createTempDirectory("rates").toString + "/rates"
+    rates.write.parquet(dir)
+    val plan = Frontier.missing(cands, spark.read.parquet(dir), providers, "Mastercard",
       java.time.LocalDate.of(1995, 9, 10), 8, Seq("GBP", "USD"))
-      .queryExecution.optimizedPlan.toString
-    // anti-join present; membership+range predicates sit below it
-    assert(plan.contains("LeftAnti"))
-    assert(plan.contains("card_code IN") || plan.contains("card_code#"))
+      .queryExecution.executedPlan
+    // anti-join present; the provider id, range and membership predicates
+    // below it all reach the rates scan
+    assert(plan.toString.contains("LeftAnti"), plan)
+    object Nodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val pushed = Nodes.collect(plan) { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+      .map(_.metadata("PushedFilters")).mkString
+    Seq("EqualTo(provider_id,1)", "LessThanOrEqual(date,1995-09-10)", "GreaterThanOrEqual(date,1995-09-03)",
+      "In(card_code, [GBP,USD])", "In(trans_code, [GBP,USD])")
+      .foreach(f => assert(pushed.contains(f), pushed))
   }
 
   test("q01's shipdate filter reaches the lineitem parquet scan") {
