@@ -198,14 +198,21 @@ final class TableLog private[checkpoint] (
 
   /** The chain `paths` of `table` as the commit at [[next]] stores it: one
     * compacted path when `every > 0`, [[next]] is a multiple of `every` and
-    * the chain has more than one path; otherwise `paths` unchanged. `read`
-    * gives the rows of a chain to rewrite.
+    * the chain has more than one path; otherwise `paths` unchanged.
+    *
+    * A chain whose parquet files share one schema and hold at most
+    * [[graft.util.PlanSize.OneTaskRows]] rows is merged into one file on the
+    * driver, its column chunks copied as they are: no Spark job and no
+    * generated class. Any other chain is rewritten by Spark from the rows
+    * `read` gives.
     */
   def compact(table: String, paths: Seq[String], every: Int)(read: Seq[String] => DataFrame): Seq[String] =
     if (every <= 0 || next % every != 0 || paths.size <= 1) paths
     else {
       val p = store.dataPath(s"$table-compacted", next)
-      read(paths).write.mode("overwrite").parquet(p)
+      val rows = read(paths)
+      if (!TableLog.mergeFiles(rows.sparkSession.sessionState.newHadoopConf(), paths, p))
+        rows.write.mode("overwrite").parquet(p)
       Seq(p)
     }
 
@@ -227,4 +234,31 @@ final class TableLog private[checkpoint] (
 object TableLog {
   /** The separator of a chain's paths and a key set's keys. */
   val Sep = ";"
+
+  /** Merges the parquet files in the directories `dirs` into one file in
+    * the directory `out` with parquet's rewriter, which copies column chunks
+    * without decoding them. Returns false, and writes nothing, when the
+    * files do not share one parquet schema (a foreign writer, a column's
+    * nullability) or hold more than [[graft.util.PlanSize.OneTaskRows]] rows.
+    */
+  private def mergeFiles(conf: org.apache.hadoop.conf.Configuration, dirs: Seq[String], out: String): Boolean = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    val files = dirs.flatMap { d =>
+      val dir = new HPath(d)
+      dir.getFileSystem(conf).listStatus(dir).toSeq.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    }
+    val footers = files.map(st => scala.util.Using.resource(ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)))(r => (r.getFileMetaData.getSchema, r.getRecordCount)))
+    val mergeable = footers.map(_._1).distinct.size == 1 && footers.map(_._2).sum <= graft.util.PlanSize.OneTaskRows
+    if (mergeable) {
+      val target = new HPath(out)
+      target.getFileSystem(conf).delete(target, true)
+      val rewriter = new org.apache.parquet.hadoop.rewrite.ParquetRewriter(
+        new org.apache.parquet.hadoop.rewrite.RewriteOptions.Builder(
+          conf, files.map(_.getPath).asJava, new HPath(target, "part-00000.parquet")).build())
+      try rewriter.processBlocks() finally rewriter.close()
+    }
+    mergeable
+  }
 }

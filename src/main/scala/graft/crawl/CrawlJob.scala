@@ -4,7 +4,9 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -12,6 +14,7 @@ import graft.checkpoint.{SnapshotStore, TableLog}
 import graft.dedup.UrlSeen
 import graft.model.{HostState, PolitenessConfig}
 import graft.politeness.{Robots, Scheduler}
+import graft.util.PlanSize
 
 /** The crawl lifecycle (SURVEY.md §3.2 Spark equivalent): resumable
   * micro-batch rounds of
@@ -70,6 +73,28 @@ object CrawlJob {
       }
   }
 
+  /** Lineage rows, which the driver holds, written as one parquet file by
+    * parquet's own writer: no Spark job and no generated class. The
+    * parquet schema is the one Spark writes for [[LineageSchema]], so the
+    * chain's files merge with those of stores Spark wrote.
+    */
+  private def writeLineage(spark: SparkSession, dir: String, rows: Seq[(Int, String, String, Long)]): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message spark_schema { optional int32 round; optional binary table (STRING); " +
+        "optional binary file (STRING); optional int64 rows; }")
+    val out = new org.apache.hadoop.fs.Path(dir)
+    out.getFileSystem(conf).delete(out, true)
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(out, "part-00000.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    try rows.foreach { case (round, table, file, n) =>
+      writer.write(groups.newGroup().append("round", round).append("table", table).append("file", file).append("rows", n))
+    } finally writer.close()
+  }
+
   /** Host column — see [[graft.urls.UrlCols.hostCol]] (shared with the
     * robots rule table so frontier hosts and rule hosts derive identically).
     */
@@ -100,15 +125,6 @@ object CrawlJob {
       .withColumn("headers", p.headersFor(col("card_c"), col("trans_c"), col("date")))
       .select("url", "canonUrl", "urlHash", "host", "card_c", "trans_c", "date", "provider", "priority", "seq", "retries", "headers")
   }
-
-  /** The most rows a round aggregates in one task instead of through a
-    * shuffle. Measured on 4 vCPUs (local[4], 4 shuffle partitions, the
-    * round's per-host aggregation and its rates dedup over cached rows):
-    * one task was faster up to 250k rows (hosts 202 vs 240 ms, rates 397 vs
-    * 434 ms) and slower from 400k (232 vs 261 ms, 449 vs 637 ms). More
-    * cores only move the crossover down.
-    */
-  private[graft] val OneTaskRows = 250000L
 
   /** Defaults [[run]] and the stream driver share: Bloom filter partitions,
     * and rounds between delta-chain compactions.
@@ -154,18 +170,13 @@ object CrawlJob {
       insertBatchRows: Option[Int] = None,
       providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry): (DataFrame, DataFrame, DataFrame) =
     restoringJobDescription(spark) {
-      val loaded = loadState(spark, checkpointDir, bloomParts)(_.getOrElse(UrlSeen.dedupWithinBatch(frontier0)))
-      var state = loaded
-      var rules = Option.empty[DataFrame]
+      var state = loadState(spark, checkpointDir, bloomParts)(_.getOrElse(UrlSeen.dedupWithinBatch(frontier0)))
+      val rules = activeRules(Some(robots))
       try {
-        rules = activeRules(Some(robots))
         while (state.frontierCount > 0 && state.round < maxRounds)
           state = crawlRound(spark, checkpointDir, state, pages, rules, cfg, roundSec, maxRetries,
             allowedDomains, bloomParts, compactEvery, insertBatchRows, providers)
-      } finally {
-        loaded.frontier.unpersist() // cached by loadState when computed; a no-op otherwise
-        rules.foreach(_.unpersist())
-      }
+      } finally rules.foreach(_.unpersist())
       (read(spark, RatesSchema, state.ratesPaths), read(spark, SeenSchema, state.seenPaths),
         read(spark, MetricsSchema, state.log.chain("metrics")))
     }
@@ -190,7 +201,7 @@ object CrawlJob {
     * releases them with `unpersist()`.
     */
   private[graft] def activeRules(robots: Option[DataFrame]): Option[DataFrame] =
-    robots.filter(!_.isEmpty).map(Robots.perHost).map { collapsed =>
+    robots.filter(r => Robots.localRows(r).fold(!r.isEmpty)(_.nonEmpty)).map(Robots.perHost).map { collapsed =>
       if (!Robots.isLocal(collapsed)) {
         collapsed.cache()
         try collapsed.count() catch { case e: Throwable => collapsed.unpersist(); throw e }
@@ -222,9 +233,22 @@ object CrawlJob {
     def ratesPaths: Seq[String] = log.chain("rates")
   }
 
+  /** A committed table's rows, read with its fixed schema. A table with no
+    * paths yet is a scan of an empty directory, so the first round reads
+    * its empty tables through the same scans, and the same generated
+    * classes, as every later round.
+    */
   private def read(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame =
-    if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(paths: _*)
+    spark.read.schema(schema).parquet((if (paths.nonEmpty) paths else {
+      java.nio.file.Files.createDirectories(emptyDir) // a temp cleaner may have removed it
+      Seq(emptyDir.toUri.toString)
+    }): _*)
+
+  private lazy val emptyDir: java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty")
+    dir.toFile.deleteOnExit()
+    dir
+  }
 
   /** Load the committed state in `checkpointDir` (round 0 and empty tables
     * when nothing is committed) and reconcile its Bloom sidecar. The
@@ -235,9 +259,11 @@ object CrawlJob {
     * commit) and returns the frontier the next round consumes. The committed
     * frame itself is parquet-backed and counted from its footers: no Spark
     * job. Any other frame is a COMPUTED plan (a within-batch dedup window, a
-    * union with new seeds); it is cached and counted here, so the loop guard
-    * and the round's consumers evaluate it once, and the round that consumes
-    * it releases it.
+    * union with new seeds); it is written once beside the snapshot and read
+    * back like a committed frontier, so the loop guard and the round's
+    * consumers evaluate it once, and every round, the first included, reads
+    * its frontier through the same parquet scan and the same generated
+    * classes.
     */
   private[graft] def loadState(spark: SparkSession, checkpointDir: String, bloomParts: Int)(
       frontierOf: Option[DataFrame] => DataFrame): CrawlState = {
@@ -271,19 +297,18 @@ object CrawlJob {
       UrlSeen.writeBloomRound(bloomDir, round)
     }
 
-    val footers = log.path("frontier").map(parquetFooters(spark, _)).getOrElse(Nil)
-    val committed = log.path("frontier")
-      .map(footers.flatMap(_._3).headOption.fold(spark.read)(spark.read.schema).parquet(_))
-    val frontier = frontierOf(committed)
-    val frontierCount =
-      if (committed.exists(_ eq frontier)) footers.map(_._2).sum
-      else {
-        frontier.cache()
-        try frontier.count() catch { case e: Throwable => frontier.unpersist(); throw e }
-      }
-    val hostStates = log.path("hostStates")
-      .map(p => read(spark, HostStateSchema, Seq(p)).as[HostState])
-      .getOrElse(spark.emptyDataset[HostState])
+    def readFrontier(path: String): (DataFrame, Long) = {
+      val footers = parquetFooters(spark, path)
+      (footers.flatMap(_._3).headOption.fold(spark.read)(spark.read.schema).parquet(path), footers.map(_._2).sum)
+    }
+    val committed = log.path("frontier").map(readFrontier)
+    val computed = frontierOf(committed.map(_._1))
+    val (frontier, frontierCount) = committed.filter(_._1 eq computed).getOrElse {
+      val path = log.store.dataPath("frontier-in", log.next)
+      computed.write.mode("overwrite").parquet(path)
+      readFrontier(path)
+    }
+    val hostStates = read(spark, HostStateSchema, log.path("hostStates").toSeq).as[HostState]
     val hostStateCount = log.path("hostStates").map(parquetFooters(spark, _).map(_._2).sum).getOrElse(0L)
     CrawlState(log, frontier, frontierCount, hostStates, hostStateCount)
   }
@@ -296,8 +321,8 @@ object CrawlJob {
     *
     * `keys` (key set → key) are added in the same atomic commit (the stream
     * records its batch id there). Returns the committed state, read
-    * back from the snapshot. The round's caches, and the consumed frontier's,
-    * are released on return and on a throw alike.
+    * back from the snapshot. The round's kept frames are released on return
+    * and on a throw alike.
     *
     * @param robots the per-host rules, None for no robots gate (see
     *               [[activeRules]])
@@ -333,14 +358,14 @@ object CrawlJob {
     // below: Spark runs the frame's exchanges when it is defined and its
     // last stage inside the first job that reads it, which stores the rows
     // — no extra job fills a cache, and no plan upstream of it reaches the
-    // next job. The consumed frontier is released there too (a no-op
-    // unless loadState cached it).
-    val kept = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    def keep(df: DataFrame): DataFrame = {
+    // next job.
+    val kept = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    def keepRows(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
       val (frame, rows) = org.apache.spark.sql.graftbridge.KeptFrame(df)
       kept += rows
-      frame
+      (frame, rows)
     }
+    def keep(df: DataFrame): DataFrame = keepRows(df)._1
 
     val round = state.round + 1
     // the round number as a value the generated code reads, not a literal
@@ -359,16 +384,13 @@ object CrawlJob {
     // hold; a stream's frontier grows with each batch's seeds, and a filter
     // it outgrows is rebuilt at doubled capacity on saturation
     val bloomCapacity = UrlSeen.capacityFor(state.frontierCount, bloomParts)
-    // the broadcast-safety bound (~2M rows ≈ low hundreds of MB of slim
-    // rows): a round whose frontier is below it broadcasts its probe set
-    // and its fetch keys, so neither the seen table nor the page table is
-    // ever shuffled. Every frame derived from the frontier is at most
-    // frontier-sized.
-    val small = state.frontierCount <= 2000000L
+    // a round whose frontier is within the broadcast bound broadcasts its
+    // probe set and its fetch keys (see PlanSize.BroadcastRows)
+    val small = state.frontierCount <= PlanSize.BroadcastRows
     def bcastIfSmall(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // an aggregation over at most OneTaskRows rows runs in one task, with
     // no exchange
-    def inOneTaskIf(rows: Long)(df: DataFrame): DataFrame = if (rows <= OneTaskRows) df.coalesce(1) else df
+    def inOneTaskIf(rows: Long)(df: DataFrame): DataFrame = if (rows <= PlanSize.OneTaskRows) df.coalesce(1) else df
 
     try {
       // 1. one tagged pass over the frontier: every row leaves it with its
@@ -381,17 +403,13 @@ object CrawlJob {
       //    confirm. The per-partition filters were merged with each prior
       //    round's seen DELTA (O(delta)/round, never a full seen rescan; no
       //    driver-sized filter), so per-round dedup cost is flat as the crawl
-      //    grows — the 10^10-URL shape. Nothing seen yet (first round) ⇒ no
-      //    dedup subtree. Retry rows (retries > 0) BYPASS the dupefilter —
-      //    Scrapy re-enqueues retries with dont_filter semantics, and they
-      //    are in `seen` already.
-      val (fresh, dupes) =
-        if (state.seenPaths.isEmpty) (frontier, None)
-        else {
-          val (unseen, seen) = UrlSeen.splitSeenPartitionedBloom(
-            frontier, seenDf, bloomDir, bloomParts, small, probed = col("retries") === 0)
-          (unseen, Some(seen.withColumn("__stage", lit("dedupDropped"))))
-        }
+      //    grows — the 10^10-URL shape. The first round runs the same
+      //    subtree over an empty seen set, so every round has one plan shape
+      //    and one set of generated classes. Retry rows (retries > 0) BYPASS
+      //    the dupefilter — Scrapy re-enqueues retries with dont_filter
+      //    semantics, and they are in `seen` already.
+      val (fresh, dupes) = UrlSeen.splitSeenPartitionedBloom(
+        frontier, seenDf, bloomDir, bloomParts, small, probed = col("retries") === 0)
       //    Offsite (allowed_domains) ranks before robots, as in Scrapy: the
       //    spider middleware drops off-domain requests before they reach
       //    the scheduler/downloader at all. A null verdict drops the row.
@@ -402,12 +420,15 @@ object CrawlJob {
             .when(!coalesce(col(Robots.Verdict), lit(false)), lit("robotsDropped")))
         .drop(Robots.Verdict)
       //    Per-host politeness schedule over the rows every gate passed;
-      //    the dropped rows ride along as ineligible rows, which only the
-      //    schedule's first stage shuffles.
+      //    the dropped rows ride along as ineligible rows. A round whose
+      //    frontier and host table fit OneTaskRows is ranked in one task; a
+      //    larger one's dropped rows are shuffled only by the schedule's
+      //    first stage.
       sc.setJobDescription(s"crawl r$round: extract")
-      val tagged = keep(Scheduler.withSchedule(
-        dupes.fold(gated)(gated.unionByName(_, allowMissingColumns = true)),
-        state.hostStates.toDF(), cfg, roundSec, eligible = col("__stage").isNull, keep = keep)
+      val (tagged, taggedRows) = keepRows(Scheduler.withSchedule(
+        gated.unionByName(dupes.withColumn("__stage", lit("dedupDropped"))),
+        state.hostStates.toDF(), cfg, roundSec, eligible = col("__stage").isNull, keep = keep,
+        rows = state.frontierCount + state.hostStateCount)
         .withColumn("__stage", coalesce(col("__stage"),
           when(col(Scheduler.Scheduled), lit("scheduled")).otherwise(lit("deferred"))))
         .drop(Scheduler.Scheduled))
@@ -432,10 +453,10 @@ object CrawlJob {
           col("text").isNotNull.as("__hit"),
           (col("text").isNotNull && coalesce(route(_.isError(col("text"))), lit(false))).as("__err"),
           route(_.extractRate(col("text"))).as("__rate"))
-      //    The kept frame holds the deferred rows too, so the next frontier
-      //    is one scan of it: a deferred row's url is never a scheduled
-      //    one, so it meets no page.
-      val extracted = keep(tagged.filter(tagIs("scheduled") || tagIs("deferred"))
+      //    The kept frame holds every tagged row, so the next frontier and
+      //    the per-host counts are one scan of it each: a frontier's urls are
+      //    distinct, so a row that was not scheduled meets no page.
+      val extracted = keep(tagged
         .join(bcastIfSmall(fetchedPages),
           col("url") === col("__furl") && col("provider") <=> col("__fprov"), "left")
         .select(frontier.columns.toIndexedSeq.map(col) ++ Seq(
@@ -484,27 +505,27 @@ object CrawlJob {
 
       // 5. host throttle state + per-round fetch/dedup metrics
       //    (north_rule) in ONE per-host aggregation over the prior states
-      //    and the two kept frames, every count conditional: one shuffle of
-      //    (host, stage) rows, or none when its input (at most twice the
+      //    and the kept fetch result, every count conditional: one shuffle
+      //    of (host, stage, outcome) rows, or none when its input (the
       //    frontier plus the host table) fits OneTaskRows. A stage with no
       //    rows for a host counts 0, never null. The three fetch outcomes
-      //    are mutually exclusive and exhaustive (!hit / hit∧is_err /
-      //    hit∧¬is_err).
+      //    of a scheduled row are mutually exclusive and exhaustive (!hit /
+      //    hit∧is_err / hit∧¬is_err).
       //    Metrics rows are the hosts of this round's frontier; host
       //    states are the prior hosts plus the hosts that fetched.
-      val outcome = when(!col("hit"), lit("fetchMissed"))
-        .when(col("is_err"), lit("errorDropped")).otherwise(lit("extractedOk"))
+      val outcome = when(tagIs("scheduled"), when(!col("hit"), lit("fetchMissed"))
+        .when(col("is_err"), lit("errorDropped")).otherwise(lit("extractedOk")))
       val gateStages = Seq("dedupDropped", "offsiteDropped", "robotsDropped", "scheduled", "deferred")
       val outcomes = Seq("fetchMissed", "errorDropped", "extractedOk")
       sc.setJobDescription(s"crawl r$round: hosts")
-      val perHost = keep(inOneTaskIf(2 * state.frontierCount + state.hostStateCount)(state.hostStates.toDF()
-        .unionByName(tagged.select(col("host"), col("__stage")), allowMissingColumns = true)
-        .unionByName(extracted.filter(tagIs("scheduled")).select(col("host"), outcome.as("__stage")),
+      val perHost = keep(inOneTaskIf(state.frontierCount + state.hostStateCount)(state.hostStates.toDF()
+        .unionByName(extracted.select(col("host"), col("__stage"), outcome.as("__outcome")),
           allowMissingColumns = true))
         .groupBy("host")
         .agg(count("delaySec").as("__prior"),
           Scheduler.hostStateAggs(count(when(tagIs("scheduled"), 1))) ++
-            (gateStages ++ outcomes).map(s => count(when(tagIs(s), 1)).as(s)): _*))
+            gateStages.map(s => count(when(tagIs(s), 1)).as(s)) ++
+            outcomes.map(s => count(when(col("__outcome") === s, 1)).as(s)): _*))
       val hostStates1 = Scheduler.nextHostStates(
         perHost.filter(col("__prior") > 0 || col("__f") > 0), cfg, round, roundSec)
       val metricsDelta = perHost
@@ -519,8 +540,9 @@ object CrawlJob {
       //    each is a future and Spark's scheduler interleaves their jobs
       //    across the executor pool. The futures run on Scala's global
       //    execution context, one thread per core: with fewer than six
-      //    cores the last ones start when a thread frees (on 4 vCPUs the
-      //    rates and metrics writes start 0.2-0.5 s after the other four).
+      //    cores the last ones start when a thread frees. The rates upsert
+      //    is submitted first: it is the phase's longest chain (a key
+      //    broadcast, the history probe, then the write).
       def persist(name: String, df: DataFrame): Future[String] = submit(s"crawl r$round: write $name") {
         val p = log.store.dataPath(name, round)
         // reference-parity insert batching (§2#23, pipelines.py's 100-row
@@ -547,23 +569,30 @@ object CrawlJob {
       // them, and re-adding would inflate the saturation counters). The
       // rebuild source (old seen ∪ this delta) is touched only if a
       // partition saturates and must be rebuilt at doubled capacity.
-      val firstTryKeys = sched.filter(col("retries") === 0).select(col("urlHash"))
+      // The keys are read off the kept tagged rows by ordinal: no plan, so
+      // no generated class.
+      val Seq(stageAt, retriesAt, hashAt) = Seq("__stage", "retries", "urlHash").map(tagged.schema.fieldIndex)
+      val scheduled = org.apache.spark.unsafe.types.UTF8String.fromString("scheduled")
+      val firstTryKeys = taggedRows
+        .filter(r => r.getUTF8String(stageAt) == scheduled && !r.isNullAt(retriesAt) && r.getInt(retriesAt) == 0)
+        .map(_.getLong(hashAt))
+      val ratesWrite = persist("rates", newRates)
       val bloomMerge = submit(s"crawl r$round: bloom merge") {
-        UrlSeen.mergeDeltaIntoPartitionedBlooms(
+        UrlSeen.mergeDeltaKeys(
           firstTryKeys,
-          seenDf.select("urlHash").unionByName(firstTryKeys),
+          seenDf.select("urlHash").unionByName(sched.filter(col("retries") === 0).select(col("urlHash"))),
           bloomDir, bloomParts, bloomCapacity)
         UrlSeen.writeBloomRound(bloomDir, round)
         "blooms"
       }
       val writes = Future.sequence(Seq(
+        ratesWrite,
+        bloomMerge,
         persist("frontier", frontier1),
         persist("hostStates", hostStates1.toDF()),
         persist("seen", seenDelta),
-        persist("rates", newRates),
-        persist("metrics", metricsDelta),
-        bloomMerge))
-      val Seq(frontierPath, hostStatesPath, seenPath, ratesPath, metricsPath, _) =
+        persist("metrics", metricsDelta)))
+      val Seq(ratesPath, _, frontierPath, hostStatesPath, seenPath, metricsPath) =
         Await.result(writes, Duration.Inf)
 
       // per-partition lineage (north_rule): file-granular row counts of
@@ -587,16 +616,15 @@ object CrawlJob {
             .map { case (f, n, _) => (round, name, f, n) }
         }
       val lineagePath = log.store.dataPath("lineage", round)
-      sc.setJobDescription(s"crawl r$round: lineage")
-      spark.createDataFrame(
-        java.util.Arrays.asList(lineageRows.map(org.apache.spark.sql.Row.fromTuple): _*), LineageSchema)
-        .write.mode("overwrite").parquet(lineagePath)
+      writeLineage(spark, lineagePath, lineageRows)
 
       // delta-chain compaction by the table log's rule, every
       // `compactEvery` rounds. Per-round provenance is preserved because
-      // every append-only row carries its `round` as data. The four chains
-      // are independent and are rewritten concurrently, like the data
-      // writes above.
+      // every append-only row carries its `round` as data. A small chain
+      // is merged on the driver by copying its files' column chunks, with no
+      // job (see TableLog.compact); larger ones are rewritten by Spark. The
+      // four chains are independent and are compacted concurrently, like
+      // the data writes above.
       val deltas = Seq(
         ("seen", SeenSchema, seenPath),
         ("rates", RatesSchema, ratesPath),
@@ -619,9 +647,6 @@ object CrawlJob {
         lineageRows.filter(_._2 == "frontier").map(_._4).sum,
         read(spark, HostStateSchema, Seq(hostStatesPath)).as[HostState],
         parquetFooters(spark, hostStatesPath).map(_._2).sum)
-    } finally {
-      state.frontier.unpersist()
-      kept.foreach(_.unpersist())
-    }
+    } finally kept.foreach(_.unpersist())
   }
 }

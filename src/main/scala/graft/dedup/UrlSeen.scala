@@ -76,9 +76,11 @@ object UrlSeen {
       parts: Int,
       expectedItemsPerPart: Long = 1000000L,
       fpp: Double = 0.01): Unit =
-    writeFilters(
-      seen.select(col("urlHash"), pmod(col("urlHash"), lit(parts.toLong)).as("pm")),
-      dir, parts, _ => expectedItemsPerPart, fpp, loadExisting = false): Unit
+    writeFilters(hashes(seen), dir, parts, _ => expectedItemsPerPart, fpp, loadExisting = false): Unit
+
+  /** The `urlHash` column of `df` as a key RDD. */
+  private def hashes(df: DataFrame): org.apache.spark.rdd.RDD[Long] =
+    df.select(col("urlHash")).queryExecution.toRdd.map(_.getLong(0))
 
   /** Smallest per-partition filter capacity: below it the 2× headroom of
     * [[capacityFor]] is too thin against the spread of keys over partitions.
@@ -108,19 +110,30 @@ object UrlSeen {
       dir: String,
       parts: Int,
       capacityPerPart: Long = 1L << 18,
+      fpp: Double = 0.01): Unit =
+    mergeDeltaKeys(hashes(delta), seenWithDelta, dir, parts, capacityPerPart, fpp)
+
+  /** [[mergeDeltaIntoPartitionedBlooms]] over the delta's keys as an RDD:
+    * a caller that holds the rows already filters them with no plan, and
+    * so with no generated class.
+    */
+  private[graft] def mergeDeltaKeys(
+      delta: org.apache.spark.rdd.RDD[Long],
+      seenWithDelta: => DataFrame,
+      dir: String,
+      parts: Int,
+      capacityPerPart: Long,
       fpp: Double = 0.01): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val withPm = delta.select(col("urlHash"), pmod(col("urlHash"), lit(parts.toLong)).as("pm"))
-    val results = writeFilters(withPm, dir, parts, _ => capacityPerPart, fpp, loadExisting = true)
+    val results = writeFilters(delta, dir, parts, _ => capacityPerPart, fpp, loadExisting = true)
     val saturated = results.filter { case (_, cap, n) => n > cap }
     if (saturated.nonEmpty) {
       val capOf: Map[Long, Long] =
         saturated.map { case (pm, cap, n) => pm -> math.max(2 * cap, 2 * n) }.toMap
       val full = seenWithDelta
         .select(col("urlHash")).distinct() // retries re-append; count distinct keys
-        .select(col("urlHash"), pmod(col("urlHash"), lit(parts.toLong)).as("pm"))
-        .filter(col("pm").isin(capOf.keys.toSeq: _*))
-      writeFilters(full, dir, parts, capOf, fpp, loadExisting = false): Unit
+        .filter(pmod(col("urlHash"), lit(parts.toLong)).isin(capOf.keys.toSeq: _*))
+      writeFilters(hashes(full), dir, parts, capOf, fpp, loadExisting = false): Unit
     }
   }
 
@@ -130,20 +143,20 @@ object UrlSeen {
     * touched partition so callers can detect saturation without a separate
     * counting job.
     *
-    * The keys travel as an RDD of (pm, urlHash) pairs, hash-partitioned by
-    * `pm` into `parts` partitions — one `pm` per partition, since pm <
-    * parts — so each task streams its keys into one filter, and the whole
-    * merge is one job that generates no code.
+    * The keys travel as (pm, urlHash) pairs, pm = pmod(urlHash, parts),
+    * hash-partitioned by `pm` into `parts` partitions — one `pm` per
+    * partition, since pm < parts — so each task streams its keys into one
+    * filter, and the whole merge is one job that generates no code.
     */
   private def writeFilters(
-      keyed: DataFrame, // (urlHash, pm)
+      keys: org.apache.spark.rdd.RDD[Long],
       dir: String,
       parts: Int,
       capacityOf: Long => Long,
       fpp: Double,
       loadExisting: Boolean): Array[(Long, Long, Long)] =
-    keyed.queryExecution.toRdd
-      .map(r => (r.getLong(1), r.getLong(0)))
+    keys
+      .map(h => (Math.floorMod(h, parts.toLong), h))
       .partitionBy(new org.apache.spark.HashPartitioner(parts))
       .mapPartitions { rows =>
         val keys = rows.buffered

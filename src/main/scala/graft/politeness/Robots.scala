@@ -160,31 +160,44 @@ object Robots {
     * table whenever it is actually small, and shuffles on host otherwise.
     */
   def perHost(rules: DataFrame): DataFrame = {
-    val valid = rules.select("host", "pathPrefix", "allow")
-      .filter(col("pathPrefix").isNotNull && col("allow").isNotNull)
     def isWild(p: String): Boolean = p.contains("*") || p.contains("$")
-    if (isLocal(valid)) {
-      val collapsed = valid.collect().toSeq.groupBy(_.getString(0)).toSeq.map { case (host, rs) =>
-        val (wild, plain) = rs.partition(r => isWild(r.getString(1)))
-        Row(host,
-          plain.map(r => Row(r.getString(1), r.getBoolean(2))),
-          wild.map(r => Row(patternToRegex(r.getString(1)), r.getString(1).length, r.getBoolean(2))))
-      }
-      rules.sparkSession.createDataFrame(collapsed.asJava, PerHostSchema)
-    } else {
-      val wild = udf((p: String) => isWild(p)).apply(col("pathPrefix"))
-      val rx = udf((p: String) => patternToRegex(p))
-      // collect_list skips the nulls the unmatched when() branches produce
-      valid.groupBy(col("host").as("__rhost")).agg(
-        collect_list(when(!wild, struct(col("pathPrefix").as("p"), col("allow").as("a")))).as("__rules"),
-        collect_list(when(wild, struct(rx(col("pathPrefix")).as("rx"),
-          length(col("pathPrefix")).as("len"), col("allow").as("a")))).as("__wrules"))
+    localRows(rules) match {
+      case Some(rows) =>
+        val Seq(h, p, a) = Seq("host", "pathPrefix", "allow").map(rules.schema.fieldIndex)
+        val collapsed = rows.filter(r => !r.isNullAt(p) && !r.isNullAt(a)).groupBy(_.getString(h)).toSeq
+          .map { case (host, rs) =>
+            val (wild, plain) = rs.partition(r => isWild(r.getString(p)))
+            Row(host,
+              plain.map(r => Row(r.getString(p), r.getBoolean(a))),
+              wild.map(r => Row(patternToRegex(r.getString(p)), r.getString(p).length, r.getBoolean(a))))
+          }
+        rules.sparkSession.createDataFrame(collapsed.asJava, PerHostSchema)
+      case None =>
+        val valid = rules.filter(col("pathPrefix").isNotNull && col("allow").isNotNull)
+        val wild = udf((p: String) => isWild(p)).apply(col("pathPrefix"))
+        val rx = udf((p: String) => patternToRegex(p))
+        // collect_list skips the nulls the unmatched when() branches produce
+        valid.groupBy(col("host").as("__rhost")).agg(
+          collect_list(when(!wild, struct(col("pathPrefix").as("p"), col("allow").as("a")))).as("__rules"),
+          collect_list(when(wild, struct(rx(col("pathPrefix")).as("rx"),
+            length(col("pathPrefix")).as("len"), col("allow").as("a")))).as("__wrules"))
     }
   }
 
+  /** The rows of a table held in driver memory, read off its local
+    * relation: no Spark job and no generated class. None for any other
+    * table.
+    */
+  private[graft] def localRows(df: DataFrame): Option[Seq[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(l.schema)
+        Some(l.data.map(toRow(_).asInstanceOf[Row]))
+      case _ => None
+    }
+
   /** True when `df` is a table held in driver memory. */
-  private[graft] def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+  private[graft] def isLocal(df: DataFrame): Boolean = localRows(df).isDefined
 
   /** `frontier` plus the boolean [[Verdict]]: true where (host, path) is
     * allowed by `perHostRules` ([[perHost]]).

@@ -24,7 +24,11 @@ import graft.model.{HostState, PolitenessConfig}
   *     and no single task ever sorts a whole hot host.
   *  2. exact budget: a second rank inside `host` over ≤ S·budget rows.
   *
-  * Both stages are window functions over explicit `(priority desc, seq)`
+  * A frontier small enough for one task has no skew to split: it skips the
+  * salt and is ranked by one exact window per host in one partition, with
+  * no shuffle at all.
+  *
+  * All stages are window functions over explicit `(priority desc, seq)`
   * sort keys — ordering is data, never shuffle order. Per-host token-bucket
   * state (AutoThrottle delay) is a tiny one-row-per-host table updated by
   * one per-host aggregation and checkpointed between rounds.
@@ -64,47 +68,96 @@ object Scheduler {
     * tagged pass serves the fetch set and the next frontier alike, so no
     * second scan subtracts the one from the other.
     *
-    * Only the first stage shuffles the whole frontier, and no window ranks
-    * a whole hot host: each later stage ranks only the rows the stage
-    * before left eligible (per host at most Salts × budget, or Salts ×
-    * maxGlobal for the global cap) in one group per host (or one in all),
-    * and the other rows bypass it. Both read the first stage's output, so
-    * a caller that reads the result more than once passes a `keep` that
-    * stores it (see [[graft.crawl.CrawlJob.crawlRound]]); the first stage
-    * then runs once.
+    * `rows` bounds the rows of the frontier and the host states together.
+    * Up to [[graft.util.PlanSize.OneTaskRows]] they are ranked in one task
+    * ([[inOneTask]]); more, or an unknown size, take the salted path
+    * ([[salted]]), which shuffles the frontier. Both flag the same rows.
     */
-  def withSchedule(
+  private[graft] def withSchedule(
+      frontier: DataFrame,
+      hostStates: DataFrame,
+      cfg: PolitenessConfig,
+      roundSec: Double,
+      eligible: Column = lit(true),
+      keep: DataFrame => DataFrame = identity,
+      rows: Long = Long.MaxValue): DataFrame =
+    if (rows <= graft.util.PlanSize.OneTaskRows) inOneTask(frontier, hostStates, cfg, roundSec, eligible)
+    else salted(frontier, hostStates, cfg, roundSec, eligible, keep)
+
+  /** The frontier with its host's `__budget` and its `__eligible` flag.
+    *
+    * The host states ([[delays]]) are deliberately NOT hinted broadcast:
+    * they grow with DISTINCT HOSTS CRAWLED — one row per host is kilobytes
+    * for a focused crawl but multi-GB at 10^8 web hosts, where a forced
+    * broadcast is an OOM. The planner still broadcasts them whenever the
+    * table is actually small (every bench/test here) and shuffles on host —
+    * which the per-host windows shuffle by anyway — when it is not.
+    */
+  private def budgeted(
+      frontier: DataFrame,
+      hostStates: DataFrame,
+      cfg: PolitenessConfig,
+      roundSec: Double,
+      eligible: Column): DataFrame = {
+    val budgetUdf = udf((delay: Double) => budgetFor(delay, roundSec, cfg))
+    frontier
+      .join(hostStates, col("host") === col("__shost"), "left")
+      .withColumn("__budget", budgetUdf(coalesce(col("__delay"), lit(cfg.startDelaySec))))
+      .withColumn("__eligible", eligible)
+      .drop("__shost", "__delay")
+  }
+
+  /** One rank stage: rank inside the `by` groups of the rows with the same
+    * `__eligible`, by `(priority desc, seq)`; a candidate stays eligible
+    * while its rank is within `bound`.
+    */
+  private def stage(df: DataFrame, bound: Column, by: Column*): DataFrame =
+    df.withColumn("__rank", row_number().over(
+        Window.partitionBy(by :+ col("__eligible"): _*).orderBy(col("priority").desc, col("seq"))))
+      .withColumn("__eligible", col("__eligible") && col("__rank") <= bound)
+      .drop("__rank")
+
+  /** The host states' (host, delaySec), as [[budgeted]] joins them. */
+  private def delays(hostStates: DataFrame): DataFrame =
+    hostStates.select(col("host").as("__shost"), col("delaySec").as("__delay"))
+
+  /** [[withSchedule]] for a frontier that fits one task: the input is
+    * coalesced once, so one exact window per host (and one over all rows
+    * for a finite `maxGlobal`) ranks it with no exchange, no pre-prune and
+    * no bypass union. The host states join as in [[salted]].
+    */
+  private[graft] def inOneTask(
+      frontier: DataFrame,
+      hostStates: DataFrame,
+      cfg: PolitenessConfig,
+      roundSec: Double,
+      eligible: Column = lit(true)): DataFrame = {
+    val budgets = budgeted(frontier.coalesce(1), delays(hostStates), cfg, roundSec, eligible)
+    val perHost = stage(budgets, col("__budget"), col("host"))
+    val capped = if (cfg.maxGlobal == Int.MaxValue) perHost else stage(perHost, lit(cfg.maxGlobal))
+    capped.withColumnRenamed("__eligible", Scheduled).drop("__budget")
+  }
+
+  /** [[withSchedule]] for a frontier of any size, in salted stages. Only the
+    * first stage shuffles the whole frontier, and no window ranks a whole
+    * hot host: each later stage ranks only the rows the stage before left
+    * eligible (per host at most Salts × budget, or Salts × maxGlobal for the
+    * global cap) in one group per host (or one in all), and the other rows
+    * bypass it. Both read the first stage's output, so a caller that reads
+    * the result more than once passes a `keep` that stores it (see
+    * [[graft.crawl.CrawlJob.crawlRound]]); the first stage then runs once.
+    */
+  private[graft] def salted(
       frontier: DataFrame,
       hostStates: DataFrame,
       cfg: PolitenessConfig,
       roundSec: Double,
       eligible: Column = lit(true),
       keep: DataFrame => DataFrame = identity): DataFrame = {
-    val budgetUdf = udf((delay: Double) => budgetFor(delay, roundSec, cfg))
-    val states = hostStates.select(col("host").as("__shost"), col("delaySec").as("__delay"))
-
-    // deliberately NOT hinted broadcast: hostStates grows with DISTINCT
-    // HOSTS CRAWLED — one row per host is kilobytes for a focused crawl but
-    // multi-GB at 10^8 web hosts, where a forced broadcast is an OOM. AQE
-    // still picks a broadcast join whenever the table is actually small
-    // (every bench/test here) and degrades to a shuffle on host — which the
-    // downstream per-host windows shuffle by anyway — when it is not.
-    val withBudget = frontier
-      .join(states, col("host") === col("__shost"), "left")
-      .withColumn("__budget", budgetUdf(coalesce(col("__delay"), lit(cfg.startDelaySec))))
-      .withColumn("__eligible", eligible)
-      .drop("__shost", "__delay")
-    // one rank stage: rank inside (ghost, gsalt, __eligible) groups; a
-    // candidate stays eligible while its rank is within `bound`
-    def stage(df: DataFrame, ghost: Column, gsalt: Column, bound: Column): DataFrame =
-      df.withColumn("__rank", row_number().over(
-          Window.partitionBy(ghost, gsalt, col("__eligible")).orderBy(col("priority").desc, col("seq"))))
-        .withColumn("__eligible", col("__eligible") && col("__rank") <= bound)
-        .drop("__rank")
     // a later stage: only the rows still eligible are ranked (and so
     // shuffled) again; the rest keep their flag and bypass it
-    def narrow(df: DataFrame, ghost: Column, gsalt: Column, bound: Column): DataFrame =
-      stage(df.filter(col("__eligible")), ghost, gsalt, bound).unionByName(df.filter(!col("__eligible")))
+    def narrow(df: DataFrame, bound: Column, by: Column*): DataFrame =
+      stage(df.filter(col("__eligible")), bound, by: _*).unionByName(df.filter(!col("__eligible")))
     // over a later stage's rows (all eligible) these keys are constant, so
     // the survivors share one group per host, or one in all; they are not
     // literals, which constant folding would strip from the window's
@@ -114,9 +167,10 @@ object Scheduler {
     val ownHost = when(!col("__eligible"), col("host"))
 
     // stage 1: salted pre-prune (lossless superset of the per-host top-budget)
-    val pruned = keep(stage(withBudget, col("host"), salt, col("__budget")))
+    val budgets = budgeted(frontier, delays(hostStates), cfg, roundSec, eligible)
+    val pruned = keep(stage(budgets, col("__budget"), col("host"), salt))
     // stage 2: exact per-host budget over the pruned (small) remainder
-    val perHost = narrow(pruned, col("host"), shared, col("__budget"))
+    val perHost = narrow(pruned, col("__budget"), col("host"), shared)
 
     // stages 3-4: GLOBAL concurrency cap (reference CONCURRENT_REQUESTS=50,
     // settings.py:25) — at most cfg.maxGlobal fetches per round across all
@@ -128,8 +182,8 @@ object Scheduler {
     val capped =
       if (cfg.maxGlobal == Int.MaxValue) perHost
       else {
-        val gPruned = narrow(perHost, ownHost, salt, lit(cfg.maxGlobal))
-        narrow(gPruned, ownHost, shared, lit(cfg.maxGlobal))
+        val gPruned = narrow(perHost, lit(cfg.maxGlobal), ownHost, salt)
+        narrow(gPruned, lit(cfg.maxGlobal), ownHost, shared)
       }
     capped.withColumnRenamed("__eligible", Scheduled).drop("__budget")
   }

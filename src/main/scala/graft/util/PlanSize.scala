@@ -38,6 +38,24 @@ object PlanSize {
   def fitsOnePartition(df: DataFrame): Boolean =
     upperBoundBytes(df).exists(_ <= partitionBytes(df))
 
+  /** The most rows a crawl round aggregates or ranks in one task instead of
+    * through a shuffle; callers count rows from parquet footers, with no
+    * job. Measured on 4 vCPUs (local[4], 4 shuffle partitions, the round's
+    * per-host aggregation and its rates dedup over cached rows): one task
+    * was faster up to 250k rows (hosts 202 vs 240 ms, rates 397 vs 434 ms)
+    * and slower from 400k (232 vs 261 ms, 449 vs 637 ms). More cores only
+    * move the crossover down.
+    */
+  val OneTaskRows = 250000L
+
+  /** The most frontier rows a crawl round broadcasts: its Bloom probe set
+    * and its fetch keys, so neither the seen table nor the page table is
+    * ever shuffled. About 2M slim rows is low hundreds of MB, the
+    * broadcast-safety bound; every frame a round derives from its frontier
+    * is at most frontier-sized.
+    */
+  val BroadcastRows = 2000000L
+
   /** Rows a generator emits per input row, when it explodes a constant. */
   private def rowsPerInput(g: Generator): Option[Long] = g match {
     case e: ExplodeBase if e.child.foldable => Some(e.child.eval() match {

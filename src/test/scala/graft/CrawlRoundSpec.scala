@@ -83,6 +83,33 @@ class CrawlRoundSpec extends SparkSpec {
     assert(jobs.nonEmpty && jobs.size <= 16, jobs.map(_.description).mkString("\n"))
   }
 
+  /** Spark's codegen cache, a private JVM-wide Guava cache, by reflection. */
+  private lazy val codegenCache = {
+    val owner = Class.forName("org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$")
+    val accessor = owner.getDeclaredMethod("cache")
+    accessor.setAccessible(true)
+    accessor.invoke(owner.getField("MODULE$").get(null))
+  }
+
+  test("a warm plain and a warm compacting round each fill at most 60 codegen-cache entries") {
+    val (frontier, pages, robots) = polite(0L until 1200L)
+    val dir = tmp("crawlEntries")
+    // entries after round n, from an empty cache: the round's whole working
+    // set, whichever cache segments its keys hash to
+    def entries(n: Int): Long = {
+      codegenCache.getClass.getMethod("invalidateAll").invoke(codegenCache)
+      CrawlJob.run(spark, frontier, pages, robots, dir, cfg, roundSec = 10.0, maxRounds = n,
+        compactEvery = 2)
+      codegenCache.getClass.getMethod("size").invoke(codegenCache).asInstanceOf[Long]
+    }
+    (1 to 2).foreach(entries) // the fresh round, then the first resumed one
+    val plain = entries(3)
+    val compacting = entries(4)
+    assert(new SnapshotStore(dir).currentVersion() === Some(4), "the crawl drained early")
+    assert(plain <= 60, s"a plain round filled $plain entries")
+    assert(compacting <= 60, s"a compacting round filled $compacting entries")
+  }
+
   /** The round as it was written with an anti-join, a six-way union and a
     * full rates-history anti-join, over the state `loadState` returns.
     */

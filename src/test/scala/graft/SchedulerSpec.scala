@@ -78,6 +78,36 @@ class SchedulerSpec extends SparkSpec {
     assert(uncapped.count() === 4)
   }
 
+  test("one-task rank flags exactly the rows the salted rank flags, with no shuffle below its window") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    object Nodes extends AdaptiveSparkPlanHelper
+    // a hot host far over its budget, a host only in hostStates, hosts absent
+    // from hostStates (start delay), three priorities (ties broken by seq)
+    // and about one ineligible row in six
+    val hosts = Seq("hot.com", "slow.com", "a.com", "b.com", "c.com")
+    val states = Seq(HostState("hot.com", 0.5, 10.0, 3L), HostState("slow.com", 40.0, 10.0, 1L),
+      HostState("gone.com", 1.0, 10.0, 9L)).toDS().toDF()
+    val small = cfg.copy(maxPerHost = 12)
+    for (seed <- 1 to 4; c <- Seq(small.copy(maxGlobal = Int.MaxValue), small.copy(maxGlobal = 20))) {
+      val rnd = new scala.util.Random(seed)
+      val f = rnd.shuffle((1L to 400L).toList).map { seq =>
+        val host = if (rnd.nextInt(2) == 0) "hot.com" else hosts(rnd.nextInt(hosts.size))
+        (host, s"https://$host/p$seq", rnd.nextInt(3), seq, rnd.nextInt(6) != 0)
+      }.toDF("host", "url", "priority", "seq", "ok")
+      def flags(df: org.apache.spark.sql.DataFrame) =
+        df.select("seq", Scheduler.Scheduled).as[(Long, Boolean)].collect().toMap
+      val oneTask = Scheduler.withSchedule(f, states, c, 10.0, eligible = col("ok"), rows = 400L)
+      val got = flags(oneTask)
+      assert(got === flags(Scheduler.salted(f, states, c, 10.0, eligible = col("ok"))), s"seed $seed, $c")
+      assert(got.size === 400 && got.values.exists(identity) && got.values.exists(!_))
+      val plan = oneTask.queryExecution.executedPlan
+      assert(Nodes.collect(plan) { case w: WindowExec => w }.nonEmpty, plan.treeString)
+      assert(Nodes.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan.treeString)
+    }
+  }
+
   test("host state update: AutoThrottle AIMD converges toward latency/target") {
     val sched = frontier(("a.com", "u1", 0, 1L)).withColumn("x", lit(1))
     val s0 = spark.emptyDataset[HostState]
