@@ -534,16 +534,10 @@ object SparkEntry {
       // concurrently (each construction runs its capped-stream checkpoint
       // job; the Dsir/CrawlJob write-phase idiom, guide §2.6) so the
       // closure's input pays one generator latency, not three
-      val pairSources = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future.sequence(Seq(
-          Future(graft.dedup.DocDedup.minhashPairs(allDocs, threshold = 0.9)),
-          Future(graft.dedup.DocDedup.simhashPairs(allDocs, maxHamming = 3)),
-          Future(graft.ann.Ann.cosineNearDupPairs(allEmb, threshold = 0.95)))),
-          Duration.Inf)
-      }
+      val pairSources = graft.util.Sessions.concurrently(s.sparkContext)(
+        () => graft.dedup.DocDedup.minhashPairs(allDocs, threshold = 0.9),
+        () => graft.dedup.DocDedup.simhashPairs(allDocs, maxHamming = 3),
+        () => graft.ann.Ann.cosineNearDupPairs(allEmb, threshold = 0.95))
       graft.dedup.Clusters.dedupCorpusFrom(allDocs, pairSources)
         .filter(col("id") < 3 || col("id") >= off)
         .orderBy("id")
@@ -621,15 +615,9 @@ object SparkEntry {
         lit(off + 2).as("doc_id"), upper(col("text")).as("text"))
       val allDocs = docs.unionByName(reversed1).unionByName(upper0)
       // independent generators constructed concurrently (the q37 move)
-      val pairSources = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future.sequence(Seq(
-          Future(graft.dedup.DocDedup.minhashPairs(allDocs, threshold = 0.9)),
-          Future(graft.dedup.DocDedup.simhashPairs(allDocs, maxHamming = 3)))),
-          Duration.Inf)
-      }
+      val pairSources = graft.util.Sessions.concurrently(s.sparkContext)(
+        () => graft.dedup.DocDedup.minhashPairs(allDocs, threshold = 0.9),
+        () => graft.dedup.DocDedup.simhashPairs(allDocs, maxHamming = 3))
       graft.pipeline.Corpus.cleanWithNearDup(allDocs, pairSources)
         .filter(col("id") < 2 || col("id") >= off)
         .orderBy("id")

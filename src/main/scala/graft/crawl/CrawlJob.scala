@@ -14,7 +14,7 @@ import graft.checkpoint.{SnapshotStore, TableLog}
 import graft.dedup.UrlSeen
 import graft.model.{HostState, PolitenessConfig}
 import graft.politeness.{Robots, Scheduler}
-import graft.util.PlanSize
+import graft.util.{PlanSize, Sessions}
 
 /** The crawl lifecycle (SURVEY.md §3.2 Spark equivalent): resumable
   * micro-batch rounds of
@@ -346,14 +346,6 @@ object CrawlJob {
     val log = state.log
     val bloomDir = s"$checkpointDir/blooms"
     val sc = spark.sparkContext
-    // A job submitted from a pool thread. The description is thread-local,
-    // so it is set inside the future, and cleared after it so the pool
-    // thread carries no stale label into its next task.
-    def submit[T](description: String)(body: => T): Future[T] =
-      Future {
-        sc.setJobDescription(description)
-        try body finally sc.setJobDescription(null)
-      }
     // Every frame the round keeps is a KeptFrame, released in the `finally`
     // below: Spark runs the frame's exchanges when it is defined and its
     // last stage inside the first job that reads it, which stores the rows
@@ -543,23 +535,24 @@ object CrawlJob {
       //    cores the last ones start when a thread frees. The rates upsert
       //    is submitted first: it is the phase's longest chain (a key
       //    broadcast, the history probe, then the write).
-      def persist(name: String, df: DataFrame): Future[String] = submit(s"crawl r$round: write $name") {
-        val p = log.store.dataPath(name, round)
-        // reference-parity insert batching (§2#23, pipelines.py's 100-row
-        // executemany chunks): when enabled, each committed RATES file
-        // holds at most `insertBatchRows` rows — the storage-layer twin of
-        // the reference's batched inserts. Off by default: at 10^10 URLs
-        // the round delta is the right commit unit, and a literal 100-row
-        // chunking would explode the file count; the knob exists for
-        // byte-level compat, not as the scale path.
-        val w = insertBatchRows match {
-          case Some(n) if name == "rates" =>
-            df.write.option("maxRecordsPerFile", n.toLong)
-          case _ => df.write
+      def persist(name: String, df: DataFrame): Future[String] =
+        Sessions.submit(sc, s"crawl r$round: write $name") {
+          val p = log.store.dataPath(name, round)
+          // reference-parity insert batching (§2#23, pipelines.py's 100-row
+          // executemany chunks): when enabled, each committed RATES file
+          // holds at most `insertBatchRows` rows — the storage-layer twin of
+          // the reference's batched inserts. Off by default: at 10^10 URLs
+          // the round delta is the right commit unit, and a literal 100-row
+          // chunking would explode the file count; the knob exists for
+          // byte-level compat, not as the scale path.
+          val w = insertBatchRows match {
+            case Some(n) if name == "rates" =>
+              df.write.option("maxRecordsPerFile", n.toLong)
+            case _ => df.write
+          }
+          w.mode("overwrite").parquet(p)
+          p
         }
-        w.mode("overwrite").parquet(p)
-        p
-      }
       // incremental Bloom maintenance rides the same concurrent write phase
       // (it reads only the kept tagged frame) and, like the data writes,
       // completes BEFORE the manifest commit — the superset invariant (see
@@ -577,7 +570,7 @@ object CrawlJob {
         .filter(r => r.getUTF8String(stageAt) == scheduled && !r.isNullAt(retriesAt) && r.getInt(retriesAt) == 0)
         .map(_.getLong(hashAt))
       val ratesWrite = persist("rates", newRates)
-      val bloomMerge = submit(s"crawl r$round: bloom merge") {
+      val bloomMerge = Sessions.submit(sc, s"crawl r$round: bloom merge") {
         UrlSeen.mergeDeltaKeys(
           firstTryKeys,
           seenDf.select("urlHash").unionByName(sched.filter(col("retries") === 0).select(col("urlHash"))),
@@ -631,7 +624,7 @@ object CrawlJob {
         ("metrics", MetricsSchema, metricsPath),
         ("lineage", LineageSchema, lineagePath))
       val chains = Await.result(Future.sequence(deltas.map { case (name, schema, delta) =>
-        submit(s"crawl r$round: compact $name") {
+        Sessions.submit(sc, s"crawl r$round: compact $name") {
           name -> log.compact(name, log.chain(name) :+ delta, compactEvery)(read(spark, schema, _))
         }
       }), Duration.Inf)

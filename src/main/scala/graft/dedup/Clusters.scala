@@ -18,10 +18,8 @@ import org.apache.spark.sql.functions._
   * stay distributed end to end, so 10^9 duplicate pairs resolve with the
   * same plan shape as 10^3.
   *
-  * Iteration state is parquet-checkpointed to a scratch directory each
-  * round (lineage truncation — the iterative-algorithm idiom this repo also
-  * uses in the crawl loop) rather than cached: a lazily-returned cached
-  * frame could never be safely unpersisted by the library.
+  * Iteration state is a [[graft.util.Scratch]] checkpoint per round
+  * (lineage truncation, the loop operators' one mechanism).
   */
 object Clusters {
 
@@ -80,46 +78,12 @@ object Clusters {
       idColB: String = "id_b",
       maxIter: Int = 50,
       workDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    // scratch lives on whatever filesystem spark.write resolves against
-    // (the default FS — NOT necessarily the driver's local disk), so all
-    // cleanup goes through the Hadoop FileSystem API: a java.nio delete
-    // would silently no-op against hdfs://-style paths and leak every
-    // iteration. The FINAL iteration's files back the returned (lazy)
-    // DataFrame and cannot be deleted here: callers that pass `workDir` own
-    // its lifetime; the auto-created scratch is removed best-effort at JVM
-    // exit.
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val scratch = workDir.getOrElse {
-      val dir = java.nio.file.Files.createTempDirectory("graft-cc").toString
-      registerScratchCleanup(hadoopConf, dir)
-      dir
-    }
-
-    def checkpoint(df: DataFrame, iter: Int): DataFrame = {
-      val p = s"$scratch/iter-$iter"
-      df.write.mode("overwrite").parquet(p)
-      // previous iteration's files are no longer referenced by any plan
-      if (iter > 0) deleteRecursively(hadoopConf, s"$scratch/iter-${iter - 1}")
-      spark.read.parquet(p)
-    }
-
-    /** Checkpoint + convergence signature in ONE job: the (count,
-      * xor-of-hashes) set signature rides the checkpoint write as an
-      * `Observation` instead of a separate aggregation job over the
-      * re-read parquet — one action per iteration, not two (guide §1.5 /
-      * §2.4: don't pay a second pass for a scalar the first pass already
-      * saw).
-      */
-    def checkpointWithSig(df: DataFrame, iter: Int): (DataFrame, (Long, Long)) = {
-      val obs = org.apache.spark.sql.Observation(s"graft.cc.sig.$iter.${System.nanoTime()}")
-      val out = checkpoint(
-        df.observe(obs, count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("x")),
-        iter)
-      val m = obs.get
-      (out, (m("n").asInstanceOf[Long], m("x").asInstanceOf[Long]))
-    }
+    // the FINAL iteration's files back the returned (lazy) DataFrame:
+    // callers that pass `workDir` own its lifetime
+    val scratch = graft.util.Scratch(pairs.sparkSession, workDir, "graft-cc")
+    // order-insensitive set signature (count, xor of hashes), observed on
+    // the checkpoint write itself: one action per iteration, not two
+    val signature = Seq(count(lit(1)), coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)))
 
     // canonical edge set: (min, max), no self-loops, no duplicates —
     // checkpointed BEFORE the first iteration: largeStar references its
@@ -129,31 +93,30 @@ object Clusters {
     // does not dedup the sides; measured ~2x on the mixed-source q37).
     // Pair generation is the expensive stage at any scale — it must run
     // exactly once.
-    var edges = checkpoint(
+    var edges = scratch.checkpoint(
       pairs
         .select(
           least(col(idColA).cast("long"), col(idColB).cast("long")).as("src"),
           greatest(col(idColA).cast("long"), col(idColB).cast("long")).as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct(),
-      0)
+      "iter-0")
 
     // iterate until the (canonical) edge set is stable: at the fixed point
     // every component is a star rooted at its minimum id
-    var prev: Option[(Long, Long)] = None
+    var prev: Option[Seq[Long]] = None
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
       iter += 1
-      // order-insensitive set checksum on the SAME job as the checkpoint
-      // write (checkpointWithSig — no separate aggregation pass).
-      // Known trade: two DIFFERENT consecutive edge sets with equal counts
-      // whose 64-bit xor-of-hashes collide would declare convergence one
-      // iteration early (probability ~2^-64 per iteration — the xor of
-      // xxhash64 values over a changed set is uniformly distributed). An
-      // exact set compare would cost a full anti-join per iteration;
-      // accepted odds, documented rather than paid for.
-      val (next, sig) = checkpointWithSig(smallStar(largeStar(edges)), iter)
+      // Known trade of the signature: two DIFFERENT consecutive edge sets
+      // with equal counts whose 64-bit xor-of-hashes collide would declare
+      // convergence one iteration early (probability ~2^-64 per iteration —
+      // the xor of xxhash64 values over a changed set is uniformly
+      // distributed). An exact set compare would cost a full anti-join per
+      // iteration; accepted odds, documented rather than paid for.
+      val (next, sig) = scratch.checkpointObserving(
+        smallStar(largeStar(edges)), s"iter-$iter", signature, replaces = Seq(s"iter-${iter - 1}"))
       edges = next
       converged = prev.contains(sig)
       prev = Some(sig)
@@ -221,29 +184,4 @@ object Clusters {
         docs, idCol, textCol, numHashes = numHashes, bands = bands,
         threshold = threshold, maxBucket = maxBucket)),
       idCol)
-
-  private[graft] def deleteRecursively(conf: org.apache.hadoop.conf.Configuration, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(conf).delete(p, true): Unit
-  }
-
-  // ONE shutdown hook draining a shared queue — a hook per resolveClusters
-  // call would accumulate a never-removed Thread (each pinning a Hadoop
-  // Configuration) for every auto-created scratch in a long-lived session
-  private val pendingScratch =
-    new java.util.concurrent.ConcurrentLinkedQueue[(org.apache.hadoop.conf.Configuration, String)]()
-  private val cleanupHookArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private[graft] def registerScratchCleanup(
-      conf: org.apache.hadoop.conf.Configuration, dir: String): Unit = {
-    pendingScratch.add((conf, dir))
-    if (cleanupHookArmed.compareAndSet(false, true))
-      sys.addShutdownHook {
-        var next = pendingScratch.poll()
-        while (next != null) {
-          try deleteRecursively(next._1, next._2) catch { case _: Exception => () }
-          next = pendingScratch.poll()
-        }
-      }: Unit
-  }
 }

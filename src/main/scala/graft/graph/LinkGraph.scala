@@ -245,9 +245,9 @@ object LinkGraph {
     * iteration is ONE join (edges ⋈ ranks on src — the edge set is
     * re-read from its checkpoint, never recomputed) and ONE groupBy(dst)
     * with partial aggregation, plus two scalar aggregates (dangling mass,
-    * node count — the latter computed once). Iteration state is
-    * parquet-checkpointed every round (the Clusters.scala idiom) so
-    * lineage stays O(1) regardless of `iters`.
+    * node count — the latter computed once). Iteration state is a
+    * [[graft.util.Scratch]] checkpoint per round, so lineage stays O(1)
+    * regardless of `iters`.
     *
     * @param edges  (src, dst) string columns; multiplicity is IGNORED
     *               (classic PageRank is over the link graph, not link
@@ -263,84 +263,13 @@ object LinkGraph {
       dampDen: Long = 20L,
       workDir: Option[String] = None): DataFrame = {
     require(iters >= 1 && dampNum > 0 && dampDen > dampNum && scale > 0)
-    val spark = edges.sparkSession
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val scratch = workDir.getOrElse {
-      val dir = java.nio.file.Files.createTempDirectory("graft-pr").toString
-      graft.dedup.Clusters.registerScratchCleanup(hadoopConf, dir)
-      dir
+    // every node teleports; the teleport and flow terms are floored apart
+    intRank(edges, iters, scale, workDir, "graft-pr", lit(true), "pageRankInt: empty graph")(
+      (hosts, outDeg) => hosts.join(outDeg, Seq("host"), "left")) { (initRank, dangShare) =>
+      val baseTerm = ((dampDen - dampNum) * initRank) / dampDen
+      expr(s"CAST($baseTerm AS BIGINT) + " +
+        s"($dampNum * (coalesce(inflow, CAST(0 AS BIGINT)) + CAST($dangShare AS BIGINT))) div $dampDen")
     }
-    def ckpt(df: DataFrame, name: String): DataFrame = {
-      val p = s"$scratch/$name"
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-    // checkpoint + one scalar aggregate in the SAME job (Observation rides
-    // the write — guide §1.5/§2.4: a scalar the writing pass already saw
-    // must not cost a second pass over the checkpointed frame)
-    def ckptObserve(df: DataFrame, name: String, metric: Column): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"graft.pr.$name.${System.nanoTime()}")
-      val out = ckpt(df.observe(obs, metric.as("m")), name)
-      (out, obs.get("m").asInstanceOf[Long])
-    }
-    def ckptObserve2(
-        df: DataFrame, name: String, m1: Column, m2: Column): (DataFrame, Long, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"graft.pr.$name.${System.nanoTime()}")
-      val out = ckpt(df.observe(obs, m1.as("m1"), m2.as("m2")), name)
-      (out, obs.get("m1").asInstanceOf[Long], obs.get("m2").asInstanceOf[Long])
-    }
-
-    val e = ckpt(
-      edges.select(col("src").cast("string"), col("dst").cast("string"))
-        .filter(col("src").isNotNull && col("dst").isNotNull)
-        .distinct(),
-      "edges")
-    // nodes carry the STATIC out-degree (NULL = dangling) so that
-    //  - each iteration's dangling mass is a row-local conditional sum
-    //    over the ranks frame — observed on the checkpoint write of the
-    //    PREVIOUS iteration instead of a per-iteration anti-join +
-    //    aggregate job, and
-    //  - the per-source share is `rank div deg` computed row-locally on
-    //    the ranks frame (deg rides it) instead of a per-iteration
-    //    ranks ⋈ outDeg join.
-    // Node count AND dangling-node count (two scalars) ride the nodes
-    // checkpoint: iteration 0's ranks are the CONSTANT scale div n, so its
-    // dangling mass is exactly initRank × (dangling nodes) — which removes
-    // the iter-0 checkpoint entirely (r07): the initial ranks frame is a
-    // trivial projection of the checkpointed nodes with ONE consumer
-    // (iteration 1's share scan) and stays lazy.
-    val (nodes, n, nDangling) = ckptObserve2(
-      e.select(col("src").as("host")).unionAll(e.select(col("dst").as("host"))).distinct()
-        .join(e.groupBy(col("src").as("host")).agg(count(lit(1)).as("deg")), Seq("host"), "left")
-        .select(col("host"), col("deg")),
-      "nodes", count(lit(1)), coalesce(sum(when(col("deg").isNull, 1L)), lit(0L)))
-    require(n > 0, "pageRankInt: empty graph")
-    val initRank = scale / n
-    val baseTerm = ((dampDen - dampNum) * initRank) / dampDen
-    val danglingOf = coalesce(sum(when(col("deg").isNull, col("rank"))), lit(0L))
-
-    var ranks = nodes.select(col("host"), col("deg"), lit(initRank).as("rank"))
-    var dangling = initRank * nDangling
-    var i = 1
-    while (i <= iters) {
-      val dangShare = dangling / n
-      // per-source integer share (row-local), then inflow per destination
-      val share = ranks.filter(col("deg").isNotNull)
-        .select(col("host").as("s"), expr("rank div deg").as("share"))
-      val inflow = e.join(share, e("src") === col("s"))
-        .groupBy("dst").agg(sum("share").as("inflow"))
-      val next = nodes.join(inflow, nodes("host") === inflow("dst"), "left")
-        .select(col("host"), col("deg"), expr(
-          s"CAST($baseTerm AS BIGINT) + " +
-            s"($dampNum * (coalesce(inflow, CAST(0 AS BIGINT)) + CAST($dangShare AS BIGINT))) div $dampDen")
-          .as("rank"))
-      val (r2, d2) = ckptObserve(next, s"iter-$i", danglingOf)
-      ranks = r2; dangling = d2
-      // iter-0 was never checkpointed (lazy projection of nodes)
-      if (i > 1) graft.dedup.Clusters.deleteRecursively(hadoopConf, s"$scratch/iter-${i - 1}")
-      i += 1
-    }
-    ranks.select("host", "rank")
   }
 
   /** Fixed-point integer TrustRank (Gyöngyi, Garcia-Molina & Pedersen,
@@ -376,85 +305,86 @@ object LinkGraph {
       dampDen: Long = 20L,
       workDir: Option[String] = None): DataFrame = {
     require(iters >= 1 && dampNum > 0 && dampDen > dampNum && scale > 0)
-    val spark = edges.sparkSession
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val scratch = workDir.getOrElse {
-      val dir = java.nio.file.Files.createTempDirectory("graft-tr").toString
-      graft.dedup.Clusters.registerScratchCleanup(hadoopConf, dir)
-      dir
-    }
-    def ckpt(df: DataFrame, name: String): DataFrame = {
-      val p = s"$scratch/$name"
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-    // same observe-on-write shape as pageRankInt: scalars ride the
-    // checkpoint job instead of costing their own aggregation pass
-    def ckptObserve(df: DataFrame, name: String, metric: Column): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"graft.tr.$name.${System.nanoTime()}")
-      val out = ckpt(df.observe(obs, metric.as("m")), name)
-      (out, obs.get("m").asInstanceOf[Long])
-    }
-    def ckptObserve2(
-        df: DataFrame, name: String, m1: Column, m2: Column): (DataFrame, Long, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"graft.tr.$name.${System.nanoTime()}")
-      val out = ckpt(df.observe(obs, m1.as("m1"), m2.as("m2")), name)
-      (out, obs.get("m1").asInstanceOf[Long], obs.get("m2").asInstanceOf[Long])
-    }
-
-    val e = ckpt(
-      edges.select(col("src").cast("string"), col("dst").cast("string"))
-        .filter(col("src").isNotNull && col("dst").isNotNull)
-        .distinct(),
-      "edges")
-    // deg rides the nodes frame (pageRankInt's move): dangling mass is a
-    // conditional sum observed on the previous checkpoint write, the
-    // per-source share is row-local (no per-iteration ranks ⋈ outDeg
-    // join). Trusted-seed count AND trusted-dangling count both ride the
-    // nodes checkpoint: iteration 0's rank is seedShare on trusted nodes
-    // and 0 elsewhere, so its dangling mass is exactly seedShare ×
-    // (trusted ∧ dangling nodes) — the iter-0 checkpoint is gone (r07,
-    // the pageRankInt move) and the initial ranks frame stays a lazy
-    // single-consumer projection of the checkpointed nodes.
-    val (nodes, nT, nDangT) = ckptObserve2(
-      e.select(col("src").as("host")).unionAll(e.select(col("dst").as("host"))).distinct()
-        .join(trusted.select(col("host")).distinct().withColumn("__t", lit(true)),
-          Seq("host"), "left")
-        .join(e.groupBy(col("src").as("host")).agg(count(lit(1)).as("deg")), Seq("host"), "left")
-        .select(col("host"),
-          coalesce(col("__t"), lit(false)).as("trusted"),
-          col("deg")),
-      "nodes",
-      coalesce(sum(when(col("trusted"), 1L)), lit(0L)),
-      coalesce(sum(when(col("trusted") && col("deg").isNull, 1L)), lit(0L)))
-    require(nT > 0, "trustRankInt: no trusted seed exists in the graph")
-    val seedShare = scale / nT
-    val baseTerm = (dampDen - dampNum) * seedShare // divided by dampDen inside the loop
-    val danglingOf = coalesce(sum(when(col("deg").isNull, col("rank"))), lit(0L))
-
-    var ranks = nodes.select(col("host"), col("trusted"), col("deg"),
-      when(col("trusted"), lit(seedShare)).otherwise(lit(0L)).as("rank"))
-    var dangling = seedShare * nDangT
-    var i = 1
-    while (i <= iters) {
-      val dangShare = dangling / nT
-      val share = ranks.filter(col("deg").isNotNull)
-        .select(col("host").as("s"), expr("rank div deg").as("share"))
-      val inflow = e.join(share, e("src") === col("s"))
-        .groupBy("dst").agg(sum("share").as("inflow"))
-      val next = nodes.join(inflow, nodes("host") === inflow("dst"), "left")
-        .select(col("host"), col("trusted"), col("deg"), expr(
+    val flags = trusted.select(col("host")).distinct().withColumn("__t", lit(true))
+    // only trusted nodes teleport; their teleport and flow terms are
+    // floored together
+    intRank(edges, iters, scale, workDir, "graft-tr", col("trusted"),
+      "trustRankInt: no trusted seed exists in the graph")(
+      (hosts, outDeg) => hosts.join(flags, Seq("host"), "left").join(outDeg, Seq("host"), "left")
+        .select(col("host"), coalesce(col("__t"), lit(false)).as("trusted"), col("deg"))) {
+      (seedShare, dangShare) =>
+        val baseTerm = (dampDen - dampNum) * seedShare // divided by dampDen with the rest
+        expr(
           s"""(CASE WHEN trusted
                     THEN CAST($baseTerm AS BIGINT) + $dampNum * CAST($dangShare AS BIGINT)
                     ELSE CAST(0 AS BIGINT) END
                + $dampNum * coalesce(inflow, CAST(0 AS BIGINT))) div $dampDen""")
-          .as("rank"))
-      val (r2, d2) = ckptObserve(next, s"iter-$i", danglingOf)
-      ranks = r2; dangling = d2
-      // iter-0 was never checkpointed (lazy projection of nodes)
-      if (i > 1) graft.dedup.Clusters.deleteRecursively(hadoopConf, s"$scratch/iter-${i - 1}")
-      i += 1
     }
-    ranks.select("host", "trusted", "rank")
+  }
+
+  /** The integer rank loop [[pageRankInt]] and [[trustRankInt]] share.
+    * The nodes that satisfy `teleport` share the teleport and dangling
+    * mass: each starts at `share` = scale div (their count) and every other
+    * node at 0. `nodesOf` builds the node frame from the distinct hosts and
+    * their out-degree `deg`; `rankOf(share, dangShare)` is a node's new
+    * rank over its `inflow` and the node frame's columns. Returns the node
+    * columns but `deg`, and `rank`.
+    */
+  private def intRank(
+      edges: DataFrame, iters: Int, scale: Long, workDir: Option[String], prefix: String,
+      teleport: Column, noTeleport: String)(
+      nodesOf: (DataFrame, DataFrame) => DataFrame)(
+      rankOf: (Long, Long) => Column): DataFrame = {
+    val scratch = graft.util.Scratch(edges.sparkSession, workDir, prefix)
+    val e = scratch.checkpoint(
+      edges.select(col("src").cast("string"), col("dst").cast("string"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .distinct(),
+      "edges")
+    // nodes carry the STATIC out-degree (NULL = dangling) so that
+    //  - each iteration's dangling mass is a row-local conditional sum
+    //    over the ranks frame — observed on the checkpoint write of the
+    //    PREVIOUS iteration instead of a per-iteration anti-join +
+    //    aggregate job, and
+    //  - the per-source share is `rank div deg` computed row-locally on
+    //    the ranks frame (deg rides it) instead of a per-iteration
+    //    ranks ⋈ outDeg join.
+    // The teleport count AND the dangling teleport count ride the nodes
+    // checkpoint: iteration 0's rank is `share` on teleport nodes and 0
+    // elsewhere, so its dangling mass is exactly share × (dangling
+    // teleport nodes) — which removes the iter-0 checkpoint entirely
+    // (r07): the initial ranks frame is a trivial projection of the
+    // checkpointed nodes with ONE consumer (iteration 1's share scan) and
+    // stays lazy.
+    val (nodes, Seq(nT, nDangT)) = scratch.checkpointObserving(
+      nodesOf(
+        e.select(col("src").as("host")).unionAll(e.select(col("dst").as("host"))).distinct(),
+        e.groupBy(col("src").as("host")).agg(count(lit(1)).as("deg"))),
+      "nodes",
+      Seq(coalesce(sum(when(teleport, 1L)), lit(0L)),
+        coalesce(sum(when(teleport && col("deg").isNull, 1L)), lit(0L))))
+    require(nT > 0, noTeleport)
+    val share = scale / nT
+    val danglingOf = coalesce(sum(when(col("deg").isNull, col("rank"))), lit(0L))
+    val nodeCols = nodes.columns.toSeq.map(col)
+
+    var ranks = nodes.select(nodeCols :+ when(teleport, lit(share)).otherwise(lit(0L)).as("rank"): _*)
+    var dangling = share * nDangT
+    for (i <- 1 to iters) {
+      // per-source integer share (row-local), then inflow per destination
+      val flow = ranks.filter(col("deg").isNotNull)
+        .select(col("host").as("s"), expr("rank div deg").as("share"))
+      val inflow = e.join(flow, e("src") === col("s"))
+        .groupBy("dst").agg(sum("share").as("inflow"))
+      val next = nodes.join(inflow, nodes("host") === inflow("dst"), "left")
+        .select(nodeCols :+ rankOf(share, dangling / nT).as("rank"): _*)
+      // iter-0 was never checkpointed (lazy projection of nodes); the
+      // result reads the last iteration's ranks and nothing else
+      val replaced = (if (i > 1) Seq(s"iter-${i - 1}") else Nil) ++
+        (if (i == iters) Seq("edges", "nodes") else Nil)
+      val (r, Seq(d)) = scratch.checkpointObserving(next, s"iter-$i", Seq(danglingOf), replaced)
+      ranks = r; dangling = d
+    }
+    ranks.drop("deg")
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing for training-data pipelines: image/audio/video
   * as opaque `binary` columns with typed metadata, plus decode /
-  * feature-extract / resize / frame-sample stages.
+  * feature-extract / resize stages.
   *
   * Decode layering, honestly stated: formats the bare JVM can parse get a
   * REAL decoder — [[decodePnm]] handles binary Netpbm (P5 grayscale /
@@ -348,7 +348,7 @@ object Multimodal {
       .drop("__bytes", "__pid", "__ord", "__cum", "__bucket", "__opid", "__off", "__b", "__salt")
   }
 
-  // --------------------------------------------------- resize / frame-sample
+  // ---------------------------------------------------------------- resize
 
   /** STUB resize kernel — stands in for an image scaler. Deterministic pure
     * function: keeps every ceil(srcW/dstW)-th byte (a nearest-neighbor
@@ -396,33 +396,6 @@ object Multimodal {
             width = targetWidth,
             height = math.max(1, (r.height.toLong * targetWidth / math.max(r.width, 1)).toInt))
         }
-      }
-    }
-  }
-
-  final case class FrameRow(
-      media_id: Long,
-      frame_idx: Int,
-      frame_ts_ms: Int,
-      frame: Array[Byte])
-
-  /** Frame sampling: one frame every `everyMs` of duration, each frame a
-    * deterministic 1 KB slice of the content (the stub for a real decoder's
-    * keyframe grab). Iterator-based flatMap — a 2-hour video emits its
-    * frames lazily, never materializing them as one in-memory list, and fat
-    * inputs should be [[repartitionByBytes]]-balanced first so frame
-    * explosion stays even across tasks.
-    */
-  def sampleFrames(media: Dataset[MediaRow], everyMs: Int = 1000): Dataset[FrameRow] = {
-    import media.sparkSession.implicits._
-    require(everyMs > 0, "everyMs must be positive")
-    media.filter(col("kind") === "video").flatMap { r =>
-      val n = math.max(1, r.duration_ms / everyMs)
-      val bytes = if (r.content == null) Array.empty[Byte] else r.content
-      (0 until n).iterator.map { i =>
-        val start = if (bytes.isEmpty) 0 else (i.toLong * bytes.length / n).toInt
-        val end = math.min(bytes.length, start + 1024)
-        FrameRow(r.media_id, i, i * everyMs, java.util.Arrays.copyOfRange(bytes, start, end))
       }
     }
   }

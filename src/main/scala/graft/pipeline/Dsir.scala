@@ -123,13 +123,12 @@ object Dsir {
 
   /** One-call train-both-then-score composition (the q56 gate shape): the
     * raw model is trained on the scored corpus itself — the published
-    * recipe's default — and both slim models are parquet-checkpointed to
-    * `workDir` (or auto-created scratch removed at JVM exit, the
-    * [[LmScore.crossEntropy]] lifetime contract) so each corpus is
-    * tokenized and aggregated EXACTLY once; [[weightsWith]]'s model
-    * references then read column-pruned parquet instead of re-running the
-    * training scans (lambda-heavy token subtrees defeat exchange reuse —
-    * the documented Clusters trap).
+    * recipe's default — and both slim models are [[graft.util.Scratch]]
+    * checkpoints (in `workDir`, or an auto-created directory removed at JVM
+    * exit) so each corpus is tokenized and aggregated EXACTLY once;
+    * [[weightsWith]]'s model references then read column-pruned parquet
+    * instead of re-running the training scans (lambda-heavy token subtrees
+    * defeat exchange reuse — the documented Clusters trap).
     *
     * To APPLY the selection at scale, filter row-locally on a weight
     * threshold (or feed the weights to [[Sampler.stratifiedSample]]-style
@@ -145,28 +144,14 @@ object Dsir {
       textCol: String = "text",
       targetTextCol: String = "text",
       workDir: Option[String] = None): DataFrame = {
-    val spark = docs.sparkSession
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val scratch = workDir.getOrElse {
-      val dir = java.nio.file.Files.createTempDirectory("graft-dsir").toString
-      graft.dedup.Clusters.registerScratchCleanup(hadoopConf, dir)
-      dir
-    }
-    val tPath = s"$scratch/target-model"
-    val rPath = s"$scratch/raw-model"
+    val scratch = graft.util.Scratch(docs.sparkSession, workDir, "graft-dsir")
     // the two training scans are independent — submit them concurrently
     // (the CrawlJob write-phase idiom, guide §2.6: back-fill the tail of
     // one job with the other's tasks) instead of paying two full job
     // latencies back to back
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq(
-      Future(trainCounts(targetCorpus, buckets, targetTextCol)
-        .write.mode("overwrite").parquet(tPath)),
-      Future(trainCounts(docs, buckets, textCol)
-        .write.mode("overwrite").parquet(rPath)))), Duration.Inf)
-    weightsWith(docs, spark.read.parquet(tPath), spark.read.parquet(rPath),
-      buckets, idCol, textCol)
+    val Seq(target, raw) = graft.util.Sessions.concurrently(docs.sparkSession.sparkContext)(
+      () => scratch.checkpoint(trainCounts(targetCorpus, buckets, targetTextCol), "target-model"),
+      () => scratch.checkpoint(trainCounts(docs, buckets, textCol), "raw-model"))
+    weightsWith(docs, target, raw, buckets, idCol, textCol)
   }
 }

@@ -172,12 +172,11 @@ object LmScore {
   }
 
   /** One-call train-then-score composition (the q55 gate shape). The
-    * trained model is parquet-checkpointed to `workDir` (or an auto-created
-    * scratch removed best-effort at JVM exit — the
-    * [[graft.dedup.Clusters.resolveClusters]] lifetime contract) so the
-    * reference corpus is tokenized and aggregated EXACTLY once; the three
-    * model references in [[scoreWith]] then read the slim column-pruned
-    * parquet instead of re-running the training scan.
+    * trained model is a [[graft.util.Scratch]] checkpoint (in `workDir`, or
+    * an auto-created directory removed at JVM exit) so the reference corpus
+    * is tokenized and aggregated EXACTLY once; the three model references
+    * in [[scoreWith]] then read the slim column-pruned parquet instead of
+    * re-running the training scan.
     */
   def crossEntropy(
       docs: DataFrame,
@@ -186,15 +185,7 @@ object LmScore {
       textCol: String = "text",
       refTextCol: String = "text",
       workDir: Option[String] = None): DataFrame = {
-    val spark = docs.sparkSession
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val scratch = workDir.getOrElse {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lm").toString
-      graft.dedup.Clusters.registerScratchCleanup(hadoopConf, dir)
-      dir
-    }
-    val modelPath = s"$scratch/model"
-    trainCounts(refDocs, refTextCol).write.mode("overwrite").parquet(modelPath)
-    scoreWith(docs, spark.read.parquet(modelPath), idCol, textCol)
+    val scratch = graft.util.Scratch(docs.sparkSession, workDir, "graft-lm")
+    scoreWith(docs, scratch.checkpoint(trainCounts(refDocs, refTextCol), "model"), idCol, textCol)
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * reached by following up to 2^k redirects, so `maxHops` needs only
   * ceil(log2(maxHops)) self-joins. NEVER a driver-side loop over rows:
   * each round is one equi-join + projection on (string, string, long)
-  * frames, parquet-checkpointed (the Clusters idiom) so lineage stays
+  * frames, checkpointed in a [[graft.util.Scratch]] so lineage stays
   * O(1). Cycles (a→b→a) and over-deep chains cannot terminate and are
   * reported as `looped` rather than silently dropped or followed forever
   * — at 10^10 URLs some WILL be redirect bombs.
@@ -42,22 +42,11 @@ object Redirects {
       maxHops: Int = 8,
       workDir: Option[String] = None): DataFrame = {
     require(maxHops >= 1)
-    val spark = pages.sparkSession
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val scratch = workDir.getOrElse {
-      val dir = java.nio.file.Files.createTempDirectory("graft-redir").toString
-      graft.dedup.Clusters.registerScratchCleanup(hadoopConf, dir)
-      dir
-    }
-    def ckpt(df: DataFrame, name: String): DataFrame = {
-      val p = s"$scratch/$name"
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
+    val scratch = graft.util.Scratch(pages.sparkSession, workDir, "graft-redir")
 
     // the redirect map (only redirecting rows — the self-join operand)
     // and the full state (every input url; terminals point at themselves)
-    val edges = ckpt(
+    val edges = scratch.checkpoint(
       pages.filter(col(redirectCol).isNotNull)
         .select(col(urlCol).cast("string").as("u"),
           col(redirectCol).cast("string").as("nxt"))
@@ -79,7 +68,7 @@ object Redirects {
     // promised (2^(rounds+1)−1 vs the contract's maxHops). Each doubling
     // is one self-join of the redirect-SOURCES-only table (a small
     // fraction of the input); only the last application touches all rows.
-    var jump = ckpt(
+    var jump = scratch.checkpoint(
       edges.select(col("u").as("ju"), col("nxt").as("jnxt"), lit(1L).as("jhops")),
       "jump-0")
 
@@ -95,9 +84,9 @@ object Redirects {
       // the LAST doubling has a single consumer (the final application) —
       // checkpointing it would only add a write; intermediate tables are
       // self-joined twice and must be materialized
-      jump = if (k < rounds) ckpt(j2, s"jump-$k") else j2
-      if (k < rounds)
-        graft.dedup.Clusters.deleteRecursively(hadoopConf, s"$scratch/jump-${k - 1}")
+      jump =
+        if (k < rounds) scratch.checkpoint(j2, s"jump-$k", replaces = Seq(s"jump-${k - 1}"))
+        else j2
       k += 1
     }
     val resolved = state.join(

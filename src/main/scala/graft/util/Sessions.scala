@@ -2,6 +2,8 @@ package graft.util
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
@@ -9,7 +11,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.SparkSession
 
 /** The one session harness behind the tooling mains (`BenchExtra`,
-  * `PlanDump`, `Smoke`, `Calibrate` and the scaling benches). The frozen
+  * `PlanDump`, `Smoke`, `Calibrate` and the scaling benches), and the one
+  * way a library operator submits jobs from the global pool. The frozen
   * `Bench` and `Verify` mains keep their own builders.
   */
 object Sessions {
@@ -51,6 +54,25 @@ object Sessions {
     */
   def warmUp(spark: SparkSession): Unit =
     spark.range(1000000).selectExpr("sum(id * 2)").collect(): Unit
+
+  /** `body` on Scala's global pool, its Spark jobs labelled `description`
+    * (a fan-out passes its caller's: [[concurrently]]). The label is
+    * thread-local, so it is set inside the future, and cleared after it so
+    * the pool thread carries no stale label into its next task.
+    */
+  def submit[T](sc: SparkContext, description: String)(body: => T): Future[T] =
+    Future {
+      sc.setJobDescription(description)
+      try body finally sc.setJobDescription(null)
+    }(ExecutionContext.global)
+
+  /** `bodies` run concurrently through [[submit]], their jobs labelled with
+    * the calling thread's description; their results, in order.
+    */
+  def concurrently[T](sc: SparkContext)(bodies: (() => T)*): Seq[T] = {
+    val caller = sc.getLocalProperty("spark.job.description")
+    bodies.map(body => submit(sc, caller)(body())).map(Await.result(_, Duration.Inf))
+  }
 
   private val logs = new java.util.WeakHashMap[SparkContext, JobLog]()
 

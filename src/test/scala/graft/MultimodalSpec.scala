@@ -108,20 +108,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out.map(_.content.toSeq).toSeq === again.map(_.content.toSeq).toSeq)
   }
 
-  test("sampleFrames: one frame per interval, video rows only, deterministic slices") {
-    val media = Multimodal.syntheticMedia(docs)
-    val videos = media.collect().filter(_.kind == "video")
-    val frames = Multimodal.sampleFrames(media, everyMs = 60000).collect()
-    assert(frames.map(_.media_id).toSet === videos.map(_.media_id).toSet)
-    videos.foreach { v =>
-      val fs = frames.filter(_.media_id == v.media_id).sortBy(_.frame_idx)
-      assert(fs.length === math.max(1, v.duration_ms / 60000))
-      assert(fs.map(_.frame_idx).toSeq === fs.indices.toSeq)
-      assert(fs.forall(_.frame.length <= 1024))
-      fs.foreach(f => assert(f.frame_ts_ms === f.frame_idx * 60000))
-    }
-  }
-
   test("repartitionByBytes: zero-byte tail row survives when total divides target") {
     import org.apache.spark.sql.functions._
     // 4 × 256 B rows (total = 1024 = 2 × target) followed by a zero-byte
