@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LocalRows
 
 import java.sql.Date
 import java.time.LocalDate
@@ -102,7 +103,15 @@ object SparkEntry {
 
   // ------------------------------------------------------------- queries
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The leaves by name. Each one first installs [[LocalRows]] in the
+    * session it is given, so every caller (`Bench`, `Verify`, `BenchExtra`,
+    * `PlanDump`, perfbench) plans it the same way.
+    */
+  val queries: Map[String, (SparkSession, String) => DataFrame] = leaves.map { case (name, body) =>
+    name -> ((s: SparkSession, dir: String) => { LocalRows.setup(s); body(s, dir) })
+  }
+
+  private def leaves: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- general relational operators over the TPC-H-ish tables --------
     "q01_pricing_summary" -> ((s, dir) => {
       t(s, dir, "lineitem")

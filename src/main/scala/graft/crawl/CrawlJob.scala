@@ -8,6 +8,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LocalRows
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.checkpoint.{SnapshotStore, TableLog}
@@ -112,18 +113,23 @@ object CrawlJob {
       providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry,
       dedupKey: graft.urls.DedupKey = graft.urls.DedupKey.XxHashCanonical): DataFrame = {
     val p = graft.provider.Providers.byName(provider, providers)
-    seeds
-      .withColumn("url", p.urlFor(col("card_c"), col("trans_c"), col("date")))
-      .withColumn("canonUrl", canonicalCol(col("url"))) // computed ONCE, carried as data
-      .withColumn("urlHash", graft.urls.UrlCols.urlHashCol(col("url"), col("canonUrl"), dedupKey))
-      .withColumn("host", hostCol(col("url")))
-      .withColumn("provider", lit(provider))
-      .withColumn("priority", lit(0))
-      .withColumn("retries", lit(0))
+    // one select, so the plan is analysed once; Spark's subexpression
+    // elimination evaluates the shared url and canonUrl once a row
+    val url = p.urlFor(col("card_c"), col("trans_c"), col("date"))
+    val canonUrl = canonicalCol(url) // computed ONCE, carried as data
+    seeds.select(
+      url.as("url"),
+      canonUrl.as("canonUrl"),
+      graft.urls.UrlCols.urlHashCol(url, canonUrl, dedupKey).as("urlHash"),
+      hostCol(url).as("host"),
+      col("card_c"), col("trans_c"), col("date"),
+      lit(provider).as("provider"),
+      lit(0).as("priority"),
+      col("seq"),
+      lit(0).as("retries"),
       // request headers ride the row — the typed-column dual of Scrapy's
       // Request(headers=...) (MCSpider.py:67-68); no out-of-band meta
-      .withColumn("headers", p.headersFor(col("card_c"), col("trans_c"), col("date")))
-      .select("url", "canonUrl", "urlHash", "host", "card_c", "trans_c", "date", "provider", "priority", "seq", "retries", "headers")
+      p.headersFor(col("card_c"), col("trans_c"), col("date")).as("headers"))
   }
 
   /** Defaults [[run]] and the stream driver share: Bloom filter partitions,
@@ -201,8 +207,8 @@ object CrawlJob {
     * releases them with `unpersist()`.
     */
   private[graft] def activeRules(robots: Option[DataFrame]): Option[DataFrame] =
-    robots.filter(r => Robots.localRows(r).fold(!r.isEmpty)(_.nonEmpty)).map(Robots.perHost).map { collapsed =>
-      if (!Robots.isLocal(collapsed)) {
+    robots.filter(r => LocalRows.localRows(r).fold(!r.isEmpty)(_.nonEmpty)).map(Robots.perHost).map { collapsed =>
+      if (!LocalRows.isLocal(collapsed)) {
         collapsed.cache()
         try collapsed.count() catch { case e: Throwable => collapsed.unpersist(); throw e }
       }

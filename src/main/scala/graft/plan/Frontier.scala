@@ -48,9 +48,10 @@ object Frontier {
     val dates = explode(sequence(lit(0), lit(numDays - 1))).as("date_idx")
     val grid = pairs.toSeq.toDF("card_c", "trans_c", "pair_idx")
       .select(col("card_c"), col("trans_c"), col("pair_idx"), dates)
-      .withColumn("date", date_sub(lit(java.sql.Date.valueOf(end)), col("date_idx")))
-      .withColumn("seq", col("pair_idx") * numDays + col("date_idx"))
-      .select("card_c", "trans_c", "date", "seq")
+      .select(
+        col("card_c"), col("trans_c"),
+        date_sub(lit(java.sql.Date.valueOf(end)), col("date_idx")).as("date"),
+        (col("pair_idx") * numDays + col("date_idx")).as("seq"))
     if (graft.util.PlanSize.fitsOnePartition(grid)) grid.coalesce(1) else grid
   }
 

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LocalRows
 import org.apache.spark.sql.types.StructType
 
 import graft.model.RobotsRule
@@ -161,7 +162,7 @@ object Robots {
     */
   def perHost(rules: DataFrame): DataFrame = {
     def isWild(p: String): Boolean = p.contains("*") || p.contains("$")
-    localRows(rules) match {
+    LocalRows.localRows(rules) match {
       case Some(rows) =>
         val Seq(h, p, a) = Seq("host", "pathPrefix", "allow").map(rules.schema.fieldIndex)
         val collapsed = rows.filter(r => !r.isNullAt(p) && !r.isNullAt(a)).groupBy(_.getString(h)).toSeq
@@ -183,21 +184,6 @@ object Robots {
             length(col("pathPrefix")).as("len"), col("allow").as("a")))).as("__wrules"))
     }
   }
-
-  /** The rows of a table held in driver memory, read off its local
-    * relation: no Spark job and no generated class. None for any other
-    * table.
-    */
-  private[graft] def localRows(df: DataFrame): Option[Seq[Row]] =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(l.schema)
-        Some(l.data.map(toRow(_).asInstanceOf[Row]))
-      case _ => None
-    }
-
-  /** True when `df` is a table held in driver memory. */
-  private[graft] def isLocal(df: DataFrame): Boolean = localRows(df).isDefined
 
   /** `frontier` plus the boolean [[Verdict]]: true where (host, path) is
     * allowed by `perHostRules` ([[perHost]]).

@@ -31,8 +31,10 @@ object PlanSize {
   /** One partition's worth of data: `spark.sql.adaptive.advisoryPartitionSizeInBytes`,
     * the size AQE coalesces shuffle partitions towards.
     */
-  def partitionBytes(df: DataFrame): Long =
-    df.queryExecution.sparkSession.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+  def partitionBytes(df: DataFrame): Long = partitionBytes(df.queryExecution.sparkSession.sessionState.conf)
+
+  /** [[partitionBytes]] of the session whose conf is `conf`. */
+  def partitionBytes(conf: SQLConf): Long = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 
   /** True when `df` provably holds at most one partition's worth of data. */
   def fitsOnePartition(df: DataFrame): Boolean =

@@ -6,6 +6,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LocalRows
 
 import graft.checkpoint.SnapshotStore
 import graft.crawl.CrawlJob
@@ -299,7 +300,7 @@ class CrawlRoundSpec extends SparkSpec {
     val onDisk = tmp("rules")
     rules.write.mode("overwrite").parquet(onDisk)
     val fileRules = spark.read.parquet(onDisk)
-    assert(!Robots.isLocal(fileRules) && Robots.isLocal(rules))
+    assert(!LocalRows.isLocal(fileRules) && LocalRows.isLocal(rules))
     assert(rowsOf(Robots.allowed(frontier, fileRules)) === got)
   }
 

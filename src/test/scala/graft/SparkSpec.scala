@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.LocalRows
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session keeps the
-  * suite fast; `Test / fork := true` isolates it from sbt).
+  * suite fast; `Test / fork := true` isolates it from sbt). It installs
+  * [[LocalRows]] as the leaves do, so every suite plans the same whatever
+  * the suite order.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
@@ -16,6 +19,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    LocalRows.setup(s)
     s
   }
 }
