@@ -77,7 +77,6 @@ class LocalRowsSpec extends SparkSpec {
     for ((b, name) <- Seq(withNull -> "with_null", noNull -> "no_null")) {
       b.createOrReplaceTempView(s"lr_local_$name")
       stored(b, name).createOrReplaceTempView(s"lr_stored_$name")
-      def notIn(view: String) = spark.sql(s"SELECT k, p FROM lr_probe WHERE k NOT IN (SELECT bk FROM $view)")
       val viaDriver = notIn(s"lr_local_$name")
       val expected = sortedRows(notIn(s"lr_stored_$name"))
       assert(sortedRows(viaDriver) === expected, name)
@@ -88,12 +87,12 @@ class LocalRowsSpec extends SparkSpec {
       }, broadcasts.head.mode.toString)
     }
     // a null in the subquery leaves no row; without it, the probe's null key drops
-    assert(notInRows("with_null").isEmpty)
-    assert(notInRows("no_null") === Seq("[1,a]", "[3,c]", "[5,e]"))
+    assert(sortedRows(notIn("lr_local_with_null")).isEmpty)
+    assert(sortedRows(notIn("lr_local_no_null")) === Seq("[1,a]", "[3,c]", "[5,e]"))
   }
 
-  private def notInRows(name: String): Seq[String] =
-    sortedRows(spark.sql(s"SELECT k, p FROM lr_probe WHERE k NOT IN (SELECT bk FROM lr_local_$name)"))
+  private def notIn(view: String): DataFrame =
+    spark.sql(s"SELECT k, p FROM lr_probe WHERE k NOT IN (SELECT bk FROM $view)")
 
   test("Spark's join choice holds: no broadcast threshold, or a shuffle_hash or merge hint, means no driver broadcast") {
     val p = probe
