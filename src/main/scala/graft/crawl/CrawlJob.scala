@@ -328,7 +328,9 @@ object CrawlJob {
     * `keys` (key set → key) are added in the same atomic commit (the stream
     * records its batch id there). Returns the committed state, read
     * back from the snapshot. The round's kept frames are released on return
-    * and on a throw alike.
+    * and on a throw alike. It installs [[LocalRows]] in `spark`'s session,
+    * so a local build side (such as local robots rules) is broadcast from
+    * the driver whichever driver, main or test made the session.
     *
     * @param robots the per-host rules, None for no robots gate (see
     *               [[activeRules]])
@@ -349,6 +351,7 @@ object CrawlJob {
       providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry,
       keys: Map[String, String] = Map.empty): CrawlState = {
     import spark.implicits._
+    LocalRows.setup(spark)
     val log = state.log
     val bloomDir = s"$checkpointDir/blooms"
     val sc = spark.sparkContext

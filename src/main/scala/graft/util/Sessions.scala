@@ -9,7 +9,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.LocalRows
 
 /** The one session harness behind the tooling mains (`BenchExtra`,
   * `PlanDump`, `Smoke`, `Calibrate` and the scaling benches), and the one
@@ -24,11 +23,10 @@ object Sessions {
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** A `local[cpus]` session with shuffle partitions = cpus, UTC, AQE on,
-    * no UI, WARN logging and [[LocalRows]] installed. With
-    * `SPARK_GRAFT_BENCH_TMPDIR` set, spill and the warehouse live under it;
-    * the warehouse is per `name` and level, so two levels never share a
-    * table directory. `conf` is applied last: a main passes only the
-    * settings it measures differently.
+    * no UI and WARN logging. With `SPARK_GRAFT_BENCH_TMPDIR` set, spill
+    * and the warehouse live under it; the warehouse is per `name` and
+    * level, so two levels never share a table directory. `conf` is applied
+    * last: a main passes only the settings it measures differently.
     */
   def local(
       cpus: Int = defaultCpus,
@@ -48,7 +46,6 @@ object Sessions {
     conf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    LocalRows.setup(spark)
     spark
   }
 
