@@ -342,7 +342,7 @@ object SparkEntry {
       // arithmetic to the map entry — see stopRatioFromTokens): the map
       // form evaluated all 4 profiles' token filters per row behind an
       // element_at Catalyst cannot prune (measured r07: 4 stop-scans → 1)
-      graft.util.Par.spread(t(s, dir, "documents"))
+      graft.util.PlanSize.spread(t(s, dir, "documents"))
         .select(col("doc_id"), col("text"),
           TextFns.loweredTokens(col("text")).as("__ltk"))
         .select(
@@ -391,7 +391,7 @@ object SparkEntry {
       // TextFns.langIdFromTokens scaladoc) is exercised under the driver
       // gate at a realistic profile count; the oracle below is GENERATED
       // from the same profile data, so it tracks automatically
-      graft.util.Par.spread(t(s, dir, "documents"))
+      graft.util.PlanSize.spread(t(s, dir, "documents"))
         .select(col("doc_id"), col("lang"),
           TextFns.loweredTokens(col("text")).as("__ltk"))
         .select(col("doc_id"),
@@ -801,7 +801,7 @@ object SparkEntry {
         import s.implicits._
         piiFixture.toDF("doc_id", "text")
       }
-      graft.util.Par.spread(docs.unionByName(planted))
+      graft.util.PlanSize.spread(docs.unionByName(planted))
         .select(col("doc_id"),
           graft.functions.TextFns.redact(col("text")).as("red"))
         .orderBy("doc_id")
@@ -1522,7 +1522,7 @@ object SparkEntry {
         import s.implicits._
         htmlFixture.toDF("doc_id", "html")
       }
-      graft.util.Par.spread(docs.select(col("doc_id"), html.as("html"))
+      graft.util.PlanSize.spread(docs.select(col("doc_id"), html.as("html"))
         .unionByName(planted))
         .select(col("doc_id"),
           graft.functions.TextFns.htmlToText(col("html")).as("txt"))
@@ -1568,7 +1568,7 @@ object SparkEntry {
         import s.implicits._
         repFixture.toDF("doc_id", "text")
       }
-      graft.util.Par.spread(docs.unionByName(planted))
+      graft.util.PlanSize.spread(docs.unionByName(planted))
         .select(col("doc_id"), col("text"),
           graft.functions.TextFns.tokens(col("text")).as("__tk"),
           split(col("text"), "\n").as("__ln"))

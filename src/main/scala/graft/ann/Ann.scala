@@ -42,7 +42,7 @@ object Ann {
     *         ties broken by vec_id for determinism
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val scored = graft.util.Par.spread(corpus).crossJoin(broadcast(queries))
+    val scored = graft.util.PlanSize.spread(corpus).crossJoin(broadcast(queries))
       .withColumn("cosine", round(cosine(col("q_embedding"), col("embedding")), 6))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
     scored
@@ -79,7 +79,7 @@ object Ann {
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       bits: Int = 12, tables: Int = 4): DataFrame = {
-    val corpusB = graft.util.Par.spread(corpus)
+    val corpusB = graft.util.PlanSize.spread(corpus)
       .withColumn("bucket", explodedBuckets("embedding", bits, tables))
     val queriesB = queries.withColumn("bucket", explodedBuckets("q_embedding", bits, tables))
     val candidates = corpusB.join(broadcast(queriesB), Seq("bucket"))
@@ -290,7 +290,7 @@ object Ann {
     // the distance array crosses a withColumn boundary so its K aggregates
     // evaluate once per row (array_min + array_position would otherwise
     // each re-evaluate the whole array expression)
-    val corpusL = graft.util.Par.spread(corpus)
+    val corpusL = graft.util.PlanSize.spread(corpus)
       .withColumn("__dl", distsExpr(col("embedding"), cents))
       .withColumn("list_id", argminList(col("__dl")))
       .drop("__dl")
@@ -320,7 +320,7 @@ object Ann {
   def cosineNearDupPairs(corpus: DataFrame, idCol: String = "vec_id",
       threshold: Double = 0.95, bits: Int = 12, tables: Int = 4,
       maxBucket: Int = 2000, logDropped: Boolean = true): DataFrame = {
-    val base = graft.util.Par.spread(corpus).select(col(idCol).as("id"), col("embedding"))
+    val base = graft.util.PlanSize.spread(corpus).select(col(idCol).as("id"), col("embedding"))
     val bucketed = base.select(
       col("id"), explodedBuckets("embedding", bits, tables).as("bucket"))
     val pairs = graft.dedup.DocDedup.cappedBucketPairs(

@@ -200,9 +200,9 @@ final class TableLog private[checkpoint] (
     * compacted path when `every > 0`, [[next]] is a multiple of `every` and
     * the chain has more than one path; otherwise `paths` unchanged.
     *
-    * A chain whose parquet files share one schema and hold at most
-    * [[graft.util.PlanSize.OneTaskRows]] rows is merged into one file on the
-    * driver, its column chunks copied as they are: no Spark job and no
+    * A chain whose parquet files share one schema and whose rows fit one
+    * task ([[graft.util.PlanSize.fitsOneTask]]) is merged into one file on
+    * the driver, its column chunks copied as they are: no Spark job and no
     * generated class. Any other chain is rewritten by Spark from the rows
     * `read` gives.
     */
@@ -211,7 +211,7 @@ final class TableLog private[checkpoint] (
     else {
       val p = store.dataPath(s"$table-compacted", next)
       val rows = read(paths)
-      if (!TableLog.mergeFiles(rows.sparkSession.sessionState.newHadoopConf(), paths, p))
+      if (!TableLog.mergeFiles(rows.sparkSession, paths, p))
         rows.write.mode("overwrite").parquet(p)
       Seq(p)
     }
@@ -239,24 +239,20 @@ object TableLog {
     * the directory `out` with parquet's rewriter, which copies column chunks
     * without decoding them. Returns false, and writes nothing, when the
     * files do not share one parquet schema (a foreign writer, a column's
-    * nullability) or hold more than [[graft.util.PlanSize.OneTaskRows]] rows.
+    * nullability) or their rows do not fit one task
+    * ([[graft.util.PlanSize.fitsOneTask]]).
     */
-  private def mergeFiles(conf: org.apache.hadoop.conf.Configuration, dirs: Seq[String], out: String): Boolean = {
+  private def mergeFiles(spark: org.apache.spark.sql.SparkSession, dirs: Seq[String], out: String): Boolean = {
     import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.parquet.hadoop.ParquetFileReader
-    val files = dirs.flatMap { d =>
-      val dir = new HPath(d)
-      dir.getFileSystem(conf).listStatus(dir).toSeq.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    }
-    val footers = files.map(st => scala.util.Using.resource(ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)))(r => (r.getFileMetaData.getSchema, r.getRecordCount)))
-    val mergeable = footers.map(_._1).distinct.size == 1 && footers.map(_._2).sum <= graft.util.PlanSize.OneTaskRows
+    val files = graft.util.PlanSize.footers(spark, dirs)
+    val mergeable = files.map(_.schema).distinct.size == 1 && graft.util.PlanSize.fitsOneTask(files.map(_.rows).sum)
     if (mergeable) {
+      val conf = spark.sessionState.newHadoopConf()
       val target = new HPath(out)
       target.getFileSystem(conf).delete(target, true)
       val rewriter = new org.apache.parquet.hadoop.rewrite.ParquetRewriter(
         new org.apache.parquet.hadoop.rewrite.RewriteOptions.Builder(
-          conf, files.map(_.getPath).asJava, new HPath(target, "part-00000.parquet")).build())
+          conf, files.map(_.path).asJava, new HPath(target, "part-00000.parquet")).build())
       try rewriter.processBlocks() finally rewriter.close()
     }
     mergeable

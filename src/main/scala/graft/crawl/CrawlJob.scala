@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.LocalRows
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.checkpoint.{SnapshotStore, TableLog}
 import graft.dedup.UrlSeen
@@ -52,27 +52,6 @@ object CrawlJob {
       "robotsDropped BIGINT, fetchMissed BIGINT, errorDropped BIGINT, extractedOk BIGINT")
   private[graft] val LineageSchema = StructType.fromDDL("round INT, table STRING, file STRING, rows BIGINT")
   private[graft] val HostStateSchema = Encoders.product[HostState].schema
-
-  /** (file, rows, schema) of every parquet file in the directory `dir`,
-    * read from the footers: metadata reads in this JVM, no Spark job. The
-    * schema is the one Spark stores in the footers it writes.
-    */
-  private def parquetFooters(spark: SparkSession, dir: String): Seq[(String, Long, Option[StructType])] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir)
-    path.getFileSystem(conf).listStatus(path).toIndexedSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-        try {
-          val schema = Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-            .get("org.apache.spark.sql.parquet.row.metadata"))
-            .map(DataType.fromJson(_).asInstanceOf[StructType])
-          (st.getPath.toString, r.getRecordCount, schema)
-        } finally r.close()
-      }
-  }
 
   /** Lineage rows, which the driver holds, written as one parquet file by
     * parquet's own writer: no Spark job and no generated class. The
@@ -304,8 +283,8 @@ object CrawlJob {
     }
 
     def readFrontier(path: String): (DataFrame, Long) = {
-      val footers = parquetFooters(spark, path)
-      (footers.flatMap(_._3).headOption.fold(spark.read)(spark.read.schema).parquet(path), footers.map(_._2).sum)
+      val footers = PlanSize.footers(spark, Seq(path))
+      (footers.flatMap(_.sparkSchema).headOption.fold(spark.read)(spark.read.schema).parquet(path), footers.map(_.rows).sum)
     }
     val committed = log.path("frontier").map(readFrontier)
     val computed = frontierOf(committed.map(_._1))
@@ -315,7 +294,7 @@ object CrawlJob {
       readFrontier(path)
     }
     val hostStates = read(spark, HostStateSchema, log.path("hostStates").toSeq).as[HostState]
-    val hostStateCount = log.path("hostStates").map(parquetFooters(spark, _).map(_._2).sum).getOrElse(0L)
+    val hostStateCount = PlanSize.footers(spark, log.path("hostStates").toSeq).map(_.rows).sum
     CrawlState(log, frontier, frontierCount, hostStates, hostStateCount)
   }
 
@@ -385,13 +364,9 @@ object CrawlJob {
     // hold; a stream's frontier grows with each batch's seeds, and a filter
     // it outgrows is rebuilt at doubled capacity on saturation
     val bloomCapacity = UrlSeen.capacityFor(state.frontierCount, bloomParts)
-    // a round whose frontier is within the broadcast bound broadcasts its
-    // probe set and its fetch keys (see PlanSize.BroadcastRows)
-    val small = state.frontierCount <= PlanSize.BroadcastRows
-    def bcastIfSmall(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // an aggregation over at most OneTaskRows rows runs in one task, with
-    // no exchange
-    def inOneTaskIf(rows: Long)(df: DataFrame): DataFrame = if (rows <= PlanSize.OneTaskRows) df.coalesce(1) else df
+    // a round whose frontier is broadcast-safe broadcasts its probe set and
+    // its fetch keys
+    val broadcastSafe = PlanSize.broadcastSafe(state.frontierCount)
 
     try {
       // 1. one tagged pass over the frontier: every row leaves it with its
@@ -410,7 +385,7 @@ object CrawlJob {
       //    the dupefilter — Scrapy re-enqueues retries with dont_filter
       //    semantics, and they are in `seen` already.
       val (fresh, dupes) = UrlSeen.splitSeenPartitionedBloom(
-        frontier, seenDf, bloomDir, bloomParts, small, probed = col("retries") === 0)
+        frontier, seenDf, bloomDir, bloomParts, broadcastSafe, probed = col("retries") === 0)
       //    Offsite (allowed_domains) ranks before robots, as in Scrapy: the
       //    spider middleware drops off-domain requests before they reach
       //    the scheduler/downloader at all. A null verdict drops the row.
@@ -422,8 +397,9 @@ object CrawlJob {
         .drop(Robots.Verdict)
       //    Per-host politeness schedule over the rows every gate passed;
       //    the dropped rows ride along as ineligible rows. A round whose
-      //    frontier and host table fit OneTaskRows is ranked in one task; a
-      //    larger one's dropped rows are shuffled only by the schedule's
+      //    frontier and host table together fit one task
+      //    (PlanSize.fitsOneTask, by rows) is ranked in one task; a larger
+      //    one's dropped rows are shuffled only by the schedule's
       //    first stage.
       sc.setJobDescription(s"crawl r$round: extract")
       val (tagged, taggedRows) = keepRows(Scheduler.withSchedule(
@@ -448,7 +424,8 @@ object CrawlJob {
       //    scheduled row meets exactly its own pages.
       val route = graft.provider.Providers.route(col("__fprov"), providers) _
       val fetchedPages = pages.select(col("url"), col("text"))
-        .join(bcastIfSmall(sched.select(col("url").as("__furl"), col("provider").as("__fprov"))),
+        .join(PlanSize.broadcastIf(broadcastSafe)(
+            sched.select(col("url").as("__furl"), col("provider").as("__fprov"))),
           col("url") === col("__furl"))
         .select(col("__furl"), col("__fprov"),
           col("text").isNotNull.as("__hit"),
@@ -458,7 +435,7 @@ object CrawlJob {
       //    the per-host counts are one scan of it each: a frontier's urls are
       //    distinct, so a row that was not scheduled meets no page.
       val extracted = keep(tagged
-        .join(bcastIfSmall(fetchedPages),
+        .join(PlanSize.broadcastIf(broadcastSafe)(fetchedPages),
           col("url") === col("__furl") && col("provider") <=> col("__fprov"), "left")
         .select(frontier.columns.toIndexedSeq.map(col) ++ Seq(
           col("__stage"),
@@ -472,8 +449,8 @@ object CrawlJob {
       //    prior rounds both excluded), written as this round's delta. The
       //    history probe is bounded by the round: only the keys this round
       //    produced leave the history scan, and a small round broadcasts
-      //    them, so the history is never shuffled. Up to OneTaskRows rows
-      //    the round dedups its rates in one task, with no exchange.
+      //    them, so the history is never shuffled. A round whose frontier
+      //    fits one task dedups its rates in one task, with no exchange.
       val rateKeys = Seq("card_code", "trans_code", "date", "provider_id")
       val parsed = extracted
         .filter(col("hit") && !col("is_err"))
@@ -484,9 +461,9 @@ object CrawlJob {
           col("provider_id"),
           col("rate"))
       val known = read(spark, RatesSchema, state.ratesPaths).select(rateKeys.map(col): _*)
-        .join(bcastIfSmall(parsed.select(rateKeys.map(col): _*)), rateKeys, "left_semi")
-      val newRates = inOneTaskIf(state.frontierCount)(parsed).dropDuplicates(rateKeys)
-        .join(bcastIfSmall(known), rateKeys, "left_anti")
+        .join(PlanSize.broadcastIf(broadcastSafe)(parsed.select(rateKeys.map(col): _*)), rateKeys, "left_semi")
+      val newRates = PlanSize.inOneTaskIf(PlanSize.fitsOneTask(state.frontierCount))(parsed).dropDuplicates(rateKeys)
+        .join(PlanSize.broadcastIf(broadcastSafe)(known), rateKeys, "left_anti")
 
       // 4. seen delta = scheduled canonical urls; the next frontier = the
       //    deferred rows plus the fetch misses, which re-enter at priority-1
@@ -508,7 +485,7 @@ object CrawlJob {
       //    (north_rule) in ONE per-host aggregation over the prior states
       //    and the kept fetch result, every count conditional: one shuffle
       //    of (host, stage, outcome) rows, or none when its input (the
-      //    frontier plus the host table) fits OneTaskRows. A stage with no
+      //    frontier plus the host table) fits one task. A stage with no
       //    rows for a host counts 0, never null. The three fetch outcomes
       //    of a scheduled row are mutually exclusive and exhaustive (!hit /
       //    hit∧is_err / hit∧¬is_err).
@@ -519,7 +496,8 @@ object CrawlJob {
       val gateStages = Seq("dedupDropped", "offsiteDropped", "robotsDropped", "scheduled", "deferred")
       val outcomes = Seq("fetchMissed", "errorDropped", "extractedOk")
       sc.setJobDescription(s"crawl r$round: hosts")
-      val perHost = keep(inOneTaskIf(state.frontierCount + state.hostStateCount)(state.hostStates.toDF()
+      val perHost = keep(PlanSize.inOneTaskIf(PlanSize.fitsOneTask(state.frontierCount + state.hostStateCount))(
+        state.hostStates.toDF()
         .unionByName(extracted.select(col("host"), col("__stage"), outcome.as("__outcome")),
           allowMissingColumns = true))
         .groupBy("host")
@@ -611,12 +589,10 @@ object CrawlJob {
       // duty: it IS the lineage delta, and its frontier rows sum to the
       // next round's frontier count — saving a full frontier re-scan per
       // round just to decide loop termination.
-      val lineageRows = Seq(("frontier", frontierPath), ("seen", seenPath), ("rates", ratesPath))
-        .flatMap { case (name, p) =>
-          parquetFooters(spark, p)
-            .filter(_._2 > 0) // 0-row part files never appeared under input_file_name either
-            .map { case (f, n, _) => (round, name, f, n) }
-        }
+      val lineageRows = for {
+        (name, p) <- Seq(("frontier", frontierPath), ("seen", seenPath), ("rates", ratesPath))
+        f <- PlanSize.footers(spark, Seq(p)) if f.rows > 0 // 0-row part files never appeared under input_file_name either
+      } yield (round, name, f.path.toString, f.rows)
       val lineagePath = log.store.dataPath("lineage", round)
       writeLineage(spark, lineagePath, lineageRows)
 
@@ -648,7 +624,7 @@ object CrawlJob {
         spark.read.schema(frontier1.schema).parquet(frontierPath),
         lineageRows.filter(_._2 == "frontier").map(_._4).sum,
         read(spark, HostStateSchema, Seq(hostStatesPath)).as[HostState],
-        parquetFooters(spark, hostStatesPath).map(_._2).sum)
+        PlanSize.footers(spark, Seq(hostStatesPath)).map(_.rows).sum)
     } finally kept.foreach(_.unpersist())
   }
 }

@@ -225,7 +225,7 @@ object DocDedup {
     // metric.) Signatures are numHashes longs/doc (~512 B at the default
     // 64) — orders of magnitude slimmer than the text they summarize, the
     // guide's "decide with small rows" shape.
-    val sigTable = graft.util.Par.spread(docs)
+    val sigTable = graft.util.PlanSize.spread(docs)
       .select(col(idCol).as("id"),
         graft.expr.Native.minhashSig(col(textCol), 3, numHashes).as("sig"))
       .localCheckpoint(eager = false)
@@ -305,7 +305,7 @@ object DocDedup {
   def simhashPairs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       maxHamming: Int = 3, maxBucket: Int = 100000,
       logDropped: Boolean = true): DataFrame = {
-    val base = graft.util.Par.spread(docs)
+    val base = graft.util.PlanSize.spread(docs)
       .select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
       .localCheckpoint(eager = false) // see minhashPairs: kernel folds into the capped job
     val bucketed = base.select(col("id"), explode(array((0 until 4).map { c =>
@@ -352,7 +352,7 @@ object DocDedup {
     // materialized once (localCheckpoint): the winnow kernel is the
     // expensive per-row pass and the (id, fp) table has two consumers
     // (bucket explode + pair attach) — see the minhashPairs shape note
-    val base = graft.util.Par.spread(docs).select(
+    val base = graft.util.PlanSize.spread(docs).select(
       col(idCol).as("id"),
       graft.functions.TextFns.fingerprint(col(textCol), k, window, hashKind).as("fp"))
       .localCheckpoint(eager = false) // see minhashPairs: kernel folds into the capped job
@@ -404,7 +404,7 @@ object DocDedup {
     // spread like every other kernel site: the shingle build otherwise
     // runs at raw scan parallelism (1-2 splits on a small parquet —
     // measured 3.4 s single-task at sf0.1; no-op at real scale)
-    val sh = graft.util.Par.spread(docs)
+    val sh = graft.util.PlanSize.spread(docs)
       .select(col(idCol).as("id"), shingles(col(textCol)).as("sh"))
     attachPairSides(candidates.select("id_a", "id_b"), sh, "sh")
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))

@@ -74,7 +74,7 @@ object UrlSeen {
       seen: DataFrame,
       dir: String,
       parts: Int,
-      expectedItemsPerPart: Long = 1000000L,
+      expectedItemsPerPart: Long,
       fpp: Double = 0.01): Unit =
     writeFilters(hashes(seen), dir, parts, _ => expectedItemsPerPart, fpp, loadExisting = false): Unit
 

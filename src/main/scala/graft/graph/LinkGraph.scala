@@ -53,7 +53,7 @@ object LinkGraph {
     // spread first (the kernel-site rule): the href regex scan otherwise
     // runs at raw scan parallelism (1-2 splits on a small page table;
     // no-op at real scale)
-    val pages = graft.util.Par.spread(pages0)
+    val pages = graft.util.PlanSize.spread(pages0)
     val keep = pages.columns.filter(c => c != htmlCol).map(col).toIndexedSeq
     // ONE regex pass over the page text (group 0), then per-match group
     // extraction over the ~100-char anchor substrings: the previous shape

@@ -128,7 +128,7 @@ object Corpus {
     // the optional NFC + repetition rungs) otherwise run at raw scan
     // parallelism (1-2 splits on a small parquet); no-op at real scale.
     val slim = rowVerdicts(
-      graft.util.Par.spread(
+      graft.util.PlanSize.spread(
         docs.select(col(idCol).cast("long").as("id"), srcText.as("__text"))),
       "__text", keepLang, minTokens, maxTokens, minQuality, repetition)
       .select("id", "n_tokens", "pred_lang", "quality", "__h", "__r0")

@@ -47,7 +47,7 @@ object Decontaminate {
     val bg = grams(benchmark, benchTextCol).select("__g").distinct()
     // corpus side spread first: the tokenize + n-gram explode otherwise
     // runs at raw scan parallelism (no-op at real scale)
-    val hits = grams(graft.util.Par.spread(
+    val hits = grams(graft.util.PlanSize.spread(
       docs.select(col(idCol).cast("long").as("id"), col(textCol))), textCol)
       .select("id", "__g")
       .join(broadcast(bg), Seq("__g"), "left_semi")

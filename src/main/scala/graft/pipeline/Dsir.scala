@@ -60,7 +60,7 @@ object Dsir {
     // at raw scan parallelism (1-2 splits on a small parquet; no-op at
     // real scale) — it feeds a partial aggregation, so the whole map side
     // was serialized on one task
-    graft.util.Par.spread(docs)
+    graft.util.PlanSize.spread(docs)
       .select(col(idCol).cast("long").as("id"),
         TextFns.loweredTokens(col(textCol)).as("__tk"))
       .select(col("id"), explode(featureStrings(col("__tk"))).as("__f"))

@@ -61,7 +61,7 @@ object LmScore {
   def trainCounts(refDocs: DataFrame, textCol: String = "text"): DataFrame =
     // spread first (the featureBuckets/clean precedent): the tokenize +
     // pair-explode map side otherwise runs at raw scan parallelism
-    graft.util.Par.spread(refDocs)
+    graft.util.PlanSize.spread(refDocs)
       .select(TextFns.loweredTokens(col(textCol)).as("__tk"))
       .select(explode(bigramPairs(col("__tk"))).as("__pc"))
       .groupBy(col("__pc.p").as("p"), col("__pc.w").as("w"))
@@ -85,7 +85,7 @@ object LmScore {
     val cp = model.groupBy("p").agg(sum("c2").as("__cp"))
     val vt = model.agg(count_distinct(col("w")).as("__v"))
     val ids = docs.select(col(idCol).cast("long").as("id"))
-    val rows = graft.util.Par.spread(docs)
+    val rows = graft.util.PlanSize.spread(docs)
       .select(col(idCol).cast("long").as("id"),
         TextFns.loweredTokens(col(textCol)).as("__tk"))
       .select(col("id"), explode(bigramPairs(col("__tk"))).as("__pc"))

@@ -33,7 +33,7 @@ object Frontier {
     * and the n·(n−1) pairs with their index are built there: they are
     * bounded by the currency universe, not by the data. The date axis is an
     * `explode` over the pairs, so the grid's rows are made on the executors.
-    * A grid that [[graft.util.PlanSize.fitsOnePartition]] bounds at one
+    * A grid that [[graft.util.PlanSize.fitsOneTask]] bounds at one
     * partition's worth of data comes back in one partition, so a consumer's
     * global sort or window over it needs no exchange.
     */
@@ -52,7 +52,7 @@ object Frontier {
         col("card_c"), col("trans_c"),
         date_sub(lit(java.sql.Date.valueOf(end)), col("date_idx")).as("date"),
         (col("pair_idx") * numDays + col("date_idx")).as("seq"))
-    if (graft.util.PlanSize.fitsOnePartition(grid)) grid.coalesce(1) else grid
+    graft.util.PlanSize.inOneTaskIf(graft.util.PlanSize.fitsOneTask(grid))(grid)
   }
 
   /** Helper: a currency list (driver-side, tiny) → indexed dim DataFrame. */
@@ -123,13 +123,13 @@ object Frontier {
     * key in this library); ties have no defined order among themselves.
     *
     * When the input's plan statistics bound it at or below one partition's
-    * worth of data ([[graft.util.PlanSize.fitsOnePartition]]; no job reads
+    * worth of data ([[graft.util.PlanSize.fitsOneTask]]; no job reads
     * them), one `row_number()` over a single partition ranks it: no quantile
     * job, no counts job, no offsets broadcast. Anything larger, or of
     * unknown size, takes the value-bucket path, whose every stage is parallel.
     */
   def withGlobalRank(df: DataFrame, orderCol: String, rankCol: String, partitions: Int): DataFrame =
-    globalRank(df, orderCol, rankCol, partitions, buckets = !graft.util.PlanSize.fitsOnePartition(df))
+    globalRank(df, orderCol, rankCol, partitions, buckets = !graft.util.PlanSize.fitsOneTask(df))
 
   /** Exact global EXCLUSIVE prefix sum of `valueCol` (cast to long) in
     * `orderCol` order — `outCol` = sum of all earlier rows' values, 0 for
@@ -143,7 +143,7 @@ object Frontier {
       df: DataFrame, orderCol: String, valueCol: String, outCol: String,
       partitions: Int): DataFrame =
     globalPrefixSum(df, orderCol, valueCol, outCol, partitions,
-      buckets = !graft.util.PlanSize.fitsOnePartition(df))
+      buckets = !graft.util.PlanSize.fitsOneTask(df))
 
   /** [[withGlobalRank]] on the path `buckets` names, whatever the input's size. */
   private[graft] def globalRank(

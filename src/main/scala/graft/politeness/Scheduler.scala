@@ -69,9 +69,10 @@ object Scheduler {
     * second scan subtracts the one from the other.
     *
     * `rows` bounds the rows of the frontier and the host states together.
-    * Up to [[graft.util.PlanSize.OneTaskRows]] they are ranked in one task
-    * ([[inOneTask]]); more, or an unknown size, take the salted path
-    * ([[salted]]), which shuffles the frontier. Both flag the same rows.
+    * When they fit one task ([[graft.util.PlanSize.fitsOneTask]]) they are
+    * ranked in one task ([[inOneTask]]); more, or an unknown size, take the
+    * salted path ([[salted]]), which shuffles the frontier. Both flag the
+    * same rows.
     */
   private[graft] def withSchedule(
       frontier: DataFrame,
@@ -81,7 +82,7 @@ object Scheduler {
       eligible: Column = lit(true),
       keep: DataFrame => DataFrame = identity,
       rows: Long = Long.MaxValue): DataFrame =
-    if (rows <= graft.util.PlanSize.OneTaskRows) inOneTask(frontier, hostStates, cfg, roundSec, eligible)
+    if (graft.util.PlanSize.fitsOneTask(rows)) inOneTask(frontier, hostStates, cfg, roundSec, eligible)
     else salted(frontier, hostStates, cfg, roundSec, eligible, keep)
 
   /** The frontier with its host's `__budget` and its `__eligible` flag.

@@ -85,7 +85,7 @@ object UrlFilter {
     val u = col(urlCol)
     // spread first: the host parse and trap regexes otherwise run at raw
     // scan parallelism on a small slice; no-op at real scale
-    val annotated = graft.util.Par.spread(urls)
+    val annotated = graft.util.PlanSize.spread(urls)
       .withColumn("host", UrlCols.hostCol(u))
       .withColumn("depth", depthCol(u))
       .withColumn("n_params", nParamsCol(u))

@@ -25,8 +25,8 @@ import graft.util.PlanSize
   *    the build side's `BroadcastMode` is the one the chosen join requires
   *    of it, so a null-aware anti join or a nested-loop join gets its own.
   *    No job, `BroadcastExchange` or AQE query stage runs for it.
-  *  - A global sort of a local relation of at most one partition's worth of
-  *    data ([[PlanSize.partitionBytes]]) by deterministic keys becomes the
+  *  - A global sort of a local relation that fits one task
+  *    ([[PlanSize.fitsOneTask]], by bytes) by deterministic keys becomes the
   *    relation with its rows sorted on the driver, by the interpreted form
   *    of the ordering `SortExec` uses. `collect` reads it with no job.
   *
@@ -90,7 +90,7 @@ object LocalRows {
   object DriverSort extends Rule[LogicalPlan] {
     def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
       case Sort(order, true, Held(l), _)
-          if order.forall(_.deterministic) && l.stats.sizeInBytes <= PlanSize.partitionBytes(conf) =>
+          if order.forall(_.deterministic) && PlanSize.fitsOneTask(l, conf) =>
         l.copy(data = l.data.sortBy(identity)(new InterpretedOrdering(order, l.output)))
     }
   }

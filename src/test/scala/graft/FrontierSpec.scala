@@ -267,13 +267,14 @@ class FrontierSpec extends SparkSpec {
     // explode's input size (one row per pair), which alone would rank this
     // grid in a single task
     val grid = Frontier.candidates(Frontier.currencyDim(spark, (0 until 160).map(i => f"C$i%03d")), testDate, 363)
-    assert(grid.queryExecution.optimizedPlan.stats.sizeInBytes <= PlanSize.partitionBytes(grid))
-    assert(!PlanSize.fitsOnePartition(grid))
+    assert(grid.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    assert(!PlanSize.fitsOneTask(grid))
     // q13's input: the golden missing frontier, 7 rows
     val golden = Frontier.missing(
       Frontier.candidates(Frontier.currencyDim(spark, Seq("GBP", "USD")), testDate, 8),
       ratesFixture, providers, "Mastercard", testDate, 8, Seq("GBP", "USD"))
-    assert(PlanSize.fitsOnePartition(golden))
+    assert(PlanSize.fitsOneTask(golden))
     // a generator whose length only the data knows gives no bound
     val words = Seq("a b c").toDF("t").select(explode(split($"t", " ")).as("w"))
     assert(PlanSize.upperBoundBytes(words).isEmpty)
