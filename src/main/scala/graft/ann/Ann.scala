@@ -319,12 +319,12 @@ object Ann {
     */
   def cosineNearDupPairs(corpus: DataFrame, idCol: String = "vec_id",
       threshold: Double = 0.95, bits: Int = 12, tables: Int = 4,
-      maxBucket: Int = 2000, logDropped: Boolean = true): DataFrame = {
+      maxBucket: Int = 2000): DataFrame = {
     val base = graft.util.PlanSize.spread(corpus).select(col(idCol).as("id"), col("embedding"))
     val bucketed = base.select(
       col("id"), explodedBuckets("embedding", bits, tables).as("bucket"))
     val pairs = graft.dedup.DocDedup.cappedBucketPairs(
-      bucketed, Seq("bucket"), maxBucket, logDropped, "cosineNearDupPairs")
+      bucketed, Seq("bucket"), maxBucket, "cosineNearDupPairs")
     graft.dedup.DocDedup.attachPairSides(pairs, base, "embedding")
       .withColumn("cosine", round(cosine(col("embedding_a"), col("embedding_b")), 6))
       .filter(col("cosine") >= threshold)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.checkpoint.{SnapshotStore, TableLog}
 import graft.dedup.UrlSeen
-import graft.model.{HostState, PolitenessConfig}
+import graft.model.{HostState, PolitenessConfig, RatesSchema}
 import graft.politeness.{Robots, Scheduler}
 import graft.util.{PlanSize, Sessions}
 
@@ -38,14 +38,12 @@ object CrawlJob {
   /** xxhash64 over the canonical URL — the dedup key (north_rule). */
   private def canonicalCol = graft.expr.Native.canonicalize _
 
-  /** Schemas of the committed snapshot tables. Every read of a committed
-    * table pins its schema, so a resumed round starts no parquet
-    * schema-inference job. The frontier's columns follow the caller's
-    * frontier; its resume-time read takes the schema Spark stored in the
-    * parquet footer.
+  /** Schemas of the committed snapshot tables (the rates table's is
+    * [[graft.model.RatesSchema]]). Every read of a committed table pins its
+    * schema, so a resumed round starts no parquet schema-inference job. The
+    * frontier's columns follow the caller's frontier; its resume-time read
+    * takes the schema Spark stored in the parquet footer.
     */
-  private[graft] val RatesSchema =
-    StructType.fromDDL("card_code STRING, trans_code STRING, date DATE, provider_id INT, rate DOUBLE")
   private[graft] val SeenSchema = StructType.fromDDL("urlHash BIGINT, url STRING, round INT")
   private[graft] val MetricsSchema = StructType.fromDDL(
     "round INT, host STRING, scheduled BIGINT, dedupDropped BIGINT, offsiteDropped BIGINT, " +
@@ -75,11 +73,6 @@ object CrawlJob {
     } finally writer.close()
   }
 
-  /** Host column — see [[graft.urls.UrlCols.hostCol]] (shared with the
-    * robots rule table so frontier hosts and rule hosts derive identically).
-    */
-  def hostCol(url: Column): Column = graft.urls.UrlCols.hostCol(url)
-
   /** Expand seed combos (card_c, trans_c, date, seq) into frontier rows for
     * one provider, building the byte-exact provider URL (SURVEY.md §2#35-36)
     * as pure column expressions. Provider behavior is resolved from the
@@ -100,7 +93,7 @@ object CrawlJob {
       url.as("url"),
       canonUrl.as("canonUrl"),
       graft.urls.UrlCols.urlHashCol(url, canonUrl, dedupKey).as("urlHash"),
-      hostCol(url).as("host"),
+      graft.urls.UrlCols.hostCol(url).as("host"),
       col("card_c"), col("trans_c"), col("date"),
       lit(provider).as("provider"),
       lit(0).as("priority"),

@@ -148,12 +148,11 @@ object DocDedup {
       bucketed: DataFrame, // (id, <bucketCols…>)
       bucketCols: Seq[String],
       maxBucket: Int,
-      logDropped: Boolean,
       op: String): DataFrame = {
     val w = Window.partitionBy(bucketCols.map(col): _*).orderBy("id")
     val ranked = bucketed.withColumn("__rn", row_number().over(w))
-    val observed = if (logDropped) withDroppedObserver(op, ranked, "__rn", maxBucket) else ranked
-    val capped = observed.filter(col("__rn") <= maxBucket).drop("__rn").localCheckpoint()
+    val capped = withDroppedObserver(op, ranked, "__rn", maxBucket)
+      .filter(col("__rn") <= maxBucket).drop("__rn").localCheckpoint()
     capped.select(bucketCols.map(col) :+ col("id").as("id_a"): _*)
       .join(capped.select(bucketCols.map(col) :+ col("id").as("id_b"): _*),
         bucketCols)
@@ -196,8 +195,7 @@ object DocDedup {
       numHashes: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.7,
-      maxBucket: Int = 1000,
-      logDropped: Boolean = true): DataFrame = {
+      maxBucket: Int = 1000): DataFrame = {
     val rowsPerBand = numHashes / bands
     // the signature map (shingle → hash once → numHashes permutations) is
     // the expensive per-row kernel — spread it across the cluster when the
@@ -237,7 +235,7 @@ object DocDedup {
     val buckets = sigTable
       .select(col("id"), explode(lshBuckets(col("sig"), bands, rowsPerBand)).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-    val pairs = cappedBucketPairs(buckets, Seq("band", "bucket"), maxBucket, logDropped, "minhashPairs")
+    val pairs = cappedBucketPairs(buckets, Seq("band", "bucket"), maxBucket, "minhashPairs")
     // attach the materialized signature ONLY to surviving pairs
     attachPairSides(pairs, sigTable, "sig")
       .withColumn(
@@ -303,15 +301,14 @@ object DocDedup {
     * read the materialized blocks.
     */
   def simhashPairs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      maxHamming: Int = 3, maxBucket: Int = 100000,
-      logDropped: Boolean = true): DataFrame = {
+      maxHamming: Int = 3, maxBucket: Int = 100000): DataFrame = {
     val base = graft.util.PlanSize.spread(docs)
       .select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
       .localCheckpoint(eager = false) // see minhashPairs: kernel folds into the capped job
     val bucketed = base.select(col("id"), explode(array((0 until 4).map { c =>
       struct(lit(c).as("c"), shiftrightunsigned(col("sig"), c * 16).bitwiseAND(lit(0xffffL)).as("v"))
     }: _*)).as("chunk"))
-    val pairs = cappedBucketPairs(bucketed, Seq("chunk"), maxBucket, logDropped, "simhashPairs")
+    val pairs = cappedBucketPairs(bucketed, Seq("chunk"), maxBucket, "simhashPairs")
     attachPairSides(pairs, base, "sig")
       .withColumn("hamming", hamming(col("sig_a"), col("sig_b")))
       .filter(col("hamming") <= maxHamming)
@@ -347,8 +344,7 @@ object DocDedup {
     */
   def fingerprintPairs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       k: Int = 9, window: Int = 16, minShared: Int = 3,
-      maxBucket: Int = 1000, hashKind: String = "poly",
-      logDropped: Boolean = true): DataFrame = {
+      maxBucket: Int = 1000, hashKind: String = "poly"): DataFrame = {
     // materialized once (localCheckpoint): the winnow kernel is the
     // expensive per-row pass and the (id, fp) table has two consumers
     // (bucket explode + pair attach) — see the minhashPairs shape note
@@ -357,7 +353,7 @@ object DocDedup {
       graft.functions.TextFns.fingerprint(col(textCol), k, window, hashKind).as("fp"))
       .localCheckpoint(eager = false) // see minhashPairs: kernel folds into the capped job
     val buckets = base.select(col("id"), explode(col("fp")).as("h"))
-    val pairs = cappedBucketPairs(buckets, Seq("h"), maxBucket, logDropped, "fingerprintPairs")
+    val pairs = cappedBucketPairs(buckets, Seq("h"), maxBucket, "fingerprintPairs")
     attachPairSides(pairs, base, "fp")
       .withColumn("n_shared", size(array_intersect(col("fp_a"), col("fp_b"))))
       .filter(col("n_shared") >= minShared)
@@ -396,11 +392,10 @@ object DocDedup {
     */
   def nearDupPairs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, numHashes: Int = 64, bands: Int = 16,
-      maxBucket: Int = 1000, candidateSlack: Double = 0.8,
-      logDropped: Boolean = true): DataFrame = {
+      maxBucket: Int = 1000, candidateSlack: Double = 0.8): DataFrame = {
     val candidates = minhashPairs(docs, idCol, textCol, numHashes = numHashes,
       bands = bands, threshold = threshold * candidateSlack,
-      maxBucket = maxBucket, logDropped = logDropped)
+      maxBucket = maxBucket)
     // spread like every other kernel site: the shingle build otherwise
     // runs at raw scan parallelism (1-2 splits on a small parquet —
     // measured 3.4 s single-task at sf0.1; no-op at real scale)

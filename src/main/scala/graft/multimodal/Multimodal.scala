@@ -4,15 +4,15 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing for training-data pipelines: image/audio/video
-  * as opaque `binary` columns with typed metadata, plus decode /
-  * feature-extract / resize stages.
+  * as opaque `binary` columns with typed metadata, plus decode and
+  * feature-extract stages.
   *
   * Decode layering, honestly stated: formats the bare JVM can parse get a
   * REAL decoder — [[decodePnm]] handles binary Netpbm (P5 grayscale /
   * P6 RGB) end to end: header grammar incl. comments, raster extraction,
-  * Rec.601 luma, and a true pixel-grid resize ([[pnmResize]]) that emits
-  * valid PNM bytes. Codec formats (JPEG/PNG/audio/video) have no codecs in
-  * this container, so their kernel remains the clearly-marked deterministic
+  * Rec.601 luma, and [[encodePnm]] back to valid PNM bytes. Codec formats
+  * (JPEG/PNG/audio/video) have no codecs in this container, so their
+  * kernel remains the clearly-marked deterministic
   * STUB (`stubDecode`); the batch stages take the kernel as a PARAMETER, so
   * a deployment swaps one function for JNI/FFmpeg without touching the
   * Spark plumbing — which is real and tested either way: schema, batch
@@ -111,36 +111,6 @@ object Multimodal {
     System.arraycopy(header, 0, out, 0, header.length)
     System.arraycopy(img.pixels, 0, out, header.length, img.pixels.length)
     out
-  }
-
-  /** REAL nearest-neighbor resize on the 2-D pixel grid (not a byte-stream
-    * subsample): source pixel (x·srcW/dstW, y·srcH/dstH) per target pixel,
-    * emitted as valid PNM bytes with the rewritten header. Non-PNM bytes
-    * return None — the [[resize]] stage falls back to the stub kernel.
-    */
-  def pnmResize(content: Array[Byte], dstW: Int): Option[Array[Byte]] = {
-    decodePnm(content).filter(_.width > 0).map { img =>
-      val w2 = math.min(dstW, img.width)
-      val h2 = math.max(1, (img.height.toLong * w2 / img.width).toInt)
-      val out = new Array[Byte](w2 * h2 * img.channels)
-      var y = 0
-      while (y < h2) {
-        val sy = (y.toLong * img.height / h2).toInt
-        var x = 0
-        while (x < w2) {
-          val sx = (x.toLong * img.width / w2).toInt
-          var c = 0
-          while (c < img.channels) {
-            out((y * w2 + x) * img.channels + c) =
-              img.pixels((sy * img.width + sx) * img.channels + c)
-            c += 1
-          }
-          x += 1
-        }
-        y += 1
-      }
-      encodePnm(PnmImage(w2, h2, img.channels, img.maxVal, out))
-    }
   }
 
   /** The typed media row: content plus the metadata a real pipeline keys on. */
@@ -346,57 +316,5 @@ object Multimodal {
       .join(broadcast(saltDf), col("__bucket") === col("__b"))
       .repartition(parts, col("__salt"))
       .drop("__bytes", "__pid", "__ord", "__cum", "__bucket", "__opid", "__off", "__b", "__salt")
-  }
-
-  // ---------------------------------------------------------------- resize
-
-  /** STUB resize kernel — stands in for an image scaler. Deterministic pure
-    * function: keeps every ceil(srcW/dstW)-th byte (a nearest-neighbor
-    * downsample of the byte stream), so output size tracks the scale factor
-    * the way a real resampler's would. Swap for JNI/libvips in production.
-    */
-  def stubResize(content: Array[Byte], srcW: Int, dstW: Int): Array[Byte] = {
-    if (content == null || content.isEmpty || dstW >= srcW || dstW <= 0) content
-    else {
-      val step = math.max(1, math.ceil(srcW.toDouble / dstW).toInt)
-      val out = new Array[Byte]((content.length + step - 1) / step)
-      var i = 0
-      var j = 0
-      while (i < content.length) { out(j) = content(i); i += step; j += 1 }
-      out
-    }
-  }
-
-  /** Resize stage: batch-iterated like [[extractFeatures]] (one decoder/
-    * scaler init per partition in a real pipeline), metadata updated to the
-    * target geometry. Content stays an opaque binary column throughout.
-    * PNM rows are resized for REAL ([[pnmResize]] — true pixel-grid
-    * nearest-neighbor, valid PNM back out); other formats use the stub
-    * byte-stream kernel until a production scaler is plugged in.
-    */
-  def resize(media: Dataset[MediaRow], targetWidth: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    // a non-positive target would pass the width check below and rewrite
-    // rows as width=0 with full-size content — corrupt metadata, no error
-    require(targetWidth > 0, "targetWidth must be positive")
-    media.mapPartitions { rows =>
-      // real pipeline: val scaler = Scaler.init(targetWidth) — once per partition
-      rows.map { r =>
-        if (r.width <= targetWidth) r
-        else pnmResize(r.content, targetWidth) match {
-          case Some(resized) =>
-            // metadata from the DECODED geometry of the emitted bytes, not
-            // the stub formula over the row metadata: if the row's stored
-            // width/height disagreed with the actual encoded dims, the
-            // formula would leave metadata and embedded PNM header diverged
-            val g = decodePnm(resized).get // just encoded by pnmResize — always parses
-            r.copy(content = resized, width = g.width, height = g.height)
-          case None => r.copy(
-            content = stubResize(r.content, r.width, targetWidth),
-            width = targetWidth,
-            height = math.max(1, (r.height.toLong * targetWidth / math.max(r.width, 1)).toInt))
-        }
-      }
-    }
   }
 }

@@ -333,9 +333,7 @@ object Frontier {
     }
     val ratesPaths = log.chain("rates")
     if (ratesPaths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "card_code STRING, trans_code STRING, date DATE, provider_id INT, rate DOUBLE"))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], graft.model.RatesSchema)
     else spark.read.parquet(ratesPaths: _*)
   }
 

@@ -149,7 +149,7 @@ class CheckpointSpec extends SparkSpec {
     val dir = Files.createTempDirectory("crawlSchemas").toString
     CrawlJob.run(spark, frontier, pages, robots, dir, cfg, roundSec = 1.25, maxRounds = 2)
     val (rates, seen, metrics) = CrawlJob.run(spark, frontier, pages, robots, dir, cfg, roundSec = 1.25)
-    assert(rates.schema === CrawlJob.RatesSchema)
+    assert(rates.schema === graft.model.RatesSchema)
     assert(seen.schema === CrawlJob.SeenSchema)
     assert(metrics.schema === CrawlJob.MetricsSchema)
     // each pin names the columns and types the writers put on disk, so a
@@ -158,7 +158,7 @@ class CheckpointSpec extends SparkSpec {
     def onDisk(table: String) = spark.read.parquet(man(table).split(";").toIndexedSeq: _*)
       .schema.map(f => f.name -> f.dataType)
     def pinned(schema: org.apache.spark.sql.types.StructType) = schema.map(f => f.name -> f.dataType)
-    assert(onDisk("rates") === pinned(CrawlJob.RatesSchema))
+    assert(onDisk("rates") === pinned(graft.model.RatesSchema))
     assert(onDisk("seen") === pinned(CrawlJob.SeenSchema))
     assert(onDisk("metrics") === pinned(CrawlJob.MetricsSchema))
     assert(onDisk("lineage") === pinned(CrawlJob.LineageSchema))

@@ -242,7 +242,7 @@ class CrawlE2ESpec extends SparkSpec {
       "https://api_v2.example.com/x",          // underscore: URI rejects → fallback
       "http://user@host.com:8080/y")           // userinfo+port stripped
       .toDF("url")
-    val got = urls.select(CrawlJob.hostCol(col("url")).as("h"))
+    val got = urls.select(graft.urls.UrlCols.hostCol(col("url")).as("h"))
       .as[String].collect().toSeq
     assert(got === Seq("www.example.com", "api_v2.example.com", "host.com"))
   }

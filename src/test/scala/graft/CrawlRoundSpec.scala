@@ -137,7 +137,7 @@ class CrawlRoundSpec extends SparkSpec {
       .select(col("card_c").as("card_code"), col("trans_c").as("trans_code"), col("date"),
         col("provider_id"), col("rate"))
       .dropDuplicates(keys)
-      .join(spark.read.schema(CrawlJob.RatesSchema).parquet(state.ratesPaths: _*).select(keys.map(col): _*),
+      .join(spark.read.schema(graft.model.RatesSchema).parquet(state.ratesPaths: _*).select(keys.map(col): _*),
         keys, "left_anti")
     val retryRows = extracted.filter(!col("hit") && col("retries") < maxRetries)
       .select(carry.map {

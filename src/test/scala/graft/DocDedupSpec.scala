@@ -177,17 +177,31 @@ class DocDedupSpec extends SparkSpec {
     // ONLY shape since r07 — it cannot exceed the 2^31 array limit at any
     // cap, and pair predicates push into its join condition) must produce
     // exactly the expected i<j sets, and the plan must never materialize a
-    // flattened pair array.
+    // flattened pair array. The 10 ids past the cap are reported as
+    // dropped coverage on the job that materializes the capped stream.
     val bucketed = (1 to 50).map(i => (i.toLong, "b0")).toDF("id", "bucket")
-    val arr = DocDedup.cappedBucketPairs(
-      bucketed, Seq("bucket"), maxBucket = 40, logDropped = false, "spec")
+    val dropped = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        qe.observedMetrics.foreach { case (name, row) =>
+          if (name.startsWith("graft.dropped.spec")) dropped.add(row.getLong(0))
+        }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val arr = try {
+      val capped = DocDedup.cappedBucketPairs(bucketed, Seq("bucket"), maxBucket = 40, "spec")
+      // listener bus is async — poll for the observed metric
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (dropped.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      capped
+    } finally spark.listenerManager.unregister(listener)
+    assert(dropped.asScala.toList === List(10L), s"expected 10 dropped rows observed, got ${dropped.asScala.toList}")
     val expectCapped = (for { a <- 1 to 40; b <- (a + 1) to 40 } yield (a.toLong, b.toLong)).toSet
     assert(arr.as[(Long, Long)].collect().toSet === expectCapped)
     val arrPlan = arr.queryExecution.optimizedPlan.toString
     assert(!arrPlan.toLowerCase.contains("flatten"), arrPlan)
-    val joined = DocDedup.cappedBucketPairs(
-      bucketed, Seq("bucket"), maxBucket = 2049,
-      logDropped = false, "spec")
+    val joined = DocDedup.cappedBucketPairs(bucketed, Seq("bucket"), maxBucket = 2049, "spec")
     val expectAll = (for { a <- 1 to 50; b <- (a + 1) to 50 } yield (a.toLong, b.toLong)).toSet
     assert(joined.as[(Long, Long)].collect().toSet === expectAll)
     val plan = joined.queryExecution.optimizedPlan.toString
@@ -201,9 +215,7 @@ class DocDedupSpec extends SparkSpec {
     // option (and the count that would silently shrink if the join
     // condition or dedup were wrong)
     val bucketed = (1 to 2000).map(i => (i.toLong, 0)).toDF("id", "chunk")
-    val pairs = DocDedup.cappedBucketPairs(
-      bucketed, Seq("chunk"), maxBucket = 2049,
-      logDropped = false, "spec")
+    val pairs = DocDedup.cappedBucketPairs(bucketed, Seq("chunk"), maxBucket = 2049, "spec")
     assert(pairs.count() === 1999000L)
     assert(pairs.filter(col("id_a") >= col("id_b")).count() === 0L)
   }
