@@ -235,6 +235,11 @@ object TableLog {
   /** The separator of a chain's paths and a key set's keys. */
   val Sep = ";"
 
+  /** The `every` of [[TableLog.compact]] that the crawl and both streams
+    * use unless told otherwise: commits between compactions.
+    */
+  private[graft] val DefaultCompactEvery = 64
+
   /** Merges the parquet files in the directories `dirs` into one file in
     * the directory `out` with parquet's rewriter, which copies column chunks
     * without decoding them. Returns false, and writes nothing, when the

@@ -104,12 +104,6 @@ object CrawlJob {
       p.headersFor(col("card_c"), col("trans_c"), col("date")).as("headers"))
   }
 
-  /** Defaults [[run]] and the stream driver share: Bloom filter partitions,
-    * and rounds between delta-chain compactions.
-    */
-  private[graft] val DefaultBloomParts = 32
-  private[graft] val DefaultCompactEvery = 64
-
   /** Run (or resume) a crawl: load the committed state, then run rounds
     * until the frontier is empty or `maxRounds` rounds are committed.
     *
@@ -143,8 +137,8 @@ object CrawlJob {
       maxRounds: Int = 1000,
       maxRetries: Int = 2,
       allowedDomains: Seq[String] = Nil,
-      bloomParts: Int = DefaultBloomParts,
-      compactEvery: Int = DefaultCompactEvery,
+      bloomParts: Int = UrlSeen.DefaultBloomParts,
+      compactEvery: Int = TableLog.DefaultCompactEvery,
       insertBatchRows: Option[Int] = None,
       providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry): (DataFrame, DataFrame, DataFrame) =
     restoringJobDescription(spark) {
@@ -229,7 +223,8 @@ object CrawlJob {
   }
 
   /** Load the committed state in `checkpointDir` (round 0 and empty tables
-    * when nothing is committed) and reconcile its Bloom sidecar. The
+    * when nothing is committed) and reconcile its Bloom filters with the
+    * seen chain ([[UrlSeen.reconcile]]). The
     * loader's jobs are labelled "crawl r<N>: load", and so are any the
     * caller submits before its first round.
     *
@@ -247,33 +242,8 @@ object CrawlJob {
       frontierOf: Option[DataFrame] => DataFrame): CrawlState = {
     import spark.implicits._
     val log = new SnapshotStore(checkpointDir).log()
-    val round = log.version
-    spark.sparkContext.setJobDescription(s"crawl r$round: load")
-    val seenPaths = log.chain("seen")
-
-    // reconcile the partitioned-Bloom sidecar state with the committed
-    // snapshot: the filters are merged BEFORE each manifest commit, so
-    // marker ≥ the round that last changed seen ⇒ filters ⊇ seen (extra
-    // keys are harmless — the exact anti-join confirms). A marker BEHIND it
-    // (legacy checkpoint layout, manual surgery) breaks that superset
-    // invariant, so rebuild once from the committed seen set. A foreign
-    // commit (a rates ingest, an IVF model) moves the version but not seen;
-    // a seen chain whose version its paths do not tell is compared with the
-    // committed round.
-    val bloomDir = s"$checkpointDir/blooms"
-    if (round > 0 && UrlSeen.readBloomRound(bloomDir).forall(_ < log.chainVersion("seen").getOrElse(round))) {
-      if (seenPaths.nonEmpty) {
-        // rebuild from DISTINCT keys: retry rows re-append the same urlHash
-        // each round, so raw row counts would inflate the saturation sidecars
-        // and trigger premature doubled-capacity rebuilds (the merge path
-        // already dedups via distinct() — keep both paths consistent)
-        val distinctKeys = read(spark, SeenSchema, seenPaths).select("urlHash").distinct()
-        val seenCount = distinctKeys.count()
-        UrlSeen.buildPartitionedBlooms(
-          distinctKeys, bloomDir, bloomParts, UrlSeen.capacityFor(seenCount, bloomParts))
-      }
-      UrlSeen.writeBloomRound(bloomDir, round)
-    }
+    spark.sparkContext.setJobDescription(s"crawl r${log.version}: load")
+    UrlSeen.reconcile(log, "seen", s"$checkpointDir/blooms", bloomParts)(read(spark, SeenSchema, log.chain("seen")))
 
     def readFrontier(path: String): (DataFrame, Long) = {
       val footers = PlanSize.footers(spark, Seq(path))
@@ -317,8 +287,8 @@ object CrawlJob {
       roundSec: Double,
       maxRetries: Int,
       allowedDomains: Seq[String] = Nil,
-      bloomParts: Int = DefaultBloomParts,
-      compactEvery: Int = DefaultCompactEvery,
+      bloomParts: Int = UrlSeen.DefaultBloomParts,
+      compactEvery: Int = TableLog.DefaultCompactEvery,
       insertBatchRows: Option[Int] = None,
       providers: Seq[graft.provider.Provider] = graft.provider.Providers.registry,
       keys: Map[String, String] = Map.empty): CrawlState = {
@@ -536,7 +506,7 @@ object CrawlJob {
       // incremental Bloom maintenance rides the same concurrent write phase
       // (it reads only the kept tagged frame) and, like the data writes,
       // completes BEFORE the manifest commit — the superset invariant (see
-      // the reconcile note in loadState). Merge only this round's FIRST-TRY
+      // UrlSeen.reconcile). Merge only this round's FIRST-TRY
       // scheduled keys: O(delta), flat per round; retry rows are skipped
       // (their hash entered the filter in the round that first scheduled
       // them, and re-adding would inflate the saturation counters). The
@@ -554,8 +524,7 @@ object CrawlJob {
         UrlSeen.mergeDeltaKeys(
           firstTryKeys,
           seenDf.select("urlHash").unionByName(sched.filter(col("retries") === 0).select(col("urlHash"))),
-          bloomDir, bloomParts, bloomCapacity)
-        UrlSeen.writeBloomRound(bloomDir, round)
+          bloomDir, bloomParts, bloomCapacity, Some(round))
         "blooms"
       }
       val writes = Future.sequence(Seq(

@@ -20,8 +20,21 @@ import org.apache.spark.util.sketch.BloomFilter
   * each round's seen delta and probed by task
   * ([[filterNewPartitionedBloom]]). That is the one cross-round Bloom path;
   * [[filterNewExact]] is the exact confirm it falls back to.
+  *
+  * It is the store's one membership index, for documents as well as URLs:
+  * the corpus stream keys each document by `xxhash64` of its md5 content
+  * identity, with the identity itself as the exact key, and dedups each
+  * micro-batch with [[filterNew]], the exact confirm with no filters (the
+  * whole batch is its probe). Only this object reads or writes the
+  * filters and their marker ([[reconcile]], [[mergeDeltaKeys]]).
   */
 object UrlSeen {
+
+  /** Filter partitions of the crawl's index. */
+  private[graft] val DefaultBloomParts = 32
+
+  /** False-positive rate every filter is built for. */
+  private val Fpp = 0.01
 
   /** First-occurrence within-batch dedup: among rows sharing a canonical
     * URL keep the lowest `seq` (Scrapy drops later duplicates; order is
@@ -33,6 +46,15 @@ object UrlSeen {
     val w = Window.partitionBy(col(urlCol)).orderBy(col(seqCol))
     batch.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
+
+  /** Exact dedup with no Bloom prune, for a caller that probes every
+    * candidate (the corpus stream): with `smallProbe` the candidates are
+    * themselves the broadcast probe set of [[splitSeenBroadcast]], so `seen`
+    * is scanned and never shuffled; otherwise [[filterNewExact]].
+    */
+  def filterNew(candidates: DataFrame, seen: DataFrame, smallProbe: Boolean): DataFrame =
+    if (smallProbe) splitSeenBroadcast(candidates, candidates, seen, lit(true))._1
+    else filterNewExact(candidates, seen)
 
   /** Exact cross-round dedup: candidates not present in the seen set.
     * Joins on the 64-bit hash first (narrow shuffle), confirms on the
@@ -74,9 +96,8 @@ object UrlSeen {
       seen: DataFrame,
       dir: String,
       parts: Int,
-      expectedItemsPerPart: Long,
-      fpp: Double = 0.01): Unit =
-    writeFilters(hashes(seen), dir, parts, _ => expectedItemsPerPart, fpp, loadExisting = false): Unit
+      expectedItemsPerPart: Long): Unit =
+    writeFilters(hashes(seen), dir, parts, _ => expectedItemsPerPart, Fpp, loadExisting = false): Unit
 
   /** The `urlHash` column of `df` as a key RDD. */
   private def hashes(df: DataFrame): org.apache.spark.rdd.RDD[Long] =
@@ -110,12 +131,15 @@ object UrlSeen {
       dir: String,
       parts: Int,
       capacityPerPart: Long = 1L << 18,
-      fpp: Double = 0.01): Unit =
-    mergeDeltaKeys(hashes(delta), seenWithDelta, dir, parts, capacityPerPart, fpp)
+      fpp: Double = Fpp): Unit =
+    mergeDeltaKeys(hashes(delta), seenWithDelta, dir, parts, capacityPerPart, None, fpp)
 
   /** [[mergeDeltaIntoPartitionedBlooms]] over the delta's keys as an RDD:
     * a caller that holds the rows already filters them with no plan, and
-    * so with no generated class.
+    * so with no generated class. A committer passes `version`, the version
+    * it commits next: the marker that the filters reflect the chain up to
+    * it is written after the merge, and both before that commit, which
+    * keeps the filters a superset of every committed chain ([[reconcile]]).
     */
   private[graft] def mergeDeltaKeys(
       delta: org.apache.spark.rdd.RDD[Long],
@@ -123,8 +147,8 @@ object UrlSeen {
       dir: String,
       parts: Int,
       capacityPerPart: Long,
-      fpp: Double = 0.01): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      version: Option[Int],
+      fpp: Double = Fpp): Unit = {
     val results = writeFilters(delta, dir, parts, _ => capacityPerPart, fpp, loadExisting = true)
     val saturated = results.filter { case (_, cap, n) => n > cap }
     if (saturated.nonEmpty) {
@@ -135,6 +159,7 @@ object UrlSeen {
         .filter(pmod(col("urlHash"), lit(parts.toLong)).isin(capOf.keys.toSeq: _*))
       writeFilters(hashes(full), dir, parts, capOf, fpp, loadExisting = false): Unit
     }
+    version.foreach(writeBloomRound(dir, _))
   }
 
   /** Distributed filter write: one task per `pm` builds (or extends, when
@@ -225,20 +250,41 @@ object UrlSeen {
     }
   }
 
-  /** Durable "filters reflect rounds ≤ r" marker (written AFTER a merge, so
-    * marker ≥ committed-round ⇒ filters ⊇ seen). A resume that finds the
-    * marker behind the committed round (legacy checkpoint, manual surgery)
-    * must rebuild via [[buildPartitionedBlooms]].
+  /** Durable "filters reflect versions ≤ v" marker (written AFTER a merge,
+    * so marker ≥ the committed version ⇒ filters ⊇ the chain). A load that
+    * finds it behind ([[reconcile]]) rebuilds the filters.
     */
-  def writeBloomRound(dir: String, round: Int): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    atomicWrite(dir, "ROUND")(out => out.write(round.toString.getBytes("UTF-8")))
-  }
+  private[graft] def writeBloomRound(dir: String, version: Int): Unit =
+    atomicWrite(dir, "ROUND")(out => out.write(version.toString.getBytes("UTF-8")))
 
-  def readBloomRound(dir: String): Option[Int] = {
+  private[graft] def readBloomRound(dir: String): Option[Int] = {
     val p = java.nio.file.Paths.get(dir, "ROUND")
     if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p).trim.toInt) else None
   }
+
+  /** Reconcile the filters in `dir` with the committed `chain` of `log`,
+    * on load. Every committer merges its delta's keys and writes the marker
+    * BEFORE its manifest commit, so a marker at or past the version that
+    * last changed the chain means the filters hold every committed key
+    * (extra keys are harmless: the exact confirm absorbs them). A marker
+    * behind it (a store written before the filters, wiped filters, manual
+    * surgery) breaks that superset invariant, so the filters are rebuilt
+    * once from `keys`, the chain's `urlHash` column, and marked. A foreign
+    * commit (a rates ingest, an IVF model) moves the version but not the
+    * chain; a chain whose version its paths do not tell is compared with
+    * the committed version.
+    */
+  def reconcile(log: graft.checkpoint.TableLog, chain: String, dir: String, parts: Int)(keys: => DataFrame): Unit =
+    if (log.version > 0 && readBloomRound(dir).forall(_ < log.chainVersion(chain).getOrElse(log.version))) {
+      if (log.chain(chain).nonEmpty) {
+        // from DISTINCT keys: the crawl's retry rows re-append the same
+        // urlHash, and raw row counts would inflate the saturation sidecars
+        // (the merge's rebuild counts distinct keys too)
+        val distinctKeys = keys.select("urlHash").distinct()
+        buildPartitionedBlooms(distinctKeys, dir, parts, capacityFor(distinctKeys.count(), parts))
+      }
+      writeBloomRound(dir, log.version)
+    }
 
   /** Bloom-prune candidates against the partitioned filters, then confirm
     * exactly. Each task lazily loads only the filters for the `pm` values
@@ -291,17 +337,30 @@ object UrlSeen {
       val seenKeys = seen.select(col("urlHash").as("__sh"), col("url").as("__su"))
       (candidates.filter(!maybe).unionAll(filterNewExact(maybeSeen, seen)),
         maybeSeen.join(seenKeys, isSeen, "left_semi"))
-    } else {
-      val confirmedSeen = broadcast(seen
-        .join(
-          broadcast(maybeSeen.select(col("urlHash").as("__ph"), col("canonUrl").as("__pu"))),
-          col("urlHash") === col("__ph") && col("url") === col("__pu"), "left_semi")
-        .select(col("urlHash").as("__sh"), col("url").as("__su")))
-      val isSeen =
-        probed && candidates("urlHash") === col("__sh") && candidates("canonUrl") === col("__su")
-      (candidates.join(confirmedSeen, isSeen, "left_anti"),
-        candidates.join(confirmedSeen, isSeen, "left_semi"))
-    }
+    } else splitSeenBroadcast(candidates, maybeSeen, seen, probed)
+  }
+
+  /** The exact confirm with `seen` scanned once and never shuffled: a
+    * left-semi join of `seen` against a broadcast of `probe`'s keys yields
+    * the confirmed-seen keys, and a broadcast of those splits `candidates`
+    * into (the rows it keeps, the rows it drops as seen). `probe` holds
+    * every row of `candidates` that may be seen and is small enough to
+    * broadcast; only rows where `probed` holds are checked.
+    */
+  private def splitSeenBroadcast(
+      candidates: DataFrame,
+      probe: DataFrame,
+      seen: DataFrame,
+      probed: Column): (DataFrame, DataFrame) = {
+    val confirmedSeen = broadcast(seen
+      .join(
+        broadcast(probe.select(col("urlHash").as("__ph"), col("canonUrl").as("__pu"))),
+        col("urlHash") === col("__ph") && col("url") === col("__pu"), "left_semi")
+      .select(col("urlHash").as("__sh"), col("url").as("__su")))
+    val isSeen =
+      probed && candidates("urlHash") === col("__sh") && candidates("canonUrl") === col("__su")
+    (candidates.join(confirmedSeen, isSeen, "left_anti"),
+      candidates.join(confirmedSeen, isSeen, "left_semi"))
   }
 }
 

@@ -43,23 +43,6 @@ object Streams {
       .filter(col("card_c").isNotNull && col("trans_c").isNotNull && col("date").isNotNull)
   }
 
-  /** Streaming URL-seen dedup — the streaming dual of the batch dupefilter
-    * (SURVEY.md §2#24): keyed `dropDuplicatesWithinWatermark` over the
-    * canonical-URL hash, so state stays bounded by the watermark horizon.
-    * Division of labor at 10^10 URLs: this stage exactly dedups the
-    * IN-FLIGHT window of an arriving frontier stream; the batch loop's
-    * incremental partitioned blooms remain the unbounded-horizon store the
-    * stream's survivors are checked against on entry.
-    *
-    * Input must carry (ts TIMESTAMP, urlHash BIGINT, canonUrl STRING, …);
-    * keying includes the canonical URL so a 64-bit hash collision can never
-    * drop a genuinely-new URL — same exactness contract as the batch path.
-    */
-  def dedupUrls(frontier: DataFrame, watermark: String = "1 hour"): DataFrame =
-    frontier
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("urlHash", "canonUrl")
-
   /** Streaming corpus cleanup — the streaming dual of
     * [[graft.pipeline.Corpus.clean]] for a document INGEST stream
     * (ts TIMESTAMP, doc_id, text, …): the same row-local verdict kernels
@@ -76,10 +59,11 @@ object Streams {
     * watermark horizon (arrival order — the batch passing-first/min-id
     * rule needs the whole partition). Near-dup cluster removal stays a
     * batch job by nature: connected components are a global fixed point,
-    * not a per-row verdict. Division of labor at scale mirrors
-    * [[dedupUrls]]: this stage exactly dedups the in-flight window with
-    * watermark-bounded state; the accumulated corpus store remains the
-    * unbounded-horizon dedup the survivors are checked against on append.
+    * not a per-row verdict. Division of labor at scale: this stage exactly
+    * dedups the in-flight window with watermark-bounded state; the
+    * accumulated corpus store, through [[graft.dedup.UrlSeen]], remains
+    * the unbounded-horizon dedup the survivors are checked against on
+    * append ([[corpusIngest]]).
     *
     * @return the cleaned stream: every input column plus
     *         (n_tokens, pred_lang, quality)
@@ -105,7 +89,8 @@ object Streams {
     * directory → the shared verdict chain + watermark-window dedup → one
     * atomic `corpus` delta append per micro-batch, deduplicated against the
     * ACCUMULATED store by content identity (the unbounded-horizon half the
-    * watermark cannot give — same division of labor as the URL-seen path).
+    * watermark cannot give), through the crawl's own membership index,
+    * [[graft.dedup.UrlSeen]].
     * Batch-id-idempotent commits exactly as the crawl slice: a replayed
     * batch after a crash between store commit and stream checkpoint is
     * detected and skipped, so kill-and-resume is bit-equivalent to an
@@ -116,17 +101,12 @@ object Streams {
       docDir: String,
       streamCheckpointDir: String,
       storeDir: String,
-      watermark: String = "1 hour",
-      keepLang: String = "en",
-      minTokens: Int = 5,
-      maxTokens: Int = 50000,
-      minQuality: Double = 0.75,
-      compactEvery: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
+      compactEvery: Int = graft.checkpoint.TableLog.DefaultCompactEvery): org.apache.spark.sql.streaming.StreamingQuery = {
     val raw = spark.readStream
       .schema("ts TIMESTAMP, doc_id LONG, text STRING")
       .json(docDir)
       .filter(col("ts").isNotNull && col("doc_id").isNotNull && col("text").isNotNull)
-    cleanDocs(raw, watermark, "text", keepLang, minTokens, maxTokens, minQuality)
+    cleanDocs(raw)
       .writeStream
       .option("checkpointLocation", streamCheckpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -135,19 +115,25 @@ object Streams {
       .start()
   }
 
-  /** One corpus micro-batch: anti-join against the accumulated store's
-    * content identities, append the delta, ONE atomic commit carrying the
-    * batch id. Idempotent per batch id.
+  /** One corpus micro-batch: drop the documents the accumulated store
+    * holds already, append the rest as a delta, ONE atomic commit carrying
+    * the batch id. Idempotent per batch id.
     *
-    * The md5 content identity is PERSISTED as a `__h` column in every
-    * corpus delta, and the history anti-join reads only that column —
-    * parquet column pruning never touches the text pages, so the per-batch
-    * history cost is O(accumulated 16-byte hashes), not O(accumulated
-    * text). (Re-hashing every prior file's text each micro-batch would grow
-    * per-batch work with the stream's whole lifetime — the 10^10-doc
-    * killer.) Deltas written before the column existed pay a one-time
-    * re-hash per batch until compacted; the per-file dispatch below keeps
-    * the fast path for every post-migration delta.
+    * Membership is the crawl's index, [[graft.dedup.UrlSeen]], over the
+    * document's md5 content identity: `urlHash` is `xxhash64` of it and the
+    * exact key is the 32-character hex string itself. The identity is
+    * PERSISTED as a `__h` column in every corpus delta, so the history is
+    * read as that one parquet column (never its text pages) and scanned,
+    * never shuffled: the batch's keys are broadcast to the history scan,
+    * and the few keys it finds are broadcast back to drop those documents
+    * ([[graft.dedup.UrlSeen.filterNew]]). The corpus keeps no filters: the
+    * whole batch is the probe, so a Bloom prune would save nothing the
+    * history scan pays for. Deltas written before the column existed have
+    * their text re-hashed per batch until compacted; the per-file dispatch
+    * below keeps the column read for every later delta.
+    *
+    * The batch is kept ([[org.apache.spark.sql.graftbridge.KeptFrame]]), so
+    * its verdict chain runs once, in the job that counts it.
     *
     * The corpus chain compacts by the [[graft.checkpoint.TableLog]] rule,
     * at every commit whose version is a multiple of `compactEvery`, and the
@@ -156,7 +142,7 @@ object Streams {
     */
   private[graft] def processDocBatch(
       batch: DataFrame, batchId: Long, storeDir: String,
-      compactEvery: Int = 64): Unit = {
+      compactEvery: Int = graft.checkpoint.TableLog.DefaultCompactEvery): Unit = {
     val spark = batch.sparkSession
     val log = new graft.checkpoint.SnapshotStore(storeDir).log()
     if (log.has("batches", batchId.toString)) return // replayed after crash
@@ -167,17 +153,21 @@ object Streams {
       val delta = spark.read.parquet(path)
       if (delta.columns.contains("__h")) delta else delta.withColumn("__h", contentId)
     }
-    // dedup vs HISTORY on the md5 content identity — slim (hash-only) build
-    // side; the in-flight window was already deduped by cleanDocs
-    val hashed = batch.withColumn("__h", contentId)
     val history = log.chain("corpus")
-    val fresh =
-      if (history.isEmpty) hashed
-      else hashed.join(history.map(identified(_).select("__h")).reduce(_ unionAll _).distinct(), Seq("__h"), "left_anti")
-    val path = log.store.dataPath("corpus", log.next)
-    fresh.write.mode("overwrite").parquet(path)
-    val corpus = log.compact("corpus", history :+ path, compactEvery)(_.map(identified).reduce(_ unionByName _))
-    log.commit(chains = Map("corpus" -> corpus), keys = Map("batches" -> batchId.toString))
+    val (docs, docRows) = org.apache.spark.sql.graftbridge.KeptFrame(batch.withColumn("__h", contentId)
+      .select(col("*"), xxhash64(col("__h")).as("urlHash"), col("__h").as("canonUrl")))
+    try {
+      val fresh =
+        if (history.isEmpty) docs
+        else graft.dedup.UrlSeen.filterNew(docs,
+          history.map(identified(_).select(xxhash64(col("__h")).as("urlHash"), col("__h").as("url")))
+            .reduce(_ unionAll _),
+          graft.util.PlanSize.broadcastSafe(docRows.count()))
+      val path = log.store.dataPath("corpus", log.next)
+      fresh.drop("urlHash", "canonUrl").write.mode("overwrite").parquet(path)
+      val corpus = log.compact("corpus", history :+ path, compactEvery)(_.map(identified).reduce(_ unionByName _))
+      log.commit(chains = Map("corpus" -> corpus), keys = Map("batches" -> batchId.toString))
+    } finally docRows.unpersist()
   }
 
   /** Watermarked tumbling-window fetch metrics: events(ts, host, fetched,
@@ -208,12 +198,14 @@ object Streams {
     *
     * Each micro-batch runs the batch crawl's own round
     * ([[graft.crawl.CrawlJob.crawlRound]]): partitioned-Bloom dedup, robots
-    * gate, salted per-host politeness schedule (AIMD host delays carried in
-    * the store across batches), retry on fetch miss, per-host metrics,
-    * lineage and delta-chain compaction, so the store has the batch crawl's
-    * layout plus a `batches` key set. Rows a batch cannot schedule under its
-    * politeness budget — and retry rows — stay in the `frontier` table and
-    * re-enter on the NEXT micro-batch, ahead of its new seeds. Defaults (no
+    * gate, per-host politeness schedule (AIMD host delays carried in the
+    * store across batches; a batch whose frontier and host table fit one
+    * task is ranked in that task, a larger one by the salted rank), retry
+    * on fetch miss, per-host metrics, lineage and delta-chain compaction,
+    * so the store has the batch crawl's layout plus a `batches` key set.
+    * Rows a batch cannot schedule under its politeness budget — and retry
+    * rows — stay in the `frontier` table and re-enter on the NEXT
+    * micro-batch, ahead of its new seeds. Defaults (no
     * robots rules, unbounded budget) drain every batch fully. The robots
     * rules are collapsed once per stream, not per batch.
     *
@@ -320,7 +312,7 @@ object Streams {
       "seq", xxhash64(col("card_c"), col("trans_c"), col("date")))
     val seeds = graft.dedup.UrlSeen.dedupWithinBatch(CrawlJob.expandSeeds(withSeq, provider, providers))
     CrawlJob.restoringJobDescription(spark) {
-      val state = CrawlJob.loadState(spark, storeDir, CrawlJob.DefaultBloomParts) { committed =>
+      val state = CrawlJob.loadState(spark, storeDir, graft.dedup.UrlSeen.DefaultBloomParts) { committed =>
         // deferred/retry rows from prior batches re-enter ahead of new
         // seeds; a re-arriving seed whose URL is already in the frontier
         // must not shadow that row (which may carry retry state). Stores

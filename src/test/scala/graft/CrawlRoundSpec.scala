@@ -120,7 +120,7 @@ class CrawlRoundSpec extends SparkSpec {
     val frontier = state.frontier
     val seen = spark.read.schema(CrawlJob.SeenSchema).parquet(state.seenPaths: _*)
     val fresh = UrlSeen.filterNewPartitionedBloom(frontier.filter(col("retries") === 0), seen,
-      s"$dir/blooms", CrawlJob.DefaultBloomParts).unionByName(frontier.filter(col("retries") > 0))
+      s"$dir/blooms", UrlSeen.DefaultBloomParts).unionByName(frontier.filter(col("retries") > 0))
     val onsiteF = Robots.onSite(fresh, allowedDomains)
     val allowedF = Robots.allowed(onsiteF, rules)
     val sched = Scheduler.scheduleRound(allowedF, state.hostStates.toDF(), cfg, 10.0)
@@ -196,7 +196,7 @@ class CrawlRoundSpec extends SparkSpec {
     committed.unionByName(reoffered).unionByName(later).unionByName(offsite).write.parquet(next)
     store.commit(version + 1, manifest + ("frontier" -> next))
 
-    val state = CrawlJob.loadState(spark, dir, CrawlJob.DefaultBloomParts)(_.get)
+    val state = CrawlJob.loadState(spark, dir, UrlSeen.DefaultBloomParts)(_.get)
     val expected = unionRound(state, allPages, robots, domains, dir, maxRetries = 2)
       .map { case (k, df) => k -> rowsOf(df) }
     CrawlJob.run(spark, frontier, allPages, robots, dir, cfg, roundSec = 10.0,

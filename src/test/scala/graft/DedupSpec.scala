@@ -67,6 +67,21 @@ class DedupSpec extends SparkSpec {
     assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".bin")) === 8)
   }
 
+  test("filterNew: the broadcast confirm ≡ the shuffled anti-join, hash collisions kept") {
+    val seen = (1 to 500).map(i => s"http://seen.com/p$i")
+      .toDF("url").select(xxhash64(canon(col("url"))).as("urlHash"), canon(col("url")).as("url"))
+    // a candidate that shares a seen key's hash but not its exact key is new
+    val collision = Seq(("http://other.com/c", 999L)).toDF("url", "seq")
+      .select(col("url"), col("seq"), col("url").as("canonUrl"),
+        xxhash64(lit(Urls.canonicalize("http://seen.com/p7"))).as("urlHash"))
+    val candidates = candidatesOf((400 to 600).map(i => s"http://seen.com/p$i")).unionByName(collision)
+    def urls(df: org.apache.spark.sql.DataFrame) = df.select("url").as[String].collect().toSet
+    val broadcastShape = urls(UrlSeen.filterNew(candidates, seen, smallProbe = true))
+    assert(broadcastShape === urls(UrlSeen.filterNew(candidates, seen, smallProbe = false)))
+    assert(broadcastShape === urls(UrlSeen.filterNewExact(candidates, seen)))
+    assert(broadcastShape === (501 to 600).map(i => s"http://seen.com/p$i").toSet + "http://other.com/c")
+  }
+
   test("bloom probe cache reloads a same-size, same-mtime replacement (generation token)") {
     // the mtime-collision scenario: a merge rewrites a filter with the SAME
     // capacity (constant serialized size) within the same timestamp tick

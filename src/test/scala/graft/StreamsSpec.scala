@@ -37,32 +37,6 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming URL dedup: duplicates within the watermark window dropped") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, String)]
-    val frontier = input.toDF.toDF("ts", "urlHash", "canonUrl")
-    val q = Streams.dedupUrls(frontier, watermark = "1 hour")
-      .writeStream.format("memory").queryName("dedup_urls").outputMode("append").start()
-    try {
-      input.addData(
-        (ts("2026-01-01 10:00:00"), 1L, "http://a.com/x"),
-        (ts("2026-01-01 10:00:01"), 1L, "http://a.com/x"), // dup in-batch
-        (ts("2026-01-01 10:00:02"), 2L, "http://a.com/y"))
-      q.processAllAvailable()
-      input.addData(
-        (ts("2026-01-01 10:30:00"), 1L, "http://a.com/x"), // dup across batches
-        (ts("2026-01-01 10:30:00"), 1L, "http://b.com/z"), // hash COLLISION — must survive
-        (ts("2026-01-01 10:30:01"), 3L, "http://a.com/w"))
-      q.processAllAvailable()
-      val out = spark.table("dedup_urls").select("urlHash", "canonUrl")
-        .as[(Long, String)].collect().toSeq
-      assert(out.length === 4)
-      assert(out.toSet === Set(
-        (1L, "http://a.com/x"), (2L, "http://a.com/y"),
-        (1L, "http://b.com/z"), (3L, "http://a.com/w")))
-    } finally q.stop()
-  }
-
   test("streaming corpus cleanup: row-local filters + watermarked exact dedup, batch-verdict parity") {
     implicit val sqlCtx = spark.sqlContext
     val goodEn = "the quick brown fox jumps over a lazy dog and it was quite fast for sure"
@@ -341,7 +315,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("streaming slice: a long-lived stream's seen/rates chains are compacted by the shared round") {
-    import graft.crawl.CrawlJob
+    import graft.checkpoint.TableLog
     // The stream compacts on the batch crawl's cadence: every
     // DefaultCompactEvery rounds. A store already at version
     // DefaultCompactEvery - 3 (one foreign commit) puts four micro-batches
@@ -352,7 +326,7 @@ class StreamsSpec extends SparkSpec {
       Streams.processSeedBatch(spark.createDataFrame(java.util.List.of(rows(i)), seeds.schema),
         i.toLong, pages, storeDir, "Mastercard", graft.provider.Providers.registry)
     }
-    val offset = CrawlJob.DefaultCompactEvery - 3
+    val offset = TableLog.DefaultCompactEvery - 3
     val longLived = java.nio.file.Files.createTempDirectory("compact-stream").toString
     new graft.checkpoint.SnapshotStore(longLived).commit(offset, Map("notes" -> "/elsewhere"))
     feed(longLived)
@@ -459,7 +433,7 @@ class StreamsSpec extends SparkSpec {
     assert(ids === Seq(1L, 5L), s"corpus must hold exactly the unique keepers: $ids")
     // verdict columns rode the pipeline into the store
     assert(corpus.columns.toSet.contains("pred_lang"))
-    // the md5 content identity is PERSISTED per delta: the history anti-join
+    // the md5 content identity is PERSISTED per delta: the history dedup
     // reads only this column (parquet-pruned), so per-batch cost is
     // O(accumulated hashes), never O(accumulated text)
     assert(corpus.columns.toSet.contains("__h"))
@@ -521,6 +495,57 @@ class StreamsSpec extends SparkSpec {
     val ids = paths.flatMap(p =>
       spark.read.parquet(p).select("doc_id").as[Long].collect()).sorted
     assert(ids === Seq(1L, 3L), s"legacy-history duplicate must be dropped: $ids")
+  }
+
+  private def docBatch(docs: (Long, String)*) =
+    docs.map { case (id, text) => (Timestamp.valueOf("2026-01-01 10:00:00"), id, text) }
+      .toDF("ts", "doc_id", "text")
+
+  private def corpusIds(storeDir: String) =
+    new graft.checkpoint.SnapshotStore(storeDir).log().chain("corpus")
+      .flatMap(p => spark.read.parquet(p).select("doc_id").as[Long].collect()).sorted
+
+  test("corpus ingest: a micro-batch scans its history and shuffles none of it") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import scala.jdk.CollectionConverters._
+    val goodEn = "the quick brown fox jumps over a lazy dog and it was quite fast for sure"
+    val storeDir = java.nio.file.Files.createTempDirectory("corpus-plan").toString
+    Streams.processDocBatch(docBatch(1L -> goodEn), 0L, storeDir)
+    val history = new graft.checkpoint.SnapshotStore(storeDir).log().chain("corpus")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Streams.processDocBatch(docBatch(2L -> goodEn, 3L -> (goodEn + " new")), 1L, storeDir)
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // (history scan, whether a shuffle exchange sits above it) in every
+    // plan the batch executed, final adaptive plans and subqueries included
+    def historyScans(p: SparkPlan, shuffled: Boolean): Seq[Boolean] = {
+      val below = shuffled || p.isInstanceOf[ShuffleExchangeLike]
+      val here = p match {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(r => history.contains(r.toUri.getPath.stripSuffix("/"))) =>
+          Seq(below)
+        case _ => Nil
+      }
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case o => o.children ++ o.subqueries
+      }
+      here ++ kids.flatMap(historyScans(_, below))
+    }
+    val scans = plans.asScala.toSeq.flatMap(historyScans(_, shuffled = false))
+    assert(scans.nonEmpty, s"no plan scanned the history $history")
+    assert(!scans.contains(true), plans.asScala.map(_.treeString).mkString("\n"))
+    assert(corpusIds(storeDir) === Seq(1L, 3L))
   }
 
   test("seed ingest parses the frontier CSV dialect") {
